@@ -390,7 +390,7 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
     # one of them clusters by exactly (band, bucket).  The persisted
     # partitioning satisfies all three downstream distribution
     # requirements, so they run exchange-free off the cache.
-    banded = banded.repartition("band", "bucket").persist()
+    pinned = banded.repartition("band", "bucket").persist()
     # cap pathological buckets before the self-join.  Filter via a
     # broadcast ANTI-join against the OVER-cap buckets: that set is
     # ~empty on healthy corpora, where the old keep-side broadcast
@@ -398,10 +398,10 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
     # entries — on the driver and in every task's hash relation.
     # Identical semantics: every banded row's key occurs in `sizes` by
     # construction, so NOT-in-bad ⇔ in-ok.
-    sizes = banded.groupBy("band", "bucket").agg(F.count("*").alias("n"))
+    sizes = pinned.groupBy("band", "bucket").agg(F.count("*").alias("n"))
     dropped = _dropped_bucket_stats(sizes, max_bucket)
     bad = sizes.filter(F.col("n") > max_bucket).select("band", "bucket")
-    banded = banded.join(F.broadcast(bad), ["band", "bucket"], "left_anti")
+    banded = pinned.join(F.broadcast(bad), ["band", "bucket"], "left_anti")
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -427,7 +427,7 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
     if threshold is not None:
         out = out.filter(F.col("est_jaccard") >= threshold)
     out.lsh_dropped = dropped
-    return release_checkpoints_on_gc(release_on_gc(out, banded), sig)
+    return release_checkpoints_on_gc(release_on_gc(out, pinned), sig)
 
 
 def ngram_jaccard_pairs(df: DataFrame, *, id_col: str = "doc_id",
