@@ -167,10 +167,12 @@ class SkylinePipeline:
     def _save(self, batch_id: int, state: DataFrame, meta: dict) -> None:
         state.write.mode("overwrite").parquet(
             os.path.join(self.points_dir, f"epoch={batch_id}"))
-        tmp = os.path.join(self.meta_dir, f"epoch={batch_id:020d}.json.tmp")
+        # staged under a leading "_", which readers' listings skip
+        name = f"epoch={batch_id:020d}.json"
+        tmp = os.path.join(self.meta_dir, "_" + name)
         with open(tmp, "w") as fh:
             json.dump(meta, fh)
-        os.replace(tmp, tmp[:-4])
+        os.replace(tmp, os.path.join(self.meta_dir, name))
         _gc(self.points_dir)
         for f in sorted(
             f for f in os.listdir(self.meta_dir) if f.endswith(".json")
