@@ -32,12 +32,10 @@ passthrough columns.
 
 from __future__ import annotations
 
-import time
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -148,19 +146,7 @@ def _join_back(df: DataFrame, vecs: DataFrame, cols: Sequence[str],
     return out
 
 
-class MaxAccumulator(AccumulatorParam):
-    """Spark accumulator keeping the max of added values — the A6
-    straggler metric (reference tracks max per-partition CPU,
-    FlinkSkyline.java:534-539).  Retry-safe: re-adding can't inflate a max."""
-
-    def zero(self, value):
-        return value
-
-    def addInPlace(self, a, b):
-        return a if a >= b else b
-
-
-def _prune_batches(cols: Sequence[str], cpu_acc=None, *,
+def _prune_batches(cols: Sequence[str], *,
                    buffer_cap: int = 4_000_000,
                    buffer_bytes: int = 256 << 20):
     """mapInPandas function: skyline over this partition's batches.
@@ -184,13 +170,9 @@ def _prune_batches(cols: Sequence[str], cpu_acc=None, *,
     ∪ B)) and accumulation continues, so a pathologically large input
     partition degrades to the incremental behavior with a much larger
     block.
-
-    `cpu_acc` (optional MaxAccumulator) receives this task's kernel
-    compute time in ns — A6 CPU accounting without touching the schema.
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cpu_ns = 0
         parts: list[pd.DataFrame] = []
         rows = 0
         nbytes = 0
@@ -209,14 +191,12 @@ def _prune_batches(cols: Sequence[str], cpu_acc=None, *,
             return int(pdf.memory_usage(index=False, deep=True).sum())
 
         def collapse() -> pd.DataFrame | None:
-            nonlocal cpu_ns, parts, rows, nbytes, eff_cap, eff_bytes
+            nonlocal parts, rows, nbytes, eff_cap, eff_bytes
             if not parts:
                 return None
             pdf = (parts[0] if len(parts) == 1
                    else pd.concat(parts, ignore_index=True))
-            t0 = time.perf_counter_ns()
             out = pdf[skyline_mask(_values(pdf, cols))]
-            cpu_ns += time.perf_counter_ns() - t0
             parts = [out]
             rows = len(out)
             nbytes = _size(out)
@@ -233,23 +213,17 @@ def _prune_batches(cols: Sequence[str], cpu_acc=None, *,
             if rows >= eff_cap or nbytes >= eff_bytes:
                 collapse()
         out = collapse()
-        if cpu_acc is not None:
-            cpu_acc.add(cpu_ns)
         if out is not None and not out.empty:
             yield out.reset_index(drop=True)
 
     return fn
 
 
-def _group_prune(cols: Sequence[str], cpu_acc=None):
+def _group_prune(cols: Sequence[str]):
     """applyInPandas function: exact skyline of one whole group."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.perf_counter_ns()
-        out = pdf[skyline_mask(_values(pdf, cols))]
-        if cpu_acc is not None:
-            cpu_acc.add(time.perf_counter_ns() - t0)
-        return out
+        return pdf[skyline_mask(_values(pdf, cols))]
 
     return fn
 
@@ -301,7 +275,7 @@ def _arrow_values(tbl, cols: Sequence[str], *, order: str = "F") -> np.ndarray:
     return out
 
 
-def _prune_batches_arrow(cols: Sequence[str], cpu_acc=None, *,
+def _prune_batches_arrow(cols: Sequence[str], *,
                          buffer_cap: int = 4_000_000,
                          buffer_bytes: int = 256 << 20):
     """mapInArrow twin of :func:`_prune_batches` — identical buffering
@@ -312,7 +286,6 @@ def _prune_batches_arrow(cols: Sequence[str], cpu_acc=None, *,
     def fn(batches) -> "Iterator":
         import pyarrow as pa
 
-        cpu_ns = 0
         parts: list = []        # list[pa.Table]
         rows = 0
         nbytes = 0
@@ -320,14 +293,12 @@ def _prune_batches_arrow(cols: Sequence[str], cpu_acc=None, *,
         eff_bytes = buffer_bytes
 
         def collapse():
-            nonlocal cpu_ns, parts, rows, nbytes, eff_cap, eff_bytes
+            nonlocal parts, rows, nbytes, eff_cap, eff_bytes
             if not parts:
                 return None
             tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-            t0 = time.perf_counter_ns()
             mask = skyline_mask(_arrow_values(tbl, cols))
             out = tbl.filter(pa.array(mask))
-            cpu_ns += time.perf_counter_ns() - t0
             parts = [out]
             rows = out.num_rows
             nbytes = out.nbytes
@@ -344,8 +315,6 @@ def _prune_batches_arrow(cols: Sequence[str], cpu_acc=None, *,
             if rows >= eff_cap or nbytes >= eff_bytes:
                 collapse()
         out = collapse()
-        if cpu_acc is not None:
-            cpu_acc.add(cpu_ns)
         if out is not None and out.num_rows:
             # cap yielded batch size: filter() preserves input chunking,
             # but a single huge buffered partition should still stream
@@ -355,21 +324,19 @@ def _prune_batches_arrow(cols: Sequence[str], cpu_acc=None, *,
     return fn
 
 
-def _local_prune(df: DataFrame, cols: Sequence[str], cpu_acc=None,
-                 **buf) -> DataFrame:
+def _local_prune(df: DataFrame, cols: Sequence[str], **buf) -> DataFrame:
     """One narrow local-skyline pass over `df`'s partitions — the
     Arrow host when the schema allows (always, short of UDTs), the
     pandas host otherwise."""
     if _arrow_plan(df):
         return df.mapInArrow(
-            _prune_batches_arrow(cols, cpu_acc, **buf), schema=df.schema)
+            _prune_batches_arrow(cols, **buf), schema=df.schema)
     return df.mapInPandas(
-        _prune_batches(cols, cpu_acc, **buf), schema=df.schema)
+        _prune_batches(cols, **buf), schema=df.schema)
 
 
 def _grouped_prune_arrow_chunked(df: DataFrame, by: Sequence[str],
-                                 cols: Sequence[str],
-                                 cpu_acc=None) -> DataFrame:
+                                 cols: Sequence[str]) -> DataFrame:
     """Chunked grouped-Arrow host (round 11 — the VERDICT r10 #6
     alternative to BOTH grouped hosts): grouped `applyInArrow`
     materializes each group as ONE giant RecordBatch (2.3× slower than
@@ -400,20 +367,17 @@ def _grouped_prune_arrow_chunked(df: DataFrame, by: Sequence[str],
              .sortWithinPartitions(*by))
 
     def fn(batches) -> "Iterator":
-        cpu_ns = 0
         bufs: list = []      # table slices of the current group
         cur = None           # current group key scalar
         have = False
 
         def flush():
-            nonlocal cpu_ns, bufs
+            nonlocal bufs
             if not bufs:
                 return None
             tbl = bufs[0] if len(bufs) == 1 else pa.concat_tables(bufs)
-            t0 = time.perf_counter_ns()
             mask = skyline_mask(_arrow_values(tbl, cols))
             out = tbl.filter(pa.array(mask))
-            cpu_ns += time.perf_counter_ns() - t0
             bufs = []
             return out
 
@@ -434,16 +398,14 @@ def _grouped_prune_arrow_chunked(df: DataFrame, by: Sequence[str],
                     cur, have = kv, True
                 bufs.append(tbl.slice(s, e - s))
         out = flush()
-        if cpu_acc is not None:
-            cpu_acc.add(cpu_ns)
         if out is not None and out.num_rows:
             yield from out.to_batches(max_chunksize=1 << 20)
 
     return parts.mapInArrow(fn, schema=df.schema)
 
 
-def _grouped_prune(df: DataFrame, by: Sequence[str], cols: Sequence[str],
-                   cpu_acc=None) -> DataFrame:
+def _grouped_prune(df: DataFrame, by: Sequence[str],
+                   cols: Sequence[str]) -> DataFrame:
     """Exact per-group skyline (`groupBy(by)` → kernel).
 
     Stays on the PANDAS grouped host deliberately: a round-10 A/B at
@@ -455,7 +417,7 @@ def _grouped_prune(df: DataFrame, by: Sequence[str], cols: Sequence[str],
     ones that won their A/B.  Round 11 adds the chunked sorted-stream
     Arrow host above; its A/B is in BENCHMARKS.md round 11."""
     return df.groupBy(*by).applyInPandas(
-        _group_prune(cols, cpu_acc), schema=df.schema)
+        _group_prune(cols), schema=df.schema)
 
 
 def _complete(df: DataFrame, cols: Sequence[str]) -> DataFrame:

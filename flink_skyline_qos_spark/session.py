@@ -31,6 +31,21 @@ def warm_arrow_pool(spark) -> None:
         .mapInPandas(_ident, schema="id long, x double").count()
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    half the host's ``MemTotal``, between 1g and 32g.  In local mode
+    every task runs inside the driver JVM, and the Python workers need
+    the other half.  Spark's own 1g default when `meminfo` is
+    unreadable."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(line.split()[1]) for line in fh
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "1g"
+    return f"{min(max(kb // 2048, 1024), 32 * 1024)}m"
+
+
 def get_spark(app_name: str = "flink-skyline-qos-spark", *,
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -48,7 +63,8 @@ def get_spark(app_name: str = "flink-skyline-qos-spark", *,
         # Takes effect at JVM launch — i.e. on the first session of the
         # process (exactly how tests/bench/driver invoke us).
         .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+                os.environ.get("SPARK_DRIVER_MEMORY")
+                or default_driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # deterministic time bucketing (window alignment) across engines
         .config("spark.sql.session.timeZone", "UTC")

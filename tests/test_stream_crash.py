@@ -4,11 +4,12 @@ A micro-batch commits in four publishes: the state epoch, the meta
 epoch, the released answers and their metrics rows.  Random streams
 (batch splits, out-of-order ids, duplicate lines and vectors, malformed
 lines, triggers with K = 0, K reached mid-stream and K never reached)
-are driven through ``process_batch``; in a drawn subset of batches a
-failure is injected just before or just after one of the four
-publishes.  The batch is then recovered the way Structured Streaming
-recovers it, by running the same batch id again, either on the same
-instance or on a fresh ``SkylinePipeline`` over the same ``work_dir``.
+are driven through ``process_batch``; in every batch a failure is
+injected just before or just after one of the four publishes, when the
+batch makes that publish.  The batch is then recovered the way
+Structured Streaming recovers it, by running the same batch id again,
+either on the same instance or on a fresh ``SkylinePipeline`` over the
+same ``work_dir``.
 
 Every released answer must equal a brute-force skyline of the valid
 rows of every batch up to and including the releasing one; no trigger
@@ -19,14 +20,16 @@ release.  After each injected failure the readers (``results()``,
 
 import contextlib
 import glob
+import itertools
 import os
 import re
 from collections import Counter
 from unittest import mock
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
-from hypothesis import HealthCheck, event, given, settings
+from hypothesis import HealthCheck, event, example, given, settings
 from hypothesis import strategies as st
 from pyspark.errors import AnalysisException
 from pyspark.sql.readwriter import DataFrameWriter
@@ -45,6 +48,9 @@ _PUBLISHED = {
     ("results", "metrics"): r"batch_\d{20}",
 }
 _KIND = dict(zip(_PUBLISHED, POINTS))
+#: (commit point, before/after it, recovery), one drawn per batch
+CRASHES = list(itertools.product(POINTS, ("before", "after"),
+                                 ("retry", "restart")))
 
 
 class Crash(Exception):
@@ -107,7 +113,7 @@ def model(batches):
     triggers still pending, and the skyline of every valid row."""
     rows, pending, released = [], [], {}
     max_seen = -1
-    for b, (data, trigs) in enumerate(batches):
+    for b, (data, trigs, _lines) in enumerate(batches):
         rows += data
         if data:
             max_seen = max(max_seen, max(r[0] for r in data))
@@ -125,8 +131,15 @@ def model(batches):
 
 # ------------------------------------------------------------- strategy
 
+def _line(row: tuple) -> str:
+    return ",".join([str(row[0])] + [repr(x) for x in row[1:]])
+
+
 @st.composite
 def streams(draw):
+    """`(dims, algo, batches, crashes)`; a batch is `(valid rows,
+    triggers as (qid, K, wire), wire lines)` and its crash is drawn
+    from CRASHES."""
     dims = draw(st.sampled_from([2, 3]))
     n_batches = draw(st.integers(2, 4))
     n = draw(st.integers(0, 30))
@@ -136,15 +149,15 @@ def streams(draw):
     bounds = [0, *cuts, n]
     vec = st.tuples(*[st.integers(0, 6)] * dims)  # small domain: ties
     seen: list[tuple] = []
-    batches, frames, crashes = [], [], []
+    batches, crashes = [], []
     qn = 0
     for b in range(n_batches):
-        data = [(i, *map(float, draw(vec))) for i in ids[bounds[b]:bounds[b + 1]]]
+        data = [(i, *map(float, draw(vec)))
+                for i in ids[bounds[b]:bounds[b + 1]]]
         if seen:  # a line delivered again, here or in a later batch
             data += draw(st.lists(st.sampled_from(seen), max_size=2))
         seen += data
-        lines = [",".join([str(r[0])] + [repr(x) for x in r[1:]])
-                 for r in data]
+        lines = [_line(r) for r in data]
         lines += draw(st.lists(st.sampled_from(MALFORMED), max_size=2))
         lines = draw(st.permutations(lines))
         trigs = []
@@ -159,16 +172,27 @@ def streams(draw):
                 k = NEVER if kind == "never" or n == 0 \
                     else draw(st.integers(1, n))
                 trigs.append((q, k, f"{q},{k}"))
-        batches.append((data, trigs))
-        frames.append([(line, 0) for line in lines]
-                      + [(w, 1) for _, _, w in trigs])
-        crashes.append(draw(st.one_of(
-            st.none(),
-            st.tuples(st.sampled_from(POINTS),
-                      st.sampled_from(["before", "after"]),
-                      st.sampled_from(["retry", "restart"])))))
+        batches.append((data, trigs, lines))
+        crashes.append(draw(st.sampled_from(CRASHES)))
     algo = draw(st.sampled_from(ALGOS))
-    return dims, algo, batches, frames, crashes
+    return dims, algo, batches, crashes
+
+
+def fixed_stream(dims: int, algo: str, crashes) -> tuple:
+    """A stream whose every batch releases a trigger, so that each of
+    `crashes`, one per batch, fires."""
+    rng = np.random.default_rng(dims)
+    ids = rng.permutation(8 * len(crashes))
+    batches = []
+    for b in range(len(crashes)):
+        data = [(int(i), *map(float, rng.integers(0, 7, dims)))
+                for i in ids[8 * b:8 * b + 8]]
+        if b:
+            data.append(batches[0][0][0])  # a line delivered again
+        trigs = [(f"z{b}", 0, f"z{b}"), (f"m{b}", 12, f"m{b},12"),
+                 (f"n{b}", NEVER, f"n{b},{NEVER}")]
+        batches.append((data, trigs, [_line(r) for r in data] + ["8,1"]))
+    return dims, algo, batches, list(crashes)
 
 
 # ---------------------------------------------------------------- checks
@@ -234,7 +258,7 @@ def check_outcome(pipe, dims, batches) -> None:
 
     _, meta = pipe._load()
     assert sorted(map(tuple, meta["pending"])) == sorted(pending)
-    assert meta["record_count"] == sum(len(d) for d, _ in batches)
+    assert meta["record_count"] == sum(len(b[0]) for b in batches)
 
     latest = max(engine._epochs(pipe.points_dir))
     state = pq.read_table(os.path.join(pipe.points_dir, f"epoch={latest}"))
@@ -244,12 +268,17 @@ def check_outcome(pipe, dims, batches) -> None:
 
 # ------------------------------------------------------------------ test
 
-@settings(max_examples=12, deadline=None, derandomize=True,
+@settings(max_examples=15, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.data_too_large])
 @given(stream=streams())
+# every (commit point, before/after, recovery) at least once
+@example(stream=fixed_stream(2, "mr-grid", CRASHES[0:4]))
+@example(stream=fixed_stream(3, "mr-angle", CRASHES[4:8]))
+@example(stream=fixed_stream(2, "mr-dim", CRASHES[8:12]))
+@example(stream=fixed_stream(3, "mr-grid", CRASHES[12:16]))
 def test_pipeline_crash_at_every_commit_point(spark, tmp_path_factory, stream):
-    dims, algo, batches, frames, crashes = stream
+    dims, algo, batches, crashes = stream
     work = str(tmp_path_factory.mktemp("crash"))
 
     def fresh():
@@ -257,12 +286,12 @@ def test_pipeline_crash_at_every_commit_point(spark, tmp_path_factory, stream):
                                num_partitions=4, domain_max=6.0)
 
     pipe = fresh()
-    for b, (rows, crash) in enumerate(zip(frames, crashes)):
-        df = spark.createDataFrame(rows, "value string, kind int")
-        if crash is None:
-            pipe.process_batch(df, b)
-            continue
-        point, phase, recovery = crash
+    for b, ((_, trigs, lines), (point, phase, recovery)) in enumerate(
+            zip(batches, crashes)):
+        df = spark.createDataFrame(pa.table({
+            "value": pa.array(lines + [w for _, _, w in trigs], pa.string()),
+            "kind": pa.array([0] * len(lines) + [1] * len(trigs), pa.int32()),
+        }))
         fired = []
         try:
             with crash_at(point, phase) as fired:

@@ -131,28 +131,79 @@ def test_pipeline_barrier_pending_until_satisfied(spark, tmp_path, points_2d):
     assert got == expect
 
 
-def test_pipeline_incremental_equals_batch(spark, tmp_path, points_2d):
+def _brute_skyline_mask(v):
+    """O(n²) NumPy skyline membership of the rows of `v`."""
+    le = (v[:, None, :] <= v[None, :, :]).all(-1)
+    lt = (v[:, None, :] < v[None, :, :]).any(-1)
+    return ~(le & lt).any(0)
+
+
+@pytest.mark.parametrize("dims", [2, 3])
+@pytest.mark.parametrize("algo", ["mr-dim", "mr-grid", "mr-angle"])
+def test_pipeline_incremental_equals_batch(spark, tmp_path, algo, dims):
     """Multi-batch ingest (maxFilesPerTrigger=1) + final trigger ==
-    one-shot batch skyline — the incremental-state contract (ST4)."""
+    one-shot batch skyline — the incremental-state contract (ST4) —
+    and the released query's metrics row and output schemas."""
+    import numpy as np
+    from pyspark.sql.types import _parse_datatype_string
+
+    from flink_skyline_qos_spark.operators.partitioners import (
+        partitioner_expr,
+    )
+    from flink_skyline_qos_spark.sources.generators import (
+        generate_points_hash,
+    )
+    from flink_skyline_qos_spark.streaming.engine import (
+        PIPELINE_METRICS_DDL,
+    )
+
     work = str(tmp_path / "work")
     data_dir = str(tmp_path / "data")
     trig_dir = str(tmp_path / "trig")
-    rows = points_2d.collect()
-    lines = [f"{r['id']},{r['d0']},{r['d1']}" for r in rows]
+    cols = [f"d{i}" for i in range(dims)]
+    # 2 partitions: mr-grid's raw cell ids (up to 2^dims - 1) exceed it
+    parts, domain = 2, 10000.0
+    rows = generate_points_hash(spark, 600, dims, dist="anti_correlated") \
+        .withColumn("pid", partitioner_expr(
+            algo, [F.col(c) for c in cols], parts, domain)) \
+        .orderBy("id").collect()
+    lines = [",".join([str(r["id"])] + [repr(r[c]) for c in cols])
+             for r in rows]
     third = len(lines) // 3
-    _write_text(data_dir, "a.csv", lines[:third])
-    _write_text(data_dir, "b.csv", lines[third:2 * third])
-    _write_text(data_dir, "c.csv", lines[2 * third:])
-    _write_text(trig_dir, "t.csv", [f"q,{len(lines)}"])
+    for i, name in enumerate(["a.csv", "b.csv", "c.csv"]):
+        _write_text(data_dir, name, lines[i * third:(i + 1) * third])
+        os.utime(os.path.join(data_dir, name), (1e9 + i, 1e9 + i))
+    _write_text(trig_dir, "t.csv", [f"q,{rows[-1]['id']}"])
 
-    pipe = SkylinePipeline(spark, work, dims=2, algo="mr-angle",
-                           num_partitions=4, domain_max=120000.0)
+    pipe = SkylinePipeline(spark, work, dims=dims, algo=algo,
+                           num_partitions=parts, domain_max=domain)
     pipe.run_available_now(data_dir, trig_dir, max_files_per_trigger=1)
-    got = {(r["d0"], r["d1"]) for r in
-           pipe.results().filter(F.col("query_id") == "q").collect()}
-    expect = {(r["d0"], r["d1"]) for r in
-              skyline(points_2d, ["d0", "d1"]).collect()}
-    assert got == expect
+
+    vals = np.array([[r[c] for c in cols] for r in rows])
+    pids = np.array([r["pid"] for r in rows])
+    sky = _brute_skyline_mask(vals)
+    res = pipe.results()
+    got = {tuple(r[c] for c in cols) for r in
+           res.filter(F.col("query_id") == "q").collect()}
+    assert got == {tuple(v) for v in vals[sky]}
+    assert res.dtypes == [("query_id", "string"), ("id", "bigint")] \
+        + [(c, "double") for c in cols]
+
+    # A4: survivors / local skyline size per partition, averaged over
+    # num_partitions; empty partitions count 0, and mr-grid cells past
+    # num_partitions count like any other
+    opt = sum(
+        (sky & (pids == p)).sum() / _brute_skyline_mask(vals[pids == p]).sum()
+        for p in np.unique(pids)) / parts
+    m = pipe.metrics()
+    assert [(f.name, f.dataType) for f in m.schema] == [
+        (f.name, f.dataType)
+        for f in _parse_datatype_string(PIPELINE_METRICS_DDL)]
+    mrow = m.collect()
+    assert len(mrow) == 1 and mrow[0]["query_id"] == "q"
+    assert mrow[0]["record_count"] == len(rows)
+    assert mrow[0]["skyline_size"] == sky.sum()
+    assert mrow[0]["optimality"] == pytest.approx(round(opt, 4), abs=1e-9)
 
 
 # ----------------------------------------------- applyInPandasWithState
