@@ -223,16 +223,18 @@ _SWEEP_3D_MIN = 4096
 def skyline_mask(values: np.ndarray) -> np.ndarray:
     """Boolean mask of skyline membership for an (n, d) float array.
 
-    2-D inputs take the O(n log n) sort-scan path; 3-D inputs above
-    `_SWEEP_3D_MIN` rows take the O(n log n) Kung plane-sweep
-    (:func:`sweep_mask_3d` over the deduplicated vectors — duplicates
-    inherit their representative's verdict, identical tie semantics);
-    everything else uses a sort-by-sum single forward pass, O(n·S)
-    comparisons where S is the running skyline size, fully vectorized
-    in blocks with the sum-trick (see :func:`_dominated_sorted_T`).
-    The layout/dtype specialization is detected once and the
-    accepted-skyline matrix is maintained in transposed form, so no
-    per-block relayout happens.
+    2-D inputs take the O(n log n) sort-scan path; 3-D inputs of at
+    least `_SWEEP_3D_MIN` rows take the O(n log n) Kung plane-sweep:
+    ONE lexsort, exact duplicates found by comparing sorted neighbours
+    (numeric equality, so -0.0 and 0.0 are one vector), and the sweep
+    body (:func:`_sweep_sorted_3d`) over the sorted unique rows —
+    duplicates inherit their representative's verdict, identical tie
+    semantics.  Everything else uses a sort-by-sum single forward pass,
+    O(n·S) comparisons where S is the running skyline size, fully
+    vectorized in blocks with the sum-trick (see
+    :func:`_dominated_sorted_T`).  The layout/dtype specialization is
+    detected once and the accepted-skyline matrix is maintained in
+    transposed form, so no per-block relayout happens.
     """
     n = values.shape[0]
     if n == 0:
@@ -240,8 +242,16 @@ def skyline_mask(values: np.ndarray) -> np.ndarray:
     if values.shape[1] == 2:
         return _skyline_mask_2d(values)
     if values.shape[1] == 3 and n >= _SWEEP_3D_MIN:
-        uniq, inv = np.unique(values, axis=0, return_inverse=True)
-        return sweep_mask_3d(uniq)[inv.ravel()]
+        order, c = _lex_sorted_3d(values)
+        first = np.empty(n, dtype=bool)
+        first[0] = True
+        np.not_equal(c[1:, 0], c[:-1, 0], out=first[1:])
+        first[1:] |= c[1:, 1] != c[:-1, 1]
+        first[1:] |= c[1:, 2] != c[:-1, 2]
+        keep_sorted = _sweep_sorted_3d(c[first])[np.cumsum(first) - 1]
+        out = np.zeros(n, dtype=bool)
+        out[order] = keep_sorted
+        return out
     return _skyline_mask_forward(values)
 
 
@@ -355,7 +365,7 @@ def _sweep_block_3d(sub: np.ndarray) -> np.ndarray:
     left.  T(b) = 2·T(b/2) + O(b log b).
 
     Round 13: this replaces the O(b·s) `_skyline_mask_forward` call
-    inside :func:`sweep_mask_3d` — on the 100M-point 3-D
+    inside :func:`_sweep_sorted_3d` — on the 100M-point 3-D
     anti-correlated candidate set (1.86M unique, 604k skyline, ~1/3
     survivors per block) that scan was 4.8 s of the 7.9 s driver
     sweep; the D&C runs the same blocks in ~0.3 s."""
@@ -368,7 +378,7 @@ def _sweep_block_3d(sub: np.ndarray) -> np.ndarray:
     mask[:mid] = m_left
     surv = sub[:mid][m_left]
     # (y asc, min z per y, strict running-min) staircase — same
-    # arithmetic as sweep_mask_3d's merge step
+    # arithmetic as _sweep_sorted_3d's merge step
     o = np.lexsort((surv[:, 2], surv[:, 1]))
     y_s, z_s = surv[o, 1], surv[o, 2]
     firsts = np.empty(len(y_s), dtype=bool)
@@ -391,14 +401,38 @@ def _sweep_block_3d(sub: np.ndarray) -> np.ndarray:
     return mask
 
 
+def _lex_sorted_3d(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(order, rows): the (d0, d1, d2) lexicographic order of `values`
+    and its rows in that order, as float64."""
+    v = np.asarray(values, dtype=np.float64)
+    order = np.lexsort((v[:, 2], v[:, 1], v[:, 0]))
+    return order, v[order]
+
+
 def sweep_mask_3d(values: np.ndarray) -> np.ndarray:
     """Exact 3-D skyline mask via the plane-sweep of Kung, Luccia &
-    Preparata (JACM 1975): sort lexicographically by (d0, d1, d2) and
-    sweep, maintaining the (d1, d2) Pareto staircase of all accepted
-    points.  Every sweep predecessor q of p has q.d0 ≤ p.d0, so q
-    dominates p iff q.d1 ≤ p.d1 ∧ q.d2 ≤ p.d2 — a staircase lookup —
-    PROVIDED `values` carries no duplicate rows (all-equal is then
-    impossible, so the ≤-test is never a tie; callers dedup first).
+    Preparata (JACM 1975) over rows that carry NO duplicates (callers
+    dedup first; :func:`skyline_mask` does it for you): sort
+    lexicographically by (d0, d1, d2), then run :func:`_sweep_sorted_3d`.
+    """
+    n = values.shape[0]
+    if n == 0:
+        return np.zeros(0, dtype=bool)
+    if values.shape[1] != 3:
+        raise ValueError("sweep_mask_3d requires exactly 3 columns")
+    order, c = _lex_sorted_3d(values)
+    out = np.zeros(n, dtype=bool)
+    out[order] = _sweep_sorted_3d(c)
+    return out
+
+
+def _sweep_sorted_3d(c: np.ndarray) -> np.ndarray:
+    """The plane-sweep body over lex-sorted UNIQUE float64 rows `c`;
+    the mask is in `c`'s order.  Sweep in (d0, d1, d2) order,
+    maintaining the (d1, d2) Pareto staircase of all accepted points.
+    Every sweep predecessor q of p has q.d0 ≤ p.d0, so q dominates p
+    iff q.d1 ≤ p.d1 ∧ q.d2 ≤ p.d2 — a staircase lookup — because
+    uniqueness makes the all-equal tie impossible.
 
     O(n log n) total versus the forward scan's O(n·S): at S in the
     hundreds of thousands (100M-point anti-correlated inputs) that is
@@ -411,14 +445,7 @@ def sweep_mask_3d(values: np.ndarray) -> np.ndarray:
     high-survivor-density anti-correlated blocks), and the staircase
     merge is a sort + running-min envelope rebuild.
     """
-    n = values.shape[0]
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    if values.shape[1] != 3:
-        raise ValueError("sweep_mask_3d requires exactly 3 columns")
-    v = np.ascontiguousarray(values, dtype=np.float64)
-    order = np.lexsort((v[:, 2], v[:, 1], v[:, 0]))
-    c = v[order]
+    n = c.shape[0]
     keep_sorted = np.zeros(n, dtype=bool)
     ys = np.empty(0, dtype=np.float64)   # staircase y, ascending
     zs = np.empty(0, dtype=np.float64)   # staircase z, strictly decreasing
@@ -456,6 +483,4 @@ def sweep_mask_3d(values: np.ndarray) -> np.ndarray:
         kp[0] = True
         np.less(run[1:], run[:-1], out=kp[1:])
         ys, zs = y_u[kp], z_u[kp]
-    out = np.zeros(n, dtype=bool)
-    out[order] = keep_sorted
-    return out
+    return keep_sorted

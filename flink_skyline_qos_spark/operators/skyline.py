@@ -17,10 +17,11 @@ Three physical strategies over identical set semantics:
    survivor sets are huge (high-dim anti-correlated data).
 
 2. :func:`skyline_two_phase` — reference-parity path: explicit MR-Dim /
-   MR-Grid / MR-Angle partition-id column, `groupBy(pid).applyInPandas`
-   local skylines (tagged with origin partition for the optimality
-   metric), then global merge.  One shuffle on pid, exactly the
-   reference's shuffle #1.
+   MR-Grid / MR-Angle partition-id column tagged in the JVM, then one
+   ``toArrow()`` to the driver, where each pid's local skyline and the
+   global merge run with the NumPy kernel (the reference's shuffle #1
+   becomes a group-by in the driver).  Eager, and bounded by driver
+   memory, like a stream-engine micro-batch.
 
 3. :func:`skyline_anti_join` — fully declarative Catalyst form
    (left-anti self-join on the dominance theta-predicate).  O(n²); kept
@@ -32,7 +33,8 @@ passthrough columns.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+import time
+from typing import Iterator, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -335,75 +337,6 @@ def _local_prune(df: DataFrame, cols: Sequence[str], **buf) -> DataFrame:
         _prune_batches(cols, **buf), schema=df.schema)
 
 
-def _grouped_prune_arrow_chunked(df: DataFrame, by: Sequence[str],
-                                 cols: Sequence[str]) -> DataFrame:
-    """Chunked grouped-Arrow host (round 11 — the VERDICT r10 #6
-    alternative to BOTH grouped hosts): grouped `applyInArrow`
-    materializes each group as ONE giant RecordBatch (2.3× slower than
-    pandas at 100M×128 groups, r10 A/B) and `applyInPandas` pays
-    pandas construction per group.  This host takes the grouping from
-    the EXCHANGE instead: hash-repartition on the (single) group key,
-    sort within partitions, and stream ordinary-sized Arrow batches
-    through `mapInArrow`, detecting group boundaries inside the sorted
-    stream — per-group kernel calls over zero-copy table slices, no
-    giant batch, no pandas, payload columns untouched.  Buffered state
-    per task is one group (the same bound the pandas host holds as a
-    group frame).
-
-    A/B RESULT (round 11, quiet host, 100M×128 mr-angle groups,
-    best-of-2): pandas grouped host 12.9/17.1 s vs this host
-    56.2/38.9 s — it LOSES ~3×: ~10k Arrow batches each pay Python
-    boundary detection + table slicing, and the explicit
-    sortWithinPartitions shows up where the grouped-pandas exchange
-    amortizes its sort; raising maxRecordsPerBatch did not close the
-    gap before host contention ended the probe (BENCHMARKS.md round
-    11).  NOT wired into :func:`_grouped_prune` — kept as the
-    documented negative result with a parity test, per the
-    ship-only-if-it-wins rule."""
-    import pyarrow as pa
-
-    key = by[0]
-    parts = (df.repartition(*[F.col(b) for b in by])
-             .sortWithinPartitions(*by))
-
-    def fn(batches) -> "Iterator":
-        bufs: list = []      # table slices of the current group
-        cur = None           # current group key scalar
-        have = False
-
-        def flush():
-            nonlocal bufs
-            if not bufs:
-                return None
-            tbl = bufs[0] if len(bufs) == 1 else pa.concat_tables(bufs)
-            mask = skyline_mask(_arrow_values(tbl, cols))
-            out = tbl.filter(pa.array(mask))
-            bufs = []
-            return out
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            k = rb.column(rb.schema.get_field_index(key)).to_numpy(
-                zero_copy_only=False)
-            idx = np.flatnonzero(k[1:] != k[:-1]) + 1
-            bounds = [0, *idx.tolist(), len(k)]
-            tbl = pa.Table.from_batches([rb])
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                kv = k[s]
-                if not have or kv != cur:
-                    out = flush()
-                    if out is not None and out.num_rows:
-                        yield from out.to_batches(max_chunksize=1 << 20)
-                    cur, have = kv, True
-                bufs.append(tbl.slice(s, e - s))
-        out = flush()
-        if out is not None and out.num_rows:
-            yield from out.to_batches(max_chunksize=1 << 20)
-
-    return parts.mapInArrow(fn, schema=df.schema)
-
-
 def _grouped_prune(df: DataFrame, by: Sequence[str],
                    cols: Sequence[str]) -> DataFrame:
     """Exact per-group skyline (`groupBy(by)` → kernel).
@@ -414,8 +347,8 @@ def _grouped_prune(df: DataFrame, by: Sequence[str],
     Spark 4.1's grouped-Arrow path materializes each group as one
     giant RecordBatch where the pandas host streams group slices;
     BENCHMARKS.md round 10).  The ungrouped `mapInArrow` hosts are the
-    ones that won their A/B.  Round 11 adds the chunked sorted-stream
-    Arrow host above; its A/B is in BENCHMARKS.md round 11."""
+    ones that won their A/B; a chunked sorted-stream Arrow host lost
+    its round-11 A/B ~3× (BENCHMARKS.md round 11)."""
     return df.groupBy(*by).applyInPandas(
         _group_prune(cols), schema=df.schema)
 
@@ -1117,6 +1050,41 @@ def skyline_2d_window(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return _grouped_skyline_2d_window(df, cols, [])
 
 
+class _TwoPhase(NamedTuple):
+    """Row masks and kernel time of one driver-side two-phase pass."""
+
+    local: np.ndarray   # row is in its pid's local skyline
+    keep: np.ndarray    # row is in the global skyline
+    local_ns: int       # kernel time of the local skylines, summed
+    global_ns: int      # kernel time of the global merge
+
+
+def _two_phase_masks(pids: np.ndarray, values: np.ndarray) -> _TwoPhase:
+    """The reference's two phases over rows held in the driver: the
+    local skyline of each pid (FlinkSkyline.java:407-444), then the
+    global merge over their union (:546-568), both with
+    :func:`~.kernels.skyline_mask`.  The kernel times cover the kernel
+    calls only — the engine's A6 definition."""
+    n = len(pids)
+    order = np.argsort(pids, kind="stable")
+    local = np.zeros(n, dtype=bool)
+    local_ns = 0
+    for idx in np.split(order, np.flatnonzero(np.diff(pids[order])) + 1):
+        sub = values[idx]
+        t0 = time.perf_counter_ns()
+        m = skyline_mask(sub)
+        local_ns += time.perf_counter_ns() - t0
+        local[idx[m]] = True
+    cand = np.flatnonzero(local)
+    sub = values[cand]
+    t0 = time.perf_counter_ns()
+    m = skyline_mask(sub)
+    global_ns = time.perf_counter_ns() - t0
+    keep = np.zeros(n, dtype=bool)
+    keep[cand[m]] = True
+    return _TwoPhase(local, keep, local_ns, global_ns)
+
+
 def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
                       algo: str = "mr-dim", num_partitions: int = 8,
                       domain_max: float | None = None,
@@ -1127,24 +1095,35 @@ def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
     """Reference-parity two-phase skyline with an explicit space partitioner.
 
     Mirrors shuffle #1 + local BNL + global merge
-    (FlinkSkyline.java:138,407-444,546-568).  When `partition_col` is
-    given, the MR-* partition id is kept in the output under that name
-    (the reference's originPartition tag, FlinkSkyline.java:389-391) —
+    (FlinkSkyline.java:138,407-444,546-568) without a shuffle: ONE
+    Spark job scans the input, tags each row with its MR-* partition id
+    in the JVM (:func:`~.partitioners.partitioner_expr`) and brings the
+    rows to the driver with ``toArrow()``; the driver computes each
+    pid's local skyline and the global merge with
+    :func:`~.kernels.skyline_mask` (:func:`_two_phase_masks`) and hands
+    the survivors back through ``createDataFrame`` with the input's
+    column order and types.  When `partition_col` is given, the
+    partition id is kept in the output under that name (the
+    reference's originPartition tag, FlinkSkyline.java:389-391) —
     feeding the optimality metric.  `prefilter` applies the
     witness-guarded dominated-region prune (P4 — the filter the
-    reference ships disabled, FlinkSkyline.java:120-124) before the
-    shuffle, cutting shuffle #1 volume losslessly.
+    reference ships disabled, FlinkSkyline.java:120-124) in the JVM,
+    before any row reaches the driver.
 
     `envelope_cells` (truthy/int, round 11): apply the lossless
     all-JVM :func:`~.variants.grid_envelope_prefilter` before the
-    shuffle — the same knob the verify strategies gained in round 10.
-    On the two-phase plan it cuts BOTH shuffle #1 volume AND the
-    Python transport of the grouped local prune (the leg whose 100M
-    2-D cost swung 11-30 s run-to-run: every row crossed into pandas;
-    with the envelope only the near-frontier shell does).  Lossless by
-    the same witness argument; the 1M/10M bench rows keep the plain
-    path measured.
+    transfer, so only the near-frontier shell crosses into Python.
+    Lossless by the same witness argument as the verify strategies.
+
+    EAGER, like :func:`sampled_dominator_prefilter`: the scan, the
+    transfer and both kernel phases run when this function is called,
+    not when the returned frame is consumed, and the tagged input must
+    fit in the driver — the same contract as a stream-engine
+    micro-batch.  The scale-out plans (:func:`skyline`,
+    :func:`skyline_auto`) keep the data in the executors.
     """
+    import pyarrow as pa
+
     if domain_max is None:
         # The reference takes --domain from the CLI; infer from data when absent.
         domain_max = float(
@@ -1166,11 +1145,15 @@ def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
     tagged = df.withColumn(
         pid_name, partitioner_expr(algo, dims, num_partitions, domain_max)
     )
-    local = _grouped_prune(tagged, [pid_name], cols)
-    merged = _local_prune(local.repartition(1), cols)
+    tbl = tagged.toArrow()
+    phases = _two_phase_masks(tbl.column(pid_name).to_numpy(),
+                              _arrow_values(tbl, cols))
+    out = tbl.filter(pa.array(phases.keep))
+    schema = tagged.schema
     if partition_col is None:
-        merged = merged.drop(pid_name)
-    return merged
+        out = out.drop_columns([pid_name])
+        schema = df.schema
+    return df.sparkSession.createDataFrame(out, schema=schema)
 
 
 def skyline_anti_join(df: DataFrame, cols: Sequence[str]) -> DataFrame:

@@ -7,10 +7,11 @@ Reference: `/root/reference/java/org.main/FlinkSkyline.java:579-650`.
   skyline* and divided by `total_partitions` (empty partitions count in
   the denominator only) — exactly the reference's loop at :590-608.
 * **Timing** (A5): wall-clock phases measured driver-side.
-* **CPU accounting** (A6): the kernels time their own compute with
-  `time.perf_counter_ns` and ship the per-partition totals as constant
-  output columns; the metrics aggregation surfaces the max (the
-  reference's straggler metric, FlinkSkyline.java:266-294,534-539).
+* **CPU accounting** (A6): both skyline phases run in the driver, so
+  local/global CPU is the driver's `time.perf_counter_ns` around the
+  kernel calls — summed over pids for the local phase, as the stream
+  engine reports it (the reference times its per-partition BNL,
+  FlinkSkyline.java:266-294,534-539).
 * **JSON assembly** (A7): `to_json(struct(...))`, optimality at 4 dp
   with US-locale formatting (reference uses String.format %.4f).
 """
@@ -18,66 +19,16 @@ Reference: `/root/reference/java/org.main/FlinkSkyline.java:579-650`.
 from __future__ import annotations
 
 import time
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
-from ..operators.kernels import merge_skylines, skyline_mask
 from ..operators.partitioners import partitioner_expr
-from ..operators.skyline import _values
+from ..operators.skyline import _arrow_values, _two_phase_masks
 
 __all__ = ["skyline_query_metrics", "metrics_to_json", "write_metrics_csv"]
-
-
-def _group_prune_with_stats(cols: Sequence[str]):
-    """applyInPandas kernel: local skyline of one partition, tagged with the
-    partition's record count and kernel CPU time (A6) as constant columns."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.perf_counter_ns()
-        mask = skyline_mask(_values(pdf, cols))
-        cpu_ns = time.perf_counter_ns() - t0
-        out = pdf[mask].copy()
-        out["__grp_rows"] = len(pdf)
-        out["__local_cpu_ns"] = cpu_ns
-        return out
-
-    return fn
-
-
-def _merge_with_cpu(cols: Sequence[str], out_col: str):
-    """mapInPandas kernel: incremental skyline merge, accumulating
-    compute-only CPU ns and attaching it as `out_col` on the result."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cpu_ns = 0
-        sky_pdf = None
-        sky_v = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            t0 = time.perf_counter_ns()
-            mask = skyline_mask(_values(pdf, cols))
-            cand = pdf[mask]
-            cand_v = _values(cand, cols)
-            if sky_pdf is None:
-                sky_pdf, sky_v = cand, cand_v
-            else:
-                old_keep, new_keep = merge_skylines(sky_v, cand_v)
-                sky_pdf = pd.concat([sky_pdf[old_keep], cand[new_keep]],
-                                    ignore_index=True)
-                sky_v = np.concatenate([sky_v[old_keep], cand_v[new_keep]])
-            cpu_ns += time.perf_counter_ns() - t0
-        if sky_pdf is not None and not sky_pdf.empty:
-            sky_pdf = sky_pdf.copy()
-            sky_pdf[out_col] = cpu_ns
-            yield sky_pdf
-
-    return fn
 
 
 def skyline_query_metrics(points: DataFrame, cols: Sequence[str], *,
@@ -91,83 +42,55 @@ def skyline_query_metrics(points: DataFrame, cols: Sequence[str], *,
     fields (wall-clock + A6 kernel CPU, not oracle-checkable) added when
     `with_timing`.
 
-    Exactly TWO Spark jobs: the local kernel tags each partition's
-    skyline with its record count and CPU ns, so one P-row aggregate over
-    the cached local set yields sizes + record_count + local CPU, and one
-    P-row aggregate over the global merge yields survivors + skyline_size
-    + global CPU.  The optimality fold over those two P-row aggregates
-    happens driver-side (P = num_partitions, never data-sized).
+    ONE Spark job: the pid tag (:func:`partitioner_expr`) runs in the
+    JVM and ``toArrow()`` brings the pid and the dims to the driver,
+    where :func:`~..operators.skyline._two_phase_masks` computes the
+    local skylines and the global merge — the plan of
+    :func:`~..operators.skyline.skyline_two_phase`.  record_count
+    counts every row; rows with a NULL or NaN dim take no part in the
+    skyline, the one semantics of every skyline entry point.  EAGER,
+    and the tagged dims must fit in the driver.
     """
     t0 = time.perf_counter()
     spark = points.sparkSession
-    dims = [F.col(c) for c in cols]
-    tagged = points.withColumn(
-        "origin_partition",
-        partitioner_expr(algo, dims, num_partitions, domain_max),
-    )
-    # StructType.add mutates in place — never call it on a DataFrame's
-    # cached .schema; build fresh copies.
-    local_schema = StructType(list(tagged.schema.fields) + [
-        StructField("__grp_rows", LongType()),
-        StructField("__local_cpu_ns", LongType()),
-    ])
-    local = tagged.groupBy("origin_partition").applyInPandas(
-        _group_prune_with_stats(cols), schema=local_schema
-    ).persist()
-    try:
-        # Job 1: P-row local stats (sizes double as the reference's MapState
-        # record, FlinkSkyline.java:541-544).
-        local_rows = local.groupBy("origin_partition").agg(
-            F.count(F.lit(1)).alias("local_size"),
-            F.first("__grp_rows").alias("grp_rows"),
-            F.first("__local_cpu_ns").alias("cpu_ns"),
-        ).collect()
-        t_local_end = time.perf_counter()
-        # Job 2: global merge + P-row survivor stats.
-        global_sky = local.repartition(1).mapInPandas(
-            _merge_with_cpu(cols, "__global_cpu_ns"),
-            schema=StructType(list(local_schema.fields) + [
-                StructField("__global_cpu_ns", LongType()),
-            ]),
-        )
-        surv_rows = global_sky.groupBy("origin_partition").agg(
-            F.count(F.lit(1)).alias("survivors"),
-            F.first("__global_cpu_ns").alias("gcpu_ns"),
-        ).collect()
-        t_end = time.perf_counter()
-    finally:
-        local.unpersist()
+    pid = partitioner_expr(algo, [F.col(c) for c in cols], num_partitions,
+                           domain_max)
+    tbl = points.select(pid.alias("pid"), *cols).toArrow()
+    values = _arrow_values(tbl, cols)
+    complete = ~np.isnan(values).any(axis=1)
+    pids = tbl.column("pid").to_numpy()[complete]
+    phases = _two_phase_masks(pids, values[complete])
+    t_end = time.perf_counter()
 
-    record_count = sum(r["grp_rows"] for r in local_rows)
-    skyline_size = sum(r["survivors"] for r in surv_rows)
-    surv_by_pid = {r["origin_partition"]: r["survivors"] for r in surv_rows}
     # Reference optimality loop (FlinkSkyline.java:590-608): partitions with
     # a local skyline contribute survivors/local_size; the denominator is
     # ALWAYS total_partitions (empty partitions dilute).
+    sizes = np.bincount(pids[phases.local])
+    surv = np.bincount(pids[phases.keep], minlength=len(sizes))
     optimality = round(
-        sum(surv_by_pid.get(r["origin_partition"], 0) / r["local_size"]
-            for r in local_rows if r["local_size"] > 0)
-        / float(num_partitions),
-        4,
-    )
+        float((surv[sizes > 0] / sizes[sizes > 0]).sum()) / num_partitions,
+        4)
     row = {
         "query_id": str(query_id),
-        "record_count": record_count,
-        "skyline_size": skyline_size,
-        "optimality": float(optimality),
+        "record_count": tbl.num_rows,
+        "skyline_size": int(phases.keep.sum()),
+        "optimality": optimality,
     }
     schema = ("query_id string, record_count long, skyline_size long, "
               "optimality double")
     if with_timing:
-        local_cpu_ms = max((r["cpu_ns"] for r in local_rows), default=0) // 1_000_000
-        global_cpu_ms = max((r["gcpu_ns"] for r in surv_rows), default=0) // 1_000_000
+        # A6: the driver's kernel time, summed over pids for the local
+        # phase (the engine's definition); the global phase is the merge
+        # kernel, the local phase everything before it.
+        total_ms = int((t_end - t0) * 1000)
+        global_ms = phases.global_ns // 1_000_000
         row.update(
             ingestion_time_ms=0,
-            local_processing_time_ms=int((t_local_end - t0) * 1000),
-            global_processing_time_ms=int((t_end - t_local_end) * 1000),
-            total_processing_time_ms=int((t_end - t0) * 1000),
-            local_cpu_ms=int(local_cpu_ms),
-            global_cpu_ms=int(global_cpu_ms),
+            local_processing_time_ms=total_ms - global_ms,
+            global_processing_time_ms=global_ms,
+            total_processing_time_ms=total_ms,
+            local_cpu_ms=phases.local_ns // 1_000_000,
+            global_cpu_ms=global_ms,
         )
         schema += (", ingestion_time_ms long, local_processing_time_ms long"
                    ", global_processing_time_ms long, total_processing_time_ms"

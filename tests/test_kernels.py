@@ -206,10 +206,13 @@ def test_skyline_mask_2d_keeps_inf_in_first_group():
 
 def test_skyline_mask_3d_sweep_dispatch_above_threshold():
     """skyline_mask dispatches 3-D inputs >= _SWEEP_3D_MIN rows to the
-    plane-sweep over deduped vectors (round 8); the dispatch must agree
-    with the forward scan exactly — including duplicate rows (which the
-    sweep path handles via the unique-inverse mapping) and anti-
-    correlated structure (the regime the dispatch exists for)."""
+    plane-sweep over deduped vectors (one lexsort, neighbour dedup);
+    the dispatch must agree with the forward scan exactly — on anti-
+    correlated structure (the regime the dispatch exists for), planted
+    exact duplicates (including duplicates of frontier points), rows
+    that differ only by -0.0 versus 0.0, +inf coordinates, and an
+    input of exactly _SWEEP_3D_MIN rows.  Duplicates share their
+    representative's verdict."""
     from flink_skyline_qos_spark.operators.kernels import (
         _SWEEP_3D_MIN,
         _skyline_mask_forward,
@@ -224,13 +227,42 @@ def test_skyline_mask_3d_sweep_dispatch_above_threshold():
                          + rng.randint(-40, 40, size=n), 0, None)
     # plant exact duplicates, including duplicates of frontier points
     dup_idx = rng.choice(n, size=n // 4, replace=False)
-    v = np.vstack([base, base[dup_idx]])
-    assert len(v) >= _SWEEP_3D_MIN  # the sweep path engages
-    got = skyline_mask(v)
-    want = _skyline_mask_forward(v)
-    assert (got == want).all()
-    # duplicates share their representative's verdict
-    assert (got[dup_idx] == got[n:]).all()
+    cases = [(np.vstack([base, base[dup_idx]]), dup_idx,
+              np.arange(n, n + n // 4))]
+
+    # -0.0 vs 0.0 (numerically the same vector): every zero-bearing row
+    # again with its zeros negated, plus a run of alternating-sign
+    # copies of one zero-bearing skyline row, long enough to span the
+    # sweep's leaf blocks
+    zs = np.flatnonzero((base == 0).any(axis=1))
+    r = zs[_skyline_mask_forward(base)[zs]][0]
+    run = np.repeat(base[[r]], 600, axis=0)
+    run[::2] = np.where(run[::2] == 0, -0.0, run[::2])
+    neg = np.vstack([np.where(base[zs] == 0, -0.0, base[zs]), run])
+    cases.append((np.vstack([base, neg]), np.r_[zs, np.full(600, r)],
+                  np.arange(n, n + len(neg))))
+
+    # +inf coordinates, in every dim, some duplicated
+    inf = base.copy()
+    for k in range(3):
+        inf[rng.choice(n, size=n // 50, replace=False), k] = np.inf
+    inf[:3] = [[0.0, 0.0, np.inf], [0.0, np.inf, 0.0], [np.inf, 0.0, 0.0]]
+    dup = np.flatnonzero(np.isinf(inf).any(axis=1))[:200]
+    cases.append((np.vstack([inf, inf[dup]]), dup,
+                  np.arange(n, n + dup.size)))
+
+    # exactly _SWEEP_3D_MIN rows: the smallest input the sweep takes
+    m = _SWEEP_3D_MIN
+    edge = base[:m].copy()
+    edge[m - 100:] = edge[:100]
+    cases.append((edge, np.arange(100), np.arange(m - 100, m)))
+
+    for v, rep, dups in cases:
+        assert len(v) >= _SWEEP_3D_MIN  # the sweep path engages
+        got = skyline_mask(v)
+        assert got.any() and not got.all()
+        assert (got == _skyline_mask_forward(v)).all()
+        assert (got[rep] == got[dups]).all()
 
 
 def test_sweep_block_3d_divide_and_conquer_parity():

@@ -3,6 +3,7 @@
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from flink_skyline_qos_spark import (
     grouped_skyline,
@@ -54,7 +55,29 @@ def test_skyline_anti_join(lineitem, oracle_2d):
 @pytest.mark.parametrize("algo", ["mr-dim", "mr-grid", "mr-angle"])
 def test_skyline_two_phase_partition_invariance(lineitem, oracle_2d, algo):
     got = skyline_two_phase(lineitem, DIMS2, algo=algo, num_partitions=8)
+    assert got.schema == lineitem.schema
     assert spark_rows(got, all_cols(lineitem)) == oracle_2d
+
+
+@pytest.mark.parametrize("algo", ["mr-dim", "mr-grid", "mr-angle"])
+def test_skyline_two_phase_partition_col(lineitem, algo):
+    """`partition_col` keeps each row's pid: the rows are skyline()'s,
+    the schema is the input's plus the tag, and every tag is the
+    partitioner evaluated on its row."""
+    from flink_skyline_qos_spark.operators.partitioners import (
+        partitioner_expr,
+    )
+
+    got = skyline_two_phase(lineitem, DIMS3, algo=algo, num_partitions=8,
+                            domain_max=120000.0, partition_col="pid")
+    assert got.schema.names == [*lineitem.columns, "pid"]
+    assert got.schema.fields[:-1] == lineitem.schema.fields
+    assert got.schema["pid"].dataType == IntegerType()
+    assert spark_rows(got, lineitem.columns) == spark_rows(
+        skyline(lineitem, DIMS3), lineitem.columns)
+    want = partitioner_expr(algo, [F.col(c) for c in DIMS3], 8, 120000.0)
+    tags = got.select("pid", want.alias("want")).collect()
+    assert tags and all(r.pid == r.want for r in tags)
 
 
 def test_skyline_3d(lineitem, sf_dir):
@@ -318,6 +341,7 @@ def test_null_dims_one_semantics_across_strategies(spark):
         skyline_broadcast_verify,
         skyline_two_phase,
     )
+    from flink_skyline_qos_spark.plans.metrics import skyline_query_metrics
 
     pts = spark.createDataFrame(
         [(1, 1.0, 1.0), (2, None, 0.5), (3, 2.0, 2.0), (4, None, None)],
@@ -331,6 +355,9 @@ def test_null_dims_one_semantics_across_strategies(spark):
         lambda: skyline_auto(pts, ["x", "y"]),
     ):
         assert sorted(r.id for r in fn().collect()) == [1]
+    # the metrics row counts every record but only complete rows compete
+    m = skyline_query_metrics(pts, ["x", "y"], domain_max=10.0).first()
+    assert (m.record_count, m.skyline_size) == (4, 1)
     con = duckdb.connect()
     con.sql("CREATE TABLE t AS SELECT * FROM (VALUES (1, 1.0, 1.0), "
             "(2, NULL, 0.5), (3, 2.0, 2.0), (4, NULL, NULL)) v(id, x, y)")
@@ -690,35 +717,6 @@ def test_grouped_skyline_kernel_width_safe_rewrite(spark):
                          df, ["d0", "d1"], "grp", strategy="kernel",
                          width_safe=False).collect()), key=key)
     assert direct == got
-
-
-def test_grouped_prune_arrow_chunked_parity(spark):
-    """The round-11 chunked sorted-stream grouped-Arrow host (kept as a
-    documented negative A/B result — see its docstring) must stay
-    value-identical to the shipped pandas grouped host: same per-group
-    skyline multiset including duplicates and group boundaries that
-    split across Arrow batches."""
-    from pyspark.sql import functions as F
-
-    from flink_skyline_qos_spark.operators.partitioners import (
-        partitioner_expr,
-    )
-    from flink_skyline_qos_spark.operators.skyline import (
-        _grouped_prune,
-        _grouped_prune_arrow_chunked,
-    )
-    from flink_skyline_qos_spark.sources.generators import generate_points
-
-    pts = generate_points(spark, 50_000, 3, dist="anti_correlated",
-                          num_partitions=8)
-    dims = [F.col(c) for c in ("d0", "d1", "d2")]
-    tagged = pts.withColumn(
-        "__pid", partitioner_expr("mr-angle", dims, 16, 10000.0))
-    cols = ["d0", "d1", "d2"]
-    a = sorted(map(tuple, _grouped_prune(tagged, ["__pid"], cols).collect()))
-    b = sorted(map(tuple, _grouped_prune_arrow_chunked(
-        tagged, ["__pid"], cols).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_two_phase_envelope_lossless(spark):

@@ -15,6 +15,7 @@ never read as a green gate (review r9).
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from decimal import Decimal
@@ -22,7 +23,11 @@ from fractions import Fraction
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this script lives in, here and in the Python workers
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from flink_skyline_qos_spark.session import (  # noqa: E402
