@@ -8,7 +8,9 @@ whatever downstream `groupBy`/`repartition` consumes it — no custom
 Partitioner subclass, no Python in the row path.
 
 Each builder has a `*_sql` twin emitting the identical formula as ANSI
-SQL for the DuckDB oracle.  Semantics notes:
+SQL for the DuckDB oracle, and :func:`partition_ids` evaluates the same
+formulas in NumPy for rows already in the driver (the stream engine
+tags its micro-batches there).  Semantics notes:
 
 * MR-Dim (FlinkSkyline.java:686-713): ``p = int(v0 / (domain_max / P))``
   clamped to [0, P-1]; other dims ignored.  Java's ``(int)`` truncates
@@ -29,6 +31,7 @@ from functools import reduce
 from operator import add, and_
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -38,15 +41,18 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------------------
 
 def mr_dim(dim0: Column, num_partitions: int, domain_max: float) -> Column:
+    # clamp the long floor BEFORE the int cast: floor(±inf / w)
+    # saturates to Long.MIN/MAX, which an ANSI int cast rejects
     slice_width = domain_max / num_partitions
-    p = F.floor(dim0 / F.lit(slice_width)).cast("int")
-    return F.least(F.greatest(p, F.lit(0)), F.lit(num_partitions - 1))
+    p = F.floor(dim0 / F.lit(slice_width))
+    return F.least(F.greatest(p, F.lit(0)),
+                   F.lit(num_partitions - 1)).cast("int")
 
 
 def mr_dim_sql(col: str, num_partitions: int, domain_max: float) -> str:
     return (
-        f"least(greatest(cast(floor({col} / ({domain_max!r} / {num_partitions})) "
-        f"as int), 0), {num_partitions - 1})"
+        f"cast(least(greatest(floor({col} / ({domain_max!r} / {num_partitions})), "
+        f"0), {num_partitions - 1}) as int)"
     )
 
 
@@ -187,7 +193,7 @@ def mr_z_sql(cols: Sequence[str], num_partitions: int,
 
 def partitioner_expr(algo: str, dims: Sequence[Column], num_partitions: int,
                      domain_max: float) -> Column:
-    """Partition-id column for `algo` ∈ {mr-dim, mr-grid, mr-angle}."""
+    """Partition-id column for `algo` ∈ {mr-dim, mr-grid, mr-angle, mr-z}."""
     algo = algo.lower().replace("_", "-")
     if algo == "mr-dim":
         return mr_dim(dims[0], num_partitions, domain_max)
@@ -212,6 +218,53 @@ def partitioner_sql(algo: str, cols: Sequence[str], num_partitions: int,
     if algo == "mr-z":
         return mr_z_sql(cols, num_partitions, domain_max)
     raise ValueError(f"unknown partitioner algo: {algo}")
+
+
+def partition_ids(algo: str, values: np.ndarray, num_partitions: int,
+                  domain_max: float) -> np.ndarray:
+    """NumPy twin of :func:`partitioner_expr`: the int32 partition id of
+    each row of `values` (``(n, dims)`` float64), computed with the same
+    IEEE operations in the same order, so it equals the Spark tag on
+    every row.  ±inf coordinates clamp into range like the JVM tag does.
+
+    Defined for NaN-free input only: Spark orders NaN above every number
+    and casts it to 0, NumPy compares it false.  Callers drop NaN rows
+    first (the skyline drops them anyway); the skyline answer does not
+    depend on the pid, only the work split does.
+    """
+    algo = algo.lower().replace("_", "-")
+    v = np.asarray(values, dtype=np.float64)
+    n, d = v.shape
+    if algo == "mr-dim":
+        p = np.floor(v[:, 0] / (domain_max / num_partitions))
+    elif algo == "mr-grid":  # the raw cell mask, not clamped
+        bits = (v >= domain_max / 2.0).astype(np.int64) << np.arange(d)
+        return bits.sum(axis=1).astype(np.int32)
+    elif algo == "mr-angle":
+        if d < 2:
+            return np.zeros(n, np.int32)
+        avg = np.zeros(n)
+        for i in range(d - 1):
+            rest_sq = v[:, i + 1] * v[:, i + 1]
+            for j in range(i + 2, d):
+                rest_sq = rest_sq + v[:, j] * v[:, j]
+            avg = avg + np.arctan2(np.sqrt(rest_sq), v[:, i]) \
+                / (math.pi / 2.0)
+        p = np.trunc(avg / float(d - 1) * num_partitions)
+    elif algo == "mr-z":
+        bits = _z_bits(d)
+        cells = 1 << bits
+        key = np.zeros(n, np.int64)
+        for k in range(d):
+            c = np.clip(np.floor(v[:, k] / float(domain_max) * float(cells)),
+                        0, cells - 1).astype(np.int64)
+            for j in range(bits):
+                key |= ((c >> j) & 1) << (j * d + k)
+        width = -(-(1 << (bits * d)) // num_partitions)  # ceil
+        p = np.floor(key.astype(np.float64) / float(width))
+    else:
+        raise ValueError(f"unknown partitioner algo: {algo}")
+    return np.clip(p, 0, num_partitions - 1).astype(np.int32)
 
 
 def grid_dominance_prefilter(dims: Sequence[Column], domain_max: float) -> Column:

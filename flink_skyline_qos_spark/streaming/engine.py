@@ -12,13 +12,14 @@ pending-query replay, and the countdown-latch (ST2/ST3/A3) all
 collapse into `foreachBatch` orchestration, and the state only has to
 be consistent, and durable, at batch boundaries:
 
-* Ingest = ONE Spark job: the wire parse (`streaming.wire`) and the
-  pid tag (`partitioner_expr`) run in the JVM, and the batch comes to
-  the driver with ``toArrow()``; the trigger rows take a second, tiny
-  job.  The local skylines (a few thousand rows per partition) live in
-  the driver, and each pid's new rows are folded into its skyline with
-  one `kernels.skyline_mask` call — the reference's incremental BNL
-  against existing keyed state.
+* Ingest = ONE Spark job per micro-batch: ``toArrow()`` brings the raw
+  ``(value, kind)`` lines to the driver.  There the wire codec
+  (`wire.parse_service_lines` / `wire.parse_trigger_lines`, pyarrow)
+  parses them and `partitioners.partition_ids`, the NumPy twin of
+  `partitioner_expr`, tags each row's pid.  The local skylines (a few
+  thousand rows per partition) live in the driver, and each pid's new
+  rows are folded into its skyline with one `kernels.skyline_mask`
+  call — the reference's incremental BNL against existing keyed state.
 * Commit = pyarrow + ``os.replace``: the state epoch
   (``state/points/epoch={b}/``), then its meta
   (``state/meta/epoch={b:020d}.json``, the commit marker), each staged
@@ -50,13 +51,14 @@ from typing import Callable
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.kernels import skyline_mask
-from ..operators.partitioners import partitioner_expr
-from .wire import parse_service_tuples, parse_triggers
+from ..operators.partitioners import partition_ids
+from .wire import parse_service_lines, parse_trigger_lines
 
 __all__ = ["SkylinePipeline", "PIPELINE_METRICS_DDL"]
 
@@ -97,6 +99,16 @@ def _epochs(path: str) -> list[int]:
             except ValueError:
                 continue
     return sorted(out)
+
+
+def _split(pids: np.ndarray, ids: np.ndarray, vals: np.ndarray) -> State:
+    """Rows ``(id, values, pid)`` → per-pid (ids, values)."""
+    order = np.argsort(pids, kind="stable")
+    ids, vals = ids[order], vals[order]
+    keys, starts = np.unique(pids[order], return_index=True)
+    ends = [*starts[1:], len(order)]
+    return {int(p): (ids[s:t], vals[s:t])
+            for p, s, t in zip(keys, starts, ends)}
 
 
 def _gc(path: str, keep: int = _KEEP_EPOCHS) -> None:
@@ -215,20 +227,11 @@ class SkylinePipeline:
                                    f"epoch={e:020d}.json")) as fh:
                 meta = json.load(fh)
             tbl = pq.read_table(os.path.join(self.points_dir, f"epoch={e}"))
-            self._mem = (e, self._split(tbl), meta)
+            vals = np.column_stack(
+                [tbl.column(c).to_numpy() for c in self.cols])
+            self._mem = (e, _split(tbl.column("pid").to_numpy(),
+                                   tbl.column("id").to_numpy(), vals), meta)
         return dict(self._mem[1]), copy.deepcopy(self._mem[2])
-
-    def _split(self, tbl: pa.Table) -> State:
-        """Rows ``(id, d*, pid)`` → per-pid (ids, values)."""
-        pids = tbl.column("pid").to_numpy()
-        order = np.argsort(pids, kind="stable")
-        ids = tbl.column("id").to_numpy()[order]
-        vals = np.column_stack(
-            [tbl.column(c).to_numpy() for c in self.cols])[order]
-        keys, starts = np.unique(pids[order], return_index=True)
-        ends = [*starts[1:], len(order)]
-        return {int(p): (ids[s:t], vals[s:t])
-                for p, s, t in zip(keys, starts, ends)}
 
     def _table(self, state: State) -> pa.Table:
         """Per-pid state → rows ``(id, d*, pid)``, in pid order."""
@@ -262,35 +265,33 @@ class SkylinePipeline:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         """foreachBatch handler over the tagged union of both streams."""
         t_batch0 = time.perf_counter()
-        pid = partitioner_expr(
-            self.algo, [F.col(c) for c in self.cols],
-            self.num_partitions, self.domain_max)
-        rows = parse_service_tuples(
-            batch.filter(F.col("kind") == 0), self.dims) \
-            .withColumn("pid", pid).toArrow()
-        trig = parse_triggers(batch.filter(F.col("kind") == 1)).collect()
+        raw = batch.select("value", "kind").toArrow()  # the only Spark job
+        lines, kind = raw.column("value"), raw.column("kind")
+        ids, vals = parse_service_lines(
+            lines.filter(pc.equal(kind, 0)), self.dims)
+        trig = parse_trigger_lines(lines.filter(pc.equal(kind, 1)))
+        pids = partition_ids(self.algo, vals, self.num_partitions,
+                             self.domain_max)
 
         state, meta = self._load(batch_id)
         kernel_ns = 0
-        if rows.num_rows:
-            meta["max_seen_id"] = max(
-                meta["max_seen_id"], int(rows.column("id").to_numpy().max()))
-            meta["record_count"] += rows.num_rows
+        if len(ids):
+            meta["max_seen_id"] = max(meta["max_seen_id"], int(ids.max()))
+            meta["record_count"] += len(ids)
             none = (np.empty(0, np.int64), np.empty((0, self.dims)))
-            for p, (ids, vals) in self._split(rows).items():
+            for p, (new_ids, new_vals) in _split(pids, ids, vals).items():
                 old_ids, old_vals = state.get(p, none)
-                ids = np.concatenate([old_ids, ids])
-                vals = np.concatenate([old_vals, vals])
+                p_ids = np.concatenate([old_ids, new_ids])
+                p_vals = np.concatenate([old_vals, new_vals])
                 t0 = time.perf_counter_ns()
-                keep = skyline_mask(vals)
+                keep = skyline_mask(p_vals)
                 kernel_ns += time.perf_counter_ns() - t0
-                state[p] = (ids[keep], vals[keep])
+                state[p] = (p_ids[keep], p_vals[keep])
 
         # Barrier (ST2/ST3): release pending + new triggers whose K is
         # satisfied; a partition that never saw data (max_seen_id=-1)
         # releases K=0 only (FlinkSkyline.java:334,351).
-        waiting = [tuple(t) for t in meta["pending"]]
-        waiting += [(r["query_id"], int(r["required_count"])) for r in trig]
+        waiting = [tuple(t) for t in meta["pending"]] + trig
         released = [(q, k) for q, k in waiting
                     if k == 0 or meta["max_seen_id"] >= k]
         meta["pending"] = [list(t) for t in waiting

@@ -80,6 +80,27 @@ def test_skyline_two_phase_partition_col(lineitem, algo):
     assert tags and all(r.pid == r.want for r in tags)
 
 
+@pytest.mark.parametrize("algo", ["mr-dim", "mr-grid", "mr-angle", "mr-z"])
+def test_skyline_two_phase_infinite_coordinates(spark, algo):
+    """+inf in any dim is a valid coordinate: the JVM tag clamps it into
+    range (mr-dim's floor(inf / w) used to overflow the int cast) and
+    the answer equals skyline()'s, the +inf survivors included."""
+    import numpy as np
+
+    inf = float("inf")
+    rng = np.random.default_rng(7)
+    rows = [(i, *map(float, rng.integers(1, 100, 3))) for i in range(300)]
+    rows += [(300, inf, 0.0, 0.0), (301, 0.0, inf, 0.0),
+             (302, 0.0, 0.0, inf), (303, inf, inf, inf), (304, inf, 5.0, 5.0)]
+    df = spark.createDataFrame(rows, "id long, d0 double, d1 double,"
+                                     " d2 double")
+    cols = ["d0", "d1", "d2"]
+    got = spark_rows(skyline_two_phase(df, cols, algo=algo, num_partitions=4,
+                                       domain_max=100.0), df.columns)
+    assert got == spark_rows(skyline(df, cols), df.columns)
+    assert {300, 301, 302} <= {r[0] for r in got}
+
+
 def test_skyline_3d(lineitem, sf_dir):
     oracle = as_sorted(duck_skyline(sf_dir, "lineitem", DIMS3))
     got = skyline(lineitem, DIMS3)

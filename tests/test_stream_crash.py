@@ -40,7 +40,8 @@ from flink_skyline_qos_spark.streaming.engine import SkylinePipeline
 POINTS = ("state", "meta", "results", "metrics")
 ALGOS = ("mr-dim", "mr-grid", "mr-angle")
 NEVER = 10 ** 9
-MALFORMED = ("garbage", "7,abc,1", "8,1", "9,1,2,3,4", ",1,2", "", "x,1,2")
+MALFORMED = ("garbage", "7,abc,1", "8,1", "9,1,2,3,4", ",1,2", "", "x,1,2",
+             "7,NaN,1")
 _PUBLISHED = {
     ("state", "points"): r"epoch=\d+",
     ("state", "meta"): r"epoch=\d{20}\.json",

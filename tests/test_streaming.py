@@ -11,7 +11,10 @@ Reference semantics under test (SURVEY §2.5):
 
 import os
 
+import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flink_skyline_qos_spark.operators.skyline import skyline
@@ -53,6 +56,90 @@ def test_serialize_roundtrip(spark):
     back = parse_service_tuples(
         serialize_service_tuples(df, dims=2), dims=2)
     assert sorted(back.collect()) == sorted(df.collect())
+
+
+# Fields on which Spark's casts and a plain pyarrow cast disagree, or
+# that are not finite: whitespace and control bytes, signs, Java's
+# type suffixes and hex floats, Spark's inf/nan literals, overflow,
+# non-ASCII digits.
+EDGE_FIELDS = (
+    " 12", "\t12", "12\r", "+12", "12.0", "0x1F", "1d", "1F", "0x1p3",
+    "Infinity", "inf", "NaN", "1e400", "9223372036854775808",
+    "-9223372036854775808", "-9223372036854775809", "", "\u0661\u0662",
+    "\uff11\uff12", "\x7f12", "\x0012", "-0", "-Infinity", "+NaN", "+nan",
+    " nan ", "INF", "1.e3", ".5", "12.", "0x1.8p1", "0X1P-2f", "0x1p99999",
+    "1e-400", "1e", "--1", "1_000", "1 2", "InfinityD",
+)
+TRIGGER_EDGE_LINES = ("q, 7 ", ",5", "q,1,2", "q1,500", "q2", "q3,notanum",
+                      "q4,", "q5,+7", "q6,12.0", "q7,9223372036854775808",
+                      "q8,0x10", "q9,-3", "", None)
+
+
+def _codec_corpus() -> list:
+    lines = ["1,10.0,20.0", "2,5.5,6.5", "3,1.0", "4,a,2.0", "garbage",
+             "5,1.0,2.0,3.0", "6,1,2,", "7,1e5,-2.5E-3", "", None]
+    for f in EDGE_FIELDS:
+        lines += [f"{f},1,2", f"8,{f},2", f"9,1,{f}"]
+    return lines
+
+
+def _float_key(x: float) -> str:
+    return x.hex()  # tells -0.0 from 0.0
+
+
+def _assert_codecs_agree(spark, lines, dims=2):
+    """parse_service_lines == parse_service_tuples minus NaN rows, and
+    parse_trigger_lines == parse_triggers, over `lines`."""
+    import math
+
+    import pyarrow as pa
+
+    from flink_skyline_qos_spark.streaming.wire import (
+        parse_service_lines,
+        parse_trigger_lines,
+    )
+
+    raw = spark.createDataFrame([(v,) for v in lines], "value string")
+    cols = [f"d{i}" for i in range(dims)]
+    want = sorted(
+        (r["id"], *map(_float_key, (r[c] for c in cols)))
+        for r in parse_service_tuples(raw, dims).collect()
+        if not any(math.isnan(r[c]) for c in cols))
+    half = len(lines) // 2   # the engine hands over chunked arrays
+    arr = pa.chunked_array([pa.array(lines[:half], pa.string()),
+                            pa.array(lines[half:], pa.string())])
+    ids, vals = parse_service_lines(arr, dims)
+    assert ids.dtype == np.int64 and vals.dtype == np.float64
+    assert vals.shape == (len(ids), dims)
+    got = sorted((int(i), *map(_float_key, v.tolist()))
+                 for i, v in zip(ids, vals))
+    assert got == want
+    want_t = sorted((r["query_id"], r["required_count"])
+                    for r in parse_triggers(raw).collect())
+    assert sorted(parse_trigger_lines(arr)) == want_t
+
+
+def test_driver_codec_matches_spark_on_edge_corpus(spark):
+    lines = _codec_corpus()
+    _assert_codecs_agree(spark, lines + list(TRIGGER_EDGE_LINES))
+
+
+_FIELD = st.one_of(
+    st.sampled_from(EDGE_FIELDS),
+    st.integers(-(1 << 64), 1 << 64).map(str),
+    st.floats().map(repr),
+    st.decimals(allow_nan=False, allow_infinity=False).map(str),
+    st.text(alphabet="0123456789+-.,eExXpPdDfFaAiInNtTyY \t\r\x7f",
+            max_size=8),
+)
+_LINE = st.one_of(st.none(),
+                  st.lists(_FIELD, min_size=1, max_size=4).map(",".join))
+
+
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(lines=st.lists(_LINE, min_size=1, max_size=60))
+def test_driver_codec_matches_spark_on_generated_lines(spark, lines):
+    _assert_codecs_agree(spark, lines)
 
 
 # ------------------------------------------------------------- pipeline
@@ -204,6 +291,34 @@ def test_pipeline_incremental_equals_batch(spark, tmp_path, algo, dims):
     assert mrow[0]["record_count"] == len(rows)
     assert mrow[0]["skyline_size"] == sky.sum()
     assert mrow[0]["optimality"] == pytest.approx(round(opt, 4), abs=1e-9)
+
+
+@pytest.mark.parametrize("algo", ["mr-dim", "mr-grid", "mr-angle", "mr-z"])
+def test_pipeline_nonfinite_lines(spark, tmp_path, algo):
+    """One batch mixing ±inf, overflowing and NaN dims with valid lines:
+    the ±inf rows are kept and tagged into range, the NaN rows are
+    dropped as malformed, and the answer is the skyline of the rest."""
+    lines = ["1,Infinity,3", "2,1e400,4", "3,NaN,2", "4,2,-Infinity",
+             "5,inf,-inf", "6,nan,1", "7,3,NaN", "8,-1e400,9"]
+    rng = np.random.default_rng(3)
+    lines += [f"{i},{a},{b}" for i, (a, b) in
+              enumerate(rng.integers(0, 10, (40, 2)).tolist(), start=10)]
+    batch = spark.createDataFrame([(v, 0) for v in lines] + [("q", 1)],
+                                  "value string, kind int")
+    pipe = SkylinePipeline(spark, str(tmp_path / "work"), dims=2, algo=algo,
+                           num_partitions=4, domain_max=10.0)
+    pipe.process_batch(batch, 0)
+
+    rows = [(int(i), float(a), float(b))
+            for i, a, b in (v.split(",") for v in lines)]
+    rows = [r for r in rows if not np.isnan(r[1:]).any()]
+    vals = np.array([r[1:] for r in rows])
+    want = {r for r, keep in zip(rows, _brute_skyline_mask(vals)) if keep}
+    got = {(r["id"], r["d0"], r["d1"]) for r in pipe.results().collect()}
+    assert got == want and any(np.isinf(r[1:]).any() for r in got)
+    mrow = pipe.metrics().collect()
+    assert [(r["query_id"], r["record_count"]) for r in mrow] == \
+        [("q", len(rows))]
 
 
 # ----------------------------------------------- applyInPandasWithState
