@@ -125,7 +125,10 @@ def _to_long(field: str) -> int | None:
     field = field.strip(_LONG_TRIM)
     if not _LONG.fullmatch(field):
         return None
-    v = int(field)
+    digits = field.lstrip("+-").lstrip("0") or "0"
+    if len(digits) > 19:  # overflows; also keeps int() under its digit cap
+        return None
+    v = -int(digits) if field[0] == "-" else int(digits)
     return v if -(1 << 63) <= v < (1 << 63) else None
 
 

@@ -69,6 +69,7 @@ EDGE_FIELDS = (
     "\uff11\uff12", "\x7f12", "\x0012", "-0", "-Infinity", "+NaN", "+nan",
     " nan ", "INF", "1.e3", ".5", "12.", "0x1.8p1", "0X1P-2f", "0x1p99999",
     "1e-400", "1e", "--1", "1_000", "1 2", "InfinityD",
+    "0" * 4400 + "12", "9" * 4400,
 )
 TRIGGER_EDGE_LINES = ("q, 7 ", ",5", "q,1,2", "q1,500", "q2", "q3,notanum",
                       "q4,", "q5,+7", "q6,12.0", "q7,9223372036854775808",
@@ -124,20 +125,28 @@ def test_driver_codec_matches_spark_on_edge_corpus(spark):
     _assert_codecs_agree(spark, lines + list(TRIGGER_EDGE_LINES))
 
 
-_FIELD = st.one_of(
-    st.sampled_from(EDGE_FIELDS),
+_NUMBER = st.one_of(
     st.integers(-(1 << 64), 1 << 64).map(str),
     st.floats().map(repr),
     st.decimals(allow_nan=False, allow_infinity=False).map(str),
+)
+_FIELD = st.one_of(
+    _NUMBER,
+    st.sampled_from(EDGE_FIELDS),
     st.text(alphabet="0123456789+-.,eExXpPdDfFaAiInNtTyY \t\r\x7f",
             max_size=8),
 )
-_LINE = st.one_of(st.none(),
-                  st.lists(_FIELD, min_size=1, max_size=4).map(",".join))
+_LINE = st.one_of(
+    st.none(),
+    # mostly well-formed: a plain id and two numeric or edge-case dims
+    st.tuples(st.integers(-10 ** 6, 10 ** 6).map(str),
+              *[_NUMBER | st.sampled_from(EDGE_FIELDS)] * 2).map(",".join),
+    st.lists(_FIELD, min_size=1, max_size=4).map(",".join),
+)
 
 
-@settings(max_examples=25, deadline=None, derandomize=True)
-@given(lines=st.lists(_LINE, min_size=1, max_size=60))
+@settings(max_examples=30, deadline=None, derandomize=True)
+@given(lines=st.lists(_LINE, min_size=10, max_size=80))
 def test_driver_codec_matches_spark_on_generated_lines(spark, lines):
     _assert_codecs_agree(spark, lines)
 
