@@ -121,9 +121,9 @@ def _z_bits(d: int) -> int:
 def mr_z(dims: Sequence[Column], num_partitions: int,
          domain_max: float) -> Column:
     """Morton (Z-order) range partitioner — a fourth space partitioner in
-    the reference's two-phase framework (not in the reference; composes
-    the `operators/layout.py` Morton math with the [0, domain_max]
-    uniform-domain convention of MR-Dim/MR-Grid).
+    the reference's two-phase framework (not in the reference; applies
+    Morton bit interleaving under the [0, domain_max] uniform-domain
+    convention of MR-Dim/MR-Grid).
 
     Unlike MR-Dim/Grid/Angle, Z-order is a LINEAR EXTENSION of the
     dominance partial order (Lee et al., "Approaching the Skyline in Z
@@ -283,22 +283,3 @@ def grid_dominance_prefilter(dims: Sequence[Column], domain_max: float) -> Colum
     mid = domain_max / 2.0
     all_worse = reduce(and_, [c >= F.lit(mid) for c in dims])
     return ~all_worse
-
-
-def scale_out(df, probe=None):
-    """Ensure at least default-parallelism partitions before heavy
-    per-row compute (Arrow kernels, md5-per-shingle projections, GEMM
-    passes).  A small parquet table arrives as one split and would
-    serialize the whole stage on a single core; at 100 TB inputs
-    already carry thousands of splits and this is a no-op.  Repartition
-    the RAW input and project AFTER — a repartition exchange's child
-    computes pre-shuffle, so scaling out above the projection leaves
-    the heavy work single-task (round-8 finding, BENCHMARKS.md).
-
-    `probe` lets the partition count be read off a simpler upstream
-    plan (``.rdd`` plan conversion on a heavy projection is not free).
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if (probe if probe is not None else df).rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df

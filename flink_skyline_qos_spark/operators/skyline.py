@@ -6,8 +6,7 @@ Three physical strategies over identical set semantics:
 1. :func:`skyline` — the scale path.  Phase 1 prunes each *input*
    partition to its local skyline with an Arrow-native `mapInArrow`
    kernel host (NARROW — zero shuffle; skyline is decomposable under
-   any partitioning, SURVEY §1.4; pandas hosts remain as the
-   UDT-schema fallback).
+   any partitioning, SURVEY §1.4).
    Phase 2 shuffles only the survivors to one task (`repartition(1)`,
    tiny exchange) and merges.  At 100 TB the phase-1 scan is
    embarrassingly parallel and the exchange carries only local-skyline
@@ -38,7 +37,7 @@ from typing import Iterator, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dominance import dominates
@@ -148,79 +147,6 @@ def _join_back(df: DataFrame, vecs: DataFrame, cols: Sequence[str],
     return out
 
 
-def _prune_batches(cols: Sequence[str], *,
-                   buffer_cap: int = 4_000_000,
-                   buffer_bytes: int = 256 << 20):
-    """mapInPandas function: skyline over this partition's batches.
-
-    Buffers the partition's Arrow batches and runs ONE kernel pass over
-    the whole buffer instead of a per-batch incremental merge: the
-    per-batch merge re-verifies each batch against the running skyline
-    matrix — O(batches · S) redundant comparisons that dominated the
-    local-prune leg on anti-correlated data (S in the thousands per
-    partition; the one-shot sweep is 2.8× faster end-to-end at 10M×3-D,
-    BENCHMARKS.md round 8).  The one-shot pass also lets the kernel
-    pick its globally-best algorithm (3-D plane-sweep, 2-D sort-scan)
-    over the full partition.
-
-    Memory stays bounded: when the buffer exceeds `buffer_cap` rows
-    OR `buffer_bytes` estimated pandas bytes — rows alone would let a
-    wide-passthrough table (the module contract allows arbitrary
-    passthrough columns, e.g. long text) pin gigabytes per concurrent
-    task (review finding r8) — it is collapsed to its own skyline
-    (sound by decomposability — skyline(A ∪ B) = skyline(skyline(A)
-    ∪ B)) and accumulation continues, so a pathologically large input
-    partition degrades to the incremental behavior with a much larger
-    block.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts: list[pd.DataFrame] = []
-        rows = 0
-        nbytes = 0
-        # effective thresholds grow GEOMETRICALLY past the irreducible
-        # survivor size: when local pruning barely prunes (wide rows on
-        # anti-correlated data), a fixed threshold would re-fire
-        # collapse on every subsequent batch — hundreds of full-buffer
-        # kernel passes (review r8); doubling keeps collapse frequency
-        # amortized O(log) while memory stays within 2× the survivors.
-        eff_cap = buffer_cap
-        eff_bytes = buffer_bytes
-
-        def _size(pdf: pd.DataFrame) -> int:
-            # deep=True prices object (string) columns; O(ncols) for
-            # numeric frames, one O(batch) pass otherwise
-            return int(pdf.memory_usage(index=False, deep=True).sum())
-
-        def collapse() -> pd.DataFrame | None:
-            nonlocal parts, rows, nbytes, eff_cap, eff_bytes
-            if not parts:
-                return None
-            pdf = (parts[0] if len(parts) == 1
-                   else pd.concat(parts, ignore_index=True))
-            out = pdf[skyline_mask(_values(pdf, cols))]
-            parts = [out]
-            rows = len(out)
-            nbytes = _size(out)
-            eff_cap = max(eff_cap, 2 * rows)
-            eff_bytes = max(eff_bytes, 2 * nbytes)
-            return out
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts.append(pdf)
-            rows += len(pdf)
-            nbytes += _size(pdf)
-            if rows >= eff_cap or nbytes >= eff_bytes:
-                collapse()
-        out = collapse()
-        if out is not None and not out.empty:
-            yield out.reset_index(drop=True)
-
-    return fn
-
-
 def _group_prune(cols: Sequence[str]):
     """applyInPandas function: exact skyline of one whole group."""
 
@@ -228,34 +154,6 @@ def _group_prune(cols: Sequence[str]):
         return pdf[skyline_mask(_values(pdf, cols))]
 
     return fn
-
-
-# ---------------------------------------------------------------------------
-# Arrow-native kernel hosts (VERDICT r9 #2).
-#
-# The pandas hosts above pay a pandas.DataFrame construction on BOTH
-# sides of every batch — BlockManager assembly on the way in, Block
-# re-slicing on the way out — on frames whose useful content is a pure
-# float64 matrix.  At 100M rows that conversion was ~all of the
-# local-prune leg's cost (anticorr_100m_3d, 41-46 s).  These hosts
-# consume/produce pyarrow RecordBatches directly (`mapInArrow` /
-# `applyInArrow`): the dim columns become NumPy via a per-chunk
-# zero-copy view + one gather into the kernel matrix, the survivor
-# filter runs in Arrow C++ (`Table.filter`), and non-dim payload
-# columns are never touched at all.  Same batching, buffering, and tie
-# semantics as the pandas hosts — those remain as the fallback for
-# exotic (UDT-bearing) schemas and as the streaming GroupState path.
-# ---------------------------------------------------------------------------
-
-
-def _arrow_plan(df: DataFrame) -> bool:
-    """True when `df`'s schema round-trips through raw Arrow batches
-    (everything except user-defined types — the hosts only slice and
-    filter whole batches, so any built-in type is safe)."""
-    from pyspark.sql import types as T
-
-    return not any(isinstance(f.dataType, T.UserDefinedType)
-                   for f in df.schema.fields)
 
 
 def _arrow_values(tbl, cols: Sequence[str], *, order: str = "F") -> np.ndarray:
@@ -277,13 +175,39 @@ def _arrow_values(tbl, cols: Sequence[str], *, order: str = "F") -> np.ndarray:
     return out
 
 
-def _prune_batches_arrow(cols: Sequence[str], *,
-                         buffer_cap: int = 4_000_000,
-                         buffer_bytes: int = 256 << 20):
-    """mapInArrow twin of :func:`_prune_batches` — identical buffering
-    (geometric collapse past `buffer_cap` rows / `buffer_bytes`) and
-    identical output multiset; the batch transport just never leaves
-    Arrow."""
+def _prune_batches(cols: Sequence[str], *,
+                   buffer_cap: int = 4_000_000,
+                   buffer_bytes: int = 256 << 20):
+    """mapInArrow function: skyline over this partition's batches.
+
+    Buffers the partition's Arrow batches and runs ONE kernel pass over
+    the whole buffer instead of a per-batch incremental merge: the
+    per-batch merge re-verifies each batch against the running skyline
+    matrix — O(batches · S) redundant comparisons that dominated the
+    local-prune leg on anti-correlated data (S in the thousands per
+    partition; the one-shot sweep is 2.8× faster end-to-end at 10M×3-D,
+    BENCHMARKS.md round 8).  The one-shot pass also lets the kernel
+    pick its globally-best algorithm (3-D plane-sweep, 2-D sort-scan)
+    over the full partition.
+
+    The batches never leave Arrow (VERDICT r9 #2): the dim columns
+    become NumPy via a per-chunk zero-copy view + one gather into the
+    kernel matrix, the survivor filter runs in Arrow C++
+    (`Table.filter`), and non-dim payload columns — user-defined types
+    included — are never touched at all.
+
+    Memory stays bounded: when the buffer exceeds `buffer_cap` rows
+    OR `buffer_bytes` — rows alone would let a wide-passthrough table
+    (the module contract allows arbitrary passthrough columns, e.g.
+    long text) pin gigabytes per concurrent task (review finding r8) —
+    it is collapsed to its own skyline (sound by decomposability —
+    skyline(A ∪ B) = skyline(skyline(A) ∪ B)) and accumulation
+    continues, so a pathologically large input partition degrades to
+    the incremental behavior with a much larger block.  Effective
+    thresholds grow GEOMETRICALLY past the irreducible survivor size
+    (review r8), so collapse frequency stays amortized O(log) while
+    memory stays within 2× the survivors.
+    """
 
     def fn(batches) -> "Iterator":
         import pyarrow as pa
@@ -327,14 +251,8 @@ def _prune_batches_arrow(cols: Sequence[str], *,
 
 
 def _local_prune(df: DataFrame, cols: Sequence[str], **buf) -> DataFrame:
-    """One narrow local-skyline pass over `df`'s partitions — the
-    Arrow host when the schema allows (always, short of UDTs), the
-    pandas host otherwise."""
-    if _arrow_plan(df):
-        return df.mapInArrow(
-            _prune_batches_arrow(cols, **buf), schema=df.schema)
-    return df.mapInPandas(
-        _prune_batches(cols, **buf), schema=df.schema)
+    """One narrow local-skyline pass over `df`'s partitions."""
+    return df.mapInArrow(_prune_batches(cols, **buf), schema=df.schema)
 
 
 def _grouped_prune(df: DataFrame, by: Sequence[str],
@@ -692,29 +610,18 @@ def _dominated_mask(b: np.ndarray, ref) -> np.ndarray:
 def _verify_pass(pruned: DataFrame, cols: Sequence[str], ref) -> DataFrame:
     """One broadcast-verify pass: drop rows of `pruned` dominated by
     any reference point in the broadcast `(values, sums)` pair."""
-    if _arrow_plan(pruned):
-        def verify_arrow(batches):
-            import pyarrow as pa
+    def verify(batches):
+        import pyarrow as pa
 
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                dom = _dominated_mask(_arrow_values(tbl, cols), ref)
-                if not dom.all():
-                    yield from tbl.filter(pa.array(~dom)).to_batches()
-
-        return pruned.mapInArrow(verify_arrow, schema=pruned.schema)
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            out = pdf[~_dominated_mask(_values(pdf, cols), ref)]
-            if not out.empty:
-                yield out
+            tbl = pa.Table.from_batches([rb])
+            dom = _dominated_mask(_arrow_values(tbl, cols), ref)
+            if not dom.all():
+                yield from tbl.filter(pa.array(~dom)).to_batches()
 
-    return pruned.mapInPandas(verify, schema=pruned.schema)
+    return pruned.mapInArrow(verify, schema=pruned.schema)
 
 
 def _verify_against_broadcast(pruned: DataFrame, cols: Sequence[str], *,
@@ -817,32 +724,20 @@ def _membership_pass(pruned: DataFrame, cols: Sequence[str],
     """Keep exactly the rows whose dim vector is in the broadcast
     skyline matrix (duplicate copies of skyline vectors all survive —
     ties never dominate, matching the verify kernels)."""
-    if _arrow_plan(pruned):
-        def member_arrow(batches):
-            import pyarrow as pa
+    def member(batches):
+        import pyarrow as pa
 
-            sky = _row_view(ref.value)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                keep = np.isin(
-                    _row_view(_arrow_values(tbl, cols, order="C")), sky)
-                if keep.any():
-                    yield from tbl.filter(pa.array(keep)).to_batches()
-
-        return pruned.mapInArrow(member_arrow, schema=pruned.schema)
-
-    def member(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sky = _row_view(ref.value)
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            out = pdf[np.isin(_row_view(_values(pdf, cols)), sky)]
-            if not out.empty:
-                yield out
+            tbl = pa.Table.from_batches([rb])
+            keep = np.isin(
+                _row_view(_arrow_values(tbl, cols, order="C")), sky)
+            if keep.any():
+                yield from tbl.filter(pa.array(keep)).to_batches()
 
-    return pruned.mapInPandas(member, schema=pruned.schema)
+    return pruned.mapInArrow(member, schema=pruned.schema)
 
 
 def _verify_scatter(pruned: DataFrame, cols: Sequence[str], *,
@@ -864,7 +759,7 @@ def _verify_scatter(pruned: DataFrame, cols: Sequence[str], *,
       candidates (measured 10× on the 1M 4-D set: per-value explode
       96 s vs 11 s blob-packed, broadcast form 10 s),
 
-    then one `applyInPandas` per group verifies |C|/chunks rows against
+    then one `applyInArrow` per group verifies |C|/chunks rows against
     the complete candidate set with the vectorized sorted-sum kernel.
     Total comparisons are identical to the broadcast form; no node —
     least of all the driver — ever holds more than |C|·d values.  The
@@ -887,30 +782,20 @@ def _verify_scatter(pruned: DataFrame, cols: Sequence[str], *,
         "__ck", F.pmod(F.monotonically_increasing_id(), F.lit(k)))
     out_cols = pruned.columns
 
-    arrow = _arrow_plan(pruned)
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arrs = [_values(pdf, cols) for pdf in batches if not pdf.empty]
-        if not arrs:
-            return
-        # per-partition dedup: duplicates add no dominance evidence
-        uniq = np.unique(np.concatenate(arrs), axis=0)
-        yield pd.DataFrame({"__blob": [np.ascontiguousarray(uniq).tobytes()]})
-
-    def pack_arrow(batches):
+    def pack(batches):
         import pyarrow as pa
 
         arrs = [_arrow_values(pa.Table.from_batches([rb]), cols, order="C")
                 for rb in batches if rb.num_rows]
         if not arrs:
             return
+        # per-partition dedup: duplicates add no dominance evidence
         uniq = np.unique(np.concatenate(arrs), axis=0)
         yield pa.RecordBatch.from_arrays(
             [pa.array([np.ascontiguousarray(uniq).tobytes()],
                       type=pa.binary())], names=["__blob"])
 
-    packed = (pruned.mapInArrow(pack_arrow, schema="__blob binary") if arrow
-              else pruned.mapInPandas(pack, schema="__blob binary"))
+    packed = pruned.mapInArrow(pack, schema="__blob binary")
     a_side = packed.withColumn("__ck", F.explode(
         F.array(*[F.lit(i) for i in range(k)])))
     # Explicit user repartition on the group key: AQE would otherwise
@@ -936,19 +821,7 @@ def _verify_scatter(pruned: DataFrame, cols: Sequence[str], *,
         dom[border] = dom_s
         return dom
 
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        is_blob = pdf["__blob"].notna()
-        b_pdf = pdf[~is_blob]
-        if b_pdf.empty:
-            return b_pdf[out_cols]
-        a = np.unique(np.concatenate([
-            np.frombuffer(blob, dtype=np.float64).reshape(-1, len(cols))
-            for blob in pdf.loc[is_blob, "__blob"]
-        ]), axis=0)  # cross-partition duplicates
-        dom = _scatter_dom(a, _values(b_pdf, cols))
-        return b_pdf[~dom][out_cols]
-
-    def verify_arrow(tbl):
+    def verify(tbl):
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -964,10 +837,7 @@ def _verify_scatter(pruned: DataFrame, cols: Sequence[str], *,
         dom = _scatter_dom(a, _arrow_values(b_tbl, cols))
         return b_tbl.filter(pa.array(~dom))
 
-    grouped = unioned.groupBy("__ck")
-    if arrow:
-        return grouped.applyInArrow(verify_arrow, schema=pruned.schema)
-    return grouped.applyInPandas(verify, schema=pruned.schema)
+    return unioned.groupBy("__ck").applyInArrow(verify, schema=pruned.schema)
 
 
 def skyline_auto(df: DataFrame, cols: Sequence[str], *,

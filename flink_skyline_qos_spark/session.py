@@ -19,8 +19,7 @@ def warm_arrow_pool(spark) -> None:
     across the first heavy queries at local[32]).  One narrow
     mapInPandas pass over one partition per core warms them all — a
     long-lived cluster job is always in this state.  Shared by
-    bench.py and tools/check_oracle.py (review r9: the two copies had
-    started to drift)."""
+    tools/check_oracle.py and perfbench/run.py."""
 
     def _ident(batches):
         for pdf in batches:

@@ -1,6 +1,7 @@
 """Skyline DataFrame operators vs the DuckDB NOT-EXISTS oracle on real testdata."""
 
 import duckdb
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -755,3 +756,57 @@ def test_two_phase_envelope_lossless(spark):
     env = sorted(map(tuple, skyline_two_phase(
         pts, ["d0", "d1"], envelope_cells=True, **kw).collect()))
     assert plain == env and len(plain) > 0
+
+
+def _brute_skyline_ids(ids, vals):
+    """Ids of the rows no other row dominates (O(n²), chunked)."""
+    keep = np.ones(len(vals), dtype=bool)
+    for lo in range(0, len(vals), 512):
+        b = vals[lo:lo + 512]
+        le = (vals[None, :, :] <= b[:, None, :]).all(axis=2)
+        lt = (vals[None, :, :] < b[:, None, :]).any(axis=2)
+        keep[lo:lo + 512] = ~(le & lt).any(axis=1)
+    return set(ids[keep].tolist())
+
+
+@pytest.mark.parametrize("dims,n", [(3, 3000), (4, 8000)])
+def test_udt_passthrough_column_survives_every_host(spark, dims, n):
+    """A user-defined-type passthrough column (`pyspark.ml` VectorUDT)
+    rides through the Arrow kernel hosts untouched: the local prune
+    (`skyline`), the 3-D membership pass and the 4-D broadcast verify
+    pass (> 4096 unique candidates, so neither driver short-circuit
+    fires), and the scatter verify.  Answers match a brute-force
+    skyline and every surviving row keeps its own vector."""
+    from pyspark.ml.functions import array_to_vector
+
+    from flink_skyline_qos_spark.operators.skyline import (
+        skyline_broadcast_verify,
+    )
+    from flink_skyline_qos_spark.sources.generators import generate_points
+
+    cols = [f"d{i}" for i in range(dims)]
+    pts = generate_points(spark, n, dims, dist="anti_correlated",
+                          num_partitions=4, fractional=True, eps=0.02)
+    pts = pts.withColumn("vec", array_to_vector(
+        F.array(F.col("id").cast("double"), F.col("d0") * 0.5)))
+    assert type(pts.schema["vec"].dataType).__name__ == "VectorUDT"
+    rows = pts.select("id", *cols).collect()
+    expect = _brute_skyline_ids(
+        np.array([r["id"] for r in rows]),
+        np.array([[r[c] for c in cols] for r in rows], dtype=np.float64))
+
+    outs = {
+        "skyline": skyline(pts, cols, width_safe=False),
+        "broadcast": skyline_broadcast_verify(pts, cols, width_safe=False),
+        "scatter": skyline_broadcast_verify(pts, cols, width_safe=False,
+                                            scatter_threshold=0),
+    }
+    for name, out in outs.items():
+        assert out.schema == pts.schema, name
+        got = out.select("id", "d0", "vec").collect()
+        assert {r["id"] for r in got} == expect, name
+        assert len(got) == len(expect), name
+        for r in got:
+            assert list(r["vec"]) == [float(r["id"]), r["d0"] * 0.5], name
+    assert outs["broadcast"]._verify_strategy[0] == "broadcast"
+    assert outs["scatter"]._verify_strategy[0] == "scatter"

@@ -113,7 +113,7 @@ def _multiset_diff(a, b, n=3):
 
 def _warmup(spark, *, streaming: bool = True) -> None:
     """One-time engine spin-up OUTSIDE any per-query timing: the Arrow
-    Python worker pool (shared helper with bench.py) and — for runs
+    Python worker pool (`session.warm_arrow_pool`) and — for runs
     that include streaming queries — the Structured Streaming
     machinery (state-store providers, micro-batch engine init), which
     otherwise bills ~5-6 s to whichever registered query happens to
@@ -180,12 +180,6 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        # NOTE (r10): do NOT clearCache between queries — the corpus
-        # capstone chain (llm_corpus → v2 → v3 → v4) deliberately
-        # shares pinned localCheckpoint slices across queries, and
-        # dropping them re-bills every stage to the later capstones
-        # (measured: v4 18.2 s with a per-query clearCache vs ~6 s
-        # without).
         t0 = time.time()
         df = fn(spark, sf_dir)
         scols = df.columns
