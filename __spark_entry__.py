@@ -5,9 +5,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-Every skyline operator, variant, partitioner and streaming plan is
-registered here with a DuckDB-oracle twin; column names are aliased
-identically on both sides.
+Every operator from SURVEY.md §2 implemented so far is registered here
+with a DuckDB-oracle twin; column names are aliased identically on both
+sides.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +29,11 @@ from flink_skyline_qos_spark import (  # noqa: E402
     skyline_not_exists_sql,
     skyline_two_phase,
 )
+from flink_skyline_qos_spark.operators.caching import (  # noqa: E402
+    pinned_local_checkpoint,
+    release_checkpoints_on_gc,
+    release_on_gc,
+)
 from flink_skyline_qos_spark.operators.skyline import (  # noqa: E402
     skyline_2d_window,
     skyline_auto,
@@ -38,6 +42,94 @@ from flink_skyline_qos_spark.operators.skyline import (  # noqa: E402
     skyline_delta_delete,
     skyline_layers,
     skyline_layers_sql,
+)
+from flink_skyline_qos_spark.functions.text import (  # noqa: E402
+    langid_confusion,
+    langid_confusion_sql,
+    quality_score,
+    quality_score_sql,
+    redact_expr_sql,
+    redact_text,
+    redact_text_sql,
+    repetition_stats,
+    repetition_stats_sql,
+    text_stats,
+    text_stats_sql,
+    token_count,
+    token_count_sql,
+    vocab,
+    vocab_sql,
+)
+from flink_skyline_qos_spark.functions.corpus import (  # noqa: E402
+    c4_rules,
+    c4_rules_sql,
+    chunk_documents,
+    chunk_documents_sql,
+    dedup_paragraphs,
+    dedup_paragraphs_sql,
+    contamination_check,
+    contamination_check_sql,
+    pack_sequences,
+    pack_sequences_sql,
+    shard_manifest,
+    shard_manifest_sql,
+    quality_floor,
+    quality_floor_sql,
+    rarity_score,
+    rarity_score_sql,
+    bigram_rarity_score,
+    bigram_rarity_score_sql,
+    hashed_classifier_score,
+    hashed_classifier_score_sql,
+    remove_boilerplate_lines,
+    remove_boilerplate_lines_sql,
+    bm25_topk,
+    bm25_topk_sql,
+    tfidf_top_terms,
+    tfidf_top_terms_sql,
+)
+from flink_skyline_qos_spark.operators.clustering import (  # noqa: E402
+    dedup_clusters,
+    link_rank,
+    link_rank_sql,
+    triangle_count,
+    triangle_count_sql,
+)
+from flink_skyline_qos_spark.operators.dedup import (  # noqa: E402
+    exact_dedup,
+    minhash_lsh_pairs_cross,
+    minhash_lsh_pairs_cross_sql,
+    minhash_lsh_pairs,
+    minhash_lsh_pairs_sql,
+    minhash_signatures,
+    ngram_jaccard_pairs,
+    simhash_near_dup_pairs,
+    simhash_near_dup_pairs_sql,
+    substring_contamination,
+    substring_contamination_sql,
+    substring_dedup_pairs,
+    substring_dedup_pairs_sql,
+    substring_remove,
+    substring_remove_sql,
+    substring_dedup_pairs_cross,
+    substring_dedup_pairs_cross_sql,
+    substring_scrub,
+    substring_scrub_sql,
+    winnow_contamination,
+    winnow_contamination_sql,
+    winnow_pairs,
+    winnow_pairs_sql,
+)
+from flink_skyline_qos_spark.operators.joins import (  # noqa: E402
+    as_of_join,
+    as_of_join_sql,
+    bloom_semi_join,
+    bloom_semi_join_sql,
+    range_join,
+    range_join_sql,
+)
+from flink_skyline_qos_spark.operators.partitioners import (  # noqa: E402
+    mr_dim_sql,
 )
 from flink_skyline_qos_spark.operators.variants import (  # noqa: E402
     grid_envelope_prefilter,
@@ -63,6 +155,76 @@ from flink_skyline_qos_spark.operators.variants import (  # noqa: E402
     top_k_dominating,
     top_k_dominating_sql,
 )
+from flink_skyline_qos_spark.operators.compaction import (  # noqa: E402
+    latest_by_key,
+    latest_by_key_sql,
+)
+from flink_skyline_qos_spark.operators.funnel import (  # noqa: E402
+    funnel,
+    funnel_sql,
+    retention,
+    retention_sql,
+    user_growth,
+    user_growth_sql,
+)
+from flink_skyline_qos_spark.operators.stats import (  # noqa: E402
+    corr_matrix,
+    corr_matrix_sql,
+    mad_outliers,
+    mad_outliers_sql,
+    quantile_bins,
+    quantile_bins_sql,
+)
+from flink_skyline_qos_spark.operators.sketches import (  # noqa: E402
+    count_min,
+    count_min_estimate,
+    count_min_sql,
+    histogram_quantiles,
+    histogram_quantiles_sql,
+    hll_distinct,
+    hll_distinct_sql,
+)
+from flink_skyline_qos_spark.operators.sampling import (  # noqa: E402
+    budget_mix,
+    budget_mix_sql,
+    deterministic_sample,
+    deterministic_sample_sql,
+    group_cap,
+    group_cap_sql,
+    hash_split,
+    hash_split_sql,
+    stratified_sample,
+    stratified_sample_sql,
+    temperature_sample,
+    temperature_sample_sql,
+    weighted_sample,
+    weighted_sample_sql,
+)
+from flink_skyline_qos_spark.operators.kmeans import (  # noqa: E402
+    kmeans_assign,
+    kmeans_assign_sql,
+    kmeans_balanced_sample,
+    kmeans_balanced_sample_sql,
+    pq_adc_rerank,
+    pq_adc_rerank_sql,
+    pq_adc_topk,
+    pq_adc_topk_sql,
+    pq_encode,
+    pq_encode_sql,
+)
+from flink_skyline_qos_spark.operators.similarity import (  # noqa: E402
+    cosine_topk,
+    rrf_fuse,
+    rrf_fuse_sql,
+    cosine_topk_gemm,
+    cosine_topk_ivf,
+    embedding_near_dup_lsh,
+    embedding_near_dup_lsh_sql,
+    embedding_near_dup_lsh_cross_sql,
+    embedding_near_dup_pairs,
+    knn_graph,
+    knn_graph_sql,
+)
 from flink_skyline_qos_spark.plans.metrics import (  # noqa: E402
     metrics_oracle_sql,
     skyline_query_metrics,
@@ -72,6 +234,10 @@ from flink_skyline_qos_spark.plans.queries import (  # noqa: E402
     run_prefix_queries,
 )
 from flink_skyline_qos_spark.sources.generators import (  # noqa: E402
+    generate_docs_hash,
+    generate_docs_sql,
+    generate_embeddings_hash,
+    generate_embeddings_sql,
     generate_points_hash,
     generate_points_sql,
 )
@@ -102,10 +268,23 @@ GEN_N = 20_000
 #: it matches the queries whose source actually touches the streaming
 #: APIs).
 STREAM_QUERIES = frozenset({
+    "streaming_c4_admission_documents",
     "streaming_continuous_global",
     "streaming_continuous_skyline",
+    "streaming_count_min_windows_events",
+    "streaming_embedding_admission_embeddings",
+    "streaming_hll_windows_events",
+    "streaming_ingest_pipeline_documents",
+    "streaming_interval_join_events",
+    "streaming_late_data_events",
+    "streaming_paragraph_admission_documents",
     "streaming_pipeline_skyline",
+    "streaming_quantiles_windows_events",
+    "streaming_substring_admission_documents",
 })
+# the events table's closed vocabulary (TESTDATA.md) — the fixed
+# candidate set the windowed count-min sketch watches
+EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 # Prefix triggers on events (FIXTURES.md F2): mid-prefix, K=0 immediate,
 # K beyond max(id) (pending-barrier → whole input at end-of-batch).
@@ -129,20 +308,93 @@ _EV_SQL = (
     "cast(epoch_ms(ts) as double) AS unix_ms FROM events)"
 )
 
+# Shared DuckDB CTEs: word-3-gram shingle sets, per-doc set sizes, and
+# pairwise intersection counts over documents — the exact n-gram
+# Jaccard core, reused by the pair query and the clustering oracle.
+_NGRAM_CTES = """sh AS (
+  SELECT doc_id, unnest(list_distinct(list_transform(
+     generate_series(1, greatest(len(w) - 2, 1)),
+     i -> array_to_string(w[i:i+2], ' ')))) AS g
+  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents)
+), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)"""
+
+
+from contextlib import contextmanager  # noqa: E402
+
 
 @contextmanager
 def _small_shuffle(s: SparkSession, n: int = 8):
-    """Tiny-fixture shuffle parallelism: the streaming gate fixtures
-    move a few thousand rows through keyed state every micro-batch; at
-    the session's default partition count that is pure
-    task-scheduling overhead.  Scoped: restores the session value on
-    exit, so only the fixture — never the operator — is tuned."""
+    """Tiny-fixture shuffle parallelism (r10): the streaming gate
+    fixtures move a few hundred rows through ~a dozen shuffle stages
+    per micro-batch; at the session's default partition count that is
+    pure task-scheduling overhead (A/B on the embedding admission
+    query: 17.3 s at 64 partitions → 8.2 s at 8, identical output).
+    Scoped: restores the session value on exit, so only the fixture —
+    never the operator — is tuned."""
     old = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         s.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _batch_fixture_files(df: DataFrame, conds, data_dir: str) -> None:
+    """Write the mtime-staggered parquet batch files a streaming
+    fixture replays — in ONE Spark job (round 12 gate-budget trim:
+    the per-side ``coalesce(1).write`` pattern cost one full job +
+    tmp-move per batch, ~0.5 s each at gate scale across five
+    streaming queries).
+
+    `conds` is one boolean Column per batch, in replay order; rows are
+    routed to the FIRST matching batch (rows matching none are
+    dropped, matching the old per-side filters).  A batch with no rows
+    still gets an (empty, schema-bearing) file — empty micro-batches
+    are part of the replay contract.  File ``part-{i}.parquet`` gets
+    mtime ``now - 10*(n-i)`` so the file-source replays ascending.
+    """
+    import glob as _glob
+    import shutil as _shutil
+    import time as _time
+
+    n = len(conds)
+    work = os.path.dirname(data_dir)
+    tmpd = os.path.join(work, "__batches")
+    idx = F.when(conds[0], 0)
+    for i, c in enumerate(conds[1:], start=1):
+        idx = idx.when(c, i)
+    (df.withColumn("__b", idx.cast("int"))
+       .filter(F.col("__b").isNotNull())
+       .repartition(n, "__b")
+       .write.mode("overwrite").partitionBy("__b").parquet(tmpd))
+    now = _time.time()
+    empty = None
+    for i in range(n):
+        srcs = _glob.glob(os.path.join(tmpd, f"__b={i}",
+                                       "part-*.parquet"))
+        dst = os.path.join(data_dir, f"part-{i}.parquet")
+        if srcs:
+            # repartition(n, "__b") routes each batch to exactly one
+            # task; a multi-file partition means rows would silently
+            # vanish from the replay — fail loudly instead (ADVICE r12)
+            assert len(srcs) == 1, (
+                f"batch __b={i} wrote {len(srcs)} part files; "
+                "fixture replay would drop rows")
+            _shutil.move(srcs[0], dst)
+        else:
+            if empty is None:  # lazily build ONE empty file, copy it
+                etmp = os.path.join(work, "__empty")
+                (df.sparkSession.createDataFrame([], df.schema)
+                 .coalesce(1).write.mode("overwrite").parquet(etmp))
+                empty = _glob.glob(os.path.join(etmp,
+                                                "part-*.parquet"))[0]
+            _shutil.copy(empty, dst)
+        os.utime(dst, (now - 10 * (n - i),) * 2)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -366,6 +618,188 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                by=["user_id", "__sess"])
     q["session_skyline_events"] = _session
 
+    # --- temporal joins (enrichment primitives Spark lacks natively):
+    # as-of = union + running-last window, ONE hash exchange per side,
+    # no join node; range = bucket-grid equi join, no nested loop.
+    def _asof(s: SparkSession, d: str) -> DataFrame:
+        ev = load_table(s, d, "events")
+        clicks = ev.filter(F.col("event_type") == "click") \
+            .select("event_id", "user_id", "ts", "value")
+        purch = ev.filter(F.col("event_type") == "purchase") \
+            .select("event_id", "user_id", "ts", "value")
+        out = as_of_join(clicks, purch, on="ts", by="user_id",
+                         right_cols=["value", "event_id"],
+                         tiebreak="event_id")
+        # left rows with no admissible right row carry NULL payload;
+        # sentinel-coalesced so the value-hash compare never sorts
+        # mixed NULL/non-NULL tuples
+        return out.select(
+            "event_id", "user_id", "value",
+            F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
+            F.coalesce(
+                F.unix_millis(F.col("ts_asof").cast("timestamp")),
+                F.lit(-1)).alias("asof_ms"),
+            F.coalesce("value_asof", F.lit(-1.0)).alias("value_asof"),
+            F.coalesce("event_id_asof", F.lit(-1)).alias("event_id_asof"))
+    q["asof_join_events"] = _asof
+
+    def _range_join(s: SparkSession, d: str) -> DataFrame:
+        ev = load_table(s, d, "events")
+        iv = s.range(30).select(
+            F.col("id").alias("iv_id"),
+            (F.col("id") * 7.0).alias("lo"),
+            (F.col("id") * 7.0 + 10.0).alias("hi"))
+        return range_join(
+            ev.select("event_id", F.col("value").alias("v")), iv,
+            point_col="v", start_col="lo", end_col="hi",
+            bucket_width=8.0)
+    q["range_join_events"] = _range_join
+
+    # --- data profiling: per-type distribution summary (count/min/max/
+    # mean/p50/p95) — the pipeline-health check run before any training
+    # job; one map-side-combined aggregate, percentile exact (matches
+    # DuckDB quantile_cont bit-for-bit at 6 dp, verified).
+    q["profile_events"] = lambda s, d: (
+        load_table(s, d, "events")
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"),
+             F.round(F.min("value"), 6).alias("min_v"),
+             F.round(F.max("value"), 6).alias("max_v"),
+             F.round(F.avg("value"), 6).alias("mean_v"),
+             F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
+             F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"))
+    )
+
+    # --- link centrality (truncated PageRank, exact integer grid):
+    # the crawl-corpus quality signal, over the supplier "handoff"
+    # graph (consecutive line numbers within an order).  One edges-to-
+    # ranks equi-join + one map-side-combined sum per iteration; the
+    # integer recurrence makes the ranks value-oracle-able, which a
+    # double-summed PageRank never is.
+    def _link_rank(s: SparkSession, d: str) -> DataFrame:
+        li = load_table(s, d, "lineitem")
+        a, b = li.alias("a"), li.alias("b")
+        edges = a.join(
+            b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("b.l_linenumber") == F.col("a.l_linenumber") + 1)
+        ).select(F.col("a.l_suppkey").alias("src"),
+                 F.col("b.l_suppkey").alias("dst"))
+        # 2 truncated rounds (was 3): the op is iteration-count bound
+        # at sf0.01 (per-round job overhead, not compute, dominated the
+        # ~10 s row — VERDICT r7 #3); the oracle CTE chain matches.
+        return link_rank(edges, iterations=2)
+    q["link_rank_suppliers"] = _link_rank
+
+    # --- per-node triangle counts (local clustering-coefficient
+    # numerator — community-density / link-farm signal) over the
+    # supplier co-occurrence graph: suppliers sharing a sampled order
+    # (l_orderkey % 50 = 0 keeps the graph sparse and non-degenerate
+    # at every SF).  Degree-ordered orientation bounds the wedge join;
+    # every step is an equi-join, exact BIGINTs throughout.
+    def _triangles(s: SparkSession, d: str) -> DataFrame:
+        li = load_table(s, d, "lineitem") \
+            .filter(F.col("l_orderkey") % 50 == 0)
+        a, b = li.alias("a"), li.alias("b")
+        edges = a.join(
+            b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_linenumber") < F.col("b.l_linenumber"))
+        ).select(F.col("a.l_suppkey").alias("src"),
+                 F.col("b.l_suppkey").alias("dst"))
+        return triangle_count(edges)
+    q["triangles_suppliers"] = _triangles
+
+    # --- changelog compaction: each key's LATEST row under a TOTAL
+    # (ts, tiebreak) order — the CDC upsert collapse every consumer
+    # runs before joining a 100 TB append-only table.  max_by(struct)
+    # aggregate: map-side partial combine, no per-key sort (the window
+    # row_number form the oracle states would sort every version).
+    q["latest_events_per_user"] = lambda s, d: latest_by_key(
+        load_table(s, d, "events"), "user_id",
+        order_col="ts", tiebreak="event_id")
+
+    # --- deterministic correlation matrix: quantized inputs + exact
+    # decimal sums make Pearson correlation a pure function of the
+    # data (Statistics.corr's double sums are partial-order-dependent);
+    # one scan computes all pairs map-side combined.
+    q["corr_profile_lineitem"] = lambda s, d: corr_matrix(
+        load_table(s, d, "lineitem"),
+        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
+
+    # greedy funnel over the event stream: first-match step times per
+    # user (view -> click -> purchase), one map-side-combined min-agg
+    # per step, shuffles carry one row per user
+    q["funnel_events"] = lambda s, d: funnel(
+        load_table(s, d, "events"), ["view", "click", "purchase"])
+
+    # JSON schema-on-read (P1's companion wire format): extract the
+    # typed payload field from the props JSON column scan-side and
+    # aggregate -- get_json_object stays inside codegen, no Python
+    def _json_props(s: SparkSession, d: str) -> DataFrame:
+        ev = load_table(s, d, "events")
+        k = F.get_json_object(F.col("props"), "$.k").cast("long")
+        return (ev.select("event_type", k.alias("__k"))
+                .where(F.col("__k").isNotNull())
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.sum("__k").alias("sum_k"),
+                     F.round(F.avg("__k"), 6).alias("mean_k")))
+    q["json_props_events"] = _json_props
+
+    # cohort retention: first-active-day cohorts x day offsets —
+    # shuffles bounded by user x period cardinality, never event volume
+    q["retention_events"] = lambda s, d: retention(
+        load_table(s, d, "events"), granularity="day")
+
+    # daily growth report: dau / first-seen / cumulative distinct
+    # users; the running sum's window is over O(days) rows, not events
+    q["user_growth_events"] = lambda s, d: user_growth(
+        load_table(s, d, "events"))
+
+    # robust anomaly flagging: |x - median| > 3.5 MAD per event type
+    # (heavy-tail-safe, unlike mean/stddev z-scores); two broadcast
+    # percentile aggregates + scan-side flags, never a corpus sort
+    q["mad_outliers_events"] = lambda s, d: mad_outliers(
+        load_table(s, d, "events")
+        .select("event_id", "event_type", "value"),
+        "value", group_cols=["event_type"]
+    ).select("event_id", "event_type", "value", "med", "mad",
+             "is_outlier")
+
+    # equi-depth discretization of a metric column: decile buckets
+    # with per-bucket profiles — the feature-binning / calibrated-
+    # threshold pass; cutpoints broadcast, corpus never sorted
+    q["quantile_bins_events"] = lambda s, d: quantile_bins(
+        load_table(s, d, "events"), "value", nbins=10)
+
+    # --- explicit runtime filter: Bloom-pruned semi join.  The fact
+    # side (orders) is filtered by a 16 KiB bitmap of the selected
+    # customer keys BEFORE any exchange — the star-schema scan shape at
+    # 100 TB when the dim side is too big to broadcast as rows; the
+    # final equi semi join removes false positives, so the result is
+    # exactly the plain semi join the oracle states.
+    def _bloom(s: SparkSession, d: str) -> DataFrame:
+        orders = load_table(s, d, "orders")
+        cust = load_table(s, d, "customer").where(
+            F.col("c_custkey") % 16 == 1)
+        return bloom_semi_join(
+            orders, cust, "o_custkey", dim_key="c_custkey"
+        ).select("o_orderkey", "o_custkey", "o_totalprice")
+    q["bloom_semi_join_orders"] = _bloom
+
+    # --- mergeable sketches: the 100 TB replacements for exact
+    # COUNT(DISTINCT) and exact percentiles.  Both deterministic
+    # (md5-hash HLL / fixed-width histogram), so each has an exact
+    # DuckDB twin — unlike approx_count_distinct/percentile_approx,
+    # whose internals are engine-private.  Shuffle after the map-side
+    # combine is ≤ groups × 2^b register rows / groups × nbins bins,
+    # independent of input size.
+    q["hll_users_events"] = lambda s, d: hll_distinct(
+        load_table(s, d, "events"), "user_id",
+        group_cols=["event_type"], bucket_bits=10)
+    q["quantile_sketch_events"] = lambda s, d: histogram_quantiles(
+        load_table(s, d, "events"), "value",
+        group_cols=["event_type"], nbins=4096)
+
     # sliding windows (1 h window, 30 min slide → every event in exactly
     # two windows).  2-D ⇒ the all-JVM window plan (skew-immune: each
     # group is collapsed to its distinct-d0 rows before the sorted
@@ -397,6 +831,556 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
 
+    # --- dedup suite over documents ---
+    q["exact_dedup_documents"] = lambda s, d: exact_dedup(
+        load_table(s, d, "documents")
+    )
+    # dedup over GENERATED corpora (md5-deterministic text with planted
+    # duplicates — every 10th doc copies its predecessor): the dedup
+    # stack oracle-gated on input sizes decoupled from the shipped
+    # table, and the same generator scales the bench rows to millions
+    q["gen_docs_exact_dedup"] = lambda s, d: exact_dedup(
+        generate_docs_hash(s, 2000, dup="exact"))
+    q["gen_docs_minhash_dedup"] = lambda s, d: minhash_lsh_pairs(
+        generate_docs_hash(s, 800, dup="near"), num_hashes=64, bands=16,
+        shingle_k=3, shingle_unit="word", threshold=0.5)
+    q["ngram_jaccard_documents"] = lambda s, d: ngram_jaccard_pairs(
+        load_table(s, d, "documents"), k=3, unit="word", threshold=0.05,
+    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    q["minhash_dedup_documents"] = lambda s, d: minhash_lsh_pairs(
+        load_table(s, d, "documents"), num_hashes=64, bands=16,
+        shingle_k=5, threshold=0.5,
+    )
+    # incremental (cross-corpus) dedup: new batch vs existing corpus
+    # only -- old x old pairs are never generated (the production
+    # daily-crawl admission shape; at 100 TB the old side's signatures
+    # are precomputed once and reused per batch)
+    def _incremental_dedup(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        # derive BOTH sides from one standing signature table — the
+        # production shape (the corpus's signatures are precomputed
+        # once; VERDICT r6 #2): the shingle+minhash-fold pass runs
+        # exactly once over the union instead of once per side
+        sigs = minhash_signatures(docs, num_hashes=64,
+                                  shingle_k=5).persist()
+        new_sig = sigs.filter(F.col("doc_id") % 3 == 0)
+        old_sig = sigs.filter(F.col("doc_id") % 3 != 0)
+        out = minhash_lsh_pairs_cross(
+            new_signatures=new_sig, old_signatures=old_sig,
+            num_hashes=64, bands=16, shingle_k=5, threshold=0.5)
+        return release_on_gc(out, sigs)
+    q["incremental_dedup_documents"] = _incremental_dedup
+
+    q["minhash_word_dedup_documents"] = lambda s, d: minhash_lsh_pairs(
+        load_table(s, d, "documents"), num_hashes=64, bands=16,
+        shingle_k=3, shingle_unit="word", threshold=0.5,
+    )
+    q["simhash_near_dup_documents"] = lambda s, d: simhash_near_dup_pairs(
+        load_table(s, d, "documents"), max_hamming=3,
+    )
+    # winnowing (MOSS) fingerprint candidates: shared-passage pairs via
+    # window-min shingle hashes — catches partial overlap that global-
+    # similarity MinHash bands under-score
+    q["winnow_pairs_documents"] = lambda s, d: winnow_pairs(
+        load_table(s, d, "documents"), k=4, window=4, threshold=0.5,
+    )
+    # exact substring dedup (Lee et al. 2022 ExactSubstr at bounded k):
+    # longest shared verbatim token run per pair — the dedup modality
+    # global-similarity near-dup scoring cannot express (round 11,
+    # VERDICT r10 "What's missing" #3)
+    q["substring_dedup_documents"] = lambda s, d: substring_dedup_pairs(
+        load_table(s, d, "documents"), k=8, min_span=12, max_df=50,
+    )
+    # incremental ExactSubstr (round 12): new batch (doc_id % 3 = 0)
+    # vs standing corpus — cross-side verbatim-run pairs only,
+    # combined df cap, the daily-crawl admission check for the
+    # long-quote modality (mirrors incremental_dedup_documents)
+    q["incremental_substring_dedup_documents"] = lambda s, d: \
+        substring_dedup_pairs_cross(
+            load_table(s, d, "documents").filter(
+                (F.col("doc_id") % 3) == 0),
+            load_table(s, d, "documents").filter(
+                (F.col("doc_id") % 3) != 0),
+            k=8, min_span=12, max_df=50,
+        )
+    # ExactSubstr span REMOVAL (round 12, VERDICT r11 "What's missing"
+    # #3 -- Lee et al.'s production semantics): cut every >=12-token
+    # verbatim run from all but its first corpus-wide occurrence and
+    # reassemble the affected documents token-exactly
+    q["substring_remove_documents"] = lambda s, d: substring_remove(
+        load_table(s, d, "documents"), k=8, min_span=12, max_df=50,
+    )
+    # char-unit ExactSubstr (round 13, VERDICT r12 "What's missing"
+    # #3 -- Lee et al. operate on BYTES): shingle characters instead
+    # of whitespace tokens, so verbatim runs are detected in
+    # whitespace-free scripts (CJK) and survive punctuation-only
+    # edits ("foo." vs "foo" breaks a token run, not a char run);
+    # k / min_span / spans all in characters
+    q["substring_dedup_char_documents"] = lambda s, d: \
+        substring_dedup_pairs(
+            load_table(s, d, "documents"), k=20, min_span=60,
+            max_df=50, unit="char",
+        )
+    # ...and its acting form: keep-first char-granular span removal
+    # with exact substring-cut reassembly (no whitespace renormalizing)
+    q["substring_remove_char_documents"] = lambda s, d: \
+        substring_remove(
+            load_table(s, d, "documents"), k=20, min_span=60,
+            max_df=50, unit="char",
+        )
+    # ExactSubstr decontamination: corpus docs sharing a >=12-token
+    # verbatim run with the pseudo-benchmark subset, exact span length
+    # per hit (the leakage evidence fraction-based checks dilute)
+    q["substring_contamination_documents"] = lambda s, d: \
+        substring_contamination(
+            load_table(s, d, "documents").filter(
+                (F.col("doc_id") % 10) != 7),
+            load_table(s, d, "documents").filter(
+                (F.col("doc_id") % 10) == 7),
+            k=8, min_span=12, max_df=50,
+        )
+    # ExactSubstr benchmark-span SCRUBBING (round 12): the acting form
+    # of the contamination report -- every corpus occurrence of a
+    # >=12-token verbatim bench run is cut (ALL occurrences: eval text
+    # must not survive anywhere) and affected docs reassembled
+    q["substring_scrub_documents"] = lambda s, d: substring_scrub(
+        load_table(s, d, "documents").filter(
+            (F.col("doc_id") % 10) != 7),
+        load_table(s, d, "documents").filter(
+            (F.col("doc_id") % 10) == 7),
+        k=8, min_span=12, max_df=50,
+    )
+    # language-ID confusion matrix: labelled lang vs the stopword-
+    # heuristic prediction (the classifier eval before filtering on it)
+    q["langid_confusion_documents"] = lambda s, d: langid_confusion(
+        load_table(s, d, "documents"))
+    # passage-level decontamination: winnowing-fingerprint overlap vs
+    # the same pseudo-benchmark subset contamination_documents uses —
+    # a shared passage scores regardless of surrounding doc length
+    q["passage_contamination_documents"] = lambda s, d: \
+        winnow_contamination(
+            load_table(s, d, "documents"),
+            load_table(s, d, "documents")
+            .filter((F.col("doc_id") % 10) == 7))
+
+    # --- near-dup clustering: transitive closure of the EXACT n-gram
+    # pair set (large-star/small-star), every doc labeled. The oracle is
+    # a DuckDB recursive CTE over the same pair SQL — full value check
+    # of the connected-components operator.
+    def _dedup_clusters_docs(s: SparkSession, d: str) -> DataFrame:
+        out = dedup_clusters(
+            load_table(s, d, "documents"),
+            ngram_jaccard_pairs(load_table(s, d, "documents"), k=3,
+                                unit="word", threshold=0.05),
+        )
+        return release_checkpoints_on_gc(out, out)
+    q["dedup_clusters_documents"] = _dedup_clusters_docs
+
+    # --- the full dedup pipeline as ONE query: MinHash-LSH candidate
+    # pairs → connected components → keep-first canonical corpus.
+    # Oracle: recursive min-label CTE over the exact minhash pair SQL.
+    def _dedup_corpus(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        pairs = minhash_lsh_pairs(docs, num_hashes=64, bands=16,
+                                  shingle_k=5, threshold=0.5)
+        labeled = dedup_clusters(docs, pairs)
+        out = (docs.join(labeled, "doc_id")
+               .filter(F.col("is_canonical"))
+               .select("doc_id", "cluster_id"))
+        return release_checkpoints_on_gc(out, labeled)
+    q["dedup_corpus_documents"] = _dedup_corpus
+
+    # --- the exact-substring twin of the pipeline above (round 11):
+    # ≥min_span verbatim-run pairs → connected components → keep-first
+    # canonical corpus — ExactSubstr dedup end-to-end, catching the
+    # long-quote duplicates global-similarity banding under-scores.
+    def _substring_dedup_corpus(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        pairs = substring_dedup_pairs(docs, k=8, min_span=12, max_df=50)
+        labeled = dedup_clusters(docs, pairs)
+        out = (docs.join(labeled, "doc_id")
+               .filter(F.col("is_canonical"))
+               .select("doc_id", "cluster_id"))
+        return release_checkpoints_on_gc(out, labeled)
+    q["substring_dedup_corpus_documents"] = _substring_dedup_corpus
+
+    # --- text analysis over documents ---
+    q["text_stats_documents"] = lambda s, d: text_stats(
+        load_table(s, d, "documents")
+    )
+    # Gopher-rule repetition signals (dup-line frac, top-2-gram frac)
+    q["repetition_stats_documents"] = lambda s, d: repetition_stats(
+        load_table(s, d, "documents")
+    )
+    # corpus vocabulary: top-V tokens with term/doc frequencies (the
+    # tokenizer/vocab-building pass; canonical two-exchange word count)
+    q["vocab_documents"] = lambda s, d: vocab(
+        load_table(s, d, "documents"), top_v=200, min_count=2
+    )
+
+    # relative quality gate: keep documents at or above their
+    # language's p25 quality score — the distribution-relative floor
+    # (absolute cutoffs misfire when score distributions differ by
+    # language/source); cutoffs broadcast, corpus never sorted
+    def _quality_floor(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents").select(
+            "doc_id", "lang",
+            quality_score(F.col("text")).alias("score"))
+        return quality_floor(docs, "score", group_col="lang", q=0.25)
+    q["quality_floor_documents"] = _quality_floor
+
+    # count-min sketch heavy-hitter probe: build the deterministic
+    # depth×width frequency sketch over every token, then point-query
+    # it for the exact top-20 vocab tokens — cm_est ≥ term_freq (the
+    # sketch only over-counts), both value-oracled.  At 100 TB the
+    # sketch shuffle is partitions·depth·width rows regardless of
+    # token cardinality; the exact pass exists only to ground-truth
+    # the probe at test scale.
+    def _count_min_tokens(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        toks = docs.select(
+            F.explode(F.split(F.trim(F.col("text")), r"\s+"))
+            .alias("token")).filter(F.col("token") != "")
+        sk = count_min(toks, "token", depth=4, width=512)
+        cand = vocab(docs, top_v=20).select("token", "term_freq", "rank")
+        return count_min_estimate(sk, cand, "token", depth=4, width=512)
+    q["count_min_tokens_documents"] = _count_min_tokens
+    # PII/URL redaction pass (emails/URLs/long digit runs masked)
+    q["redact_documents"] = lambda s, d: redact_text(
+        load_table(s, d, "documents")
+    )
+    # corpus profiling: per-(lang, source) token/char distribution —
+    # the data-mix report a training run starts from (exact percentile
+    # parity with quantile_cont, as for profile_events)
+    q["corpus_profile_documents"] = lambda s, d: (
+        load_table(s, d, "documents")
+        .select("lang", "source",
+                token_count(F.col("text")).alias("nt"), "n_chars")
+        .groupBy("lang", "source")
+        .agg(F.count(F.lit(1)).alias("n_docs"),
+             F.round(F.avg("nt"), 6).alias("mean_tokens"),
+             F.round(F.expr("percentile(nt, 0.5)"), 6).alias("p50_tokens"),
+             F.round(F.expr("percentile(nt, 0.95)"), 6).alias("p95_tokens"),
+             F.round(F.avg("n_chars"), 6).alias("mean_chars"))
+    )
+    # fixed-context-window packing: overlapping token windows per doc
+    q["chunk_documents"] = lambda s, d: chunk_documents(
+        load_table(s, d, "documents"), size=32, stride=24)
+    # eval-set decontamination: distinct-3-gram collision fraction vs a
+    # held-out benchmark subset (doc_id % 10 == 7 models the eval suite)
+    q["contamination_documents"] = lambda s, d: contamination_check(
+        load_table(s, d, "documents"),
+        load_table(s, d, "documents").filter((F.col("doc_id") % 10) == 7),
+        n=3)
+    # per-doc top-5 TF-IDF terms (log-free RSJ idf: engine-exact doubles)
+    # BM25 lexical retrieval: the sparse complement of the dense ANN
+    # stack — probe docs (doc_id % 97 = 3) as queries, top-10 by the
+    # log-free-idf Okapi score with exact DECIMAL contribution sums
+    def _bm25(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        qs = docs.filter("doc_id % 97 = 3").select(
+            F.col("doc_id").alias("query_id"),
+            F.col("text").alias("query"))
+        return bm25_topk(docs, qs, k=10)
+    q["bm25_topk_documents"] = _bm25
+
+    # Hybrid retrieval: RRF fusion of the sparse BM25 list and the
+    # dense exact-cosine list over the SAME probe ids (vec_id <-> doc_id
+    # in the synthetic tables) — integer-exact fused scores
+    def _hybrid(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        emb = load_table(s, d, "embeddings")
+        sparse = bm25_topk(
+            docs,
+            docs.filter("doc_id % 97 = 3").select(
+                F.col("doc_id").alias("query_id"),
+                F.col("text").alias("query")), k=10)
+        dense = cosine_topk(
+            emb,
+            emb.filter("vec_id % 97 = 3").select(
+                F.col("vec_id").alias("query_id"), "embedding"),
+            k=10).select(
+            "query_id", F.col("vec_id").alias("doc_id"), "rank")
+        return rrf_fuse(sparse.select("query_id", "doc_id", "rank"),
+                        dense, k0=60, k=10)
+    q["hybrid_retrieval_documents"] = _hybrid
+
+    q["tfidf_documents"] = lambda s, d: tfidf_top_terms(
+        load_table(s, d, "documents"), k=5, min_df=2)
+    # per-doc mean token rarity (log-free perplexity surrogate;
+    # token-ordered fold so the float sum is engine-identical)
+    q["rarity_documents"] = lambda s, d: rarity_score(
+        load_table(s, d, "documents"))
+    # bigram-LM perplexity surrogate (CCNet-style quality filter —
+    # sees word ORDER, which unigram rarity is blind to)
+    q["lm_bigram_score_documents"] = lambda s, d: bigram_rarity_score(
+        load_table(s, d, "documents"))
+    # the true CCNet shape: score the whole corpus under an LM trained
+    # on a held-out reference slice (the content-stable md5 half);
+    # unseen bigrams smooth to the add-one limit (0 + V)/(0 + 1)
+    def _lm_heldout(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        return bigram_rarity_score(
+            docs, train_df=deterministic_sample(docs, 0.5, ["doc_id"]))
+    q["lm_bigram_heldout_documents"] = _lm_heldout
+    # fastText-style hashed linear classifier inference (hashing
+    # trick + mean-pool margin; deterministic pseudo-model — the
+    # plumbing, not a trained artifact)
+    q["quality_classifier_documents"] = \
+        lambda s, d: hashed_classifier_score(
+            load_table(s, d, "documents"), n_buckets=1 << 16)
+    # corpus-boilerplate removal (C4-style): delete units appearing
+    # verbatim in >= min_docs distinct docs. The synthetic docs are
+    # single-line, so the registered query runs at token granularity
+    # (delimiter=' ', threshold 78% of the corpus so the split is
+    # non-trivial at every SF).
+    def _boilerplate(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        thr = max(int(docs.count() * 0.78), 2)
+        return remove_boilerplate_lines(docs, min_docs=thr, delimiter=" ")
+    q["boilerplate_documents"] = _boilerplate
+    # corpus-wide unit-level exact dedup (C4 three-sentence-span /
+    # RefinedWeb paragraph pass): first occurrence of every 8-token
+    # span survives, later repeats are cut and docs reassembled
+    q["paragraph_dedup_documents"] = lambda s, d: dedup_paragraphs(
+        load_table(s, d, "documents"), unit_tokens=8)
+    # C4/Gopher rule-based quality filter: five lexical rules, per-doc
+    # failure reasons kept (the threshold-tuning histogram at scale)
+    q["c4_filter_documents"] = lambda s, d: c4_rules(
+        load_table(s, d, "documents"))
+    # sequence packing: chunks laid end-to-end into fixed-length
+    # training sequences (two-pass distributed prefix sum — the global
+    # running count without a single-task Window.orderBy)
+    q["pack_sequences_documents"] = lambda s, d: pack_sequences(
+        chunk_documents(load_table(s, d, "documents"),
+                        size=32, stride=32),
+        seq_len=64)
+    # shard-writer manifest: whole-document token-budget shards over
+    # the same scale-safe two-level prefix sum (one row per shard:
+    # contiguous id range + doc/token counts — exactly the pruning
+    # predicate a distributed shard writer needs)
+    q["token_shards_documents"] = lambda s, d: shard_manifest(
+        load_table(s, d, "documents").select(
+            "doc_id", token_count(F.col("text")).alias("n_tokens")),
+        budget=4096)
+
+    # --- the capstone: the COMPLETE LLM data-prep pipeline as one
+    # query — quality gate → MinHash near-dup dedup (canonical only) →
+    # PII redaction → deterministic split — every stage composed from
+    # the registered operators, oracled end-to-end.
+    def _llm_corpus(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        qual = docs.filter(quality_score(F.col("text")) >= 0.5)
+        # word-3 shingles: the published standard for LLM-corpus
+        # MinHash dedup (word n-grams, not char shingles) and ~5× fewer
+        # md5 base hashes per document
+        pairs = minhash_lsh_pairs(qual, num_hashes=64, bands=16,
+                                  shingle_k=3, shingle_unit="word",
+                                  threshold=0.5)
+        labeled = dedup_clusters(qual, pairs)
+        canon = qual.join(
+            labeled.filter(F.col("is_canonical")).select("doc_id"),
+            "doc_id")
+        # redaction passes lang through the same narrow projection —
+        # the redact-then-rejoin form was a needless shuffle
+        out = redact_text(canon, keep=["lang"]) \
+            .select("doc_id", "lang", "redacted")
+        return release_checkpoints_on_gc(
+            hash_split(out, {"train": 0.9, "val": 0.05, "test": 0.05},
+                       ["doc_id"]), labeled)
+    q["llm_corpus_documents"] = _llm_corpus
+
+    # --- capstone v2: the NEXT stage of the same pipeline — after the
+    # quality gate + dedup, decontaminate against the eval subset,
+    # redact, chunk to context windows, and pack into fixed-length
+    # training sequences.  Output is the model-input index (one row per
+    # chunk with its global sequence assignment).
+    def _llm_corpus_v2(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        qual = docs.filter(quality_score(F.col("text")) >= 0.5)
+        # word-3 shingles — see _llm_corpus
+        pairs = minhash_lsh_pairs(qual, num_hashes=64, bands=16,
+                                  shingle_k=3, shingle_unit="word",
+                                  threshold=0.5)
+        labeled = dedup_clusters(qual, pairs)
+        # canon feeds BOTH the contamination scan and the clean join;
+        # chunks feed pack_sequences' three passes (bounds agg, bucket
+        # totals, final join).  Unpinned, every pass lazily re-derives
+        # the whole quality→dedup→decontaminate→redact pipeline — the
+        # r6 sf0.01 cost outlier (VERDICT r6 #2).  Round 11: canon is
+        # an eager localCheckpoint, not a persist — a persist caches
+        # the BLOCKS but every downstream action still re-plans the
+        # tall quality→LSH→components DAG (AQE re-optimization +
+        # broadcast re-build measured ~0.7-3 s PER ACTION at sf0.01
+        # even fully cached), and v2 takes five actions after this
+        # point; truncating the lineage here flattens them (VERDICT
+        # r10 #4 — v2 was the 8.0 s slowest-gate-row).  Released on
+        # result GC with the other checkpoints.
+        canon = pinned_local_checkpoint(qual.join(
+            labeled.filter(F.col("is_canonical")).select("doc_id"),
+            "doc_id"))
+        bench = docs.filter((F.col("doc_id") % 10) == 7)
+        contam = contamination_check(canon, bench, n=3)
+        clean = canon.join(
+            contam.filter(F.col("contaminated_frac") < 0.8)
+            .select("doc_id"), "doc_id")
+        # eager checkpoint truncates the composed lineage before the
+        # chunk→pack tail: pack scans its input three times (bounds,
+        # bucket totals, final join) and each scan otherwise re-plans
+        # the entire upstream pipeline (measured ~4 s of the r6 cost
+        # outlier); blocks released with the checkpoints below
+        red = pinned_local_checkpoint(
+            redact_text(clean).select(
+                "doc_id", F.col("redacted").alias("text")))
+        chunks = chunk_documents(red, size=32, stride=32).persist()
+        return release_checkpoints_on_gc(
+            release_on_gc(
+                pack_sequences(chunks, seq_len=64).select(
+                    "doc_id", "chunk_idx", "chunk_text", "n_tokens",
+                    "start_offset", "seq_id", "seq_offset"),
+                chunks), labeled, red, canon)
+    q["llm_corpus_v2_documents"] = _llm_corpus_v2
+
+    # --- capstone v3: the round-7 cleaning suite composed end-to-end —
+    # C4/Gopher rule gate -> corpus-wide paragraph dedup (docs
+    # reassembled from first-occurrence spans, emptied docs dropped) ->
+    # passage-level decontamination (winnowing-fingerprint overlap vs
+    # the eval subset) -> content-stable split.
+    def _llm_corpus_v3(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        kept = docs.join(
+            c4_rules(docs).filter("kept").select("doc_id"), "doc_id")
+        para = dedup_paragraphs(kept).filter(
+            F.col("clean_text") != "").persist()
+        bench = docs.filter((F.col("doc_id") % 10) == 7).select(
+            "doc_id", F.col("text").alias("clean_text"))
+        deco = winnow_contamination(para, bench, text_col="clean_text")
+        clean = (para.join(
+            deco.filter(F.col("passage_overlap") <= 0.5)
+            .select("doc_id", "passage_overlap"), "doc_id")
+            .select("doc_id", "clean_text", "n_dupes", "passage_overlap"))
+        return release_on_gc(
+            hash_split(clean, {"train": 0.9, "val": 0.05, "test": 0.05},
+                       ["doc_id"]), para)
+    q["llm_corpus_v3_documents"] = _llm_corpus_v3
+
+    # --- corpus capstone v4 (VERDICT r8 #6): v3 ends at split; a real
+    # pipeline continues on the TRAIN split with the training-mix
+    # samplers — relative quality floor (drop the worst quartile per
+    # language), per-source frequency cap, per-language token budget —
+    # and ends at the shard-writer manifest: the full curl-to-shards
+    # story composed from registered, individually-audited ops.
+    def _llm_corpus_v4(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        train = _llm_corpus_v3(s, d).filter(F.col("split") == "train")
+        # checkpoint the (small) train slice: every sampler below scans
+        # its input 2-3× (cutoff aggregate + filter, cap window, mix
+        # aggregate) and each scan would otherwise re-derive the entire
+        # v3 DAG — dedup, winnowing and all (45 s vs 9 s at sf0.01)
+        base = pinned_local_checkpoint(train.join(
+            docs.select("doc_id", "lang", "source"), "doc_id"))
+        scored = base.withColumn(
+            "score", quality_score(F.col("clean_text")))
+        floored = quality_floor(scored, "score", group_col="lang", q=0.25)
+        capped = group_cap(floored.select("doc_id", "lang", "source"),
+                           ["source"], 10, ["doc_id"])
+        toks = capped.join(
+            base.select("doc_id", "clean_text"), "doc_id").select(
+            "doc_id", "lang",
+            token_count(F.col("clean_text")).alias("n_tokens"))
+        mixed = budget_mix(toks, ["lang"], 3000, "n_tokens", ["doc_id"])
+        return release_checkpoints_on_gc(
+            shard_manifest(mixed.select("doc_id", "n_tokens"),
+                           budget=2048), base)
+    q["llm_corpus_v4_documents"] = _llm_corpus_v4
+
+    # --- capstone v5 (round 12): the ExactSubstr-family pipeline end
+    # to end — C4 quality gate -> intra-corpus span REMOVAL (keep-first
+    # cut of every duplicated >=12-token run) -> benchmark SCRUB (cut
+    # ALL occurrences of spans leaked from the held-out bench split).
+    # Byte-exact oracle: each stage's twin is byte-exact and the
+    # composition is deterministic.
+    def _llm_corpus_v5(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        corpus = docs.filter((F.col("doc_id") % 10) != 7)
+        bench = docs.filter((F.col("doc_id") % 10) == 7)
+        kept = (corpus.join(
+            c4_rules(corpus).filter("kept").select("doc_id"), "doc_id")
+            .select("doc_id", "text"))
+        # checkpoint the removal output: the scrub stage scans its
+        # corpus input ~4x (shingles, affected semi-join, rebuild,
+        # final restore join) and each scan would re-derive the whole
+        # gate+removal DAG (the v4 lesson: persist() != cheap actions)
+        r1 = pinned_local_checkpoint(
+            substring_remove(kept, k=8, min_span=12, max_df=50))
+        r2 = substring_scrub(
+            r1.select("doc_id", F.col("clean_text").alias("text")),
+            bench, k=8, min_span=12, max_df=50)
+        out = (r1.select("doc_id",
+                         F.col("n_tokens").alias("n_tokens_kept"),
+                         F.col("n_removed").alias("n_dup_removed"))
+               .join(r2.select("doc_id", "clean_text",
+                               F.col("n_removed")
+                               .alias("n_contam_removed")),
+                     "doc_id"))
+        return release_checkpoints_on_gc(out, r1)
+    q["llm_corpus_v5_documents"] = _llm_corpus_v5
+
+    # --- deterministic sampling / splitting (content-stable md5
+    # buckets; reproducible across engines/reruns/repartitioning) ---
+    q["sample_documents"] = lambda s, d: deterministic_sample(
+        load_table(s, d, "documents"), 0.1, ["doc_id"])
+    q["split_documents"] = lambda s, d: hash_split(
+        load_table(s, d, "documents").select("doc_id"),
+        {"train": 0.9, "val": 0.05, "test": 0.05}, ["doc_id"])
+    # leakage-safe split: near-dup CLUSTERS (not documents) are the
+    # split unit, so two near-duplicates can never straddle train/test
+    # — the contamination mode a plain per-doc hash split cannot
+    # prevent.  Oracle: the dedup_clusters recursive CTE + the same
+    # md5-threshold CASE.
+    def _cluster_split(s: SparkSession, d: str) -> DataFrame:
+        docs = load_table(s, d, "documents")
+        labeled = dedup_clusters(
+            docs, ngram_jaccard_pairs(docs, k=3, unit="word",
+                                      threshold=0.05))
+        out = hash_split(labeled.select("doc_id", "cluster_id"),
+                         {"train": 0.8, "val": 0.1, "test": 0.1},
+                         ["cluster_id"])
+        return release_checkpoints_on_gc(out, labeled)
+    q["cluster_split_documents"] = _cluster_split
+    # per-source frequency cap (C4/FineWeb-style "at most K docs per
+    # domain"): exact salted two-level top-K by content hash — no
+    # single-task sort of a hot source at scale
+    q["source_cap_documents"] = lambda s, d: group_cap(
+        load_table(s, d, "documents").select("doc_id", "source"),
+        ["source"], 10, ["doc_id"])
+    # token-budget training mix ("N tokens per language"): per-group
+    # keep-rate = min(1, budget/group_tokens), content-stable selection;
+    # one tiny aggregate broadcast back, the corpus never shuffled
+    q["budget_mix_documents"] = lambda s, d: budget_mix(
+        load_table(s, d, "documents").select(
+            "doc_id", "lang", token_count(F.col("text")).alias("n_tokens")),
+        ["lang"], 3000, "n_tokens", ["doc_id"])
+    # training-mix rebalance: downsample en, keep zh, drop unlisted
+    q["stratified_sample_documents"] = lambda s, d: stratified_sample(
+        load_table(s, d, "documents").select("doc_id", "lang"),
+        {"en": 0.1, "zh": 1.0, "de": 0.5}, "lang", ["doc_id"])
+    # importance sampling: keep probability proportional to a per-row
+    # weight (here length-derived; in production a quality score) —
+    # the quality-proportional training-mix op, zero shuffle
+    q["weighted_sample_documents"] = lambda s, d: weighted_sample(
+        load_table(s, d, "documents")
+        .select("doc_id", (F.col("n_chars") / F.lit(4000.0))
+                .alias("weight")),
+        1.0, "weight", ["doc_id"])
+    # temperature-scaled language rebalancing (T=2, the classic
+    # multilingual-pretraining flattening): keep rate of the largest
+    # language is base_rate, smaller languages keep proportionally more
+    # -- expected kept per language ~ sqrt(count)
+    q["temperature_sample_documents"] = lambda s, d: temperature_sample(
+        load_table(s, d, "documents").select("doc_id", "lang"),
+        ["lang"], ["doc_id"], base_rate=0.5, temperature=2.0)
+
     # --- streaming pipeline (ST1-ST7): foreachBatch ingest, record-ID
     # barrier, incremental local-skyline state, trigger-released answer.
     # Deterministic generated stream → same rows the SQL oracle derives.
@@ -418,6 +1402,204 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return pipe.results().select("query_id", "id", "d0", "d1")
 
     q["streaming_pipeline_skyline"] = _streaming_pipeline
+
+    # --- span-level streaming admission: incremental twin of
+    # dedup_paragraphs.  Batches split by ascending doc_id make the
+    # cross-batch first-occurrence rule coincide with the batch
+    # operator's global (id, pos) winner, so dedup_paragraphs_sql is an
+    # exact oracle for the streamed result (up to the span store's
+    # 60-bit hash keying — collision odds ~n²/2⁶¹, see the operator
+    # docstring; zero at any shipped SF).
+    def _streaming_paragraph_admission(s: SparkSession,
+                                       d: str) -> DataFrame:
+        import tempfile
+
+        from flink_skyline_qos_spark.streaming.continuous import (
+            run_streaming_paragraph_admission,
+        )
+
+        docs = load_table(s, d, "documents").select("doc_id", "text")
+        med = docs.approxQuantile("doc_id", [0.5], 0.0)
+        cut = med[0] if med else 0  # empty table: one empty batch each
+        work = tempfile.mkdtemp(prefix="spanadm_")
+        data_dir = os.path.join(work, "data")
+        os.makedirs(data_dir)
+        # parquet batch files (NOT an id|text text file: embedded
+        # newlines in text would shear into truncated + null-id rows);
+        # mtime stagger fixes replay order = ascending doc_id
+        _batch_fixture_files(docs, [
+            F.col("doc_id") <= cut,
+            (F.col("doc_id") > cut) | F.col("doc_id").isNull(),
+        ], data_dir)
+        stream = (s.readStream.schema(docs.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        run_streaming_paragraph_admission(stream, work, unit_tokens=8)
+        return (s.read.parquet(os.path.join(work, "cleaned"))
+                .select(F.col("id").alias("doc_id"), "clean_text",
+                        "n_units", "n_dupes"))
+
+    q["streaming_paragraph_admission_documents"] = \
+        _streaming_paragraph_admission
+
+    # --- quality-gate streaming admission: the ingest-time twin of
+    # c4_rules.  The rules are stateless per document, so the union of
+    # the per-batch outputs IS the batch operator over the whole table
+    # and c4_rules_sql is an exact oracle (VERDICT r7 Next #6: a crawl
+    # pipeline filters on quality rules before any dedup state).
+    def _streaming_c4_admission(s: SparkSession, d: str) -> DataFrame:
+        import tempfile
+
+        from flink_skyline_qos_spark.streaming.continuous import (
+            run_streaming_c4_admission,
+        )
+
+        docs = load_table(s, d, "documents").select("doc_id", "text")
+        med = docs.approxQuantile("doc_id", [0.5], 0.0)
+        cut = med[0] if med else 0  # empty table: one empty batch each
+        work = tempfile.mkdtemp(prefix="c4adm_")
+        data_dir = os.path.join(work, "data")
+        os.makedirs(data_dir)
+        # parquet batch files, mtime-staggered — same replay recipe as
+        # the span-admission query (text columns can embed newlines)
+        _batch_fixture_files(docs, [
+            F.col("doc_id") <= cut,
+            (F.col("doc_id") > cut) | F.col("doc_id").isNull(),
+        ], data_dir)
+        stream = (s.readStream.schema(docs.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        run_streaming_c4_admission(stream, work)
+        return s.read.option("recursiveFileLookup", "true").parquet(
+            os.path.join(work, "scored")).select(
+            "doc_id", "n_tokens", "mean_tok_len", "top_tok_ratio",
+            "stop_ratio", "failed", "kept")
+
+    q["streaming_c4_admission_documents"] = _streaming_c4_admission
+
+    # --- the COMPOSED ingest capstone: quality gate → span dedup in
+    # one streaming loop — the ingest twin of llm_corpus_v3's front
+    # half.  Rejected docs never seed the span store (a spam page must
+    # not claim first-occurrence over clean text arriving later), and
+    # every input doc is emitted once with verdict + cleaned text.
+    def _streaming_ingest_pipeline(s: SparkSession, d: str) -> DataFrame:
+        import tempfile
+
+        from flink_skyline_qos_spark.streaming.continuous import (
+            run_streaming_ingest_pipeline,
+        )
+
+        docs = load_table(s, d, "documents").select("doc_id", "text")
+        med = docs.approxQuantile("doc_id", [0.5], 0.0)
+        cut = med[0] if med else 0
+        work = tempfile.mkdtemp(prefix="ingestpipe_")
+        data_dir = os.path.join(work, "data")
+        os.makedirs(data_dir)
+        _batch_fixture_files(docs, [
+            F.col("doc_id") <= cut,
+            (F.col("doc_id") > cut) | F.col("doc_id").isNull(),
+        ], data_dir)
+        stream = (s.readStream.schema(docs.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        with _small_shuffle(s):
+            run_streaming_ingest_pipeline(stream, work, unit_tokens=8)
+        return (s.read.option("recursiveFileLookup", "true")
+                .parquet(os.path.join(work, "cleaned"))
+                .select(F.col("id").alias("doc_id"), "kept", "failed",
+                        "clean_text", "n_units", "n_dupes"))
+
+    q["streaming_ingest_pipeline_documents"] = _streaming_ingest_pipeline
+
+    # --- embedding streaming admission: SemDeDup at ingest (VERDICT r8
+    # #3).  Two batches split by ascending vec_id; a vector is admitted
+    # iff it near-dups nothing admitted before it (within-batch
+    # keep-first self-check, then cross-check vs the standing
+    # hyperplane-LSH signature store).  The oracle composes the two
+    # batch twins per side: self pairs via embedding_near_dup_lsh_sql,
+    # cross pairs (survivors × batch-1 admits) via
+    # embedding_near_dup_lsh_cross_sql — exact to the cosine.
+    def _streaming_embedding_admission(s: SparkSession,
+                                       d: str) -> DataFrame:
+        import tempfile
+
+        from flink_skyline_qos_spark.streaming.continuous import (
+            run_streaming_embedding_admission,
+        )
+
+        emb = (load_table(s, d, "embeddings")
+               .select("vec_id", "embedding")
+               .filter(F.col("vec_id").isNotNull()))
+        # engine-portable cut (the oracle recomputes it as a scalar
+        # subquery): floor-half of the max id, NOT a quantile — Spark's
+        # exact-median element choice and DuckDB's interpolated median
+        # disagree on even counts
+        mx = emb.agg(F.max("vec_id")).first()[0]
+        cut = (mx // 2) if mx is not None else 0
+        work = tempfile.mkdtemp(prefix="embadm_")
+        data_dir = os.path.join(work, "data")
+        os.makedirs(data_dir)
+        _batch_fixture_files(emb, [
+            F.col("vec_id") <= cut,
+            F.col("vec_id") > cut,
+        ], data_dir)
+        stream = (s.readStream.schema(emb.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        # compact_every=4: no compaction fires in this 2-batch fixture
+        # (r10 trim — the snapshot+GC rewrite cost 1.5-3.5 s of the
+        # gate's slowest query; the compaction + replay path stays
+        # EXECUTED in tests/test_streaming.py's cross-batch pytest,
+        # and dim=64 skips the per-batch vector-length probe job)
+        with _small_shuffle(s):
+            run_streaming_embedding_admission(
+                stream, work, threshold=0.35, n_planes=32, bands=8,
+                compact_every=4, dim=64)
+        return (s.read.option("recursiveFileLookup", "true")
+                .parquet(os.path.join(work, "admitted"))
+                .select("vec_id"))
+
+    q["streaming_embedding_admission_embeddings"] = \
+        _streaming_embedding_admission
+
+    # --- ExactSubstr streaming admission (round 12): the long-
+    # verbatim-quote twin of the minhash/embedding admission loops —
+    # a doc is admitted iff it shares no >=12-token verbatim run with
+    # anything admitted before it (within-batch keep-first, then cross
+    # vs the standing positioned-shingle store).  Oracle: composed
+    # batch twins per side (self pairs + cross pairs), exact.
+    def _streaming_substring_admission(s: SparkSession,
+                                       d: str) -> DataFrame:
+        import tempfile
+
+        from flink_skyline_qos_spark.streaming.continuous import (
+            run_streaming_substring_admission,
+        )
+
+        docs = (load_table(s, d, "documents")
+                .select("doc_id", "text")
+                .filter(F.col("doc_id").isNotNull()))
+        # engine-portable cut (the oracle recomputes it as a scalar
+        # subquery): floor-half of the max id, like the embedding twin
+        mx = docs.agg(F.max("doc_id")).first()[0]
+        cut = (mx // 2) if mx is not None else 0
+        work = tempfile.mkdtemp(prefix="substradm_")
+        data_dir = os.path.join(work, "data")
+        os.makedirs(data_dir)
+        _batch_fixture_files(docs, [
+            F.col("doc_id") <= cut,
+            F.col("doc_id") > cut,
+        ], data_dir)
+        stream = (s.readStream.schema(docs.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        # compact_every=4: no compaction fires in this 2-batch fixture
+        # (the compaction + replay path is pytest-exercised)
+        with _small_shuffle(s):
+            run_streaming_substring_admission(
+                stream, work, k=8, min_span=12, max_df=50,
+                compact_every=4)
+        return (s.read.option("recursiveFileLookup", "true")
+                .parquet(os.path.join(work, "admitted"))
+                .select("doc_id"))
+
+    q["streaming_substring_admission_documents"] = \
+        _streaming_substring_admission
 
     # --- continuous keyed-state variant (applyInPandasWithState): the
     # merge of all emitted local skylines equals the batch skyline (every
@@ -444,16 +1626,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             stream, dims=2, algo="mr-dim", num_partitions=NUM_PARTS,
             domain_max=10000.0)
         name = f"cont_{uuid.uuid4().hex[:8]}"
-        # NUM_PARTS state partitions, not the session's default — the
-        # keyed state has NUM_PARTS keys and each micro-batch pays
-        # per-partition state-store file ops
-        with _small_shuffle(s, NUM_PARTS):
+        # NUM_PARTS state partitions, not the session's 32 — the keyed
+        # state has NUM_PARTS keys and each micro-batch pays
+        # per-partition state-store file ops (same fix as the sketch
+        # replays)
+        prev_parts = s.conf.get("spark.sql.shuffle.partitions")
+        s.conf.set("spark.sql.shuffle.partitions", str(NUM_PARTS))
+        try:
             query = (out.writeStream.format("memory").queryName(name)
                      .outputMode("update")
                      .option("checkpointLocation",
                              os.path.join(work, "ckpt"))
                      .trigger(availableNow=True).start())
             query.awaitTermination()
+        finally:
+            s.conf.set("spark.sql.shuffle.partitions", prev_parts)
         emitted = s.table(name).select("id", "d0", "d1").distinct()
         return skyline(emitted, ["d0", "d1"])
 
@@ -500,6 +1687,243 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["streaming_continuous_global"] = _streaming_continuous_global
 
+    # --- windowed streaming sketches EXECUTED from a deterministic
+    # file-source replay of the events table (availableNow): append-mode
+    # emission = exactly the watermark-CLOSED daily windows, whose
+    # sketch state equals the batch aggregation over that window's rows
+    # — which is what the DuckDB twin states (VERDICT r4 #5).
+    def _streaming_sketch_replay(s: SparkSession, d: str, build):
+        import tempfile
+        import uuid
+
+        import time
+
+        work = tempfile.mkdtemp(prefix="swsketch_")
+        data_dir = os.path.join(work, "data")
+        os.makedirs(data_dir)
+        # NTZ → LTZ for the watermark clock (session tz is pinned UTC,
+        # so the epoch is unchanged and matches DuckDB's epoch())
+        ev = (load_table(s, d, "events")
+              .withColumn("ts", F.col("ts").cast("timestamp"))
+              .select("ts", "user_id", "event_type", "value"))
+        # CHRONOLOGICAL micro-batches (one file per ~week, mtime-ordered
+        # so the file source replays them in event-time order): the
+        # watermark advances monotonically across batches like a real
+        # ingest and never drops a row as late — a time-shuffled split
+        # would mark everything after batch 1 late and silently drain
+        # the windows.  The last windows emit in availableNow's final
+        # watermark-commit batch.
+        # two files: one real watermark advance across batches, plus
+        # availableNow's final commit — each extra micro-batch re-plans
+        # the wide streaming aggregation (plan compile dominates these
+        # tiny-data replays), so keep the batch count minimal
+        wm_cut = F.lit("2024-01-16").cast("timestamp")
+        _batch_fixture_files(ev, [
+            F.col("ts") < wm_cut,
+            F.col("ts") >= wm_cut,
+        ], data_dir)
+        stream = (s.readStream.schema(ev.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        out = build(stream)
+        name = f"swk_{uuid.uuid4().hex[:8]}"
+        # 4 state partitions, not the session's 32: the stateful-op
+        # partition count is fixed by shuffle.partitions at first run,
+        # and each batch pays per-partition state-store file ops — at
+        # ~30 windows of state, 32 partitions is pure commit overhead.
+        # Restored after the run; batch queries read the conf at their
+        # own action time.
+        prev_parts = s.conf.get("spark.sql.shuffle.partitions")
+        s.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            query = (out.writeStream.format("memory").queryName(name)
+                     .outputMode("append")
+                     .option("checkpointLocation",
+                             os.path.join(work, "ckpt"))
+                     .trigger(availableNow=True).start())
+            query.awaitTermination()
+        finally:
+            s.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        # timestamps as epoch seconds: engine-portable values (a
+        # naive-vs-tz-aware datetime would never hash-compare equal)
+        out = s.table(name)
+        for fname, ftype in out.dtypes:
+            if ftype.startswith("timestamp"):
+                out = out.withColumn(fname, F.col(fname).cast("long"))
+        return out
+
+    def _streaming_hll_windows(s: SparkSession, d: str) -> DataFrame:
+        from flink_skyline_qos_spark.operators.sketches import (
+            hll_estimate_regs,
+        )
+        from flink_skyline_qos_spark.streaming.continuous import (
+            streaming_windowed_hll_grouped,
+        )
+        # register-keyed streaming agg (ONE max column — the wide
+        # 2^b-column form made plan compile scale with m) + the shared
+        # exact-integer batch finisher
+        regs = _streaming_sketch_replay(s, d, lambda st: (
+            streaming_windowed_hll_grouped(
+                st, "user_id", window_duration="1 day",
+                watermark_delay="1 hour", bucket_bits=6)))
+        return hll_estimate_regs(regs, ["win_start", "win_end"],
+                                 bucket_bits=6, rho_col="max_rho")
+    q["streaming_hll_windows_events"] = _streaming_hll_windows
+
+    def _streaming_count_min_windows(s: SparkSession, d: str) -> DataFrame:
+        from flink_skyline_qos_spark.streaming.continuous import (
+            streaming_windowed_count_min,
+        )
+        return _streaming_sketch_replay(s, d, lambda st: (
+            streaming_windowed_count_min(
+                st, "event_type", EVENT_TYPES, window_duration="1 day",
+                watermark_delay="1 hour", depth=4, width=64)))
+    q["streaming_count_min_windows_events"] = _streaming_count_min_windows
+
+    def _streaming_quantiles_windows(s: SparkSession, d: str) -> DataFrame:
+        from flink_skyline_qos_spark.streaming.continuous import (
+            fixed_hist_quantiles_from_bins,
+            streaming_windowed_quantiles_grouped,
+        )
+        # bin-keyed streaming agg (ONE count column; the wide form's
+        # O(nbins²)-node cascade re-planned per batch) + the shared
+        # batch interpolation finisher — nbins 32 at lower cost than
+        # the wide form managed at 16
+        bins = _streaming_sketch_replay(s, d, lambda st: (
+            streaming_windowed_quantiles_grouped(
+                st, "value", lo=0.0, hi=600.0, nbins=32,
+                window_duration="1 day", watermark_delay="1 hour")))
+        return fixed_hist_quantiles_from_bins(
+            bins, ["win_start", "win_end"], lo=0.0, hi=600.0, nbins=32,
+            quantiles=(0.5, 0.95))
+    q["streaming_quantiles_windows_events"] = _streaming_quantiles_windows
+
+    # ST6 late data EXECUTED under the oracle gate: the second file
+    # replays rows from Jan 1-5 for user_id%3==0 AFTER the watermark
+    # has advanced past their (long-closed) daily windows — Spark drops
+    # them, so the emitted closed windows equal the batch aggregation
+    # over the NON-late rows only.  Deterministic: the late set is
+    # defined by data, not arrival race (every on-time file spans the
+    # full month, so the watermark is already at Jan 30 - 1h when the
+    # late file arrives in batch 2).
+    def _streaming_late_data(s: SparkSession, d: str) -> DataFrame:
+        import tempfile
+        import uuid
+
+        work = tempfile.mkdtemp(prefix="swlate_")
+        data_dir = os.path.join(work, "data")
+        os.makedirs(data_dir)
+        ev = (load_table(s, d, "events")
+              .withColumn("ts", F.col("ts").cast("timestamp"))
+              .select("ts", "user_id"))
+        late = (F.col("ts") < F.lit("2024-01-06").cast("timestamp")) \
+            & (F.col("user_id") % 3 == 0)
+        ontime = ev.where(~late)
+        jan30 = F.col("ts") >= F.lit("2024-01-30").cast("timestamp")
+        # THREE chronological files: the middle (Jan 30) file advances
+        # the watermark so the Jan 1-5 windows are EVICTED at the end
+        # of batch 1 — only then does Spark guarantee dropping the late
+        # file's rows (rows later than the watermark are admitted while
+        # their window's state is still live; eviction is lazy)
+        _batch_fixture_files(ev, [
+            ~late & ~jan30,
+            ~late & jan30,
+            late,
+        ], data_dir)
+        stream = (s.readStream.schema(ev.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        agg = (stream.withWatermark("ts", "1 hour")
+               .groupBy(F.window("ts", "1 day").alias("__win"))
+               .agg(F.count(F.lit(1)).alias("n_events"))
+               .select(F.col("__win.start").cast("long")
+                       .alias("win_start"),
+                       F.col("__win.end").cast("long").alias("win_end"),
+                       "n_events"))
+        name = f"late_{uuid.uuid4().hex[:8]}"
+        prev_parts = s.conf.get("spark.sql.shuffle.partitions")
+        s.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            query = (agg.writeStream.format("memory").queryName(name)
+                     .outputMode("append")
+                     .option("checkpointLocation",
+                             os.path.join(work, "ckpt"))
+                     .trigger(availableNow=True).start())
+            query.awaitTermination()
+        finally:
+            s.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        return s.table(name)
+    q["streaming_late_data_events"] = _streaming_late_data
+
+    # stream-stream interval join EXECUTED: view→purchase attribution
+    # (views of the same user within the day before a purchase).  With
+    # chronological replay nothing arrives late and no matchable row is
+    # ever state-evicted (right rows are dropped only once the left
+    # watermark passes right_ts + band), and INNER matches emit in the
+    # batch they are found — so the oracle is the plain batch interval
+    # join over all events.
+    def _streaming_interval_join(s: SparkSession, d: str) -> DataFrame:
+        from flink_skyline_qos_spark.streaming.continuous import (
+            streaming_interval_join,
+        )
+
+        def build(st):
+            left = (st.where(F.col("event_type") == "purchase")
+                    .select(F.col("user_id"),
+                            F.col("value").alias("purchase_value"),
+                            F.col("ts").alias("purchase_ts")))
+            right = (st.where(F.col("event_type") == "view")
+                     .select(F.col("user_id"),
+                             F.col("ts").alias("view_ts")))
+            return streaming_interval_join(
+                left, right, key="user_id", left_ts="purchase_ts",
+                right_ts="view_ts", band_seconds=86400,
+                watermark_delay="1 hour").select(
+                    "l.user_id", "purchase_value", "purchase_ts",
+                    "view_ts")
+        return _streaming_sketch_replay(s, d, build)
+    q["streaming_interval_join_events"] = _streaming_interval_join
+
+    # --- similarity search over embeddings ---
+    def _ann(s: SparkSession, d: str) -> DataFrame:
+        emb = load_table(s, d, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        out = cosine_topk(emb, qs, k=10)
+        return out.select("query_id", "vec_id",
+                          F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    q["ann_topk_embeddings"] = _ann
+
+    # Same top-k, GEMM physics (partial top-k per Arrow batch — the
+    # 100 TB path); oracled against the same SQL as the declarative form.
+    def _ann_gemm(s: SparkSession, d: str) -> DataFrame:
+        emb = load_table(s, d, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        out = cosine_topk_gemm(emb, qs, k=10)
+        return out.select("query_id", "vec_id",
+                          F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    q["ann_topk_gemm_embeddings"] = _ann_gemm
+
+    # exact kNN GRAPH (every vector → its k nearest others): the edge
+    # set graph-based dedup/clustering starts from; GEMM physics,
+    # self-edges excluded by re-rank (a duplicate vector with smaller
+    # id legitimately outranks self, so self≠rank-1 is not assumed)
+    q["knn_graph_embeddings"] = lambda s, d: knn_graph(
+        load_table(s, d, "embeddings"), k=5
+    ).select("src", "dst", F.round("cos_sim", 6).alias("cos_sim"), "rank")
+
+    def _ann_ivf(s: SparkSession, d: str) -> DataFrame:
+        emb = load_table(s, d, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        out = cosine_topk_ivf(emb, qs, k=10, n_cells=8, nprobe=8)
+        return out.select("query_id", "vec_id",
+                          F.round("cos_sim", 6).alias("cos_sim"), "rank")
+    # nprobe == n_cells ⇒ exhaustive ⇒ exact: same oracle as brute force
+    q["ann_topk_ivf_embeddings"] = _ann_ivf
+
     # --- synthetic generators (S5), deterministic hash-seeded twins ---
     for dist in ("uniform", "correlated", "anti_correlated"):
         q[f"gen_{dist}_2d"] = (
@@ -525,11 +1949,160 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ["d0", "d1", "d2", "d3"], broadcast_threshold=1000,
     )
 
+    # unlabeled scale path: random-hyperplane LSH blocking, exact verify.
+    q["embedding_near_dup_lsh"] = lambda s, d: embedding_near_dup_lsh(
+        load_table(s, d, "embeddings"), threshold=0.35,
+        n_planes=32, bands=8,
+    ).select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
+
+    q["embedding_near_dup"] = lambda s, d: embedding_near_dup_pairs(
+        load_table(s, d, "embeddings"), threshold=0.35, block_col="label",
+    ).select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
+
+    # --- SemDeDup-style capstone: the full EMBEDDING dedup pipeline as
+    # one query — hyperplane-LSH candidate pairs → exact cosine verify →
+    # connected components → keep-min-id canonical corpus.  Mirrors
+    # dedup_corpus_documents on the vector side; every stage is the
+    # registered scale-safe operator.
+    def _embedding_dedup(s: SparkSession, d: str) -> DataFrame:
+        emb = load_table(s, d, "embeddings")
+        pairs = embedding_near_dup_lsh(
+            emb, threshold=0.35, n_planes=32, bands=8)
+        labeled = dedup_clusters(
+            emb, pairs.select("id_a", "id_b"), id_col="vec_id")
+        return release_checkpoints_on_gc(
+            labeled.filter(F.col("is_canonical"))
+            .select("vec_id", "cluster_id"), labeled)
+    q["embedding_dedup_corpus"] = _embedding_dedup
+
+    # --- distributed k-means over embeddings (cluster-based curation:
+    # SemDeDup prune-within-cluster, cluster-balanced sampling, data-mix
+    # audits).  Exact integer arithmetic end-to-end (quantized vectors,
+    # BIGINT distances, floor-mean centroids, md5-content seeds), so the
+    # final assignment is value-oracle-able — MLlib's KMeans is not.
+    q["kmeans_clusters_embeddings"] = lambda s, d: kmeans_assign(
+        load_table(s, d, "embeddings"), dim=64, k=8, iterations=3, dp=4)
+
+    # cluster-balanced curation sample: ~target expected rows per
+    # kmeans cluster (big boilerplate clusters downweighted, small
+    # topical ones kept) — thresholds from a broadcast k-row aggregate,
+    # keep decisions the content-stable md5 bucket
+    q["kmeans_balanced_sample_embeddings"] = \
+        lambda s, d: kmeans_balanced_sample(
+            load_table(s, d, "embeddings"), dim=64, k=8, iterations=2,
+            dp=4, target=20)
+
+    # --- embedding-curation capstone: the full vector-side pipeline in
+    # ONE query — SemDeDup-style dedup (LSH pairs → components →
+    # canonical) → exact-integer k-means over the survivors →
+    # cluster-balanced sample: the diversity-preserving curated subset
+    # a training mix starts from.  Every stage is a registered op.
+    def _curation_capstone(s: SparkSession, d: str) -> DataFrame:
+        emb = load_table(s, d, "embeddings")
+        pairs = embedding_near_dup_lsh(
+            emb, threshold=0.35, n_planes=32, bands=8)
+        labeled = dedup_clusters(
+            emb, pairs.select("id_a", "id_b"), id_col="vec_id")
+        canon = labeled.filter(F.col("is_canonical")).select("vec_id")
+        kept = emb.join(canon, on="vec_id")
+        return release_checkpoints_on_gc(
+            kmeans_balanced_sample(
+                kept, dim=64, k=8, iterations=2, dp=4, target=20),
+            labeled)
+    q["curation_capstone_embeddings"] = _curation_capstone
+
+    # --- product quantization: per-subspace exact-integer codebooks,
+    # one packed BIGINT code per vector (m·log2(k) bits) — the ANN
+    # compression step that fits a billion-vector index in memory.
+    # Encode is one narrow literal-codebook pass: no joins, no shuffle.
+    q["pq_codes_embeddings"] = lambda s, d: pq_encode(
+        load_table(s, d, "embeddings"), dim=64, m=4, k=16,
+        iterations=2, dp=4)
+
+    # --- ADC search over the PQ codes: corpus scanned as integer
+    # codes (never the floats), per-query distances via k-entry
+    # literal lookup tables — the search half of PQ, one narrow pass +
+    # per-query top-k window.  Same query set as ann_topk.
+    def _pq_adc(s: SparkSession, d: str) -> DataFrame:
+        emb = load_table(s, d, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        return pq_adc_topk(emb, qs, dim=64, m=4, k=16,
+                           iterations=2, dp=4, topk=10)
+    q["pq_adc_topk_embeddings"] = _pq_adc
+
+    # two-stage search (the production PQ pattern): ADC shortlist over
+    # codes, exact cosine re-rank over shortlist x queries only
+    def _pq_rerank(s: SparkSession, d: str) -> DataFrame:
+        emb = load_table(s, d, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        return pq_adc_rerank(emb, qs, dim=64, m=4, k=16, iterations=2,
+                             dp=4, shortlist=50, topk=10)
+    q["pq_adc_rerank_embeddings"] = _pq_rerank
+
+    # --- ANN quality evaluation: recall@10 of the compressed ADC
+    # search against the exact cosine top-k — the metric that decides
+    # whether a PQ configuration is shippable.  Pure composition of
+    # the two registered operators; per-query exact fractions.  Runs
+    # on the PLANTED-CLUSTER generated corpus (VERDICT r9 #5): on the
+    # shipped i.i.d. embeddings — PQ's worst case — recall floored at
+    # the 0.1 self-hit and gave a user tuning a PQ config no signal;
+    # with 200 planted centers (10 members each, jitter 0.5) the
+    # measured recall@10 is 0.88 at 16 bits (m=4·k=16) vs 0.30 at
+    # 8 bits (m=2) — an actual quality dial (BENCHMARKS.md round 10).
+    def _ann_recall(s: SparkSession, d: str) -> DataFrame:
+        emb = generate_embeddings_hash(s, 2000, dim=64, k_centers=200,
+                                       jitter=0.5)
+        qs = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        exact = cosine_topk(emb, qs, k=10).select("query_id", "vec_id")
+        adc = pq_adc_topk(emb, qs, dim=64, m=4, k=16, iterations=2,
+                          dp=4, topk=10).select("query_id", "vec_id")
+        hits = exact.join(adc, on=["query_id", "vec_id"]) \
+            .groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
+        base = exact.select("query_id").distinct()
+        return (base.join(hits, on="query_id", how="left")
+                .select("query_id",
+                        F.coalesce(F.col("n_hits"),
+                                   F.lit(0).cast("long")).alias("n_hits"),
+                        (F.coalesce(F.col("n_hits"),
+                                    F.lit(0).cast("long"))
+                         / F.lit(10.0)).alias("recall")))
+    q["ann_recall_adc_clustered"] = _ann_recall
+
     return q
 
 
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
+
+    def _cosine_topk_oracle(probe_pred: str, k: int, select: str,
+                            corpus: str = "embeddings") -> str:
+        """Exact-cosine top-k oracle over `corpus` (a table name or a
+        parenthesized subquery), shared by the ann_topk_* oracles, the
+        hybrid-retrieval dense leg (review r9 pass 2: two verbatim
+        copies of this CTE chain) and the clustered recall oracle."""
+        return f"""
+WITH c AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM {corpus}),
+q AS (SELECT vec_id AS query_id, cast(embedding AS DOUBLE[]) AS qv
+      FROM {corpus} WHERE {probe_pred}),
+scored AS (
+  SELECT q.query_id, c.vec_id,
+         list_dot_product(c.v, q.qv)
+           / (sqrt(list_dot_product(c.v, c.v))
+              * sqrt(list_dot_product(q.qv, q.qv))) AS sim
+  FROM c CROSS JOIN q
+), ranked AS (
+  SELECT query_id, vec_id, sim,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY sim DESC, vec_id) AS rn
+  FROM scored
+)
+SELECT {select}
+FROM ranked WHERE rn <= {k}
+""".strip()
+
     li = f"(SELECT {', '.join(LI_COLS)} FROM lineitem)"
     sky2 = skyline_not_exists_sql(li, LI_DIMS2)
     o["skyline_2d_lineitem"] = sky2
@@ -623,6 +2196,64 @@ def oracle_sql() -> dict[str, str]:
         ["value", "unix_ms"], select="t.*", partition_by=["win_start"],
     )
 
+    _asof_inner = as_of_join_sql(
+        "SELECT event_id, user_id, ts, value FROM events "
+        "WHERE event_type = 'click'",
+        "SELECT event_id, user_id, ts, value FROM events "
+        "WHERE event_type = 'purchase'",
+        on="ts", by="user_id",
+        left_cols=["event_id", "user_id", "ts", "value"],
+        right_cols=["value", "event_id"], tiebreak="event_id")
+    o["asof_join_events"] = (
+        "SELECT event_id, user_id, value, "
+        "cast(epoch_ms(ts) as bigint) AS ts_ms, "
+        "coalesce(cast(epoch_ms(ts_asof) as bigint), -1) AS asof_ms, "
+        "coalesce(value_asof, -1.0) AS value_asof, "
+        "coalesce(event_id_asof, -1) AS event_id_asof "
+        f"FROM ({_asof_inner})")
+    o["range_join_events"] = range_join_sql(
+        "SELECT event_id, value AS v FROM events",
+        "SELECT range AS iv_id, range * 7.0 AS lo, "
+        "range * 7.0 + 10.0 AS hi FROM range(30)",
+        point_col="v", start_col="lo", end_col="hi",
+        point_cols=["event_id", "v"],
+        interval_cols=["iv_id", "lo", "hi"])
+
+    o["profile_events"] = """
+SELECT event_type, count(*) AS n,
+       round(min(value), 6) AS min_v, round(max(value), 6) AS max_v,
+       round(avg(value), 6) AS mean_v,
+       round(quantile_cont(value, 0.5), 6) AS p50,
+       round(quantile_cont(value, 0.95), 6) AS p95
+FROM events GROUP BY event_type
+""".strip()
+
+    o["link_rank_suppliers"] = link_rank_sql(
+        "SELECT a.l_suppkey AS src, b.l_suppkey AS dst "
+        "FROM lineitem a JOIN lineitem b "
+        "ON a.l_orderkey = b.l_orderkey "
+        "AND b.l_linenumber = a.l_linenumber + 1",
+        iterations=2)
+
+    o["latest_events_per_user"] = latest_by_key_sql(
+        "events",
+        ["event_id", "ts", "user_id", "event_type", "value", "props"],
+        "user_id", order_col="ts", tiebreak="event_id")
+    o["corr_profile_lineitem"] = corr_matrix_sql(
+        "lineitem",
+        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
+
+    o["bloom_semi_join_orders"] = bloom_semi_join_sql(
+        "SELECT * FROM orders",
+        "SELECT * FROM customer WHERE c_custkey % 16 = 1",
+        "o_custkey", dim_key="c_custkey",
+        fact_cols=["o_orderkey", "o_custkey", "o_totalprice"])
+
+    o["hll_users_events"] = hll_distinct_sql(
+        "events", "user_id", group_cols=["event_type"], bucket_bits=10)
+    o["quantile_sketch_events"] = histogram_quantiles_sql(
+        "events", "value", group_cols=["event_type"], nbins=4096)
+
     o["session_skyline_events"] = skyline_not_exists_sql(
         "(WITH e AS (SELECT event_id, user_id, event_type, value, "
         "cast(epoch_ms(ts) as double) AS unix_ms FROM events), "
@@ -658,6 +2289,411 @@ def oracle_sql() -> dict[str, str]:
             num_partitions=NUM_PARTS,
         )
 
+    o["exact_dedup_documents"] = (
+        "SELECT min(doc_id) AS doc_id, count(*) AS dup_count "
+        "FROM documents GROUP BY md5(text)"
+    )
+    o["gen_docs_exact_dedup"] = (
+        f"SELECT min(doc_id) AS doc_id, count(*) AS dup_count "
+        f"FROM ({generate_docs_sql(2000, dup='exact')}) GROUP BY md5(text)"
+    )
+    o["gen_docs_minhash_dedup"] = minhash_lsh_pairs_sql(
+        f"({generate_docs_sql(800, dup='near')})", num_hashes=64,
+        bands=16, shingle_k=3, shingle_unit="word", threshold=0.5)
+
+    o["ngram_jaccard_documents"] = f"""
+WITH {_NGRAM_CTES}
+SELECT id_a, id_b,
+       round(n_inter * 1.0 / (na.n + nb.n - n_inter), 6) AS jaccard
+FROM inter
+JOIN sizes na ON na.doc_id = id_a
+JOIN sizes nb ON nb.doc_id = id_b
+WHERE n_inter * 1.0 / (na.n + nb.n - n_inter) >= 0.05
+""".strip()
+
+    # Connected components as min-label reachability: seed every doc
+    # with its own id, propagate labels along (symmetric) near-dup
+    # edges to a fixpoint, keep the min per node.  UNION (not ALL)
+    # dedups the working set so the recursion terminates.
+    o["dedup_clusters_documents"] = f"""
+WITH RECURSIVE {_NGRAM_CTES},
+np AS (
+  SELECT id_a, id_b
+  FROM inter
+  JOIN sizes na ON na.doc_id = id_a
+  JOIN sizes nb ON nb.doc_id = id_b
+  WHERE n_inter * 1.0 / (na.n + nb.n - n_inter) >= 0.05
+),
+edges AS (
+  SELECT id_a AS u, id_b AS v FROM np
+  UNION ALL
+  SELECT id_b AS u, id_a AS v FROM np
+),
+reach(node, comp) AS (
+  SELECT doc_id, doc_id FROM documents
+  UNION
+  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
+)
+SELECT node AS doc_id, min(comp) AS cluster_id,
+       min(comp) = node AS is_canonical
+FROM reach GROUP BY node
+""".strip()
+
+    o["minhash_dedup_documents"] = minhash_lsh_pairs_sql(
+        "documents", num_hashes=64, bands=16, shingle_k=5, threshold=0.5)
+    o["incremental_dedup_documents"] = minhash_lsh_pairs_cross_sql(
+        "(SELECT * FROM documents WHERE doc_id % 3 = 0)",
+        "(SELECT * FROM documents WHERE doc_id % 3 <> 0)",
+        num_hashes=64, bands=16, shingle_k=5, threshold=0.5)
+
+    o["minhash_word_dedup_documents"] = minhash_lsh_pairs_sql(
+        "documents", num_hashes=64, bands=16, shingle_k=3,
+        shingle_unit="word", threshold=0.5)
+    o["simhash_near_dup_documents"] = simhash_near_dup_pairs_sql("documents")
+    o["winnow_pairs_documents"] = winnow_pairs_sql(
+        "documents", k=4, window=4, threshold=0.5)
+    o["substring_dedup_documents"] = substring_dedup_pairs_sql(
+        "documents", k=8, min_span=12, max_df=50)
+    o["substring_remove_documents"] = substring_remove_sql(
+        "documents", k=8, min_span=12, max_df=50)
+    o["substring_dedup_char_documents"] = substring_dedup_pairs_sql(
+        "documents", k=20, min_span=60, max_df=50, unit="char")
+    o["substring_remove_char_documents"] = substring_remove_sql(
+        "documents", k=20, min_span=60, max_df=50, unit="char")
+    o["incremental_substring_dedup_documents"] = \
+        substring_dedup_pairs_cross_sql(
+            "(SELECT * FROM documents WHERE doc_id % 3 = 0)",
+            "(SELECT * FROM documents WHERE doc_id % 3 <> 0)",
+            k=8, min_span=12, max_df=50)
+    o["substring_contamination_documents"] = substring_contamination_sql(
+        "(SELECT * FROM documents WHERE doc_id % 10 <> 7)",
+        "(SELECT * FROM documents WHERE doc_id % 10 = 7)",
+        k=8, min_span=12, max_df=50)
+    o["substring_scrub_documents"] = substring_scrub_sql(
+        "(SELECT * FROM documents WHERE doc_id % 10 <> 7)",
+        "(SELECT * FROM documents WHERE doc_id % 10 = 7)",
+        k=8, min_span=12, max_df=50)
+    o["substring_dedup_corpus_documents"] = f"""
+WITH RECURSIVE sp AS (
+{substring_dedup_pairs_sql("documents", k=8, min_span=12, max_df=50)}
+),
+edges AS (
+  SELECT id_a AS u, id_b AS v FROM sp
+  UNION ALL
+  SELECT id_b AS u, id_a AS v FROM sp
+),
+reach(node, comp) AS (
+  SELECT doc_id, doc_id FROM documents
+  UNION
+  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
+)
+SELECT node AS doc_id, min(comp) AS cluster_id
+FROM reach GROUP BY node HAVING min(comp) = node
+""".strip()
+    o["langid_confusion_documents"] = langid_confusion_sql("documents")
+    o["passage_contamination_documents"] = winnow_contamination_sql(
+        "documents", "(SELECT * FROM documents WHERE doc_id % 10 = 7)")
+
+    # Full dedup pipeline: recursive min-label closure over the exact
+    # minhash pair SQL, canonical members only.
+    o["dedup_corpus_documents"] = f"""
+WITH RECURSIVE mp AS (
+{minhash_lsh_pairs_sql("documents", num_hashes=64, bands=16,
+                       shingle_k=5, threshold=0.5)}
+),
+edges AS (
+  SELECT id_a AS u, id_b AS v FROM mp
+  UNION ALL
+  SELECT id_b AS u, id_a AS v FROM mp
+),
+reach(node, comp) AS (
+  SELECT doc_id, doc_id FROM documents
+  UNION
+  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
+)
+SELECT node AS doc_id, min(comp) AS cluster_id
+FROM reach GROUP BY node HAVING min(comp) = node
+""".strip()
+
+    o["text_stats_documents"] = text_stats_sql("documents")
+    o["repetition_stats_documents"] = repetition_stats_sql("documents")
+    o["vocab_documents"] = vocab_sql("documents", top_v=200, min_count=2)
+    o["redact_documents"] = redact_text_sql("documents")
+    o["chunk_documents"] = chunk_documents_sql(
+        "documents", size=32, stride=24)
+    o["contamination_documents"] = contamination_check_sql(
+        "SELECT * FROM documents",
+        "SELECT * FROM documents WHERE doc_id % 10 = 7", n=3)
+    o["bm25_topk_documents"] = bm25_topk_sql(
+        "documents",
+        "SELECT doc_id AS query_id, text AS query FROM documents "
+        "WHERE doc_id % 97 = 3", k=10)
+    _dense_probe_sql = _cosine_topk_oracle(
+        "vec_id % 97 = 3", 10,
+        "query_id, vec_id AS doc_id, rn::INTEGER AS rank")
+    o["hybrid_retrieval_documents"] = rrf_fuse_sql(
+        bm25_topk_sql(
+            "documents",
+            "SELECT doc_id AS query_id, text AS query FROM documents "
+            "WHERE doc_id % 97 = 3", k=10),
+        _dense_probe_sql, k0=60, k=10)
+    o["tfidf_documents"] = tfidf_top_terms_sql(
+        "documents", k=5, min_df=2)
+    o["rarity_documents"] = rarity_score_sql("documents")
+    o["lm_bigram_score_documents"] = bigram_rarity_score_sql("documents")
+    o["lm_bigram_heldout_documents"] = bigram_rarity_score_sql(
+        "documents",
+        train_table=f"({deterministic_sample_sql('documents', 0.5, ['doc_id'])})")
+    o["quality_classifier_documents"] = hashed_classifier_score_sql(
+        "documents", n_buckets=1 << 16)
+    o["corpus_profile_documents"] = f"""
+WITH t AS (
+  SELECT lang, source, {token_count_sql('text')} AS nt, n_chars
+  FROM documents
+)
+SELECT lang, source, count(*) AS n_docs,
+       round(avg(nt), 6) AS mean_tokens,
+       round(quantile_cont(nt, 0.5), 6) AS p50_tokens,
+       round(quantile_cont(nt, 0.95), 6) AS p95_tokens,
+       round(avg(n_chars), 6) AS mean_chars
+FROM t GROUP BY lang, source
+""".strip()
+    o["boilerplate_documents"] = remove_boilerplate_lines_sql(
+        "documents",
+        min_docs=("greatest(cast(floor(0.78 * "
+                  "(SELECT count(*) FROM documents)) as bigint), 2)"),
+        delimiter=" ")
+    o["paragraph_dedup_documents"] = dedup_paragraphs_sql(
+        "documents", unit_tokens=8)
+    # streamed span admission == the batch operator when batch order
+    # follows ascending doc_id (first-occurrence rule coincides)
+    o["streaming_paragraph_admission_documents"] = dedup_paragraphs_sql(
+        "documents", unit_tokens=8)
+    o["c4_filter_documents"] = c4_rules_sql("documents")
+    # stateless per-doc rules: the streamed union IS the batch operator
+    o["streaming_c4_admission_documents"] = c4_rules_sql("documents")
+    # composed ingest capstone: gate (stateless) then span dedup over
+    # the kept set — batches split by ascending doc_id make the
+    # streamed cross-batch winner rule coincide with the batch
+    # operator's global (id, pos) order, so the composition of the two
+    # batch twins is an exact oracle
+    o["streaming_ingest_pipeline_documents"] = f"""
+WITH c4 AS (
+{c4_rules_sql("documents")}
+),
+keptdocs AS (
+  SELECT d.doc_id, d.text FROM documents d
+  JOIN c4 ON c4.doc_id = d.doc_id AND c4.kept
+),
+dp AS (
+{dedup_paragraphs_sql("keptdocs")}
+)
+SELECT c4.doc_id, c4.kept, c4.failed,
+       coalesce(dp.clean_text, '') AS clean_text,
+       coalesce(dp.n_units, 0)::BIGINT AS n_units,
+       coalesce(dp.n_dupes, 0)::BIGINT AS n_dupes
+FROM c4 LEFT JOIN dp ON dp.doc_id = c4.doc_id
+""".strip()
+    o["pack_sequences_documents"] = pack_sequences_sql(
+        chunk_documents_sql("documents", size=32, stride=32), seq_len=64)
+
+    # Capstone pipeline oracle: every stage's SQL builder composed into
+    # one WITH-RECURSIVE chain (quality gate → minhash pairs → min-label
+    # closure → canonical join → redaction → hash split).
+    o["llm_corpus_documents"] = f"""
+WITH RECURSIVE qual AS (
+  SELECT * FROM documents WHERE {quality_score_sql('text')} >= 0.5
+),
+mp AS (
+{minhash_lsh_pairs_sql("qual", num_hashes=64, bands=16,
+                       shingle_k=3, shingle_unit="word", threshold=0.5)}
+),
+edges AS (
+  SELECT id_a AS u, id_b AS v FROM mp
+  UNION ALL
+  SELECT id_b AS u, id_a AS v FROM mp
+),
+reach(node, comp) AS (
+  SELECT doc_id, doc_id FROM qual
+  UNION
+  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
+),
+canon AS (
+  SELECT node AS doc_id FROM reach GROUP BY node HAVING min(comp) = node
+),
+red AS (
+  SELECT q2.doc_id, q2.lang, {redact_expr_sql('q2.text')} AS redacted
+  FROM qual q2 JOIN canon USING (doc_id)
+)
+{hash_split_sql("red", {"train": 0.9, "val": 0.05, "test": 0.05},
+                ["doc_id"])}
+""".strip()
+
+    _contam_clean = contamination_check_sql(
+        "SELECT * FROM kept",
+        "SELECT * FROM documents WHERE doc_id % 10 = 7", n=3)
+    _v3_deco = winnow_contamination_sql(
+        "paran",
+        "(SELECT doc_id, text AS clean_text FROM documents "
+        "WHERE doc_id % 10 = 7)",
+        text_col="clean_text")
+    o["llm_corpus_v3_documents"] = f"""
+WITH c4 AS (
+{c4_rules_sql("documents")}
+),
+kept AS (
+  SELECT d.* FROM documents d JOIN c4 ON c4.doc_id = d.doc_id AND c4.kept
+),
+para AS (
+{dedup_paragraphs_sql("kept")}
+),
+paran AS (SELECT * FROM para WHERE clean_text <> ''),
+deco AS (
+{_v3_deco}
+),
+clean AS (
+  SELECT p.doc_id, p.clean_text, p.n_dupes, dc.passage_overlap
+  FROM paran p JOIN deco dc ON dc.doc_id = p.doc_id
+  WHERE dc.passage_overlap <= 0.5
+)
+{hash_split_sql("clean", {"train": 0.9, "val": 0.05, "test": 0.05},
+                ["doc_id"])}
+""".strip()
+
+    # v4: v3's train split → quality floor (q=0.25 per lang) → source
+    # cap (10/source) → per-lang token budget (3000) → shard manifest
+    # (2048-token shards) — every stage the registered op's exact twin
+    o["llm_corpus_v5_documents"] = f"""
+WITH corpus AS (SELECT * FROM documents WHERE doc_id % 10 <> 7),
+bench AS (SELECT * FROM documents WHERE doc_id % 10 = 7),
+c4 AS (
+{c4_rules_sql("corpus")}
+),
+kept AS (
+  SELECT d.doc_id, d.text FROM corpus d
+  JOIN c4 ON c4.doc_id = d.doc_id WHERE c4.kept
+),
+r1 AS (
+{substring_remove_sql("kept", k=8, min_span=12, max_df=50)}
+),
+r2 AS (
+{substring_scrub_sql(
+    "(SELECT doc_id, clean_text AS text FROM r1)", "bench",
+    k=8, min_span=12, max_df=50)}
+)
+SELECT r1.doc_id, r1.n_tokens AS n_tokens_kept,
+       r1.n_removed AS n_dup_removed,
+       r2.clean_text, r2.n_removed AS n_contam_removed
+FROM r1 JOIN r2 ON r2.doc_id = r1.doc_id
+""".strip()
+
+    o["llm_corpus_v4_documents"] = f"""
+WITH v3 AS (
+{o["llm_corpus_v3_documents"]}
+),
+train AS (SELECT doc_id, clean_text FROM v3 WHERE split = 'train'),
+enr AS (
+  SELECT t.doc_id, t.clean_text, d.lang, d.source
+  FROM train t JOIN documents d USING (doc_id)
+),
+scored AS (
+  SELECT *, {quality_score_sql('clean_text')} AS score FROM enr
+),
+floored AS (
+{quality_floor_sql("SELECT * FROM scored", "score",
+                   group_col="lang", q=0.25)}
+),
+capped AS (
+{group_cap_sql("SELECT doc_id, lang, source FROM floored",
+               ["source"], 10, ["doc_id"])}
+),
+toks AS (
+  SELECT c.doc_id, c.lang,
+         {token_count_sql('t.clean_text')} AS n_tokens
+  FROM capped c JOIN train t USING (doc_id)
+),
+mixed AS (
+{budget_mix_sql("SELECT * FROM toks", ["lang"], 3000,
+                "n_tokens", ["doc_id"])}
+)
+{shard_manifest_sql("SELECT doc_id, n_tokens FROM mixed", budget=2048)}
+""".strip()
+
+    o["llm_corpus_v2_documents"] = f"""
+WITH RECURSIVE qual AS (
+  SELECT * FROM documents WHERE {quality_score_sql('text')} >= 0.5
+),
+mp AS (
+{minhash_lsh_pairs_sql("qual", num_hashes=64, bands=16,
+                       shingle_k=3, shingle_unit="word", threshold=0.5)}
+),
+edges AS (
+  SELECT id_a AS u, id_b AS v FROM mp
+  UNION ALL
+  SELECT id_b AS u, id_a AS v FROM mp
+),
+reach(node, comp) AS (
+  SELECT doc_id, doc_id FROM qual
+  UNION
+  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
+),
+canon AS (
+  SELECT node AS doc_id FROM reach GROUP BY node HAVING min(comp) = node
+),
+kept AS (
+  SELECT q2.* FROM qual q2 JOIN canon USING (doc_id)
+),
+clean AS (
+  SELECT k.* FROM kept k
+  JOIN ({_contam_clean}) c ON c.doc_id = k.doc_id
+  WHERE c.contaminated_frac < 0.8
+),
+red AS (
+  SELECT doc_id, {redact_expr_sql('text')} AS text FROM clean
+)
+{pack_sequences_sql(chunk_documents_sql("red", size=32, stride=32),
+                    seq_len=64)}
+""".strip()
+
+    o["sample_documents"] = deterministic_sample_sql(
+        "documents", 0.1, ["doc_id"])
+    o["split_documents"] = hash_split_sql(
+        "(SELECT doc_id FROM documents)",
+        {"train": 0.9, "val": 0.05, "test": 0.05}, ["doc_id"])
+    # cluster-level split: recursive min-label closure (as in
+    # dedup_clusters) + the same md5-threshold CASE over cluster_id
+    o["cluster_split_documents"] = hash_split_sql(
+        f"(SELECT doc_id, cluster_id FROM "
+        f"({o['dedup_clusters_documents']}))",
+        {"train": 0.8, "val": 0.1, "test": 0.1}, ["cluster_id"])
+    o["source_cap_documents"] = group_cap_sql(
+        "SELECT doc_id, source FROM documents", ["source"], 10,
+        ["doc_id"])
+    o["budget_mix_documents"] = budget_mix_sql(
+        f"SELECT doc_id, lang, {token_count_sql('text')} AS n_tokens "
+        f"FROM documents", ["lang"], 3000, "n_tokens", ["doc_id"])
+    o["token_shards_documents"] = shard_manifest_sql(
+        f"SELECT doc_id, {token_count_sql('text')} AS n_tokens "
+        f"FROM documents", budget=4096)
+    o["stratified_sample_documents"] = stratified_sample_sql(
+        "(SELECT doc_id, lang FROM documents)",
+        {"en": 0.1, "zh": 1.0, "de": 0.5}, "lang", ["doc_id"])
+    o["weighted_sample_documents"] = weighted_sample_sql(
+        "(SELECT doc_id, CAST(n_chars AS DOUBLE) / 4000.0 AS weight "
+        "FROM documents)",
+        1.0, "weight", ["doc_id"])
+    o["temperature_sample_documents"] = temperature_sample_sql(
+        "(SELECT doc_id, lang FROM documents)", ["lang"], ["doc_id"],
+        base_rate=0.5, temperature=2.0)
+
+    _ann_oracle = _cosine_topk_oracle(
+        "vec_id < 5", 10,
+        "query_id, vec_id, round(sim, 6) AS cos_sim, cast(rn AS int) AS rank")
+    o["ann_topk_embeddings"] = _ann_oracle
+    o["ann_topk_gemm_embeddings"] = _ann_oracle
+    o["ann_topk_ivf_embeddings"] = _ann_oracle
+    o["knn_graph_embeddings"] = knn_graph_sql("embeddings", k=5)
+
     o["streaming_pipeline_skyline"] = skyline_not_exists_sql(
         f"({generate_points_sql(4000, 2, dist='anti_correlated')})",
         ["d0", "d1"], select="'q1' AS query_id, t.id, t.d0, t.d1",
@@ -671,6 +2707,48 @@ def oracle_sql() -> dict[str, str]:
         ["d0", "d1"], select="t.id, t.d0, t.d1",
     )
 
+    from flink_skyline_qos_spark.streaming.continuous import (
+        streaming_windowed_count_min_sql,
+        streaming_windowed_hll_sql,
+        streaming_windowed_quantiles_sql,
+    )
+
+    o["streaming_hll_windows_events"] = streaming_windowed_hll_sql(
+        "events", "user_id", window_seconds=86400, delay_seconds=3600,
+        bucket_bits=6)
+    o["streaming_count_min_windows_events"] = \
+        streaming_windowed_count_min_sql(
+            "events", "event_type", EVENT_TYPES, window_seconds=86400,
+            delay_seconds=3600, depth=4, width=64)
+    o["streaming_quantiles_windows_events"] = \
+        streaming_windowed_quantiles_sql(
+            "events", "value", lo=0.0, hi=600.0, nbins=32,
+            quantiles=(0.5, 0.95), window_seconds=86400,
+            delay_seconds=3600)
+
+    o["streaming_late_data_events"] = """
+SELECT CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS win_start,
+       CAST(floor(epoch(ts) / 86400) * 86400 + 86400 AS BIGINT)
+         AS win_end,
+       count(*)::BIGINT AS n_events
+FROM events
+WHERE NOT (ts < TIMESTAMP '2024-01-06' AND user_id % 3 = 0)
+  AND floor(epoch(ts) / 86400) * 86400 + 86400 <=
+      (SELECT epoch(max(ts)) FROM events) - 3600
+GROUP BY 1, 2
+""".strip()
+
+    o["streaming_interval_join_events"] = """
+SELECT l.user_id, l.value AS purchase_value,
+       CAST(floor(epoch(l.ts)) AS BIGINT) AS purchase_ts,
+       CAST(floor(epoch(r.ts)) AS BIGINT) AS view_ts
+FROM events l JOIN events r
+  ON l.user_id = r.user_id
+ AND r.ts >= l.ts - INTERVAL 86400 SECOND
+ AND r.ts <= l.ts
+WHERE l.event_type = 'purchase' AND r.event_type = 'view'
+""".strip()
+
     for dist in ("uniform", "correlated", "anti_correlated"):
         o[f"gen_{dist}_2d"] = generate_points_sql(GEN_N, 2, dist=dist)
     o["gen_anticorr_skyline_2d"] = skyline_not_exists_sql(
@@ -682,5 +2760,223 @@ def oracle_sql() -> dict[str, str]:
         ["d0", "d1", "d2", "d3"],
     )
     o["gen_anticorr_skyline_auto_4d"] = o["gen_anticorr_skyline_4d"]
+
+    o["embedding_near_dup_lsh"] = embedding_near_dup_lsh_sql(
+        "embeddings", 64, threshold=0.35, n_planes=32, bands=8)
+
+    # streamed embedding admission: composition of the two batch twins
+    # per side — batch-1 self-dedup, batch-2 self-dedup, then batch-2
+    # survivors cross-checked against batch-1 admits (exactly the
+    # loop's order: self first, store second).  The cut is the same
+    # floor-half-of-max scalar both engines compute.
+    _doc_cut = "(SELECT max(doc_id) // 2 FROM documents)"
+    o["streaming_substring_admission_documents"] = f"""
+WITH b1 AS (
+  SELECT doc_id, text FROM documents
+  WHERE doc_id IS NOT NULL AND doc_id <= {_doc_cut}
+),
+b2 AS (
+  SELECT doc_id, text FROM documents
+  WHERE doc_id IS NOT NULL AND doc_id > {_doc_cut}
+),
+p1 AS (
+{substring_dedup_pairs_sql("b1", k=8, min_span=12, max_df=50)}
+),
+adm1 AS (
+  SELECT doc_id FROM b1 WHERE doc_id NOT IN (SELECT id_b FROM p1)
+),
+p2 AS (
+{substring_dedup_pairs_sql("b2", k=8, min_span=12, max_df=50)}
+),
+surv2 AS (
+  SELECT doc_id FROM b2 WHERE doc_id NOT IN (SELECT id_b FROM p2)
+),
+px AS (
+{substring_dedup_pairs_cross_sql(
+    "(SELECT d.* FROM b2 d JOIN surv2 USING (doc_id))",
+    "(SELECT d.* FROM b1 d JOIN adm1 USING (doc_id))",
+    k=8, min_span=12, max_df=50)}
+)
+SELECT doc_id FROM adm1
+UNION ALL
+SELECT doc_id FROM surv2
+WHERE doc_id NOT IN (SELECT new_id FROM px)
+""".strip()
+
+    _emb_cut = "(SELECT max(vec_id) // 2 FROM embeddings)"
+    o["streaming_embedding_admission_embeddings"] = f"""
+WITH b1 AS (
+  SELECT vec_id, embedding FROM embeddings
+  WHERE vec_id IS NOT NULL AND vec_id <= {_emb_cut}
+),
+b2 AS (
+  SELECT vec_id, embedding FROM embeddings
+  WHERE vec_id IS NOT NULL AND vec_id > {_emb_cut}
+),
+p1 AS (
+{embedding_near_dup_lsh_sql("b1", 64, threshold=0.35,
+                            n_planes=32, bands=8)}
+),
+adm1 AS (
+  SELECT vec_id FROM b1 WHERE vec_id NOT IN (SELECT id_b FROM p1)
+),
+p2 AS (
+{embedding_near_dup_lsh_sql("b2", 64, threshold=0.35,
+                            n_planes=32, bands=8)}
+),
+surv2 AS (
+  SELECT vec_id FROM b2 WHERE vec_id NOT IN (SELECT id_b FROM p2)
+),
+px AS (
+{embedding_near_dup_lsh_cross_sql(
+    "(SELECT e.* FROM b2 e JOIN surv2 USING (vec_id))",
+    "(SELECT e.* FROM b1 e JOIN adm1 USING (vec_id))",
+    64, threshold=0.35, n_planes=32, bands=8)}
+)
+SELECT vec_id FROM adm1
+UNION ALL
+SELECT vec_id FROM surv2
+WHERE vec_id NOT IN (SELECT new_id FROM px)
+""".strip()
+
+    # min-label reachability over the exact LSH pair SQL — full value
+    # check of the embedding dedup pipeline (cf. dedup_corpus_documents)
+    o["embedding_dedup_corpus"] = f"""
+WITH RECURSIVE ep AS (
+{embedding_near_dup_lsh_sql("embeddings", 64, threshold=0.35,
+                            n_planes=32, bands=8)}
+),
+edges AS (
+  SELECT id_a AS u, id_b AS v FROM ep
+  UNION ALL
+  SELECT id_b AS u, id_a AS v FROM ep
+),
+reach(node, comp) AS (
+  SELECT vec_id, vec_id FROM embeddings
+  UNION
+  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
+)
+SELECT node AS vec_id, min(comp) AS cluster_id
+FROM reach GROUP BY node HAVING min(comp) = node
+""".strip()
+
+    # capstone: canonical set (the recursive dedup oracle) joined back
+    # to the vectors, then the composed kmeans + balanced-sample twin
+    o["curation_capstone_embeddings"] = kmeans_balanced_sample_sql(
+        "SELECT e.* FROM embeddings e JOIN ("
+        + o["embedding_dedup_corpus"]
+        + ") c ON c.vec_id = e.vec_id",
+        dim=64, k=8, iterations=2, dp=4, target=20)
+
+    o["embedding_near_dup"] = """
+WITH d AS (SELECT vec_id, label, cast(embedding AS DOUBLE[]) AS v FROM embeddings)
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       round(list_dot_product(a.v, b.v)
+             / (sqrt(list_dot_product(a.v, a.v))
+                * sqrt(list_dot_product(b.v, b.v))), 6) AS cos_sim
+FROM d a JOIN d b ON a.label = b.label AND a.vec_id < b.vec_id
+WHERE list_dot_product(a.v, b.v)
+      / (sqrt(list_dot_product(a.v, a.v))
+         * sqrt(list_dot_product(b.v, b.v))) >= 0.35
+""".strip()
+
+    o["kmeans_clusters_embeddings"] = kmeans_assign_sql(
+        "SELECT * FROM embeddings", dim=64, k=8, iterations=3, dp=4)
+
+    o["kmeans_balanced_sample_embeddings"] = kmeans_balanced_sample_sql(
+        "SELECT * FROM embeddings", dim=64, k=8, iterations=2,
+        dp=4, target=20)
+
+    o["pq_codes_embeddings"] = pq_encode_sql(
+        "SELECT * FROM embeddings", dim=64, m=4, k=16,
+        iterations=2, dp=4)
+
+    o["pq_adc_topk_embeddings"] = pq_adc_topk_sql(
+        "SELECT * FROM embeddings",
+        "SELECT vec_id AS query_id, embedding FROM embeddings "
+        "WHERE vec_id < 5",
+        dim=64, m=4, k=16, iterations=2, dp=4, topk=10)
+
+    o["pq_adc_rerank_embeddings"] = pq_adc_rerank_sql(
+        "SELECT * FROM embeddings",
+        "SELECT vec_id AS query_id, embedding FROM embeddings "
+        "WHERE vec_id < 5",
+        dim=64, m=4, k=16, iterations=2, dp=4, shortlist=50, topk=10)
+
+    # clustered recall (VERDICT r9 #5): same composition, but over the
+    # planted-cluster generated corpus — both legs rebuilt on the
+    # generator twin so the whole chain stays value-exact.  The corpus
+    # CTE is MATERIALIZED: the k-means CTE chain references it dozens
+    # of times and DuckDB would otherwise re-inline (re-generate) the
+    # md5 corpus at every reference — measured 50 s vs 3.7 s.
+    _ex_clustered = _cosine_topk_oracle(
+        "vec_id < 5", 10, "query_id, vec_id", corpus="__corpus")
+    _adc_clustered = pq_adc_topk_sql(
+        "SELECT vec_id, embedding FROM __corpus",
+        "SELECT vec_id AS query_id, embedding FROM __corpus "
+        "WHERE vec_id < 5",
+        dim=64, m=4, k=16, iterations=2, dp=4, topk=10)
+    o["ann_recall_adc_clustered"] = f"""
+WITH __corpus AS MATERIALIZED (
+  {generate_embeddings_sql(2000, dim=64, k_centers=200, jitter=0.5)}
+),
+__ex AS ({_ex_clustered}),
+__adc AS ({_adc_clustered}),
+__q AS (SELECT DISTINCT query_id FROM __ex),
+__hit AS (
+  SELECT e.query_id, count(*)::BIGINT AS n_hits
+  FROM __ex e JOIN __adc a
+    ON a.query_id = e.query_id AND a.vec_id = e.vec_id
+  GROUP BY e.query_id
+)
+SELECT q.query_id,
+       COALESCE(h.n_hits, 0)::BIGINT AS n_hits,
+       COALESCE(h.n_hits, 0) / 10.0 AS recall
+FROM __q q LEFT JOIN __hit h USING (query_id)
+""".strip()
+
+    o["funnel_events"] = funnel_sql(
+        "SELECT user_id, ts, event_type FROM events",
+        ["view", "click", "purchase"])
+
+    o["json_props_events"] = (
+        "SELECT event_type, count(*)::BIGINT AS n, "
+        "sum(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT "
+        "AS sum_k, "
+        "round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) "
+        "AS mean_k FROM events "
+        "WHERE json_extract_string(props, '$.k') IS NOT NULL "
+        "GROUP BY event_type")
+
+    o["retention_events"] = retention_sql(
+        "SELECT user_id, ts FROM events", granularity="day")
+
+    o["user_growth_events"] = user_growth_sql(
+        "SELECT user_id, ts FROM events")
+
+    o["mad_outliers_events"] = mad_outliers_sql(
+        "SELECT event_id, event_type, value FROM events",
+        "value", group_cols=["event_type"])
+
+    o["quantile_bins_events"] = quantile_bins_sql(
+        "SELECT value FROM events", "value", nbins=10)
+
+    o["quality_floor_documents"] = quality_floor_sql(
+        f"SELECT doc_id, lang, {quality_score_sql('text')} AS score "
+        f"FROM documents",
+        "score", group_col="lang", q=0.25)
+
+    o["count_min_tokens_documents"] = count_min_sql(
+        "SELECT unnest(list_filter(string_split_regex(trim(text), "
+        "'\\s+'), x -> x <> '')) AS token FROM documents",
+        f"SELECT token, term_freq, rank FROM ({vocab_sql('documents', top_v=20)})",
+        item_col="token", depth=4, width=512)
+
+    o["triangles_suppliers"] = triangle_count_sql(
+        "SELECT a.l_suppkey AS src, b.l_suppkey AS dst "
+        "FROM lineitem a JOIN lineitem b "
+        "ON a.l_orderkey = b.l_orderkey "
+        "AND a.l_linenumber < b.l_linenumber "
+        "WHERE a.l_orderkey % 50 = 0")
 
     return o

@@ -1,7 +1,8 @@
 """flink_skyline_qos_spark — a PySpark-native streaming/batch skyline
 (Pareto-frontier) analytics engine with the query capabilities of the
 reference Flink engine (Asterinos1/Flink-Skyline-QoS), re-expressed
-Spark-first.
+Spark-first, plus the large-scale data-pipeline operators (dedup,
+similarity search, text analysis) such an engine needs at 100 TB.
 """
 
 from .functions.dominance import (
@@ -37,6 +38,18 @@ from .operators.variants import (
     thick_skyline,
     top_k_dominating,
 )
+from .operators.sketches import (
+    histogram_quantiles,
+    hll_distinct,
+)
+from .functions.corpus import (
+    chunk_documents,
+    contamination_check,
+    pack_sequences,
+    rarity_score,
+    remove_boilerplate_lines,
+    tfidf_top_terms,
+)
 from .session import get_spark
 
 __all__ = [
@@ -49,5 +62,8 @@ __all__ = [
     "k_skyband", "skycube", "dynamic_skyline", "reverse_skyline",
     "epsilon_skyline",
     "thick_skyline",
+    "hll_distinct", "histogram_quantiles",
+    "chunk_documents", "pack_sequences", "contamination_check",
+    "tfidf_top_terms", "remove_boilerplate_lines", "rarity_score",
     "get_spark",
 ]

@@ -4,7 +4,7 @@ Spark's CacheManager keys persisted data by logical plan, not by object
 reference, so an operator-internal ``persist()`` outlives the query: the
 pinned blocks stay resident until an explicit ``unpersist()`` or
 executor memory pressure evicts them (VERDICT r3 "What's wrong" #1 —
-composed pipelines accumulate pinned survivor caches).
+composed pipelines accumulate pinned candidate/signature caches).
 
 The consuming action happens OUTSIDE the operator — the operator
 returns a lazy DataFrame whose plan reads the pinned frame — so the
@@ -22,7 +22,8 @@ import weakref
 
 from pyspark.sql import DataFrame
 
-__all__ = ["release_on_gc"]
+__all__ = ["pinned_local_checkpoint", "release_checkpoints_on_gc",
+           "release_on_gc"]
 
 
 def release_on_gc(result: DataFrame, *pinned: DataFrame) -> DataFrame:
@@ -46,3 +47,75 @@ def release_on_gc(result: DataFrame, *pinned: DataFrame) -> DataFrame:
 
     weakref.finalize(result, _cleanup)
     return result
+
+
+def release_checkpoints_on_gc(result: DataFrame,
+                              *sources: DataFrame) -> DataFrame:
+    """Release localCheckpoint RDD blocks when `result` is collected.
+
+    :func:`~.clustering.connected_components` pins its final round's
+    localCheckpoint at the RDD level (``DataFrame.unpersist`` cannot
+    touch it) and exposes the ids as ``_checkpoint_rdd_ids`` on its
+    output — a pin that must outlive every derived plan.  Composed
+    queries (dedup corpus, capstone) know their OWN result is the last
+    derived plan, so they tie the RDD-id release to its lifetime here,
+    the checkpoint analogue of :func:`release_on_gc`.
+    """
+    # Keep the source frames (and anything THEY pin via _pin_parent —
+    # e.g. dedup_clusters' cc, whose own finalizer unpersists the
+    # canonical edge cache) alive for as long as this result is: the
+    # corpus builders return a frame DERIVED from `sources` and drop
+    # every other reference, so without this pin the next driver GC
+    # fires the upstream release_on_gc finalizers and every later
+    # action silently re-derives the full pair DAG (ADVICE r11
+    # clustering.py:368 — the r11 _pin_parent fix, propagated to
+    # derived results).  Accumulate rather than overwrite: composed
+    # helpers may each pin sources on the same frame (ADVICE r12).
+    # A pre-existing pin may be a bare frame (connected_components
+    # pins its cc slice that way) — normalize to a tuple first.
+    prev = getattr(result, "_pin_parent", ())
+    if isinstance(prev, DataFrame):
+        prev = (prev,)
+    result._pin_parent = tuple(prev) + tuple(sources)
+    ids = tuple(i for s in sources
+                for i in getattr(s, "_checkpoint_rdd_ids", ()))
+    if not ids:
+        return result
+    sc = result.sparkSession.sparkContext
+
+    def _cleanup(jsc=sc._jsc, rdd_ids=ids):
+        for rid in rdd_ids:
+            try:
+                jsc.sc().unpersistRDD(rid, True)  # blocking, as above
+            except Exception:
+                pass
+
+    weakref.finalize(result, _cleanup)
+    return result
+
+
+def pinned_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` that records the RDD blocks it pins.
+
+    Materializes `df` and truncates its lineage — the lever for long
+    composed pipelines whose tail operators scan their input several
+    times (each scan otherwise re-plans/re-derives the whole upstream
+    DAG).  localCheckpoint pins blocks at the RDD level, which
+    ``DataFrame.unpersist`` cannot release; the ids pinned here are
+    snapshot-diffed (assumes no concurrent persist on the same context,
+    as in :mod:`.clustering`) and exposed as ``_checkpoint_rdd_ids`` so
+    callers can tie the release to their result's lifetime via
+    :func:`release_checkpoints_on_gc`.
+    """
+    sc = df.sparkSession.sparkContext
+
+    def _pinned() -> "set[int]":
+        ids, it = set(), sc._jsc.getPersistentRDDs().keySet().iterator()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
+
+    before = _pinned()
+    out = df.localCheckpoint(eager=True)
+    out._checkpoint_rdd_ids = tuple(_pinned() - before)
+    return out

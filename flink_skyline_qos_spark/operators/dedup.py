@@ -85,8 +85,8 @@ def _md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-# the scale-out helper grew cross-module consumers (similarity,
-# multimodal) and moved to a public home; alias kept for the many
+# the scale-out helper grew a cross-module consumer (similarity)
+# and moved to a public home; alias kept for the many
 # internal call sites
 from .partitioners import scale_out as _scale_out  # noqa: E402
 

@@ -283,3 +283,22 @@ def grid_dominance_prefilter(dims: Sequence[Column], domain_max: float) -> Colum
     mid = domain_max / 2.0
     all_worse = reduce(and_, [c >= F.lit(mid) for c in dims])
     return ~all_worse
+
+
+def scale_out(df, probe=None):
+    """Ensure at least default-parallelism partitions before heavy
+    per-row compute (Arrow kernels, md5-per-shingle projections, GEMM
+    passes).  A small parquet table arrives as one split and would
+    serialize the whole stage on a single core; at 100 TB inputs
+    already carry thousands of splits and this is a no-op.  Repartition
+    the RAW input and project AFTER — a repartition exchange's child
+    computes pre-shuffle, so scaling out above the projection leaves
+    the heavy work single-task (round-8 finding, BENCHMARKS.md).
+
+    `probe` lets the partition count be read off a simpler upstream
+    plan (``.rdd`` plan conversion on a heavy projection is not free).
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if (probe if probe is not None else df).rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df

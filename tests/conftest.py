@@ -34,6 +34,20 @@ def events(spark, sf_dir):
     return load_table(spark, sf_dir, "events")
 
 
+@pytest.fixture(scope="session")
+def documents(spark, sf_dir):
+    from flink_skyline_qos_spark.sources.tables import load_table
+
+    return load_table(spark, sf_dir, "documents")
+
+
+@pytest.fixture(scope="session")
+def embeddings(spark, sf_dir):
+    from flink_skyline_qos_spark.sources.tables import load_table
+
+    return load_table(spark, sf_dir, "embeddings")
+
+
 @pytest.fixture()
 def points_2d(spark, lineitem):
     from pyspark.sql import functions as F

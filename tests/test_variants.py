@@ -1,15 +1,13 @@
 """Variant suite: guarded P4 prefilter, top-k dominating, k-dominant
-skyline, k-skyband."""
+skyline, BPE-ish token counting."""
 
-import duckdb
 from pyspark.sql import functions as F
 
+from flink_skyline_qos_spark.functions.text import bpe_token_count
 from flink_skyline_qos_spark.operators.skyline import skyline
 from flink_skyline_qos_spark.operators.variants import (
     grid_prefilter,
     k_dominant_skyline,
-    k_skyband,
-    k_skyband_sql,
     top_k_dominating,
 )
 
@@ -192,6 +190,17 @@ def test_k_dominant_is_subset_and_smaller(spark, lineitem):
     relaxed = {tuple(r) for r in k_dominant_skyline(df, cols, k=2).collect()}
     assert relaxed <= full
     assert len(relaxed) < len(full)
+
+
+def test_bpe_token_count(spark):
+    df = spark.createDataFrame(
+        [("Hello, world! abc123 €",), ("",), ("   ",), ("a-b",)],
+        "text string")
+    got = [r[0] for r in
+           df.select(bpe_token_count(F.col("text"))).collect()]
+    # "Hello" "," "world" "!" "abc" "123" "€" = 7 ; "" = 0 ; blanks = 0 ;
+    # "a" "-" "b" = 3
+    assert got == [7, 0, 0, 3]
 
 
 def test_top_k_dominating_prefilter_exact(spark):
@@ -597,55 +606,3 @@ def test_representative_skyline_matches_bruteforce_greedy(spark):
         got = sorted(tuple(r) for r in representative_skyline(
             df, ["x", "y"], k, id_col="id").collect())
         assert got == want, f"seed={seed}: {got} != {want}"
-
-
-def test_k_skyband_crafted(spark):
-    # minimization on (x, y); id for uniqueness
-    pts = spark.createDataFrame(
-        [
-            (1, 0.0, 0.0),   # dominates everything: 0 dominators
-            (2, 1.0, 1.0),   # dominated by 1
-            (3, 2.0, 0.5),   # dominated by 1
-            (4, 2.0, 2.0),   # dominated by 1, 2, 3
-            (5, 3.0, 3.0),   # dominated by 1, 2, 3, 4
-        ],
-        "id long, x double, y double",
-    )
-    out = {r.id: r.dominator_count
-           for r in k_skyband(pts, ["x", "y"], k=4).collect()}
-    assert out == {1: 0, 2: 1, 3: 1, 4: 3}
-    sky = {r.id for r in k_skyband(pts, ["x", "y"], k=1).collect()}
-    assert sky == {1}
-
-
-def test_k_skyband_matches_skyline_at_k1(spark, points_2d):
-    band = {r.id for r in k_skyband(points_2d, ["d0", "d1"], k=1).collect()}
-    sky = {r.id for r in skyline(points_2d, ["d0", "d1"]).collect()}
-    assert band == sky
-
-
-def test_k_skyband_prefilter_invariance(spark, sf_dir):
-    from flink_skyline_qos_spark.sources.tables import load_table
-
-    part = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_size", "p_retailprice")
-    cols = ["p_retailprice", "p_size"]
-    with_pf = sorted(map(tuple, k_skyband(part, cols, k=3).collect()))
-    without = sorted(map(tuple, k_skyband(
-        part, cols, k=3, prefilter_sample=None).collect()))
-    assert with_pf == without
-
-
-def test_k_skyband_duckdb_parity(spark, sf_dir):
-    from flink_skyline_qos_spark.sources.tables import load_table
-
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW part AS SELECT * FROM '{sf_dir}/part.parquet'")
-    part = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_size", "p_retailprice")
-    sp = sorted(map(tuple, k_skyband(
-        part, ["p_retailprice", "p_size"], k=3).collect()))
-    dk = sorted(map(tuple, con.sql(k_skyband_sql(
-        "(SELECT p_partkey, p_size, p_retailprice FROM part)",
-        ["p_retailprice", "p_size"], k=3)).fetchall()))
-    assert sp == dk

@@ -6,10 +6,10 @@ Usage:
 Writes one <name>.txt per query so before/after plan shapes are
 judge-checkable without running Spark.  Capture itself is *mostly*
 plan-only, but operators with eager persist pins DO execute real jobs
-at construction time (ADVICE r13): the broadcast/scatter verify
-strategies persist and count their local-prune survivors — and those
-caches stay pinned until the captured frame is garbage-collected
-(release_on_gc).  Frames are
+at construction time (ADVICE r13): the minhash family runs sig.count()
+and substring_remove/scrub materialize their islands frame
+(iv.persist(); iv.count()) — and those caches stay pinned until the
+captured frame is garbage-collected (release_on_gc).  Frames are
 dropped after each capture so the pins release between queries.
 Streaming-fixture queries build their replay fixtures lazily inside the
 query callable, which is plan-safe; queries whose callable *executes*
