@@ -120,14 +120,6 @@ from flink_skyline_qos_spark.operators.dedup import (  # noqa: E402
     winnow_pairs,
     winnow_pairs_sql,
 )
-from flink_skyline_qos_spark.operators.joins import (  # noqa: E402
-    as_of_join,
-    as_of_join_sql,
-    bloom_semi_join,
-    bloom_semi_join_sql,
-    range_join,
-    range_join_sql,
-)
 from flink_skyline_qos_spark.operators.partitioners import (  # noqa: E402
     mr_dim_sql,
 )
@@ -158,14 +150,6 @@ from flink_skyline_qos_spark.operators.variants import (  # noqa: E402
 from flink_skyline_qos_spark.operators.compaction import (  # noqa: E402
     latest_by_key,
     latest_by_key_sql,
-)
-from flink_skyline_qos_spark.operators.funnel import (  # noqa: E402
-    funnel,
-    funnel_sql,
-    retention,
-    retention_sql,
-    user_growth,
-    user_growth_sql,
 )
 from flink_skyline_qos_spark.operators.stats import (  # noqa: E402
     corr_matrix,
@@ -200,18 +184,6 @@ from flink_skyline_qos_spark.operators.sampling import (  # noqa: E402
     weighted_sample,
     weighted_sample_sql,
 )
-from flink_skyline_qos_spark.operators.kmeans import (  # noqa: E402
-    kmeans_assign,
-    kmeans_assign_sql,
-    kmeans_balanced_sample,
-    kmeans_balanced_sample_sql,
-    pq_adc_rerank,
-    pq_adc_rerank_sql,
-    pq_adc_topk,
-    pq_adc_topk_sql,
-    pq_encode,
-    pq_encode_sql,
-)
 from flink_skyline_qos_spark.operators.similarity import (  # noqa: E402
     cosine_topk,
     rrf_fuse,
@@ -236,8 +208,6 @@ from flink_skyline_qos_spark.plans.queries import (  # noqa: E402
 from flink_skyline_qos_spark.sources.generators import (  # noqa: E402
     generate_docs_hash,
     generate_docs_sql,
-    generate_embeddings_hash,
-    generate_embeddings_sql,
     generate_points_hash,
     generate_points_sql,
 )
@@ -618,43 +588,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                by=["user_id", "__sess"])
     q["session_skyline_events"] = _session
 
-    # --- temporal joins (enrichment primitives Spark lacks natively):
-    # as-of = union + running-last window, ONE hash exchange per side,
-    # no join node; range = bucket-grid equi join, no nested loop.
-    def _asof(s: SparkSession, d: str) -> DataFrame:
-        ev = load_table(s, d, "events")
-        clicks = ev.filter(F.col("event_type") == "click") \
-            .select("event_id", "user_id", "ts", "value")
-        purch = ev.filter(F.col("event_type") == "purchase") \
-            .select("event_id", "user_id", "ts", "value")
-        out = as_of_join(clicks, purch, on="ts", by="user_id",
-                         right_cols=["value", "event_id"],
-                         tiebreak="event_id")
-        # left rows with no admissible right row carry NULL payload;
-        # sentinel-coalesced so the value-hash compare never sorts
-        # mixed NULL/non-NULL tuples
-        return out.select(
-            "event_id", "user_id", "value",
-            F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-            F.coalesce(
-                F.unix_millis(F.col("ts_asof").cast("timestamp")),
-                F.lit(-1)).alias("asof_ms"),
-            F.coalesce("value_asof", F.lit(-1.0)).alias("value_asof"),
-            F.coalesce("event_id_asof", F.lit(-1)).alias("event_id_asof"))
-    q["asof_join_events"] = _asof
-
-    def _range_join(s: SparkSession, d: str) -> DataFrame:
-        ev = load_table(s, d, "events")
-        iv = s.range(30).select(
-            F.col("id").alias("iv_id"),
-            (F.col("id") * 7.0).alias("lo"),
-            (F.col("id") * 7.0 + 10.0).alias("hi"))
-        return range_join(
-            ev.select("event_id", F.col("value").alias("v")), iv,
-            point_col="v", start_col="lo", end_col="hi",
-            bucket_width=8.0)
-    q["range_join_events"] = _range_join
-
     # --- data profiling: per-type distribution summary (count/min/max/
     # mean/p50/p95) — the pipeline-health check run before any training
     # job; one map-side-combined aggregate, percentile exact (matches
@@ -725,12 +658,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         load_table(s, d, "lineitem"),
         ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
 
-    # greedy funnel over the event stream: first-match step times per
-    # user (view -> click -> purchase), one map-side-combined min-agg
-    # per step, shuffles carry one row per user
-    q["funnel_events"] = lambda s, d: funnel(
-        load_table(s, d, "events"), ["view", "click", "purchase"])
-
     # JSON schema-on-read (P1's companion wire format): extract the
     # typed payload field from the props JSON column scan-side and
     # aggregate -- get_json_object stays inside codegen, no Python
@@ -744,16 +671,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      F.sum("__k").alias("sum_k"),
                      F.round(F.avg("__k"), 6).alias("mean_k")))
     q["json_props_events"] = _json_props
-
-    # cohort retention: first-active-day cohorts x day offsets —
-    # shuffles bounded by user x period cardinality, never event volume
-    q["retention_events"] = lambda s, d: retention(
-        load_table(s, d, "events"), granularity="day")
-
-    # daily growth report: dau / first-seen / cumulative distinct
-    # users; the running sum's window is over O(days) rows, not events
-    q["user_growth_events"] = lambda s, d: user_growth(
-        load_table(s, d, "events"))
 
     # robust anomaly flagging: |x - median| > 3.5 MAD per event type
     # (heavy-tail-safe, unlike mean/stddev z-scores); two broadcast
@@ -770,21 +687,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # threshold pass; cutpoints broadcast, corpus never sorted
     q["quantile_bins_events"] = lambda s, d: quantile_bins(
         load_table(s, d, "events"), "value", nbins=10)
-
-    # --- explicit runtime filter: Bloom-pruned semi join.  The fact
-    # side (orders) is filtered by a 16 KiB bitmap of the selected
-    # customer keys BEFORE any exchange — the star-schema scan shape at
-    # 100 TB when the dim side is too big to broadcast as rows; the
-    # final equi semi join removes false positives, so the result is
-    # exactly the plain semi join the oracle states.
-    def _bloom(s: SparkSession, d: str) -> DataFrame:
-        orders = load_table(s, d, "orders")
-        cust = load_table(s, d, "customer").where(
-            F.col("c_custkey") % 16 == 1)
-        return bloom_semi_join(
-            orders, cust, "o_custkey", dim_key="c_custkey"
-        ).select("o_orderkey", "o_custkey", "o_totalprice")
-    q["bloom_semi_join_orders"] = _bloom
 
     # --- mergeable sketches: the 100 TB replacements for exact
     # COUNT(DISTINCT) and exact percentiles.  Both deterministic
@@ -1975,118 +1877,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("vec_id", "cluster_id"), labeled)
     q["embedding_dedup_corpus"] = _embedding_dedup
 
-    # --- distributed k-means over embeddings (cluster-based curation:
-    # SemDeDup prune-within-cluster, cluster-balanced sampling, data-mix
-    # audits).  Exact integer arithmetic end-to-end (quantized vectors,
-    # BIGINT distances, floor-mean centroids, md5-content seeds), so the
-    # final assignment is value-oracle-able — MLlib's KMeans is not.
-    q["kmeans_clusters_embeddings"] = lambda s, d: kmeans_assign(
-        load_table(s, d, "embeddings"), dim=64, k=8, iterations=3, dp=4)
-
-    # cluster-balanced curation sample: ~target expected rows per
-    # kmeans cluster (big boilerplate clusters downweighted, small
-    # topical ones kept) — thresholds from a broadcast k-row aggregate,
-    # keep decisions the content-stable md5 bucket
-    q["kmeans_balanced_sample_embeddings"] = \
-        lambda s, d: kmeans_balanced_sample(
-            load_table(s, d, "embeddings"), dim=64, k=8, iterations=2,
-            dp=4, target=20)
-
-    # --- embedding-curation capstone: the full vector-side pipeline in
-    # ONE query — SemDeDup-style dedup (LSH pairs → components →
-    # canonical) → exact-integer k-means over the survivors →
-    # cluster-balanced sample: the diversity-preserving curated subset
-    # a training mix starts from.  Every stage is a registered op.
-    def _curation_capstone(s: SparkSession, d: str) -> DataFrame:
-        emb = load_table(s, d, "embeddings")
-        pairs = embedding_near_dup_lsh(
-            emb, threshold=0.35, n_planes=32, bands=8)
-        labeled = dedup_clusters(
-            emb, pairs.select("id_a", "id_b"), id_col="vec_id")
-        canon = labeled.filter(F.col("is_canonical")).select("vec_id")
-        kept = emb.join(canon, on="vec_id")
-        return release_checkpoints_on_gc(
-            kmeans_balanced_sample(
-                kept, dim=64, k=8, iterations=2, dp=4, target=20),
-            labeled)
-    q["curation_capstone_embeddings"] = _curation_capstone
-
-    # --- product quantization: per-subspace exact-integer codebooks,
-    # one packed BIGINT code per vector (m·log2(k) bits) — the ANN
-    # compression step that fits a billion-vector index in memory.
-    # Encode is one narrow literal-codebook pass: no joins, no shuffle.
-    q["pq_codes_embeddings"] = lambda s, d: pq_encode(
-        load_table(s, d, "embeddings"), dim=64, m=4, k=16,
-        iterations=2, dp=4)
-
-    # --- ADC search over the PQ codes: corpus scanned as integer
-    # codes (never the floats), per-query distances via k-entry
-    # literal lookup tables — the search half of PQ, one narrow pass +
-    # per-query top-k window.  Same query set as ann_topk.
-    def _pq_adc(s: SparkSession, d: str) -> DataFrame:
-        emb = load_table(s, d, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        return pq_adc_topk(emb, qs, dim=64, m=4, k=16,
-                           iterations=2, dp=4, topk=10)
-    q["pq_adc_topk_embeddings"] = _pq_adc
-
-    # two-stage search (the production PQ pattern): ADC shortlist over
-    # codes, exact cosine re-rank over shortlist x queries only
-    def _pq_rerank(s: SparkSession, d: str) -> DataFrame:
-        emb = load_table(s, d, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        return pq_adc_rerank(emb, qs, dim=64, m=4, k=16, iterations=2,
-                             dp=4, shortlist=50, topk=10)
-    q["pq_adc_rerank_embeddings"] = _pq_rerank
-
-    # --- ANN quality evaluation: recall@10 of the compressed ADC
-    # search against the exact cosine top-k — the metric that decides
-    # whether a PQ configuration is shippable.  Pure composition of
-    # the two registered operators; per-query exact fractions.  Runs
-    # on the PLANTED-CLUSTER generated corpus (VERDICT r9 #5): on the
-    # shipped i.i.d. embeddings — PQ's worst case — recall floored at
-    # the 0.1 self-hit and gave a user tuning a PQ config no signal;
-    # with 200 planted centers (10 members each, jitter 0.5) the
-    # measured recall@10 is 0.88 at 16 bits (m=4·k=16) vs 0.30 at
-    # 8 bits (m=2) — an actual quality dial (BENCHMARKS.md round 10).
-    def _ann_recall(s: SparkSession, d: str) -> DataFrame:
-        emb = generate_embeddings_hash(s, 2000, dim=64, k_centers=200,
-                                       jitter=0.5)
-        qs = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        exact = cosine_topk(emb, qs, k=10).select("query_id", "vec_id")
-        adc = pq_adc_topk(emb, qs, dim=64, m=4, k=16, iterations=2,
-                          dp=4, topk=10).select("query_id", "vec_id")
-        hits = exact.join(adc, on=["query_id", "vec_id"]) \
-            .groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-        base = exact.select("query_id").distinct()
-        return (base.join(hits, on="query_id", how="left")
-                .select("query_id",
-                        F.coalesce(F.col("n_hits"),
-                                   F.lit(0).cast("long")).alias("n_hits"),
-                        (F.coalesce(F.col("n_hits"),
-                                    F.lit(0).cast("long"))
-                         / F.lit(10.0)).alias("recall")))
-    q["ann_recall_adc_clustered"] = _ann_recall
-
     return q
 
 
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
 
-    def _cosine_topk_oracle(probe_pred: str, k: int, select: str,
-                            corpus: str = "embeddings") -> str:
-        """Exact-cosine top-k oracle over `corpus` (a table name or a
-        parenthesized subquery), shared by the ann_topk_* oracles, the
-        hybrid-retrieval dense leg (review r9 pass 2: two verbatim
-        copies of this CTE chain) and the clustered recall oracle."""
+    def _cosine_topk_oracle(probe_pred: str, k: int, select: str) -> str:
+        """Exact-cosine top-k oracle over the embeddings table, shared by
+        the ann_topk_* oracles and the hybrid-retrieval dense leg."""
         return f"""
-WITH c AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM {corpus}),
+WITH c AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, cast(embedding AS DOUBLE[]) AS qv
-      FROM {corpus} WHERE {probe_pred}),
+      FROM embeddings WHERE {probe_pred}),
 scored AS (
   SELECT q.query_id, c.vec_id,
          list_dot_product(c.v, q.qv)
@@ -2196,29 +1999,6 @@ FROM ranked WHERE rn <= {k}
         ["value", "unix_ms"], select="t.*", partition_by=["win_start"],
     )
 
-    _asof_inner = as_of_join_sql(
-        "SELECT event_id, user_id, ts, value FROM events "
-        "WHERE event_type = 'click'",
-        "SELECT event_id, user_id, ts, value FROM events "
-        "WHERE event_type = 'purchase'",
-        on="ts", by="user_id",
-        left_cols=["event_id", "user_id", "ts", "value"],
-        right_cols=["value", "event_id"], tiebreak="event_id")
-    o["asof_join_events"] = (
-        "SELECT event_id, user_id, value, "
-        "cast(epoch_ms(ts) as bigint) AS ts_ms, "
-        "coalesce(cast(epoch_ms(ts_asof) as bigint), -1) AS asof_ms, "
-        "coalesce(value_asof, -1.0) AS value_asof, "
-        "coalesce(event_id_asof, -1) AS event_id_asof "
-        f"FROM ({_asof_inner})")
-    o["range_join_events"] = range_join_sql(
-        "SELECT event_id, value AS v FROM events",
-        "SELECT range AS iv_id, range * 7.0 AS lo, "
-        "range * 7.0 + 10.0 AS hi FROM range(30)",
-        point_col="v", start_col="lo", end_col="hi",
-        point_cols=["event_id", "v"],
-        interval_cols=["iv_id", "lo", "hi"])
-
     o["profile_events"] = """
 SELECT event_type, count(*) AS n,
        round(min(value), 6) AS min_v, round(max(value), 6) AS max_v,
@@ -2242,12 +2022,6 @@ FROM events GROUP BY event_type
     o["corr_profile_lineitem"] = corr_matrix_sql(
         "lineitem",
         ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
-
-    o["bloom_semi_join_orders"] = bloom_semi_join_sql(
-        "SELECT * FROM orders",
-        "SELECT * FROM customer WHERE c_custkey % 16 = 1",
-        "o_custkey", dim_key="c_custkey",
-        fact_cols=["o_orderkey", "o_custkey", "o_totalprice"])
 
     o["hll_users_events"] = hll_distinct_sql(
         "events", "user_id", group_cols=["event_type"], bucket_bits=10)
@@ -2860,14 +2634,6 @@ SELECT node AS vec_id, min(comp) AS cluster_id
 FROM reach GROUP BY node HAVING min(comp) = node
 """.strip()
 
-    # capstone: canonical set (the recursive dedup oracle) joined back
-    # to the vectors, then the composed kmeans + balanced-sample twin
-    o["curation_capstone_embeddings"] = kmeans_balanced_sample_sql(
-        "SELECT e.* FROM embeddings e JOIN ("
-        + o["embedding_dedup_corpus"]
-        + ") c ON c.vec_id = e.vec_id",
-        dim=64, k=8, iterations=2, dp=4, target=20)
-
     o["embedding_near_dup"] = """
 WITH d AS (SELECT vec_id, label, cast(embedding AS DOUBLE[]) AS v FROM embeddings)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -2880,65 +2646,6 @@ WHERE list_dot_product(a.v, b.v)
          * sqrt(list_dot_product(b.v, b.v))) >= 0.35
 """.strip()
 
-    o["kmeans_clusters_embeddings"] = kmeans_assign_sql(
-        "SELECT * FROM embeddings", dim=64, k=8, iterations=3, dp=4)
-
-    o["kmeans_balanced_sample_embeddings"] = kmeans_balanced_sample_sql(
-        "SELECT * FROM embeddings", dim=64, k=8, iterations=2,
-        dp=4, target=20)
-
-    o["pq_codes_embeddings"] = pq_encode_sql(
-        "SELECT * FROM embeddings", dim=64, m=4, k=16,
-        iterations=2, dp=4)
-
-    o["pq_adc_topk_embeddings"] = pq_adc_topk_sql(
-        "SELECT * FROM embeddings",
-        "SELECT vec_id AS query_id, embedding FROM embeddings "
-        "WHERE vec_id < 5",
-        dim=64, m=4, k=16, iterations=2, dp=4, topk=10)
-
-    o["pq_adc_rerank_embeddings"] = pq_adc_rerank_sql(
-        "SELECT * FROM embeddings",
-        "SELECT vec_id AS query_id, embedding FROM embeddings "
-        "WHERE vec_id < 5",
-        dim=64, m=4, k=16, iterations=2, dp=4, shortlist=50, topk=10)
-
-    # clustered recall (VERDICT r9 #5): same composition, but over the
-    # planted-cluster generated corpus — both legs rebuilt on the
-    # generator twin so the whole chain stays value-exact.  The corpus
-    # CTE is MATERIALIZED: the k-means CTE chain references it dozens
-    # of times and DuckDB would otherwise re-inline (re-generate) the
-    # md5 corpus at every reference — measured 50 s vs 3.7 s.
-    _ex_clustered = _cosine_topk_oracle(
-        "vec_id < 5", 10, "query_id, vec_id", corpus="__corpus")
-    _adc_clustered = pq_adc_topk_sql(
-        "SELECT vec_id, embedding FROM __corpus",
-        "SELECT vec_id AS query_id, embedding FROM __corpus "
-        "WHERE vec_id < 5",
-        dim=64, m=4, k=16, iterations=2, dp=4, topk=10)
-    o["ann_recall_adc_clustered"] = f"""
-WITH __corpus AS MATERIALIZED (
-  {generate_embeddings_sql(2000, dim=64, k_centers=200, jitter=0.5)}
-),
-__ex AS ({_ex_clustered}),
-__adc AS ({_adc_clustered}),
-__q AS (SELECT DISTINCT query_id FROM __ex),
-__hit AS (
-  SELECT e.query_id, count(*)::BIGINT AS n_hits
-  FROM __ex e JOIN __adc a
-    ON a.query_id = e.query_id AND a.vec_id = e.vec_id
-  GROUP BY e.query_id
-)
-SELECT q.query_id,
-       COALESCE(h.n_hits, 0)::BIGINT AS n_hits,
-       COALESCE(h.n_hits, 0) / 10.0 AS recall
-FROM __q q LEFT JOIN __hit h USING (query_id)
-""".strip()
-
-    o["funnel_events"] = funnel_sql(
-        "SELECT user_id, ts, event_type FROM events",
-        ["view", "click", "purchase"])
-
     o["json_props_events"] = (
         "SELECT event_type, count(*)::BIGINT AS n, "
         "sum(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT "
@@ -2947,12 +2654,6 @@ FROM __q q LEFT JOIN __hit h USING (query_id)
         "AS mean_k FROM events "
         "WHERE json_extract_string(props, '$.k') IS NOT NULL "
         "GROUP BY event_type")
-
-    o["retention_events"] = retention_sql(
-        "SELECT user_id, ts FROM events", granularity="day")
-
-    o["user_growth_events"] = user_growth_sql(
-        "SELECT user_id, ts FROM events")
 
     o["mad_outliers_events"] = mad_outliers_sql(
         "SELECT event_id, event_type, value FROM events",

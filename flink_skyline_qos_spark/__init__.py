@@ -8,11 +8,9 @@ similarity search, text analysis) such an engine needs at 100 TB.
 from .functions.dominance import (
     dominance_sql,
     dominates,
-    dominates_array,
     skyline_not_exists_sql,
 )
 from .operators.partitioners import (
-    grid_dominance_prefilter,
     mr_angle,
     mr_dim,
     mr_grid,
@@ -53,9 +51,8 @@ from .functions.corpus import (
 from .session import get_spark
 
 __all__ = [
-    "dominates", "dominates_array", "dominance_sql", "skyline_not_exists_sql",
+    "dominates", "dominance_sql", "skyline_not_exists_sql",
     "mr_dim", "mr_grid", "mr_angle", "partitioner_expr", "partitioner_sql",
-    "grid_dominance_prefilter",
     "skyline", "skyline_two_phase", "skyline_anti_join",
     "skyline_broadcast_verify", "grouped_skyline", "skyline_2d_window",
     "grid_prefilter", "k_dominant_skyline", "top_k_dominating",

@@ -16,7 +16,6 @@ from operator import and_, or_
 from typing import Sequence
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def dominates(a: Sequence[Column], b: Sequence[Column]) -> Column:
@@ -29,16 +28,6 @@ def dominates(a: Sequence[Column], b: Sequence[Column]) -> Column:
         raise ValueError("dominates() needs two equal-length non-empty column lists")
     all_le = reduce(and_, [x <= y for x, y in zip(a, b)])
     any_lt = reduce(or_, [x < y for x, y in zip(a, b)])
-    return all_le & any_lt
-
-
-def dominates_array(a: Column, b: Column) -> Column:
-    """Array<double> variant for generic dimensionality.
-
-    `forall(zip_with(a,b,(x,y)->x<=y)) AND exists(zip_with(a,b,(x,y)->x<y))`.
-    """
-    all_le = F.forall(F.zip_with(a, b, lambda x, y: x <= y), lambda v: v)
-    any_lt = F.exists(F.zip_with(a, b, lambda x, y: x < y), lambda v: v)
     return all_le & any_lt
 
 

@@ -6,7 +6,7 @@ re-scored quality signals) and every consumer wants only each key's
 LATEST version.  One hash shuffle on the key, `max_by` over a TOTAL
 order — the order must include a tiebreak, because "some arbitrary
 row among equal timestamps" is not reproducible across runs or
-engines (same discipline as `operators/joins.as_of_join`).
+engines.
 
 Scale shape: implemented as ``max_by(struct(payload), struct(order))``
 — a declarative aggregate with map-side partial combine, so each

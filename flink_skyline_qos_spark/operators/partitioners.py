@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import math
 from functools import reduce
-from operator import add, and_
+from operator import add
 from typing import Sequence
 
 import numpy as np
@@ -265,24 +265,6 @@ def partition_ids(algo: str, values: np.ndarray, num_partitions: int,
     else:
         raise ValueError(f"unknown partitioner algo: {algo}")
     return np.clip(p, 0, num_partitions - 1).astype(np.int32)
-
-
-def grid_dominance_prefilter(dims: Sequence[Column], domain_max: float) -> Column:
-    """Keep-predicate dropping points ≥ domain/2 in EVERY dimension.
-
-    The reference ships this disabled for fear of a cross-stream deadlock
-    (FlinkSkyline.java:717-733, commented out); in Spark a filter cannot
-    deadlock, so we enable it.  Any dropped point is dominated by the
-    midpoint region and can never be in the skyline *provided at least one
-    point lies strictly inside the lower half in all dims* — the reference
-    applies it unconditionally on its [0,domain] synthetic data; we expose
-    it as an opt-in prune for the same data model.  For arbitrary data use
-    :func:`..operators.variants.grid_prefilter`, which adds the witness
-    check that makes the prune unconditionally lossless.
-    """
-    mid = domain_max / 2.0
-    all_worse = reduce(and_, [c >= F.lit(mid) for c in dims])
-    return ~all_worse
 
 
 def scale_out(df, probe=None):

@@ -175,9 +175,12 @@ def _arrow_values(tbl, cols: Sequence[str], *, order: str = "F") -> np.ndarray:
     return out
 
 
-def _prune_batches(cols: Sequence[str], *,
-                   buffer_cap: int = 4_000_000,
-                   buffer_bytes: int = 256 << 20):
+# Row and byte thresholds at which _prune_batches collapses its buffer.
+_BUFFER_ROWS = 4_000_000
+_BUFFER_BYTES = 256 << 20
+
+
+def _prune_batches(cols: Sequence[str]):
     """mapInArrow function: skyline over this partition's batches.
 
     Buffers the partition's Arrow batches and runs ONE kernel pass over
@@ -196,8 +199,8 @@ def _prune_batches(cols: Sequence[str], *,
     (`Table.filter`), and non-dim payload columns — user-defined types
     included — are never touched at all.
 
-    Memory stays bounded: when the buffer exceeds `buffer_cap` rows
-    OR `buffer_bytes` — rows alone would let a wide-passthrough table
+    Memory stays bounded: when the buffer exceeds `_BUFFER_ROWS` rows
+    OR `_BUFFER_BYTES` — rows alone would let a wide-passthrough table
     (the module contract allows arbitrary passthrough columns, e.g.
     long text) pin gigabytes per concurrent task (review finding r8) —
     it is collapsed to its own skyline (sound by decomposability —
@@ -215,8 +218,8 @@ def _prune_batches(cols: Sequence[str], *,
         parts: list = []        # list[pa.Table]
         rows = 0
         nbytes = 0
-        eff_cap = buffer_cap
-        eff_bytes = buffer_bytes
+        eff_cap = _BUFFER_ROWS
+        eff_bytes = _BUFFER_BYTES
 
         def collapse():
             nonlocal parts, rows, nbytes, eff_cap, eff_bytes
@@ -250,9 +253,9 @@ def _prune_batches(cols: Sequence[str], *,
     return fn
 
 
-def _local_prune(df: DataFrame, cols: Sequence[str], **buf) -> DataFrame:
+def _local_prune(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """One narrow local-skyline pass over `df`'s partitions."""
-    return df.mapInArrow(_prune_batches(cols, **buf), schema=df.schema)
+    return df.mapInArrow(_prune_batches(cols), schema=df.schema)
 
 
 def _grouped_prune(df: DataFrame, by: Sequence[str],
@@ -386,8 +389,7 @@ def skyline(df: DataFrame, cols: Sequence[str], *,
 
 
 def _dispatch_verify(pruned: DataFrame, cols: Sequence[str],
-                     scatter_threshold: "int | None",
-                     verify_chunks: "int | None" = None) -> DataFrame:
+                     scatter_threshold: "int | None") -> DataFrame:
     """Shared verify dispatch for :func:`skyline_broadcast_verify` and
     :func:`skyline_auto` (review r8: the two copies had to be edited in
     lockstep).  `pruned` must be persisted + materialized.
@@ -437,7 +439,7 @@ def _dispatch_verify(pruned: DataFrame, cols: Sequence[str],
         out = _verify_against_broadcast(pruned, cols, uniq_df=uniq)
         strategy = "broadcast"
     else:
-        out = _verify_scatter(pruned, cols, chunks=verify_chunks)
+        out = _verify_scatter(pruned, cols)
         strategy = "scatter"
     if uniq is not None:
         # fully consumed (eager collect) or unused (scatter branch)
@@ -451,7 +453,6 @@ def _dispatch_verify(pruned: DataFrame, cols: Sequence[str],
 
 def skyline_broadcast_verify(df: DataFrame, cols: Sequence[str], *,
                              pre_merge_partitions: int | None = None,
-                             verify_chunks: int | None = None,
                              scatter_threshold: "int | None" = None,
                              prefilter_refs: int | None = None,
                              envelope_cells: "int | bool | None" = None,
@@ -521,7 +522,6 @@ def skyline_broadcast_verify(df: DataFrame, cols: Sequence[str], *,
         vecs = skyline_broadcast_verify(
             df.select(*cols), cols,
             pre_merge_partitions=pre_merge_partitions,
-            verify_chunks=verify_chunks,
             scatter_threshold=scatter_threshold,
             prefilter_refs=prefilter_refs,
             envelope_cells=envelope_cells, width_safe=False)
@@ -543,7 +543,7 @@ def skyline_broadcast_verify(df: DataFrame, cols: Sequence[str], *,
     # population and can run the expensive local prune twice (observed
     # 6× wall-time at 1M×4-D).  The count is also the strategy input.
     pruned = pruned.persist()
-    out = _dispatch_verify(pruned, cols, scatter_threshold, verify_chunks)
+    out = _dispatch_verify(pruned, cols, scatter_threshold)
     # the pin backs the returned lazy frame — released when the caller
     # drops the result (ADVICE r3: repeated calls otherwise accumulate
     # cached blocks until memory pressure)

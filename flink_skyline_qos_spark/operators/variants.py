@@ -911,10 +911,8 @@ def representative_skyline(df: DataFrame, cols: Sequence[str], k: int,
     Scale shape: the skyline itself is computed by the decomposable
     two-phase operator; the greedy then runs k-1 TakeOrdered passes +
     one max-aggregate over the PERSISTED frontier with the current
-    centers inlined as literals (the
-    :func:`~.kmeans.kmeans_literal_centroids` discipline — driver
-    state is O(k·d), each pass is map-side, nothing shuffles but one
-    top-1 per pass).  Mixed-unit dimensions should be pre-scaled by
+    centers inlined as literals (driver state is O(k·d), each pass
+    is map-side, nothing shuffles but one top-1 per pass).  Mixed-unit dimensions should be pre-scaled by
     the caller; raw Euclidean follows the paper.
     """
     from functools import reduce as _reduce

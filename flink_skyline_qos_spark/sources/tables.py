@@ -27,10 +27,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def write_jsonl(df: DataFrame, path: str, *,
                 partition_by: "str | None" = None,
                 compression: "str | None" = None) -> None:

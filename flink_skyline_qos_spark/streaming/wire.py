@@ -40,18 +40,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "tuple_schema_ddl",
     "parse_service_tuples",
     "parse_triggers",
     "parse_service_lines",
     "parse_trigger_lines",
     "serialize_service_tuples",
 ]
-
-
-def tuple_schema_ddl(dims: int) -> str:
-    """DDL schema string for an N-dim service tuple."""
-    return ", ".join(["id LONG"] + [f"d{i} DOUBLE" for i in range(dims)])
 
 
 def parse_service_tuples(raw: DataFrame, dims: int, *,

@@ -153,15 +153,15 @@ def test_ngram_releases_index_caches(spark, docs):
 
 
 def test_capstone_composition_releases_all_caches(spark):
-    """VERDICT r4 #8: the capstone (dedup → components → k-means →
-    balanced sample) composes several pinning operators in one query —
+    """VERDICT r4 #8: the embedding capstone (LSH pairs → components →
+    canonical corpus) composes several pinning operators in one query —
     after its action completes and the result is dropped, ZERO cached
     RDDs may remain (the r3 cache-lifetime fix must hold under
     composition, not just per-operator)."""
     import __spark_entry__ as entrymod
 
     base = _baseline(spark)
-    out = entrymod.queries()["curation_capstone_embeddings"](
+    out = entrymod.queries()["embedding_dedup_corpus"](
         spark, "/root/testdata/sf0.001")
     n = out.count()
     assert n > 0

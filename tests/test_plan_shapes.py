@@ -384,40 +384,6 @@ def test_thick_skyline_anti_joins_broadcast_skyline(spark):
         r"BroadcastNestedLoopJoin LeftAnti BuildRight", plan), plan
 
 
-def test_as_of_join_has_no_join_node(spark):
-    """The as-of join is a union + running-last window: NO join
-    operator of any kind in the plan, one hash exchange per side."""
-    from flink_skyline_qos_spark.operators.joins import as_of_join
-
-    ev = load_table(spark, SF_DIR, "events")
-    clicks = ev.filter(F.col("event_type") == "click") \
-        .select("event_id", "user_id", "ts", "value")
-    purch = ev.filter(F.col("event_type") == "purchase") \
-        .select("event_id", "user_id", "ts", "value")
-    plan = _plan(as_of_join(clicks, purch, on="ts", by="user_id",
-                            right_cols=["value"], tiebreak="event_id"))
-    assert "Join" not in plan, plan
-    assert not any(n in plan for n in _PYTHON_NODES), plan
-
-
-def test_range_join_is_equi_not_nested_loop(spark):
-    """The bucket-grid rewrite turns the band predicate into an equi
-    join: never a BroadcastNestedLoopJoin."""
-    from flink_skyline_qos_spark.operators.joins import range_join
-
-    ev = load_table(spark, SF_DIR, "events")
-    iv = spark.range(30).select(
-        F.col("id").alias("iv_id"),
-        (F.col("id") * 7.0).alias("lo"),
-        (F.col("id") * 7.0 + 10.0).alias("hi"))
-    plan = _plan(range_join(
-        ev.select("event_id", F.col("value").alias("v")), iv,
-        point_col="v", start_col="lo", end_col="hi", bucket_width=8.0))
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert re.search(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)",
-                     plan), plan
-
-
 def test_group_cap_no_single_partition_window(spark):
     """The per-source cap must never collapse to one task: both
     selection windows partition by keys (group+salt, then group) —

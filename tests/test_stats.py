@@ -165,116 +165,6 @@ def test_quantile_bins_bad_args(spark, events):
         quantile_bins_sql("events", "value", nbins=10000)
 
 
-def test_funnel_greedy_first_match(spark):
-    from datetime import datetime
-
-    from flink_skyline_qos_spark.operators.funnel import funnel
-
-    T = lambda s: datetime(2024, 1, 1, 0, 0, s)
-    rows = [
-        # u1 completes: view@1, click@3 (first after view), purchase@5
-        (1, T(1), "view"), (1, T(2), "click"), (1, T(3), "click"),
-        (1, T(5), "purchase"),
-        # u2: click BEFORE view never matches; stalls at view
-        (2, T(4), "click"), (2, T(6), "view"),
-        # u3: never views -> absent from output
-        (3, T(1), "purchase"),
-        # u4: purchase before click -> stalls at click
-        (4, T(1), "view"), (4, T(2), "purchase"), (4, T(3), "click"),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, ts timestamp, event_type string")
-    got = {r.user_id: (r.t_0, r.t_1, r.t_2, r.stages) for r in
-           funnel(df, ["view", "click", "purchase"]).collect()}
-    assert set(got) == {1, 2, 4}
-    assert got[1] == (T(1), T(2), T(5), 3)  # first click after view
-    assert got[2] == (T(6), None, None, 1)
-    assert got[4] == (T(1), T(3), None, 2)
-
-
-def test_funnel_matches_oracle(spark, events, sf_dir):
-    from flink_skyline_qos_spark.operators.funnel import (
-        funnel,
-        funnel_sql,
-    )
-
-    got = sorted(tuple(r) for r in funnel(
-        events, ["view", "click", "purchase"]).collect())
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW raw AS SELECT * FROM '{sf_dir}/events.parquet'")
-    con.sql("CREATE VIEW events AS SELECT * REPLACE "
-            "(CAST(ts AS TIMESTAMP) AS ts) FROM raw")
-    want = sorted(tuple(r) for r in con.sql(funnel_sql(
-        "SELECT user_id, ts, event_type FROM events",
-        ["view", "click", "purchase"])).fetchall())
-    assert got == want
-    # funnel monotonicity: stage counts never increase down the funnel
-    n1 = sum(1 for r in got if r[-1] >= 1)
-    n2 = sum(1 for r in got if r[-1] >= 2)
-    n3 = sum(1 for r in got if r[-1] >= 3)
-    assert n1 >= n2 >= n3 > 0
-
-
-def test_funnel_bad_args(spark, events):
-    from flink_skyline_qos_spark.operators.funnel import (
-        funnel,
-        funnel_sql,
-    )
-
-    with pytest.raises(ValueError):
-        funnel(events, ["view"])
-    with pytest.raises(ValueError):
-        funnel_sql("events", ["view"])
-
-
-def test_retention_crafted(spark):
-    from datetime import datetime
-
-    from flink_skyline_qos_spark.operators.funnel import retention
-
-    D = lambda d, h=0: datetime(2024, 1, d, h)
-    rows = [
-        (1, D(1)), (1, D(1, 5)), (1, D(2)), (1, D(4)),  # cohort d1
-        (2, D(1)),                                      # cohort d1, only d1
-        (3, D(2)), (3, D(3)),                           # cohort d2
-        (4, None),                                      # dropped
-    ]
-    df = spark.createDataFrame(rows, "user_id bigint, ts timestamp")
-    got = {(r.cohort.isoformat(), r.offset): r.n_users
-           for r in retention(df).collect()}
-    assert got == {
-        ("2024-01-01", 0): 2,  # u1, u2
-        ("2024-01-01", 1): 1,  # u1 on d2
-        ("2024-01-01", 3): 1,  # u1 on d4
-        ("2024-01-02", 0): 1,  # u3
-        ("2024-01-02", 1): 1,  # u3 on d3
-    }
-
-
-def test_retention_matches_oracle_and_week(spark, events, sf_dir):
-    from flink_skyline_qos_spark.operators.funnel import (
-        retention,
-        retention_sql,
-    )
-
-    for gran in ("day", "week"):
-        got = sorted(tuple(r) for r in
-                     retention(events, granularity=gran).collect())
-        con = duckdb.connect()
-        con.sql(f"CREATE VIEW raw AS SELECT * "
-                f"FROM '{sf_dir}/events.parquet'")
-        con.sql("CREATE VIEW events AS SELECT * REPLACE "
-                "(CAST(ts AS TIMESTAMP) AS ts) FROM raw")
-        want = sorted(tuple(r) for r in con.sql(retention_sql(
-            "SELECT user_id, ts FROM events",
-            granularity=gran)).fetchall())
-        assert got == want
-        # cohort sizes (offset 0) bound every later offset's count
-        sizes = {c: n for c, off, n in got if off == 0}
-        for c, off, n in got:
-            assert n <= sizes[c]
-
-
 def test_mad_outliers_crafted_and_degenerate(spark):
     from flink_skyline_qos_spark.operators.stats import mad_outliers
 
@@ -334,36 +224,3 @@ def test_mad_outliers_ungrouped_and_bad_threshold(spark):
         mad_outliers(df, "value", threshold=0)
     with pytest.raises(ValueError):
         mad_outliers_sql("t", "value", threshold=-1)
-
-
-def test_user_growth_crafted_and_oracle(spark, events, sf_dir):
-    from datetime import datetime
-
-    from flink_skyline_qos_spark.operators.funnel import (
-        user_growth,
-        user_growth_sql,
-    )
-
-    D = lambda d: datetime(2024, 1, d)
-    rows = [(1, D(1)), (2, D(1)), (1, D(2)), (3, D(2)), (1, D(4))]
-    df = spark.createDataFrame(rows, "user_id bigint, ts timestamp")
-    got = {r.day.isoformat(): (r.dau, r.new_users, r.cum_users)
-           for r in user_growth(df).collect()}
-    assert got == {
-        "2024-01-01": (2, 2, 2),
-        "2024-01-02": (2, 1, 3),   # u1 returning + u3 new
-        "2024-01-04": (1, 0, 3),   # returning only; cum flat
-    }
-    # oracle parity on the real table
-    real = sorted(tuple(r) for r in user_growth(events).collect())
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW raw AS SELECT * FROM '{sf_dir}/events.parquet'")
-    con.sql("CREATE VIEW events AS SELECT * REPLACE "
-            "(CAST(ts AS TIMESTAMP) AS ts) FROM raw")
-    want = sorted(tuple(r) for r in con.sql(user_growth_sql(
-        "SELECT user_id, ts FROM events")).fetchall())
-    assert real == want
-    # growth-curve invariants
-    by_day = sorted(real)
-    assert all(b[3] >= a[3] for a, b in zip(by_day, by_day[1:]))
-    assert by_day[-1][3] == sum(r[2] for r in by_day)

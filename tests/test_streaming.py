@@ -462,14 +462,21 @@ def test_continuous_global_merge(spark, tmp_path, points_2d):
 
 def test_query_metrics_cpu_accounting(lineitem):
     """A6: kernel-measured per-partition CPU surfaces as nonzero
-    local_cpu_ms/global_cpu_ms straggler metrics on a real run."""
-    from flink_skyline_qos_spark.plans.metrics import skyline_query_metrics
+    local_cpu_ms/global_cpu_ms straggler metrics on a real run; A7: the
+    JSON result record carries every non-null metric unchanged."""
+    import json
 
-    m = skyline_query_metrics(
+    from flink_skyline_qos_spark.plans.metrics import (
+        metrics_to_json,
+        skyline_query_metrics,
+    )
+
+    df = skyline_query_metrics(
         lineitem, ["l_extendedprice", "l_discount"], query_id="cpu",
         algo="mr-dim", num_partitions=8, domain_max=120000.0,
         with_timing=True,
-    ).first()
+    )
+    m = df.first()
     assert m["record_count"] > 0 and m["skyline_size"] > 0
     assert 0.0 <= m["optimality"] <= 1.0
     # perf_counter_ns totals over a 6k-row partition are sub-ms; the columns
@@ -478,6 +485,10 @@ def test_query_metrics_cpu_accounting(lineitem):
     assert m["total_processing_time_ms"] > 0
     assert m["local_processing_time_ms"] >= 0
     assert m["global_processing_time_ms"] >= 0
+    # to_json drops null fields, so compare the non-null columns only
+    rec = json.loads(metrics_to_json(df).first()["result_json"])
+    want = {k: v for k, v in m.asDict().items() if v is not None}
+    assert rec == want
 
 
 def test_query_metrics_cpu_nonzero_big(spark):
