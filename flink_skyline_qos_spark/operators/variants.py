@@ -912,8 +912,9 @@ def representative_skyline(df: DataFrame, cols: Sequence[str], k: int,
     two-phase operator; the greedy then runs k-1 TakeOrdered passes +
     one max-aggregate over the PERSISTED frontier with the current
     centers inlined as literals (driver state is O(k·d), each pass
-    is map-side, nothing shuffles but one top-1 per pass).  Mixed-unit dimensions should be pre-scaled by
-    the caller; raw Euclidean follows the paper.
+    is map-side, nothing shuffles but one top-1 per pass).  Mixed-unit
+    dimensions should be pre-scaled by the caller; raw Euclidean
+    follows the paper.
     """
     from functools import reduce as _reduce
     from operator import add as _add
