@@ -15,12 +15,13 @@ Three physical strategies over identical set semantics:
    intermediate tree-merge level bounds the final task's input when
    survivor sets are huge (high-dim anti-correlated data).
 
-2. :func:`skyline_two_phase` — reference-parity path: explicit MR-Dim /
-   MR-Grid / MR-Angle partition-id column tagged in the JVM, then one
-   ``toArrow()`` to the driver, where each pid's local skyline and the
-   global merge run with the NumPy kernel (the reference's shuffle #1
-   becomes a group-by in the driver).  Eager, and bounded by driver
-   memory, like a stream-engine micro-batch.
+2. :func:`skyline_two_phase` — reference-parity path: one
+   ``toArrow()`` brings the input's rows to the driver, which drops
+   incomplete rows, tags each row's MR-Dim / MR-Grid / MR-Angle
+   partition id (the NumPy twin of the JVM partitioners) and runs each
+   pid's local skyline and the global merge with the NumPy kernel (the
+   reference's shuffle #1 becomes a group-by in the driver).  Eager,
+   and bounded by driver memory, like a stream-engine micro-batch.
 
 3. :func:`skyline_anti_join` — fully declarative Catalyst form
    (left-anti self-join on the dominance theta-predicate).  O(n²); kept
@@ -43,7 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.dominance import dominates
 from .caching import release_on_gc
 from .kernels import skyline_mask
-from .partitioners import partitioner_expr
+from .partitioners import partition_ids
 
 __all__ = [
     "skyline",
@@ -163,14 +164,21 @@ def _arrow_values(tbl, cols: Sequence[str], *, order: str = "F") -> np.ndarray:
     contiguous, and the kernels' (d, n) transpose becomes a zero-copy
     view instead of a strided gather.  Chunked columns are copied
     chunk-by-chunk (each chunk's `to_numpy` is zero-copy for no-null
-    primitives — the `_complete` filter guarantees no nulls in dims)."""
+    primitives).  A NULL dim becomes NaN, so one ``isnan`` finds the
+    rows :func:`_complete` drops."""
     n = tbl.num_rows
     out = np.empty((n, len(cols)), dtype=np.float64, order=order)
     for j, c in enumerate(cols):
         off = 0
         for ch in tbl.column(c).chunks:
+            nulls = None
+            if ch.null_count:
+                nulls = ch.is_null().to_numpy(zero_copy_only=False)
+                ch = ch.fill_null(0)
             a = ch.to_numpy(zero_copy_only=False)
             out[off:off + len(a), j] = a
+            if nulls is not None:
+                out[off + np.flatnonzero(nulls), j] = np.nan
             off += len(a)
     return out
 
@@ -955,6 +963,32 @@ def _two_phase_masks(pids: np.ndarray, values: np.ndarray) -> _TwoPhase:
     return _TwoPhase(local, keep, local_ns, global_ns)
 
 
+class _DriverRows(NamedTuple):
+    """An input brought to the driver by :func:`_driver_rows`."""
+
+    tbl: "object"        # pyarrow Table: every row and column of the input
+    rows: np.ndarray     # indices into `tbl` of the rows with complete dims
+    pids: np.ndarray     # their int32 partition ids
+    values: np.ndarray   # their dims, (len(rows), d) float64
+
+
+def _driver_rows(df: DataFrame, cols: Sequence[str], algo: str,
+                 num_partitions: int, domain_max: float) -> _DriverRows:
+    """ONE Spark job, ``df.toArrow()``, brings the input's rows to the
+    driver.  The driver drops the rows with a NULL or NaN dim (the rows
+    :func:`_complete` drops) and tags the rest with
+    :func:`~.partitioners.partition_ids`, the NumPy twin of
+    :func:`~.partitioners.partitioner_expr` over the dims as float64."""
+    tbl = df.toArrow()
+    values = _arrow_values(tbl, cols)
+    rows = np.flatnonzero(~np.isnan(values).any(axis=1))
+    if len(rows) < len(values):
+        values = values[rows]
+    return _DriverRows(tbl, rows,
+                       partition_ids(algo, values, num_partitions, domain_max),
+                       values)
+
+
 def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
                       algo: str = "mr-dim", num_partitions: int = 8,
                       domain_max: float | None = None,
@@ -966,33 +1000,38 @@ def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
 
     Mirrors shuffle #1 + local BNL + global merge
     (FlinkSkyline.java:138,407-444,546-568) without a shuffle: ONE
-    Spark job scans the input, tags each row with its MR-* partition id
-    in the JVM (:func:`~.partitioners.partitioner_expr`) and brings the
-    rows to the driver with ``toArrow()``; the driver computes each
-    pid's local skyline and the global merge with
+    Spark job brings the input's rows to the driver with ``toArrow()``
+    (:func:`_driver_rows`).  The driver drops the rows with a NULL or
+    NaN dim, tags each remaining row with its MR-* partition id
+    (:func:`~.partitioners.partition_ids`, equal to the JVM
+    :func:`~.partitioners.partitioner_expr` on every such row),
+    computes each pid's local skyline and the global merge with
     :func:`~.kernels.skyline_mask` (:func:`_two_phase_masks`) and hands
     the survivors back through ``createDataFrame`` with the input's
     column order and types.  When `partition_col` is given, the
-    partition id is kept in the output under that name (the
-    reference's originPartition tag, FlinkSkyline.java:389-391) —
-    feeding the optimality metric.  `prefilter` applies the
-    witness-guarded dominated-region prune (P4 — the filter the
-    reference ships disabled, FlinkSkyline.java:120-124) in the JVM,
-    before any row reaches the driver.
+    partition id is kept in the output under that name, as a non-null
+    int (the reference's originPartition tag,
+    FlinkSkyline.java:389-391) — feeding the optimality metric.
+    `prefilter` applies the witness-guarded dominated-region prune (P4
+    — the filter the reference ships disabled,
+    FlinkSkyline.java:120-124) in the JVM, before any row reaches the
+    driver.
 
     `envelope_cells` (truthy/int, round 11): apply the lossless
-    all-JVM :func:`~.variants.grid_envelope_prefilter` before the
-    transfer, so only the near-frontier shell crosses into Python.
-    Lossless by the same witness argument as the verify strategies.
+    all-JVM :func:`~.variants.grid_envelope_prefilter` to the complete
+    rows (:func:`_complete`) before the transfer, so only the
+    near-frontier shell crosses into Python.  Lossless by the same
+    witness argument as the verify strategies.
 
     EAGER, like :func:`sampled_dominator_prefilter`: the scan, the
     transfer and both kernel phases run when this function is called,
-    not when the returned frame is consumed, and the tagged input must
-    fit in the driver — the same contract as a stream-engine
-    micro-batch.  The scale-out plans (:func:`skyline`,
-    :func:`skyline_auto`) keep the data in the executors.
+    not when the returned frame is consumed, and the input must fit in
+    the driver — the same contract as a stream-engine micro-batch.  The
+    scale-out plans (:func:`skyline`, :func:`skyline_auto`) keep the
+    data in the executors.
     """
     import pyarrow as pa
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     if domain_max is None:
         # The reference takes --domain from the CLI; infer from data when absent.
@@ -1003,26 +1042,22 @@ def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
         from .variants import grid_prefilter
 
         df = grid_prefilter(df, cols, domain_max)
-    df = _complete(df, cols)
     if envelope_cells:
         from .variants import grid_envelope_prefilter
 
         df = grid_envelope_prefilter(
-            df, cols,
+            _complete(df, cols), cols,
             cells=None if envelope_cells is True else int(envelope_cells))
-    pid_name = partition_col or "__pid"
-    dims = [F.col(c) for c in cols]
-    tagged = df.withColumn(
-        pid_name, partitioner_expr(algo, dims, num_partitions, domain_max)
-    )
-    tbl = tagged.toArrow()
-    phases = _two_phase_masks(tbl.column(pid_name).to_numpy(),
-                              _arrow_values(tbl, cols))
-    out = tbl.filter(pa.array(phases.keep))
-    schema = tagged.schema
-    if partition_col is None:
-        out = out.drop_columns([pid_name])
-        schema = df.schema
+    t = _driver_rows(df, cols, algo, num_partitions, domain_max)
+    phases = _two_phase_masks(t.pids, t.values)
+    out = t.tbl.take(t.rows[phases.keep])
+    schema = df.schema
+    if partition_col is not None:
+        out = out.append_column(
+            pa.field(partition_col, pa.int32(), nullable=False),
+            pa.array(t.pids[phases.keep]))
+        schema = StructType([*schema.fields,
+                             StructField(partition_col, IntegerType(), False)])
     return df.sparkSession.createDataFrame(out, schema=schema)
 
 

@@ -25,8 +25,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.partitioners import partitioner_expr
-from ..operators.skyline import _arrow_values, _two_phase_masks
+from ..operators.skyline import _driver_rows, _two_phase_masks
 
 __all__ = ["skyline_query_metrics", "metrics_to_json", "write_metrics_csv"]
 
@@ -42,37 +41,34 @@ def skyline_query_metrics(points: DataFrame, cols: Sequence[str], *,
     fields (wall-clock + A6 kernel CPU, not oracle-checkable) added when
     `with_timing`.
 
-    ONE Spark job: the pid tag (:func:`partitioner_expr`) runs in the
-    JVM and ``toArrow()`` brings the pid and the dims to the driver,
-    where :func:`~..operators.skyline._two_phase_masks` computes the
-    local skylines and the global merge — the plan of
+    ONE Spark job brings the dims to the driver with ``toArrow()``; the
+    driver drops the rows with a NULL or NaN dim, tags the pid and
+    computes the local skylines and the global merge
+    (:func:`~..operators.skyline._driver_rows`, then
+    :func:`~..operators.skyline._two_phase_masks`) — the plan of
     :func:`~..operators.skyline.skyline_two_phase`.  record_count
     counts every row; rows with a NULL or NaN dim take no part in the
     skyline, the one semantics of every skyline entry point.  EAGER,
-    and the tagged dims must fit in the driver.
+    and the dims must fit in the driver.
     """
     t0 = time.perf_counter()
     spark = points.sparkSession
-    pid = partitioner_expr(algo, [F.col(c) for c in cols], num_partitions,
-                           domain_max)
-    tbl = points.select(pid.alias("pid"), *cols).toArrow()
-    values = _arrow_values(tbl, cols)
-    complete = ~np.isnan(values).any(axis=1)
-    pids = tbl.column("pid").to_numpy()[complete]
-    phases = _two_phase_masks(pids, values[complete])
+    t = _driver_rows(points.select(*cols), cols, algo, num_partitions,
+                     domain_max)
+    phases = _two_phase_masks(t.pids, t.values)
     t_end = time.perf_counter()
 
     # Reference optimality loop (FlinkSkyline.java:590-608): partitions with
     # a local skyline contribute survivors/local_size; the denominator is
     # ALWAYS total_partitions (empty partitions dilute).
-    sizes = np.bincount(pids[phases.local])
-    surv = np.bincount(pids[phases.keep], minlength=len(sizes))
+    sizes = np.bincount(t.pids[phases.local])
+    surv = np.bincount(t.pids[phases.keep], minlength=len(sizes))
     optimality = round(
         float((surv[sizes > 0] / sizes[sizes > 0]).sum()) / num_partitions,
         4)
     row = {
         "query_id": str(query_id),
-        "record_count": tbl.num_rows,
+        "record_count": t.tbl.num_rows,
         "skyline_size": int(phases.keep.sum()),
         "optimality": optimality,
     }

@@ -295,60 +295,6 @@ def generate_docs_hash(spark: SparkSession, n: int, *,
                      F.concat_ws(" ", toks).alias("text"))
 
 
-def generate_embeddings_hash(spark: SparkSession, n: int, *,
-                             dim: int = 64, k_centers: int = 20,
-                             jitter: float = 0.25,
-                             num_partitions: int = 8) -> DataFrame:
-    """Deterministic PLANTED-CLUSTER embedding corpus (VERDICT r9 #5):
-    (vec_id, embedding double[dim], label), vector = cluster center +
-    jitter, cluster = vec_id % k_centers.
-
-    Every value is a pure md5 function of (cluster, position) /
-    (vec_id, position) — element j is ::
-
-        (u01(cluster, "cc", j) − 0.5) + (u01(vec_id, "ee", j) − 0.5)·jitter
-
-    so Spark and DuckDB (:func:`generate_embeddings_sql`) produce
-    bit-identical doubles (integer md5 arithmetic, division by 2³²,
-    one IEEE multiply+add — deterministic on both engines).  Unlike the
-    shipped `embeddings` table (i.i.d. vectors — PQ's worst case, where
-    ANN recall@10 floors at the 0.1 self-hit), this corpus has real
-    cluster structure: recall becomes a quality dial that discriminates
-    PQ configurations.  All JVM expressions, zero driver state."""
-    df = spark.range(0, n, 1, num_partitions)
-    cl = F.col("id") % F.lit(k_centers)
-
-    def u01(idexpr, tag, j):
-        h = F.md5(F.concat(idexpr.cast("string"), F.lit(f":{tag}"),
-                           j.cast("string")))
-        return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-                / F.lit(_TWO32))
-
-    emb = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: (u01(cl, "cc", j) - F.lit(0.5))
-        + (u01(F.col("id"), "ee", j) - F.lit(0.5)) * F.lit(float(jitter)))
-    return df.select(F.col("id").alias("vec_id"), emb.alias("embedding"),
-                     cl.cast("int").alias("label"))
-
-
-def generate_embeddings_sql(n: int, *, dim: int = 64, k_centers: int = 20,
-                            jitter: float = 0.25) -> str:
-    """DuckDB twin of :func:`generate_embeddings_hash` (bit-identical
-    doubles).  Spark-free."""
-    def u01(idexpr: str, tag: str) -> str:
-        return (f"(('0x' || substr(md5({idexpr}::VARCHAR || ':{tag}' || "
-                f"j::VARCHAR), 1, 8))::BIGINT / {_TWO32:.1f})")
-
-    cl = f"(id % {k_centers})"
-    elem = (f"(({u01(cl, 'cc')} - 0.5) + "
-            f"({u01('id', 'ee')} - 0.5) * {float(jitter)!r})")
-    return (f"SELECT id AS vec_id, "
-            f"list_transform(range(0, {dim}), j -> {elem}) AS embedding, "
-            f"cast({cl} AS INTEGER) AS label "
-            f"FROM (SELECT range AS id FROM range(0, {n}))")
-
-
 def generate_docs_sql(n: int, *, vocab_size: int = 2000,
                       doc_len: int = 30, dup: str = "near") -> str:
     """DuckDB twin of :func:`generate_docs_hash` (bit-identical text)."""

@@ -2,7 +2,7 @@
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from flink_skyline_qos_spark.operators.kernels import (
@@ -25,11 +25,22 @@ def brute_skyline_mask(v: np.ndarray) -> np.ndarray:
     return keep
 
 
-def _arr(draw, d):
+# Coordinates: small non-negative integers, integers of both signs, or
+# non-integral floats that mix -0.0 with 0.0 (numerically one value).
+_COORDS = [
+    st.integers(0, 8),
+    st.integers(-8, 8),
+    st.sampled_from([-1.5, -0.0, 0.0, 0.25, 0.5, 1.0, 2.75, 4.0]),
+]
+
+
+def _arr(draw, d, coords=None):
     n = draw(st.integers(0, 60))
+    if coords is None:
+        coords = draw(st.sampled_from(_COORDS))
     vals = draw(
         st.lists(
-            st.lists(st.integers(0, 8), min_size=d, max_size=d),
+            st.lists(coords, min_size=d, max_size=d),
             min_size=n, max_size=n,
         )
     )
@@ -44,11 +55,15 @@ def point_arrays(draw):
 @st.composite
 def point_array_pairs(draw):
     d = draw(st.integers(1, 4))
-    return _arr(draw, d), _arr(draw, d)
+    coords = draw(st.sampled_from(_COORDS))
+    return _arr(draw, d, coords), _arr(draw, d, coords)
 
 
 @settings(max_examples=200, deadline=None)
 @given(point_arrays())
+@example(np.array([[-0.0, 1.0], [0.0, 0.5], [0.0, 0.5], [-0.0, 2.0]]))
+@example(np.array([[0.5, 1.0], [0.25, 2.0], [0.75, -0.5], [0.75, 0.5]]))
+@example(np.array([[-1.0, 3.0], [-2.0, 4.0], [2.0, -5.0], [-1.0, 4.0]]))
 def test_skyline_mask_matches_bruteforce(v):
     assert (skyline_mask(v) == brute_skyline_mask(v)).all()
 
@@ -206,12 +221,14 @@ def test_skyline_mask_2d_keeps_inf_in_first_group():
 
 def test_skyline_mask_3d_sweep_dispatch_above_threshold():
     """skyline_mask dispatches 3-D inputs >= _SWEEP_3D_MIN rows to the
-    plane-sweep over deduped vectors (one lexsort, neighbour dedup);
-    the dispatch must agree with the forward scan exactly — on anti-
-    correlated structure (the regime the dispatch exists for), planted
-    exact duplicates (including duplicates of frontier points), rows
-    that differ only by -0.0 versus 0.0, +inf coordinates, and an
-    input of exactly _SWEEP_3D_MIN rows.  Duplicates share their
+    plane-sweep over deduped vectors (one packed-key sort, neighbour
+    dedup); the dispatch must agree with the forward scan exactly — on
+    anti-correlated structure (the regime the dispatch exists for),
+    planted exact duplicates (including duplicates of frontier points),
+    rows that differ only by -0.0 versus 0.0, +inf coordinates,
+    non-integral and negative coordinates, an integral column too wide
+    for a direct key code, a key too wide for 64 bits, and an input of
+    exactly _SWEEP_3D_MIN rows.  Duplicates share their
     representative's verdict."""
     from flink_skyline_qos_spark.operators.kernels import (
         _SWEEP_3D_MIN,
@@ -250,6 +267,39 @@ def test_skyline_mask_3d_sweep_dispatch_above_threshold():
     dup = np.flatnonzero(np.isinf(inf).any(axis=1))[:200]
     cases.append((np.vstack([inf, inf[dup]]), dup,
                   np.arange(n, n + dup.size)))
+
+    # non-integral coordinates (rank-coded sort key) with planted
+    # duplicates and -0.0 against 0.0: the zero-bearing rows again with
+    # their zeros negated, and more than a sweep leaf's worth of
+    # d0 = -0.0 shadows that a d0 = 0.0 row dominates, so a key that
+    # sorts -0.0 below 0.0 lets them survive
+    flt = base / 64.0
+    fneg = np.where(flt[zs] == 0, -0.0, flt[zs])
+    z0 = flt[flt[:, 0] == 0]
+    shadows = np.vstack([z0 + [0.0, k / 64, k / 64] for k in range(1, 21)])
+    shadows[:, 0] = -0.0
+    assert len(shadows) > 256
+    cases.append((np.vstack([flt, flt[dup_idx], fneg, shadows]),
+                  np.r_[dup_idx, zs],
+                  np.arange(n, n + n // 4 + zs.size)))
+
+    # negative integral coordinates (v - min key codes)
+    shifted = base - 250.0
+    cases.append((np.vstack([shifted, shifted[dup_idx]]), dup_idx,
+                  np.arange(n, n + n // 4)))
+
+    # an integral column whose span is above the direct-code limit
+    # (rank-coded beside two direct-coded columns)
+    wide = base.copy()
+    wide[:, 1] *= 2.0 ** 33
+    cases.append((np.vstack([wide, wide[dup_idx]]), dup_idx,
+                  np.arange(n, n + n // 4)))
+
+    # three direct-coded columns whose fields need more than 64 bits
+    # (the lexsort over the codes)
+    deep = base * 2.0 ** 22
+    cases.append((np.vstack([deep, deep[dup_idx]]), dup_idx,
+                  np.arange(n, n + n // 4)))
 
     # exactly _SWEEP_3D_MIN rows: the smallest input the sweep takes
     m = _SWEEP_3D_MIN
