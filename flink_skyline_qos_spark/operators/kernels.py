@@ -426,8 +426,9 @@ def _lex_sorted(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
     One ``argsort`` of a packed uint64 key — each column's dense code
     (:func:`_dense_codes`) in its own bit field, d0 highest — instead of
-    a multi-key ``np.lexsort`` (11× faster on 500k × 3 integral rows).
-    Rows with equal keys are numerically equal vectors.  ``np.lexsort``
+    a multi-key ``np.lexsort`` (on 500k × 3 integral rows, ~20 ms
+    against ~250 ms on a 4-vCPU host).  Rows with equal keys are
+    numerically equal vectors.  ``np.lexsort``
     over the codes only when the fields need more than 64 bits."""
     v = np.asarray(values, dtype=np.float64)
     codes = [_dense_codes(v[:, k]) for k in range(v.shape[1])]
