@@ -966,7 +966,7 @@ def _two_phase_masks(pids: np.ndarray, values: np.ndarray) -> _TwoPhase:
 class _DriverRows(NamedTuple):
     """An input brought to the driver by :func:`_driver_rows`."""
 
-    tbl: "object"        # pyarrow Table: every row and column of the input
+    tbl: "pa.Table"      # every row and column of the input
     rows: np.ndarray     # indices into `tbl` of the rows with complete dims
     pids: np.ndarray     # their int32 partition ids
     values: np.ndarray   # their dims, (len(rows), d) float64
