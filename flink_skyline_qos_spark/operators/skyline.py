@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.dominance import dominates
 from .caching import release_on_gc
 from .kernels import skyline_mask
-from .partitioners import partition_ids
+from .partitioners import partition_ids, split_by_pid
 
 __all__ = [
     "skyline",
@@ -944,10 +944,9 @@ def _two_phase_masks(pids: np.ndarray, values: np.ndarray) -> _TwoPhase:
     :func:`~.kernels.skyline_mask`.  The kernel times cover the kernel
     calls only — the engine's A6 definition."""
     n = len(pids)
-    order = np.argsort(pids, kind="stable")
     local = np.zeros(n, dtype=bool)
     local_ns = 0
-    for idx in np.split(order, np.flatnonzero(np.diff(pids[order])) + 1):
+    for idx in split_by_pid(pids).values():
         sub = values[idx]
         t0 = time.perf_counter_ns()
         m = skyline_mask(sub)

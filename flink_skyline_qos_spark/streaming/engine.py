@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.kernels import skyline_mask
-from ..operators.partitioners import partition_ids
+from ..operators.partitioners import partition_ids, split_by_pid
 from .wire import parse_service_lines, parse_trigger_lines
 
 __all__ = ["SkylinePipeline", "PIPELINE_METRICS_DDL"]
@@ -103,12 +103,7 @@ def _epochs(path: str) -> list[int]:
 
 def _split(pids: np.ndarray, ids: np.ndarray, vals: np.ndarray) -> State:
     """Rows ``(id, values, pid)`` → per-pid (ids, values)."""
-    order = np.argsort(pids, kind="stable")
-    ids, vals = ids[order], vals[order]
-    keys, starts = np.unique(pids[order], return_index=True)
-    ends = [*starts[1:], len(order)]
-    return {int(p): (ids[s:t], vals[s:t])
-            for p, s, t in zip(keys, starts, ends)}
+    return {p: (ids[idx], vals[idx]) for p, idx in split_by_pid(pids).items()}
 
 
 def _gc(path: str, keep: int = _KEEP_EPOCHS) -> None:

@@ -15,6 +15,7 @@ import pytest
 from flink_skyline_qos_spark.operators.partitioners import (
     partition_ids,
     partitioner_expr,
+    split_by_pid,
 )
 
 ALGOS = ("mr-dim", "mr-grid", "mr-angle", "mr-z")
@@ -67,3 +68,19 @@ def test_partition_ids_match_partitioner_expr(spark, dims):
         assert mine.dtype == np.int32
         bad = np.flatnonzero(mine != want)
         assert not len(bad), (a, p, pts[bad[:5]], mine[bad[:5]], want[bad[:5]])
+
+
+@pytest.mark.parametrize("num_pids", [1, 8, 300, 70_000])
+def test_split_by_pid_is_the_stable_sort_split(num_pids):
+    """Each key width (8-bit, 16-bit, int32) gives the groups of a
+    stable comparison sort: pids ascending, rows in input order."""
+    pids = np.random.default_rng(num_pids).integers(
+        0, num_pids, 50_000).astype(np.int32)
+    order = np.argsort(pids, kind="stable")
+    want = np.split(order, np.flatnonzero(np.diff(pids[order])) + 1)
+    got = split_by_pid(pids)
+    assert list(got) == sorted(set(pids.tolist()))
+    assert len(got) == len(want)
+    for g, w in zip(got.values(), want):
+        np.testing.assert_array_equal(g, w)
+    assert split_by_pid(np.empty(0, np.int32)) == {}

@@ -1,8 +1,18 @@
 """Session defaults that must fit the host they run on."""
 
+import os
+import subprocess
+import sys
+import textwrap
+import zipfile
+
 import pytest
 
+import skyline_daemon
+from flink_skyline_qos_spark import session
 from flink_skyline_qos_spark.session import default_driver_memory
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize("mem_total_kb, want", [
@@ -23,3 +33,93 @@ def test_default_driver_memory_without_meminfo(tmp_path):
     empty = tmp_path / "empty"
     empty.write_text("")
     assert default_driver_memory(str(empty)) == "1g"
+
+
+def _package(root, name, version=None):
+    pkg = root / name
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    if version is not None:
+        (pkg / "version.py").write_text(f"__version__: str = '{version}'\n")
+
+
+@pytest.mark.parametrize("installed, py4j, dropped", [
+    ("4.1.2", True, True),      # the zip's version and py4j: zips go
+    ("4.0.0", True, False),     # another pyspark version
+    (None, True, False),        # no installed pyspark
+    ("4.1.2", False, False),    # no installed py4j
+])
+def test_worker_path_drops_the_zips_only_for_a_matching_install(
+        tmp_path, installed, py4j, dropped):
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    with zipfile.ZipFile(lib / "pyspark.zip", "w") as zf:
+        zf.writestr("pyspark/__init__.py", "")
+        zf.writestr("pyspark/version.py", "__version__: str = '4.1.2'\n")
+    with zipfile.ZipFile(lib / "py4j-0.10.9.9-src.zip", "w") as zf:
+        zf.writestr("py4j/__init__.py", "")
+    site = tmp_path / "site"
+    site.mkdir()
+    if installed is not None:
+        _package(site, "pyspark", installed)
+    if py4j:
+        _package(site, "py4j")
+    cwd = str(tmp_path / "cwd")
+    path = [cwd, str(lib / "pyspark.zip"), str(lib / "py4j-0.10.9.9-src.zip"),
+            str(site)]
+    want = [cwd, str(site)] if dropped else path
+    assert skyline_daemon.worker_path(path) == want
+
+
+def test_daemon_module_only_where_local_workers_import_it(tmp_path,
+                                                          monkeypatch):
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.chdir(ROOT)
+    assert session._daemon_module("local[4]") == "skyline_daemon"
+    assert session._daemon_module("spark://host:7077") is None
+    monkeypatch.chdir(tmp_path)
+    assert session._daemon_module("local[4]") is None
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), ROOT]))
+    assert session._daemon_module("local[*]") == "skyline_daemon"
+
+
+def test_workers_import_the_installed_pyspark(spark):
+    """Python workers load pyspark from the interpreter's installation,
+    with no zip archive on their import path."""
+
+    def probe(_):
+        import os
+        import sys
+
+        import pyspark
+        return pyspark.__file__, [p for p in sys.path
+                                  if p.endswith(".zip") and os.path.isfile(p)]
+
+    got = spark.sparkContext.parallelize(range(4), 4).map(probe).collect()
+    for pyspark_file, zips in got:
+        assert ".zip" not in pyspark_file
+        assert zips == []
+
+
+def test_python_tasks_run_where_workers_cannot_import_the_daemon(tmp_path):
+    """Neither the working directory nor PYTHONPATH holds the repo root,
+    so the session keeps Spark's own daemon, and Python tasks run."""
+    script = tmp_path / "job.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from flink_skyline_qos_spark.session import get_spark
+        spark = get_spark("no-daemon", master="local[1]")
+        daemon = spark.sparkContext.getConf().get(
+            "spark.python.daemon.module", "pyspark.daemon")
+        rows = spark.sparkContext.parallelize(range(3), 1).map(
+            lambda x: x + 1).collect()
+        print("RESULT", daemon, rows)
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "512m"
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "RESULT pyspark.daemon [1, 2, 3]" in out.stdout.splitlines()
