@@ -22,13 +22,13 @@ def warm_arrow_pool(spark) -> None:
     """Start every Arrow Python worker outside any timed section.  The
     first pandas-UDF stage of a session forks one worker per core, and
     each imports numpy, pandas and pyarrow; one narrow ``mapInPandas``
-    pass over two partitions per core pays that once.  On a 4-vCPU host
-    it now costs ~WARM s wall, down from 3.0-3.6 s while the workers
-    imported PySpark from ``pyspark.zip`` and re-read the archive on
-    every task (see ``skyline_daemon``).  Plans that run kernels in
-    Python workers need it: ``skyline()``, the variants and the grouped
-    prunes.  ``skyline_two_phase`` and ``SkylinePipeline`` run their
-    kernels in the driver and start no Python worker.  Shared by
+    pass over two partitions per core pays that once.  It takes ~2.0 s
+    wall on a 4-vCPU host (``session.arrow_warm_s``, perfbench seed 1);
+    the workers' tasks no longer re-read ``pyspark.zip``
+    (``skyline_daemon``).  Plans that run kernels in Python workers need
+    it: ``skyline()``, the variants and the grouped prunes.
+    ``skyline_two_phase`` and ``SkylinePipeline`` run their kernels in
+    the driver and start no Python worker.  Shared by
     tools/check_oracle.py and perfbench/run.py."""
 
     def _ident(batches):

@@ -1,18 +1,21 @@
 """Spark's Python worker daemon, started with PySpark imported from the
-interpreter's installation rather than from ``$SPARK_HOME/python/lib``.
+interpreter's installation rather than from Spark's own archives.
 
-Spark puts ``pyspark.zip`` and ``py4j-*-src.zip`` first on every Python
-worker's ``PYTHONPATH``.  PySpark's worker calls
-``importlib.invalidate_caches()`` on every task, and on Python 3.11 that
-makes every ``zipimporter`` in ``sys.path_importer_cache`` re-read its
-archive's whole directory: one importer per PySpark subpackage loaded
-from the zip, ~1.7k entries each, ~250 ms of CPU per task.
+Spark puts ``$SPARK_HOME/python/lib/pyspark.zip``, ``py4j-*-src.zip``
+and its ``spark-core_*.jar`` (for deployments that ship PySpark inside
+the jar) first on every Python worker's ``PYTHONPATH``.  PySpark's
+worker calls ``importlib.invalidate_caches()`` on every task, and on
+Python 3.11 that makes every ``zipimporter`` in
+``sys.path_importer_cache`` re-read its archive's whole directory: the
+zip's ~1.7k entries once per PySpark subpackage imported from it, and
+the jar's ~5.4k.  On a 4-vCPU host a trivial task cost its worker
+~275 ms of CPU with the archives on the path and ~20 ms without.
 
-So, before anything imports ``pyspark``, this module drops the zips from
-``sys.path`` (and their importers from ``sys.path_importer_cache``) when
-an installed ``pyspark`` of the zip's version and an installed ``py4j``
-resolve without them.  Otherwise the zips stay.  It then runs
-``pyspark.daemon.manager()`` unchanged.
+So, before anything imports ``pyspark``, this module drops those
+archives from ``sys.path`` (and their importers from
+``sys.path_importer_cache``) when an installed ``pyspark`` of the zip's
+version and an installed ``py4j`` resolve without them.  Otherwise they
+stay.  It then runs ``pyspark.daemon.manager()`` unchanged.
 
 It is a top-level module beside ``flink_skyline_qos_spark``, not inside
 it, because the package's ``__init__`` imports ``pyspark`` and would
@@ -28,7 +31,7 @@ import sys
 import zipfile
 from importlib.machinery import PathFinder
 
-_SPARK_ZIP = re.compile(r"^(pyspark|py4j-.*-src)\.zip$")
+_SPARK_ARCHIVE = re.compile(r"^((pyspark|py4j-.*-src)\.zip|spark-core_.*\.jar)$")
 _VERSION = re.compile(r"""__version__\s*(?::\s*str\s*)?=\s*["']([^"']+)["']""")
 
 
@@ -38,14 +41,14 @@ def _version(source: str) -> str | None:
 
 
 def worker_path(path: list[str]) -> list[str]:
-    """`path` without Spark's ``pyspark.zip`` and ``py4j-*-src.zip``
-    entries when ``pyspark`` and ``py4j`` resolve from the rest of it and
-    the resolved ``pyspark/version.py`` names the zip's version; `path`
-    unchanged otherwise."""
-    zips = [p for p in path if _SPARK_ZIP.match(os.path.basename(p))]
-    rest = [p for p in path if p not in zips]
+    """`path` without Spark's ``pyspark.zip``, ``py4j-*-src.zip`` and
+    ``spark-core_*.jar`` entries when ``pyspark`` and ``py4j`` resolve
+    from the rest of it and the resolved ``pyspark/version.py`` names the
+    zip's version; `path` unchanged otherwise."""
+    archives = [p for p in path if _SPARK_ARCHIVE.match(os.path.basename(p))]
+    rest = [p for p in path if p not in archives]
     pyspark_zip = next(
-        (p for p in zips if os.path.basename(p) == "pyspark.zip"), None)
+        (p for p in archives if os.path.basename(p) == "pyspark.zip"), None)
     if pyspark_zip is None:
         return path
     spec = PathFinder.find_spec("pyspark", rest)
@@ -63,11 +66,11 @@ def worker_path(path: list[str]) -> list[str]:
     return rest if zipped is not None and zipped == installed else path
 
 
-def _drop_zips() -> None:
+def _drop_archives() -> None:
     kept = worker_path(sys.path)
     dropped = [p for p in sys.path if p not in kept]
     sys.path[:] = kept
-    # Interpreter start-up may already have built importers for the zips
+    # Interpreter start-up may already have built importers for them
     # (the `sitecustomize` lookup walks every path entry), and
     # invalidate_caches() reaches them through this cache.
     for key in list(sys.path_importer_cache):
@@ -76,7 +79,7 @@ def _drop_zips() -> None:
 
 
 if __name__ == "__main__":
-    _drop_zips()
+    _drop_archives()
     from pyspark import daemon
 
     daemon.manager()

@@ -44,12 +44,12 @@ def _package(root, name, version=None):
 
 
 @pytest.mark.parametrize("installed, py4j, dropped", [
-    ("4.1.2", True, True),      # the zip's version and py4j: zips go
+    ("4.1.2", True, True),      # the zip's version and py4j: archives go
     ("4.0.0", True, False),     # another pyspark version
     (None, True, False),        # no installed pyspark
     ("4.1.2", False, False),    # no installed py4j
 ])
-def test_worker_path_drops_the_zips_only_for_a_matching_install(
+def test_worker_path_drops_the_archives_only_for_a_matching_install(
         tmp_path, installed, py4j, dropped):
     lib = tmp_path / "lib"
     lib.mkdir()
@@ -64,9 +64,12 @@ def test_worker_path_drops_the_zips_only_for_a_matching_install(
         _package(site, "pyspark", installed)
     if py4j:
         _package(site, "py4j")
+    jar = tmp_path / "jars" / "spark-core_2.13-4.1.2.jar"
+    jar.parent.mkdir()
+    zipfile.ZipFile(jar, "w").close()
     cwd = str(tmp_path / "cwd")
     path = [cwd, str(lib / "pyspark.zip"), str(lib / "py4j-0.10.9.9-src.zip"),
-            str(site)]
+            str(jar), str(site)]
     want = [cwd, str(site)] if dropped else path
     assert skyline_daemon.worker_path(path) == want
 
@@ -85,20 +88,26 @@ def test_daemon_module_only_where_local_workers_import_it(tmp_path,
 
 def test_workers_import_the_installed_pyspark(spark):
     """Python workers load pyspark from the interpreter's installation,
-    with no zip archive on their import path."""
+    with no zip or jar archive on their import path and no archive
+    importer for a task's ``importlib.invalidate_caches()`` to re-read."""
 
     def probe(_):
         import os
         import sys
+        import zipimport
 
         import pyspark
-        return pyspark.__file__, [p for p in sys.path
-                                  if p.endswith(".zip") and os.path.isfile(p)]
+        archives = [p for p in sys.path if p.endswith((".zip", ".jar"))
+                    and os.path.isfile(p)]
+        importers = [k for k, v in sys.path_importer_cache.items()
+                     if isinstance(v, zipimport.zipimporter)]
+        return pyspark.__file__, archives, importers
 
     got = spark.sparkContext.parallelize(range(4), 4).map(probe).collect()
-    for pyspark_file, zips in got:
+    for pyspark_file, archives, importers in got:
         assert ".zip" not in pyspark_file
-        assert zips == []
+        assert archives == []
+        assert importers == []
 
 
 def test_python_tasks_run_where_workers_cannot_import_the_daemon(tmp_path):
