@@ -272,8 +272,8 @@ def split_by_pid(pids: np.ndarray) -> dict[int, np.ndarray]:
     ascending pid order, rows in input order within each pid.  The one
     sort is a stable argsort of the pids narrowed to 8 or 16 bits, which
     NumPy radix-sorts; group bounds come from ``np.bincount``.  Over
-    500k rows in 8 pids: ~5 ms, against ~25 ms for the stable
-    comparison sort of the int32 pids (4-vCPU host)."""
+    500k rows in 8 pids: ~8 ms, against ~25 ms for the stable argsort of
+    the int32 pids alone (4-vCPU host)."""
     counts = np.bincount(pids)
     key = pids
     for t in (np.uint8, np.uint16):
@@ -282,9 +282,9 @@ def split_by_pid(pids: np.ndarray) -> dict[int, np.ndarray]:
             break
     order = np.argsort(key, kind="stable")
     keys = np.flatnonzero(counts)
-    ends = np.cumsum(counts[keys])
-    return {int(p): order[e - c:e]
-            for p, c, e in zip(keys, counts[keys], ends)}
+    sizes = counts[keys]
+    ends = np.cumsum(sizes)
+    return {int(p): order[e - n:e] for p, n, e in zip(keys, sizes, ends)}
 
 
 def scale_out(df, probe=None):

@@ -22,9 +22,9 @@ def warm_arrow_pool(spark) -> None:
     """Start every Arrow Python worker outside any timed section.  The
     first pandas-UDF stage of a session forks one worker per core, and
     each imports numpy, pandas and pyarrow; one narrow ``mapInPandas``
-    pass over two partitions per core pays that once.  It takes ~2.0 s
-    wall on a 4-vCPU host (``session.arrow_warm_s``, perfbench seed 1);
-    the workers' tasks no longer re-read ``pyspark.zip``
+    pass over two partitions per core pays that once.  It takes ~1.5-1.7 s
+    wall on a 4-vCPU host (``session.arrow_warm_s``, perfbench seed 1),
+    since worker tasks no longer re-read Spark's PySpark archives
     (``skyline_daemon``).  Plans that run kernels in Python workers need
     it: ``skyline()``, the variants and the grouped prunes.
     ``skyline_two_phase`` and ``SkylinePipeline`` run their kernels in

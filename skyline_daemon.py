@@ -7,8 +7,8 @@ the jar) first on every Python worker's ``PYTHONPATH``.  PySpark's
 worker calls ``importlib.invalidate_caches()`` on every task, and on
 Python 3.11 that makes every ``zipimporter`` in
 ``sys.path_importer_cache`` re-read its archive's whole directory: the
-zip's ~1.7k entries once per PySpark subpackage imported from it, and
-the jar's ~5.4k.  On a 4-vCPU host a trivial task cost its worker
+zip's ~1.3k files once per PySpark subpackage imported from it, and the
+jar's ~5.4k.  On a 4-vCPU host a trivial task cost its worker
 ~275 ms of CPU with the archives on the path and ~20 ms without.
 
 So, before anything imports ``pyspark``, this module drops those
