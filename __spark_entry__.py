@@ -37,7 +37,6 @@ from flink_skyline_qos_spark.operators.caching import (  # noqa: E402
 from flink_skyline_qos_spark.operators.skyline import (  # noqa: E402
     skyline_2d_window,
     skyline_auto,
-    skyline_broadcast_verify,
     skyline_delta,
     skyline_delta_delete,
     skyline_layers,
@@ -387,25 +386,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["skyline_3d_lineitem"] = lambda s, d: skyline(_li(s, d), LI_DIMS3)
     # same answer through the TREE-MERGE band: one intermediate
     # hash-distributed merge level between local prune and the final
-    # single-task merge (the middle regime between tiny-survivor
-    # single-merge and huge-survivor broadcast/scatter verify)
+    # single-task merge
     q["skyline_3d_tree_merge_lineitem"] = lambda s, d: skyline(
         _li(s, d), LI_DIMS3, merge_partitions=8)
     # 4-D on the real table (the reference's hardest regime, PDF §5.4)
     q["skyline_4d_lineitem"] = lambda s, d: skyline(
         _li(s, d), [*LI_DIMS3, "l_tax"])
-    # broadcast-verify WITH the lossless sampled-dominator JVM
-    # pre-filter (the generalized P4 prune, VERDICT r7 #2): a codegen'd
-    # Filter below the Python prune node kills strictly-dominated rows
-    # before they cross the Arrow boundary; result is value-identical
-    # to the plain 3-D skyline.
-    q["skyline_3d_prefilter_lineitem"] = lambda s, d: \
-        skyline_broadcast_verify(_li(s, d), LI_DIMS3, prefilter_refs=16)
-    # broadcast-verify WITH the lossless grid-envelope JVM pre-filter
-    # (round 10: per-cell witness field, the strongest pre-Arrow
-    # reduction); result is value-identical to the plain 3-D skyline.
-    q["skyline_3d_envelope_lineitem"] = lambda s, d: \
-        skyline_broadcast_verify(_li(s, d), LI_DIMS3, envelope_cells=True)
+    # two-phase WITH the witness-guarded dominated-region prune (P4,
+    # the filter the reference ships disabled) in the JVM; result is
+    # value-identical to the plain 3-D skyline.
+    q["skyline_3d_prefilter_lineitem"] = lambda s, d: skyline_two_phase(
+        _li(s, d), LI_DIMS3, algo="mr-grid", num_partitions=8,
+        prefilter=True)
+    # two-phase WITH the lossless grid-envelope JVM pre-filter (round
+    # 10: per-cell witness field, the strongest pre-Arrow reduction);
+    # result is value-identical to the plain 3-D skyline.
+    q["skyline_3d_envelope_lineitem"] = lambda s, d: skyline_two_phase(
+        _li(s, d), LI_DIMS3, algo="mr-angle", num_partitions=8,
+        envelope_cells=True)
     # two-phase WITH the envelope prefilter (round 11: the knob reached
     # the reference-parity plan — it cuts both shuffle #1 and the
     # grouped Python transport); value-identical to the plain 2-D
@@ -1838,17 +1836,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ["d0", "d1"], algo="mr-angle", num_partitions=NUM_PARTS,
         domain_max=10000.0,
     )
-    # 4-D through the huge-survivor broadcast-verify strategy
-    q["gen_anticorr_skyline_4d"] = lambda s, d: skyline_broadcast_verify(
+    # 4-D through the executor plan (local prune + single merge)
+    q["gen_anticorr_skyline_4d"] = lambda s, d: skyline(
         generate_points_hash(s, GEN_N, 4, dist="anti_correlated"),
         ["d0", "d1", "d2", "d3"],
     )
-    # the ADAPTIVE strategy on the same 4-D set: measures survivors and
-    # dispatches (here: the huge-survivor hybrid-verify branch) — the
-    # measure-then-replan path, oracled against the same NOT-EXISTS
+    # the ADAPTIVE plan on the same 4-D set: it reads the optimizer's
+    # size estimate and picks the driver two-phase plan or the executor
+    # plan (here: the driver), oracled against the same NOT-EXISTS
     q["gen_anticorr_skyline_auto_4d"] = lambda s, d: skyline_auto(
         generate_points_hash(s, GEN_N, 4, dist="anti_correlated"),
-        ["d0", "d1", "d2", "d3"], broadcast_threshold=1000,
+        ["d0", "d1", "d2", "d3"],
     )
 
     # unlabeled scale path: random-hyperplane LSH blocking, exact verify.
@@ -1915,7 +1913,7 @@ FROM ranked WHERE rn <= {k}
         li, LI_DIMS3)
     o["skyline_4d_lineitem"] = skyline_not_exists_sql(
         li, [*LI_DIMS3, "l_tax"])
-    # prefiltered broadcast-verify is lossless ⇒ same oracle as 3-D
+    # the prefiltered two-phase plans are lossless ⇒ same oracle as 3-D
     o["skyline_3d_prefilter_lineitem"] = skyline_not_exists_sql(
         li, LI_DIMS3)
     o["skyline_3d_envelope_lineitem"] = skyline_not_exists_sql(

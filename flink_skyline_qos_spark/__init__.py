@@ -22,7 +22,6 @@ from .operators.skyline import (
     skyline,
     skyline_2d_window,
     skyline_anti_join,
-    skyline_broadcast_verify,
     skyline_two_phase,
 )
 from .operators.variants import (
@@ -54,7 +53,7 @@ __all__ = [
     "dominates", "dominance_sql", "skyline_not_exists_sql",
     "mr_dim", "mr_grid", "mr_angle", "partitioner_expr", "partitioner_sql",
     "skyline", "skyline_two_phase", "skyline_anti_join",
-    "skyline_broadcast_verify", "grouped_skyline", "skyline_2d_window",
+    "grouped_skyline", "skyline_2d_window",
     "grid_prefilter", "k_dominant_skyline", "top_k_dominating",
     "k_skyband", "skycube", "dynamic_skyline", "reverse_skyline",
     "epsilon_skyline",

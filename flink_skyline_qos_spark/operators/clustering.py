@@ -167,10 +167,9 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     Hybrid dispatch: when the canonical edge set is at most
     `driver_threshold` pairs, the components are computed with a
     driver-side union-find over the collected pairs (bounded state:
-    500k pairs ≈ 8 MB collected, ≪ the 64 MB the broadcast-verify
-    skyline path already budgets for driver-held candidate values)
-    and the labels broadcast back — replacing 3-5 star-contraction
-    rounds (a job + checkpoint each) with one collect.  The threshold
+    500k pairs ≈ 8 MB collected) and the labels broadcast back —
+    replacing 3-5 star-contraction rounds (a job + checkpoint each)
+    with one collect.  The threshold
     was 64k through round 12; measured at 99,999 edges (the 1M-doc
     dedup pipeline), the distributed rounds cost 11.3 s where the
     driver path is ~1 s (optimization r13) — the star-contraction
@@ -234,9 +233,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
             # transferred).  String node ids can make the same row
             # count arbitrarily heavy, so estimate the collected bytes
             # from the persisted frame before dispatching to the
-            # driver; past 64 MB (the broadcast-verify skyline path's
-            # documented driver budget) take the distributed rounds
-            # instead.  `probe` is the EXACT edge count here (the
+            # driver; past 64 MB take the distributed rounds instead.
+            # `probe` is the EXACT edge count here (the
             # limit(threshold+1) short-circuit only engages above the
             # threshold), so one tiny agg over a 10k-row sample prices
             # the transfer.

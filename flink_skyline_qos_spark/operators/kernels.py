@@ -149,17 +149,6 @@ def _dominated_sorted_T(aT: np.ndarray, a_sums: np.ndarray,
     return out
 
 
-def _dominated_sorted(a: np.ndarray, a_sums: np.ndarray,
-                      b: np.ndarray, b_sums: np.ndarray) -> np.ndarray:
-    """Mask over rows of `b` ((n, d) layout): strictly dominated by some
-    row of `a`.  Row-major façade over :func:`_dominated_sorted_T` —
-    detects the joint layout, transposes once, runs the core."""
-    d = b.shape[1] if b.ndim == 2 else a.shape[1]
-    dtype, exact = _layout((a, b), d)
-    return _dominated_sorted_T(_transpose(a, dtype), a_sums,
-                               _transpose(b, dtype), b_sums, exact)
-
-
 def dominated_by_any(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Boolean mask over rows of `b`: is b[j] strictly dominated by some a[i].
 

@@ -71,54 +71,23 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_broadcast_verify_releases_cache(spark):
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
-    from flink_skyline_qos_spark.sources.generators import (
-        generate_points_hash,
-    )
-
-    pts = generate_points_hash(spark, 5_000, 3, dist="anti_correlated")
-    base = _baseline(spark)
-    out = skyline_broadcast_verify(pts, ["d0", "d1", "d2"],
-                                   pre_merge_partitions=4)
-    out.count()
-    assert _n_persistent(spark) > base  # pinned while the result is alive
-    del out
-    gc.collect()
-    # <=, not ==: a STALE pin from an earlier test draining
-    # during this test legitimately lands below the baseline
-    assert _settle(spark, base) <= base
-
-
-def test_skyline_auto_releases_caches_both_branches(spark):
-    from flink_skyline_qos_spark.operators.skyline import skyline_auto
+def test_skyline_auto_releases_caches_both_branches(spark, monkeypatch):
+    """Neither branch of skyline_auto persists anything: the driver
+    branch collects once, the executor branch is a lazy plan."""
+    from flink_skyline_qos_spark.operators import skyline as sky
     from flink_skyline_qos_spark.sources.generators import (
         generate_points_hash,
     )
 
     pts = generate_points_hash(spark, 3_000, 3, dist="anti_correlated")
     base = _baseline(spark)
-    # huge-survivor branch (threshold 0): first-stage pin must be released
-    # EAGERLY once the re-prune materializes, the rest on GC
-    out = skyline_auto(pts, ["d0", "d1", "d2"], broadcast_threshold=0)
-    out.count()
-    assert _n_persistent(spark) <= base + 1  # only re_pruned still pinned
-    del out
-    gc.collect()
-    # <=, not ==: a STALE pin from an earlier test draining
-    # during this test legitimately lands below the baseline
-    assert _settle(spark, base) <= base
-    # small-survivor branch
-    out = skyline_auto(pts, ["d0", "d1", "d2"],
-                       broadcast_threshold=10_000_000)
-    out.count()
-    del out
-    gc.collect()
-    # <=, not ==: a STALE pin from an earlier test draining
-    # during this test legitimately lands below the baseline
-    assert _settle(spark, base) <= base
+    driver = sky.skyline_auto(pts, ["d0", "d1", "d2"])
+    assert driver.count() > 0
+    assert _n_persistent(spark) <= base
+    monkeypatch.setattr(sky, "_DRIVER_SHARE", 0.0)
+    executor = sky.skyline_auto(pts, ["d0", "d1", "d2"])
+    assert executor.count() == driver.count()
+    assert _n_persistent(spark) <= base
 
 
 def test_minhash_releases_signature_cache(spark, docs):

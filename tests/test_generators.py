@@ -115,25 +115,3 @@ def test_fractional_anticorr_unique_vectors_in_domain(spark):
     deg = generate_points(spark, 20_000, 4, dist="anti_correlated",
                           num_partitions=8, fractional=True)
     assert deg.select(*dims).distinct().count() < 20_000
-
-
-def test_dispatch_probe_records_scatter_and_broadcast(spark):
-    """skyline_broadcast_verify exposes which verify branch ran (the
-    `_verify_strategy` probe) — bench rows log it so scatter coverage
-    is auditable."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
-    from flink_skyline_qos_spark.sources.generators import generate_points
-
-    pts = generate_points(spark, 50_000, 4, dist="anti_correlated",
-                          num_partitions=8, fractional=True, eps=0.2)
-    dims = ["d0", "d1", "d2", "d3"]
-    forced = skyline_broadcast_verify(pts, dims, scatter_threshold=100)
-    n_sc = forced.count()
-    assert forced._verify_strategy[0] == "scatter"
-    assert forced._verify_strategy[1] > 100
-    default = skyline_broadcast_verify(pts, dims)
-    n_bc = default.count()
-    assert default._verify_strategy[0] == "broadcast"
-    assert n_sc == n_bc  # both branches are exact

@@ -147,37 +147,6 @@ def test_profile_events_single_aggregate_exchange(spark):
     assert not any(n in plan for n in _PYTHON_NODES), plan
 
 
-def test_scatter_verify_exchange_not_coalesced(spark):
-    """The scatter verify's group exchange must keep its k partitions:
-    AQE would coalesce it by its few-MB shuffle size and serialize the
-    compute-bound kernels into one task (r4: 99 s vs 3 s).  A
-    user-specified repartition pins it — assert the plan carries the
-    REPARTITION_BY_NUM shuffle origin on the __ck hash exchange, and
-    that the groupBy inserts no second exchange above it."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        _local_prune,
-        _verify_scatter,
-    )
-    from flink_skyline_qos_spark.sources.generators import (
-        generate_points_hash,
-    )
-
-    pts = generate_points_hash(spark, 2_000, 3, dist="anti_correlated")
-    cols = ["d0", "d1", "d2"]
-    pruned = _local_prune(pts, cols).persist()
-    try:
-        pruned.count()
-        plan = _plan(_verify_scatter(pruned, cols, chunks=8))
-        m = re.findall(r"hashpartitioning\(__ck\S*, 8\), REPARTITION_BY_NUM",
-                       plan)
-        assert m, plan
-        # exactly one exchange between the union and the stateless group
-        # kernel: the pinned repartition satisfies the clustering
-        assert plan.count("hashpartitioning(__ck") == 1, plan
-    finally:
-        pruned.unpersist()
-
-
 def test_topk_dominating_broadcasts_reduced_candidates(spark):
     """Safe-by-default top-k dominating: the count join must stream the
     full input against BROADCAST candidates (BroadcastNestedLoopJoin,
@@ -466,35 +435,6 @@ def test_c4_rules_two_hash_aggregates_no_join_for_mode(spark):
     # final empty-doc restore on the id key
     assert "SortMergeJoin" not in plan, plan
     assert len(re.findall(r"^\(\d+\) \w*Join", plan, re.M)) <= 1, plan
-
-
-def test_sampled_prefilter_below_python_node_and_pushed_down(spark):
-    """VERDICT r7 #2: the sampled-dominator pre-filter must be a
-    codegen'd Filter BELOW the local-prune Python node — rows it kills
-    never cross the Arrow boundary — and its strict-dominance
-    comparisons must reach the parquet scan as PushedFilters."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
-
-    dims = ["l_extendedprice", "l_discount"]
-    li = load_table(spark, SF_DIR, "lineitem").select(*dims)
-    plan = _plan(skyline_broadcast_verify(li, dims, prefilter_refs=8))
-    tree = plan.split("\n\n", 1)[0]
-    # tree prints root-first: the Python prune node must appear ABOVE
-    # the Filter, which sits directly on the scan
-    assert re.search(r"MapIn(?:Pandas|Arrow)[\s\S]*\* Filter[\s\S]*"
-                     r"Scan parquet", tree), tree
-    # the dominance literals are scan-pushed (data-skipping at source)
-    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert m and "LessThan(l_extendedprice" in m.group(1), plan
-    # under the width-safe rewrite (full-width input) the same property
-    # holds inside the narrow branch: the dominance literals reach SOME
-    # scan (the dims-only prune scan; the join-back scan has none)
-    wide_plan = _plan(skyline_broadcast_verify(
-        load_table(spark, SF_DIR, "lineitem"), dims, prefilter_refs=8))
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", wide_plan)
-    assert any("LessThan(l_extendedprice" in p for p in pushed), wide_plan
 
 
 def test_minhash_hashing_runs_after_scale_out_exchange(spark):

@@ -113,69 +113,6 @@ def test_skyline_tree_merge(lineitem, oracle_2d):
     assert spark_rows(got, all_cols(lineitem)) == oracle_2d
 
 
-def test_skyline_broadcast_verify(lineitem, oracle_2d, sf_dir):
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
-
-    got = skyline_broadcast_verify(lineitem, DIMS2)
-    assert spark_rows(got, all_cols(lineitem)) == oracle_2d
-    oracle3 = as_sorted(duck_skyline(sf_dir, "lineitem", DIMS3))
-    got3 = skyline_broadcast_verify(lineitem, DIMS3)
-    assert spark_rows(got3, all_cols(lineitem)) == oracle3
-    # scatter_threshold=0 forces the driver-free scatter-replicate
-    # verify (otherwise only reached above 2M survivors) — same answer
-    got_s = skyline_broadcast_verify(lineitem, DIMS2, scatter_threshold=0)
-    assert spark_rows(got_s, all_cols(lineitem)) == oracle_2d
-
-
-def test_sampled_prefilter_lossless(lineitem, oracle_2d, sf_dir):
-    """The sampled-dominator JVM pre-filter never changes the answer:
-    it only removes rows strictly dominated by actual data points."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        sampled_dominator_prefilter,
-        skyline_broadcast_verify,
-    )
-
-    got = skyline_broadcast_verify(lineitem, DIMS2, prefilter_refs=16)
-    assert spark_rows(got, all_cols(lineitem)) == oracle_2d
-    oracle3 = as_sorted(duck_skyline(sf_dir, "lineitem", DIMS3))
-    got3 = skyline_broadcast_verify(lineitem, DIMS3, prefilter_refs=16)
-    assert spark_rows(got3, all_cols(lineitem)) == oracle3
-    # raw pre-filter supersethood at a 100% sample: every skyline
-    # vector must survive the filter (losslessness in its purest form)
-    proj = lineitem.select(*DIMS2)
-    filtered = sampled_dominator_prefilter(
-        proj, DIMS2, refs=64, fraction=1.0, sample_cap=10 ** 9)
-    surv = {tuple(r) for r in filtered.collect()}
-    sky = {tuple(r) for r in skyline(proj, DIMS2).collect()}
-    assert sky <= surv
-
-
-def test_sampled_prefilter_keeps_duplicates_of_refs(spark):
-    """Reference points are dataset members; strict dominance means
-    duplicate copies of a frontier point all survive the pre-filter
-    while strictly-dominated rows are dropped.  fraction=1.0 so the
-    filter actually engages on this tiny frame (the default 0.001
-    sample would fall under the <4-row guard and pass vacuously —
-    review finding, round 8)."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        sampled_dominator_prefilter,
-        skyline_broadcast_verify,
-    )
-
-    rows = [(i, 1.0, 1.0) for i in range(50)] + \
-           [(100 + i, 2.0, 2.0) for i in range(50)]
-    df = spark.createDataFrame(rows, "id long, d0 double, d1 double")
-    filtered = sampled_dominator_prefilter(df, ["d0", "d1"], refs=4,
-                                           fraction=1.0)
-    # every duplicate of the frontier point (a reference candidate)
-    # survives; every (2,2) copy is strictly dominated and dropped
-    assert sorted(r.id for r in filtered.collect()) == list(range(50))
-    got = skyline_broadcast_verify(df, ["d0", "d1"], prefilter_refs=4)
-    assert sorted(r.id for r in got.collect()) == list(range(50))
-
-
 def test_grouped_skyline(events, sf_dir):
     from pyspark.sql import functions as F
 
@@ -275,76 +212,48 @@ def test_grouped_skyline_null_group_keys(spark):
         assert {r.id for r in got.collect()} == {1, 2, 4}, strategy
 
 
-def test_skyline_auto_both_branches(lineitem, oracle_2d):
-    from flink_skyline_qos_spark.operators.skyline import skyline_auto
+def test_skyline_auto_both_branches(lineitem, oracle_2d, monkeypatch):
+    """Both branches answer the oracle.  lineitem fits the driver
+    budget and runs the driver two-phase plan; with the budget at 0 it
+    runs the executor plan.  Only the executor plan's local prune is a
+    MapInArrow node."""
+    from flink_skyline_qos_spark.operators import skyline as sky
 
-    # tiny survivor set → merge branch
-    got = skyline_auto(lineitem, DIMS2)
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    got = sky.skyline_auto(lineitem, DIMS2)
+    assert "MapInArrow" not in plan(got)
     assert spark_rows(got, all_cols(lineitem)) == oracle_2d
-    # threshold 0 → broadcast-verify branch, same answer
-    got_b = skyline_auto(lineitem, DIMS2, broadcast_threshold=0)
-    assert spark_rows(got_b, all_cols(lineitem)) == oracle_2d
-    # both thresholds 0 → re-prune + scatter verify, same answer
-    got_s = skyline_auto(lineitem, DIMS2, broadcast_threshold=0,
-                         scatter_threshold=0)
-    assert spark_rows(got_s, all_cols(lineitem)) == oracle_2d
-    # + the lossless grid-envelope prefilter (r10): same answer
-    got_e = skyline_auto(lineitem, DIMS2, envelope_cells=True)
-    assert spark_rows(got_e, all_cols(lineitem)) == oracle_2d
+    monkeypatch.setattr(sky, "_DRIVER_SHARE", 0.0)
+    got = sky.skyline_auto(lineitem, DIMS2)
+    assert "MapInArrow" in plan(got)
+    assert spark_rows(got, all_cols(lineitem)) == oracle_2d
 
 
-def test_verify_paths_agree_on_4d_anticorr(spark):
-    """Broadcast and scatter verifies return identical skylines on a
-    nontrivial 4-D anti-correlated set (hash generator: deterministic,
-    partition-layout independent)."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
-    from flink_skyline_qos_spark.sources.generators import (
-        generate_points_hash,
-    )
-
-    pts = generate_points_hash(spark, 20_000, 4, dist="anti_correlated")
-    cols = ["d0", "d1", "d2", "d3"]
-    nb = {tuple(r) for r in
-          skyline_broadcast_verify(pts, cols,
-                                   pre_merge_partitions=8).collect()}
-    ns = {tuple(r) for r in
-          skyline_broadcast_verify(pts, cols, pre_merge_partitions=8,
-                                   scatter_threshold=0).collect()}
-    assert nb == ns
-    assert len(nb) > 1000  # anti-correlated 4-D: large skyline expected
-
-
-def test_scatter_verify_above_threshold_1m_4d(spark):
-    """VERDICT r3 #1: execute the scatter-verify path ABOVE its
-    threshold at the designated scale — 1M 4-D anti-correlated with
-    scatter_threshold=100k routes its ~222k survivors through the
-    driver-free scatter exchange (r2's scatter defect shipped precisely
-    because this regime had only ever run below threshold).  Parity
-    against the broadcast form on the identical input."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
-    from flink_skyline_qos_spark.sources.generators import generate_points
-
-    par = spark.sparkContext.defaultParallelism
-    pts = generate_points(spark, 1_000_000, 4, dist="anti_correlated",
-                          num_partitions=2 * par).persist()
+def _count_jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
     try:
-        cols = ["d0", "d1", "d2", "d3"]
-        scatter = skyline_broadcast_verify(
-            pts, cols, pre_merge_partitions=par,
-            scatter_threshold=100_000)
-        broadcast = skyline_broadcast_verify(
-            pts, cols, pre_merge_partitions=par)
-        ns = scatter.groupBy(*cols).count()
-        nb = broadcast.groupBy(*cols).count()
-        assert {tuple(r) for r in ns.collect()} \
-            == {tuple(r) for r in nb.collect()}
-        assert scatter.count() > 100_000  # genuinely above the threshold
+        out = fn()
     finally:
-        pts.unpersist()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_two_phase_mr_angle_infers_no_domain_max(spark):
+    """MR-Angle never reads domain_max, so with domain_max=None the
+    toArrow() collect is the only Spark job: no max() job runs."""
+    df = spark.range(2000).select(
+        "id", (F.col("id") * 7919 % 997).cast("double").alias("d0"),
+        (F.col("id") * 6131 % 991).cast("double").alias("d1"))
+    out, jobs = _count_jobs(spark, lambda: skyline_two_phase(
+        df, ["d0", "d1"], algo="mr-angle", num_partitions=8))
+    assert jobs == 1
+    assert spark_rows(out, df.columns) == spark_rows(
+        skyline(df, ["d0", "d1"]), df.columns)
 
 
 def test_null_dims_one_semantics_across_strategies(spark):
@@ -360,7 +269,6 @@ def test_null_dims_one_semantics_across_strategies(spark):
         skyline,
         skyline_anti_join,
         skyline_auto,
-        skyline_broadcast_verify,
         skyline_two_phase,
     )
     from flink_skyline_qos_spark.plans.metrics import skyline_query_metrics
@@ -373,7 +281,6 @@ def test_null_dims_one_semantics_across_strategies(spark):
         lambda: skyline(pts, ["x", "y"]),
         lambda: skyline_anti_join(pts, ["x", "y"]),
         lambda: skyline_two_phase(pts, ["x", "y"], domain_max=10.0),
-        lambda: skyline_broadcast_verify(pts, ["x", "y"]),
         lambda: skyline_auto(pts, ["x", "y"]),
     ):
         assert sorted(r.id for r in fn().collect()) == [1]
@@ -401,6 +308,7 @@ def test_nan_dims_one_semantics_across_strategies(spark):
     from flink_skyline_qos_spark.operators.skyline import (
         skyline,
         skyline_anti_join,
+        skyline_auto,
     )
 
     nan = float("nan")
@@ -408,9 +316,8 @@ def test_nan_dims_one_semantics_across_strategies(spark):
         [(1, 1.0, 1.0), (2, nan, 0.5), (3, 0.5, nan), (4, 2.0, 2.0)],
         "id long, x double, y double",
     )
-    assert sorted(r.id for r in skyline(pts, ["x", "y"]).collect()) == [1]
-    assert sorted(
-        r.id for r in skyline_anti_join(pts, ["x", "y"]).collect()) == [1]
+    for fn in (skyline, skyline_anti_join, skyline_auto):
+        assert sorted(r.id for r in fn(pts, ["x", "y"]).collect()) == [1]
     con = duckdb.connect()
     con.sql("CREATE TABLE t AS SELECT * FROM (VALUES (1, 1.0, 1.0), "
             "(2, 'nan'::DOUBLE, 0.5), (3, 0.5, 'nan'::DOUBLE), "
@@ -598,55 +505,6 @@ def test_mr_z_bucket_zero_local_skyline_is_final(spark):
     assert local0 <= global_sky
 
 
-def test_broadcast_verify_two_round_escalation_exact(spark):
-    """The escalating two-round verify (pre-round against the
-    lowest-sum refs slice) must return exactly the single-round
-    skyline — forced here with a tiny threshold so both paths run on
-    the same data."""
-    import numpy as np
-    from flink_skyline_qos_spark.operators.kernels import skyline_mask
-    from flink_skyline_qos_spark.operators.skyline import (
-        _complete, _verify_against_broadcast)
-
-    rs = np.random.RandomState(11)
-    pts = rs.randint(0, 50, size=(4000, 3)).astype(float)
-    df = _complete(spark.createDataFrame(
-        [(i, *map(float, row)) for i, row in enumerate(pts)],
-        "id long, d0 double, d1 double, d2 double"), ["d0", "d1", "d2"])
-    pinned = df.persist()
-    pinned.count()
-    one = _verify_against_broadcast(
-        pinned, ["d0", "d1", "d2"], escalate_threshold=10**9)
-    two = _verify_against_broadcast(
-        pinned, ["d0", "d1", "d2"], escalate_threshold=8,
-        pre_round_refs=64)
-    rows_one = sorted((r.d0, r.d1, r.d2) for r in one.collect())
-    rows_two = sorted((r.d0, r.d1, r.d2) for r in two.collect())
-    assert rows_one == rows_two
-    expected = pts[skyline_mask(pts)]
-    assert len(rows_two) == len(expected)
-    assert rows_two == sorted(map(tuple, expected))
-    pinned.unpersist()
-
-
-def test_broadcast_verify_3d_membership_keeps_duplicate_copies(spark):
-    """The d<=3 sweep + membership path must keep EVERY copy of a
-    duplicated skyline vector (ties never dominate) and drop every
-    copy of a dominated vector — same semantics as the verify kernel."""
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
-
-    rows = ([(1.0, 2.0, 3.0)] * 3      # skyline vector, 3 copies
-            + [(2.0, 1.0, 3.0)] * 2    # incomparable skyline vector
-            + [(5.0, 5.0, 5.0)] * 4)   # dominated vector, 4 copies
-    pts = spark.createDataFrame(rows, "d0 double, d1 double, d2 double")
-    got = sorted((r.d0, r.d1, r.d2)
-                 for r in skyline_broadcast_verify(
-                     pts, ["d0", "d1", "d2"]).collect())
-    assert got == sorted([(1.0, 2.0, 3.0)] * 3 + [(2.0, 1.0, 3.0)] * 2)
-
-
 def test_width_safe_rewrite_heuristic_and_equivalence(lineitem, oracle_2d):
     """The wide-row rewrite (VERDICT r8 #1): LI_COLS-wide lineitem
     trips the width heuristic, dims-only frames do not, and both paths
@@ -682,10 +540,10 @@ def test_width_safe_keeps_tied_rows_with_distinct_payloads(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, d0 double, d1 double")
     from flink_skyline_qos_spark.operators.skyline import (
-        _narrow_rewrite, skyline, skyline_auto, skyline_broadcast_verify)
+        _narrow_rewrite, skyline, skyline_auto)
 
     assert _narrow_rewrite(df, ["d0", "d1"])  # text payload -> rewrite
-    for fn in (skyline, skyline_auto, skyline_broadcast_verify):
+    for fn in (skyline, skyline_auto):
         got = sorted((r.doc_id, r.d0, r.d1)
                      for r in fn(df, ["d0", "d1"]).collect())
         assert got == [(1, 1.0, 2.0), (2, 1.0, 2.0), (3, 2.0, 1.0)], fn
@@ -772,16 +630,14 @@ def _brute_skyline_ids(ids, vals):
 @pytest.mark.parametrize("dims,n", [(3, 3000), (4, 8000)])
 def test_udt_passthrough_column_survives_every_host(spark, dims, n):
     """A user-defined-type passthrough column (`pyspark.ml` VectorUDT)
-    rides through the Arrow kernel hosts untouched: the local prune
-    (`skyline`), the 3-D membership pass and the 4-D broadcast verify
-    pass (> 4096 unique candidates, so neither driver short-circuit
-    fires), and the scatter verify.  Answers match a brute-force
-    skyline and every surviving row keeps its own vector."""
+    rides through the Arrow kernel host untouched: the local prune of
+    `skyline`, and `skyline_auto`, which sends such a frame to it.
+    Answers match a brute-force skyline and every surviving row keeps
+    its own vector.  `skyline_two_phase` cannot rebuild the column from
+    Arrow, so it refuses the frame before running any Spark job."""
     from pyspark.ml.functions import array_to_vector
 
-    from flink_skyline_qos_spark.operators.skyline import (
-        skyline_broadcast_verify,
-    )
+    from flink_skyline_qos_spark.operators.skyline import skyline_auto
     from flink_skyline_qos_spark.sources.generators import generate_points
 
     cols = [f"d{i}" for i in range(dims)]
@@ -797,9 +653,7 @@ def test_udt_passthrough_column_survives_every_host(spark, dims, n):
 
     outs = {
         "skyline": skyline(pts, cols, width_safe=False),
-        "broadcast": skyline_broadcast_verify(pts, cols, width_safe=False),
-        "scatter": skyline_broadcast_verify(pts, cols, width_safe=False,
-                                            scatter_threshold=0),
+        "skyline_auto": skyline_auto(pts, cols),
     }
     for name, out in outs.items():
         assert out.schema == pts.schema, name
@@ -808,5 +662,9 @@ def test_udt_passthrough_column_survives_every_host(spark, dims, n):
         assert len(got) == len(expect), name
         for r in got:
             assert list(r["vec"]) == [float(r["id"]), r["d0"] * 0.5], name
-    assert outs["broadcast"]._verify_strategy[0] == "broadcast"
-    assert outs["scatter"]._verify_strategy[0] == "scatter"
+
+    def two_phase():
+        with pytest.raises(ValueError, match="use skyline"):
+            skyline_two_phase(pts, cols, algo="mr-angle")
+
+    assert _count_jobs(spark, two_phase)[1] == 0
