@@ -534,8 +534,8 @@ def skyline_auto(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
     Trade-off: the driver kernel is single-threaded, so on a multi-core
     host the driver plan can take longer in wall time than
-    :func:`skyline` while it uses less CPU (200k × 4-D, eps 0.2: ~3.7 s
-    against ~2.1 s wall on 4 vCPU).
+    :func:`skyline` while it uses less CPU (200k × 4-D, eps 0.2, on
+    4 vCPU: 1.8 s against 1.2 s wall, 2.3 s against 3.2 s CPU).
     """
     if not _has_udt(df.schema) and _fits_driver(df):
         return skyline_two_phase(df, cols, algo="mr-angle", num_partitions=8)
