@@ -147,12 +147,12 @@ def grid_envelope_prefilter(df: DataFrame, cols: Sequence[str], *,
     `df` unchanged — the guard mirrors :func:`grid_prefilter`'s
     witness check.
 
-    Caller contract: rows must have COMPLETE dominance vectors — a NaN
-    in the last dim compares false against the envelope and would be
-    dropped.  Every skyline entry point applies its `_complete` filter
-    first; apply the same when using this standalone on dirty data.
-    Dirty rows can never POISON the envelope itself, though (ADVICE
-    r10): the witness
+    Caller contract:
+    rows must have COMPLETE dominance vectors — a NaN in the last dim
+    compares false against the envelope and would be dropped.  Every
+    skyline entry point applies its `_complete` filter first; apply
+    the same when using this standalone on dirty data.  Dirty rows can
+    never POISON the envelope itself, though (ADVICE r10): the witness
     aggregate excludes rows with a NULL/NaN value in ANY gridded dim
     or in the last dim (a NaN grid coord floor-casts to cell 0 where
     the row could become a witness that does not actually dominate; an
