@@ -1841,9 +1841,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         generate_points_hash(s, GEN_N, 4, dist="anti_correlated"),
         ["d0", "d1", "d2", "d3"],
     )
-    # the ADAPTIVE plan on the same 4-D set: it reads the optimizer's
-    # size estimate and picks the driver two-phase plan or the executor
-    # plan (here: the driver), oracled against the same NOT-EXISTS
+    # the ADAPTIVE plan on the same 4-D set: it counts the fixed-width
+    # rows and picks the driver two-phase plan or the executor plan
+    # (here: the driver), oracled against the same NOT-EXISTS
     q["gen_anticorr_skyline_auto_4d"] = lambda s, d: skyline_auto(
         generate_points_hash(s, GEN_N, 4, dist="anti_correlated"),
         ["d0", "d1", "d2", "d3"],

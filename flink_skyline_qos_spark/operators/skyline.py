@@ -19,8 +19,9 @@ One executor path, one driver path and a chooser between them:
    merge with the NumPy kernel.  Eager, and bounded by driver memory,
    like a stream-engine micro-batch.
 
-3. :func:`skyline_auto` picks one of the two from the optimizer's size
-   estimate of the input.
+3. :func:`skyline_auto` picks one of the two: the driver path when
+   the input's rows have a fixed width and all of them fit a share of
+   ``spark.driver.maxResultSize``, the executor path otherwise.
 
 :func:`skyline_anti_join` is the declarative Catalyst form (a left-anti
 self-join on the dominance predicate, O(n²)), kept as the small-data
@@ -482,12 +483,12 @@ def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
     return df.sparkSession.createDataFrame(out, schema=schema)
 
 
-# The largest share of ``spark.driver.maxResultSize`` that an input's
-# size estimate may take for skyline_auto to collect it to the driver.
-# The Arrow bytes ``toArrow()`` moves were measured at 1.6x the
-# optimizer's estimate on generator frames and 4.3-5.0x on lineitem
-# parquet (the estimate counts compressed file bytes), so an eighth
-# keeps the worst measured transfer near 5/8 of the cap Spark enforces.
+# The share of ``spark.driver.maxResultSize`` that the rows skyline_auto
+# brings to the driver may take.  The driver holds those rows more than
+# once (the Arrow table, the float64 copy of the dims the kernel reads
+# and the kernel's sort keys and masks), so they must stay well below
+# the cap Spark enforces.  The split point is unbenchmarked: no
+# perfbench workload runs skyline_auto on either side of it.
 _DRIVER_SHARE = 1 / 8
 
 
@@ -506,38 +507,73 @@ def _has_udt(dt) -> bool:
     return False
 
 
-def _fits_driver(df: DataFrame) -> bool:
-    """The optimizer's size estimate of `df` is within `_DRIVER_SHARE`
-    of ``spark.driver.maxResultSize``.  Reads plan statistics and runs
-    no Spark job.  An unknown estimate is Long.MaxValue (a frame built
-    by ``createDataFrame`` from a Python list has one) and never fits;
-    nothing fits when the cap is 0 (unlimited), as the budget is then
-    undefined."""
-    sc = df.sparkSession.sparkContext
+def _row_width(schema) -> int:
+    """Arrow bytes of one row at 8 a column (16 a decimal), or 0 when a
+    column's type has no fixed width (string, binary, array, map,
+    struct, user-defined)."""
+    from pyspark.sql import types as T
+
+    width = 0
+    for f in schema.fields:
+        if isinstance(f.dataType, T.DecimalType):
+            width += 16
+        elif isinstance(f.dataType, (T.NumericType, T.BooleanType,
+                                     T.DateType, T.TimestampType,
+                                     T.TimestampNTZType)):
+            width += 8
+        else:
+            return 0
+    return width
+
+
+def _driver_budget(spark) -> int:
+    """Bytes :func:`skyline_auto` may bring to the driver:
+    `_DRIVER_SHARE` of ``spark.driver.maxResultSize``, or 0 when that
+    cap is 0 (unlimited), as the budget is then undefined."""
+    sc = spark.sparkContext
     cap = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         sc.getConf().get("spark.driver.maxResultSize", "1g"))
+    return int(cap * _DRIVER_SHARE)
+
+
+def _fits_driver(df: DataFrame) -> bool:
+    """Every row of `df` has a fixed width (:func:`_row_width`) and all
+    of them fit :func:`_driver_budget`.
+
+    The optimizer's size estimate is read first and runs no Spark job:
+    an input it puts over the budget does not fit, and an unknown
+    estimate (Long.MaxValue; a frame built by ``createDataFrame`` from
+    a Python list has one) never fits.  The estimate can be far below
+    the real size: Spark gives a Generate or a Python map node its
+    child's size, and a parquet scan counts compressed bytes.  So an
+    input under it is counted through a limit one row above the budget,
+    one Spark job that reads at most that many rows of each partition.
+    """
+    width = _row_width(df.schema)
+    budget = _driver_budget(df.sparkSession)
+    rows = budget // width if width else 0
     est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return cap > 0 and est <= cap * _DRIVER_SHARE
+    return 0 < rows and est <= budget and \
+        df.limit(rows + 1).count() <= rows
 
 
 def skyline_auto(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Skyline of `df` by the plan that fits the input.
 
-    An input whose size estimate fits the driver budget
-    (:func:`_fits_driver`) and that has no user-defined-type column
-    runs ``skyline_two_phase(df, cols, algo="mr-angle",
-    num_partitions=8)``, eagerly.  It used the least CPU of all plans
-    on every input measured on a 4-vCPU host (500k × 3-D, and 1M and
-    200k × 4-D anti-correlated).  Every other input runs the lazy
-    executor plan :func:`skyline`.  The choice reads plan statistics
-    and runs no Spark job.
+    An input whose rows fit the driver (:func:`_fits_driver`) runs
+    ``skyline_two_phase(df, cols, algo="mr-angle", num_partitions=8)``,
+    eagerly.  Every other input runs the lazy executor plan
+    :func:`skyline`: so does any input with a string, nested or
+    user-defined-type column, whose Arrow size no row count bounds.
 
-    Trade-off: the driver kernel is single-threaded, so on a multi-core
-    host the driver plan can take longer in wall time than
-    :func:`skyline` while it uses less CPU (200k × 4-D, eps 0.2, on
-    4 vCPU: 1.8 s against 1.2 s wall, 2.3 s against 3.2 s CPU).
+    The driver plan's collect and kernels used the least CPU of all
+    plans on every input measured on a 4-vCPU host (500k × 3-D, and 1M
+    and 200k × 4-D anti-correlated), but its kernel is single-threaded,
+    so it can take longer in wall time than :func:`skyline`, and the
+    row count costs one more Spark job.  Where the two plans cross is
+    unbenchmarked (see `_DRIVER_SHARE`).
     """
-    if not _has_udt(df.schema) and _fits_driver(df):
+    if _fits_driver(df):
         return skyline_two_phase(df, cols, algo="mr-angle", num_partitions=8)
     return skyline(df, cols)
 

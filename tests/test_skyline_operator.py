@@ -1,5 +1,7 @@
 """Skyline DataFrame operators vs the DuckDB NOT-EXISTS oracle on real testdata."""
 
+import functools
+
 import duckdb
 import numpy as np
 import pytest
@@ -213,22 +215,34 @@ def test_grouped_skyline_null_group_keys(spark):
 
 
 def test_skyline_auto_both_branches(lineitem, oracle_2d, monkeypatch):
-    """Both branches answer the oracle.  lineitem fits the driver
-    budget and runs the driver two-phase plan; with the budget at 0 it
-    runs the executor plan.  Only the executor plan's local prune is a
-    MapInArrow node."""
+    """Both branches answer the oracle.  lineitem's fixed-width columns
+    fit the driver budget and run the driver two-phase plan; with the
+    budget at 0, or with lineitem's string columns, the executor plan
+    runs.  Only the executor plan's local prune is a MapInArrow node."""
+    from pyspark.sql.types import StringType
+
     from flink_skyline_qos_spark.operators import skyline as sky
 
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
+    fixed = lineitem.select(*[f.name for f in lineitem.schema.fields
+                              if not isinstance(f.dataType, StringType)])
+    keep = [lineitem.columns.index(c) for c in fixed.columns]
+    oracle_fixed = as_sorted([tuple(r[i] for i in keep) for r in oracle_2d])
 
-    got = sky.skyline_auto(lineitem, DIMS2)
-    assert "MapInArrow" not in plan(got)
+    def on_driver(df):
+        out = sky.skyline_auto(df, DIMS2)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return out, "MapInArrow" not in plan
+
+    got, driver = on_driver(fixed)
+    assert driver
+    assert spark_rows(got, fixed.columns) == oracle_fixed
+    got, driver = on_driver(lineitem)
+    assert not driver
     assert spark_rows(got, all_cols(lineitem)) == oracle_2d
     monkeypatch.setattr(sky, "_DRIVER_SHARE", 0.0)
-    got = sky.skyline_auto(lineitem, DIMS2)
-    assert "MapInArrow" in plan(got)
-    assert spark_rows(got, all_cols(lineitem)) == oracle_2d
+    got, driver = on_driver(fixed)
+    assert not driver
+    assert spark_rows(got, fixed.columns) == oracle_fixed
 
 
 def _count_jobs(spark, fn):
@@ -256,7 +270,21 @@ def test_two_phase_mr_angle_infers_no_domain_max(spark):
         skyline(df, ["d0", "d1"]), df.columns)
 
 
-def test_null_dims_one_semantics_across_strategies(spark):
+def _auto_on_driver(monkeypatch, df, cols):
+    """skyline_auto with its driver branch forced: a frame built by
+    createDataFrame from a Python list has an unknown size estimate and
+    would otherwise run the executor branch."""
+    from flink_skyline_qos_spark.operators import skyline as sky
+
+    with monkeypatch.context() as m:
+        m.setattr(sky, "_fits_driver", lambda df: True)
+        out = sky.skyline_auto(df, cols)
+    assert "MapInArrow" not in \
+        out._jdf.queryExecution().optimizedPlan().toString()
+    return out
+
+
+def test_null_dims_one_semantics_across_strategies(spark, monkeypatch):
     """Rows with a NULL dominance dimension are excluded by EVERY
     strategy and by the SQL twin — without the explicit filter, SQL
     three-valued logic keeps an all-NULL row the NumPy kernel drops."""
@@ -282,6 +310,7 @@ def test_null_dims_one_semantics_across_strategies(spark):
         lambda: skyline_anti_join(pts, ["x", "y"]),
         lambda: skyline_two_phase(pts, ["x", "y"], domain_max=10.0),
         lambda: skyline_auto(pts, ["x", "y"]),
+        lambda: _auto_on_driver(monkeypatch, pts, ["x", "y"]),
     ):
         assert sorted(r.id for r in fn().collect()) == [1]
     # the metrics row counts every record but only complete rows compete
@@ -296,7 +325,7 @@ def test_null_dims_one_semantics_across_strategies(spark):
     assert got == [1]
 
 
-def test_nan_dims_one_semantics_across_strategies(spark):
+def test_nan_dims_one_semantics_across_strategies(spark, monkeypatch):
     """NaN dims are excluded like NULLs: IEEE comparisons keep a NaN
     row alive in the kernel while Spark SQL's NaN-greatest ordering
     dominates it away — complete-vectors semantics unifies both."""
@@ -316,7 +345,8 @@ def test_nan_dims_one_semantics_across_strategies(spark):
         [(1, 1.0, 1.0), (2, nan, 0.5), (3, 0.5, nan), (4, 2.0, 2.0)],
         "id long, x double, y double",
     )
-    for fn in (skyline, skyline_anti_join, skyline_auto):
+    for fn in (skyline, skyline_anti_join, skyline_auto,
+               functools.partial(_auto_on_driver, monkeypatch)):
         assert sorted(r.id for r in fn(pts, ["x", "y"]).collect()) == [1]
     con = duckdb.connect()
     con.sql("CREATE TABLE t AS SELECT * FROM (VALUES (1, 1.0, 1.0), "
@@ -527,7 +557,8 @@ def test_width_safe_rewrite_heuristic_and_equivalence(lineitem, oracle_2d):
     assert spark_rows(direct, all_cols(lineitem)) == oracle_2d
 
 
-def test_width_safe_keeps_tied_rows_with_distinct_payloads(spark):
+def test_width_safe_keeps_tied_rows_with_distinct_payloads(spark,
+                                                          monkeypatch):
     """Join-back semantics: every copy of a skyline dim vector survives
     — including copies whose PAYLOAD columns differ (the semi-join keys
     are the dims alone, never the payload)."""
@@ -543,7 +574,8 @@ def test_width_safe_keeps_tied_rows_with_distinct_payloads(spark):
         _narrow_rewrite, skyline, skyline_auto)
 
     assert _narrow_rewrite(df, ["d0", "d1"])  # text payload -> rewrite
-    for fn in (skyline, skyline_auto):
+    for fn in (skyline, skyline_auto,
+               functools.partial(_auto_on_driver, monkeypatch)):
         got = sorted((r.doc_id, r.d0, r.d1)
                      for r in fn(df, ["d0", "d1"]).collect())
         assert got == [(1, 1.0, 2.0), (2, 1.0, 2.0), (3, 2.0, 1.0)], fn
@@ -625,6 +657,36 @@ def _brute_skyline_ids(ids, vals):
         lt = (vals[None, :, :] < b[:, None, :]).any(axis=2)
         keep[lo:lo + 512] = ~(le & lt).any(axis=1)
     return set(ids[keep].tolist())
+
+
+def test_skyline_auto_counts_rows_the_estimate_misses(spark, monkeypatch):
+    """An exploded frame's size estimate is its generator child's (12
+    rows), far below its 12,000 real rows.  skyline_auto counts the
+    rows before it collects: over a 64 KiB budget (2,730 rows of 24
+    bytes) the frame runs the executor plan, and under a 1 MiB one the
+    driver plan.  Both answer the brute-force skyline."""
+    from flink_skyline_qos_spark.operators import skyline as sky
+
+    r = F.col("id") * 1000 + F.col("k")
+    df = spark.range(12).select(
+        "id", F.explode(F.sequence(F.lit(0), F.lit(999))).alias("k")
+    ).select(r.alias("id"), (r * 7919 % 997).cast("double").alias("d0"),
+             (r * 6131 % 991).cast("double").alias("d1"))
+    cols = ["d0", "d1"]
+    rows = df.collect()
+    assert len(rows) == 12_000
+    expect = _brute_skyline_ids(
+        np.array([x["id"] for x in rows]),
+        np.array([[x[c] for c in cols] for x in rows], dtype=np.float64))
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    for budget, on_driver in ((1 << 16, False), (1 << 20, True)):
+        assert est <= budget
+        monkeypatch.setattr(sky, "_driver_budget", lambda spark: budget)
+        out = sky.skyline_auto(df, cols)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("MapInArrow" not in plan) == on_driver, budget
+        got = out.collect()
+        assert sorted(x["id"] for x in got) == sorted(expect), budget
 
 
 @pytest.mark.parametrize("dims,n", [(3, 3000), (4, 8000)])
