@@ -238,8 +238,6 @@ GEN_N = 20_000
 #: APIs).
 STREAM_QUERIES = frozenset({
     "streaming_c4_admission_documents",
-    "streaming_continuous_global",
-    "streaming_continuous_skyline",
     "streaming_count_min_windows_events",
     "streaming_embedding_admission_embeddings",
     "streaming_hll_windows_events",
@@ -384,11 +382,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["skyline_2d_window_lineitem"] = lambda s, d: skyline_2d_window(
         _li(s, d), LI_DIMS2)
     q["skyline_3d_lineitem"] = lambda s, d: skyline(_li(s, d), LI_DIMS3)
-    # same answer through the TREE-MERGE band: one intermediate
-    # hash-distributed merge level between local prune and the final
-    # single-task merge
-    q["skyline_3d_tree_merge_lineitem"] = lambda s, d: skyline(
-        _li(s, d), LI_DIMS3, merge_partitions=8)
     # 4-D on the real table (the reference's hardest regime, PDF §5.4)
     q["skyline_4d_lineitem"] = lambda s, d: skyline(
         _li(s, d), [*LI_DIMS3, "l_tax"])
@@ -1501,92 +1494,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["streaming_substring_admission_documents"] = \
         _streaming_substring_admission
 
-    # --- continuous keyed-state variant (applyInPandasWithState): the
-    # merge of all emitted local skylines equals the batch skyline (every
-    # evicted point's dominator is also emitted — dominance transitivity).
-    def _streaming_continuous(s: SparkSession, d: str) -> DataFrame:
-        import tempfile
-        import uuid
-
-        from flink_skyline_qos_spark.streaming.continuous import (
-            continuous_local_skylines,
-        )
-        from flink_skyline_qos_spark.streaming.sources import file_stream
-        from flink_skyline_qos_spark.streaming.wire import (
-            parse_service_tuples,
-        )
-
-        work = tempfile.mkdtemp(prefix="skycont_")
-        data_dir = os.path.join(work, "data")
-        pts = generate_points_hash(s, 4000, 2, dist="anti_correlated")
-        serialize_service_tuples(pts, 2).write.mode("overwrite").text(data_dir)
-        stream = parse_service_tuples(
-            file_stream(s, data_dir, max_files_per_trigger=1), 2)
-        out = continuous_local_skylines(
-            stream, dims=2, algo="mr-dim", num_partitions=NUM_PARTS,
-            domain_max=10000.0)
-        name = f"cont_{uuid.uuid4().hex[:8]}"
-        # NUM_PARTS state partitions, not the session's 32 — the keyed
-        # state has NUM_PARTS keys and each micro-batch pays
-        # per-partition state-store file ops (same fix as the sketch
-        # replays)
-        prev_parts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", str(NUM_PARTS))
-        try:
-            query = (out.writeStream.format("memory").queryName(name)
-                     .outputMode("update")
-                     .option("checkpointLocation",
-                             os.path.join(work, "ckpt"))
-                     .trigger(availableNow=True).start())
-            query.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        emitted = s.table(name).select("id", "d0", "d1").distinct()
-        return skyline(emitted, ["d0", "d1"])
-
-    q["streaming_continuous_skyline"] = _streaming_continuous
-
-    # --- continuous variant WITH the downstream global merge: per-batch
-    # global skyline + result metrics via foreachBatch; the final batch's
-    # emitted global answer equals the batch skyline of all data.
-    def _streaming_continuous_global(s: SparkSession, d: str) -> DataFrame:
-        import tempfile
-
-        from flink_skyline_qos_spark.streaming.continuous import (
-            continuous_local_skylines,
-            start_continuous_global,
-        )
-        from flink_skyline_qos_spark.streaming.sources import file_stream
-        from flink_skyline_qos_spark.streaming.wire import (
-            parse_service_tuples,
-        )
-
-        work = tempfile.mkdtemp(prefix="skyglob_")
-        data_dir = os.path.join(work, "data")
-        pts = generate_points_hash(s, 4000, 2, dist="anti_correlated")
-        serialize_service_tuples(pts, 2).write.mode("overwrite").text(data_dir)
-        # 4 files/trigger over the 8 part files → 2 batches: still
-        # exercises the cross-batch latest-per-pid carry, at the
-        # minimum micro-batch count that does — the op is batch-count
-        # bound at sf0.01 (job overhead, not compute; VERDICT r7 #3).
-        stream = parse_service_tuples(
-            file_stream(s, data_dir, max_files_per_trigger=4), 2)
-        local = continuous_local_skylines(
-            stream, dims=2, algo="mr-dim", num_partitions=NUM_PARTS,
-            domain_max=10000.0)
-        with _small_shuffle(s, NUM_PARTS):
-            query = start_continuous_global(
-                local, dims=2, out_dir=os.path.join(work, "out"),
-                num_partitions=NUM_PARTS)
-            query.awaitTermination()
-        emitted = s.read.option("recursiveFileLookup", "true").parquet(
-            os.path.join(work, "out", "global"))
-        last = emitted.agg(F.max("batch_id")).first()[0]
-        return emitted.filter(F.col("batch_id") == last) \
-            .select("id", "d0", "d1")
-
-    q["streaming_continuous_global"] = _streaming_continuous_global
-
     # --- windowed streaming sketches EXECUTED from a deterministic
     # file-source replay of the events table (availableNow): append-mode
     # emission = exactly the watermark-CLOSED daily windows, whose
@@ -1909,8 +1816,6 @@ FROM ranked WHERE rn <= {k}
     o["skyline_2d_lineitem"] = sky2
     o["skyline_2d_window_lineitem"] = sky2
     o["skyline_3d_lineitem"] = skyline_not_exists_sql(li, LI_DIMS3)
-    o["skyline_3d_tree_merge_lineitem"] = skyline_not_exists_sql(
-        li, LI_DIMS3)
     o["skyline_4d_lineitem"] = skyline_not_exists_sql(
         li, [*LI_DIMS3, "l_tax"])
     # the prefiltered two-phase plans are lossless ⇒ same oracle as 3-D
@@ -2470,15 +2375,6 @@ red AS (
         f"({generate_points_sql(4000, 2, dist='anti_correlated')})",
         ["d0", "d1"], select="'q1' AS query_id, t.id, t.d0, t.d1",
     )
-    o["streaming_continuous_skyline"] = skyline_not_exists_sql(
-        f"({generate_points_sql(4000, 2, dist='anti_correlated')})",
-        ["d0", "d1"], select="t.id, t.d0, t.d1",
-    )
-    o["streaming_continuous_global"] = skyline_not_exists_sql(
-        f"({generate_points_sql(4000, 2, dist='anti_correlated')})",
-        ["d0", "d1"], select="t.id, t.d0, t.d1",
-    )
-
     from flink_skyline_qos_spark.streaming.continuous import (
         streaming_windowed_count_min_sql,
         streaming_windowed_hll_sql,

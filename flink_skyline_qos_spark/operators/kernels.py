@@ -149,28 +149,6 @@ def _dominated_sorted_T(aT: np.ndarray, a_sums: np.ndarray,
     return out
 
 
-def dominated_by_any(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Boolean mask over rows of `b`: is b[j] strictly dominated by some a[i].
-
-    Strict Pareto dominance, minimization; ties never dominate.
-    Internally sum-sorts both sides so the core kernel's early exit and
-    sum-trick apply regardless of input order.
-    """
-    nb = b.shape[0]
-    out = np.zeros(nb, dtype=bool)
-    if a.shape[0] == 0 or nb == 0:
-        return out
-    a_sums = a.sum(axis=1)
-    b_sums = b.sum(axis=1)
-    ao = np.argsort(a_sums, kind="stable")
-    bo = np.argsort(b_sums, kind="stable")
-    dtype, exact = _layout((a, b), a.shape[1])
-    dom_s = _dominated_sorted_T(_transpose(a[ao], dtype), a_sums[ao],
-                                _transpose(b[bo], dtype), b_sums[bo], exact)
-    out[bo] = dom_s
-    return out
-
-
 def _skyline_mask_2d(values: np.ndarray) -> np.ndarray:
     """Exact 2-D skyline in O(n log n): sort by (d0, d1)
     (:func:`_lex_sorted`), one scan.
@@ -323,26 +301,6 @@ def _forward_mask_T(svT: np.ndarray, ssums: np.ndarray,
         sky_sums = np.concatenate([sky_sums, bsums[idx]])
     return keep_sorted
 
-
-def merge_skylines(old: np.ndarray, new: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Merge two sets that are each already skylines.
-
-    Returns (old_keep_mask, new_keep_mask) such that the union of the kept
-    rows is the skyline of old ∪ new.  Matches the reference's global BNL
-    merge semantics (FlinkSkyline.java:546-568) including tie survival.
-    """
-    if old.shape[0] == 0:
-        return np.zeros(0, dtype=bool), np.ones(new.shape[0], dtype=bool)
-    if new.shape[0] == 0:
-        return np.ones(old.shape[0], dtype=bool), np.zeros(0, dtype=bool)
-    if old.shape[1] == 2:
-        mask = _skyline_mask_2d(np.concatenate([old, new], axis=0))
-        return mask[: old.shape[0]], mask[old.shape[0]:]
-    new_keep = ~dominated_by_any(old, new)
-    # Transitivity: a new point dominated by an old one can't evict anything
-    # the old set didn't already evict — only surviving new points matter.
-    old_keep = ~dominated_by_any(new[new_keep], old)
-    return old_keep, new_keep
 
 def _sweep_block_3d(sub: np.ndarray) -> np.ndarray:
     """Exact skyline mask of one lex-sorted UNIQUE block — Kung's

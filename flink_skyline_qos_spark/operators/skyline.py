@@ -290,14 +290,11 @@ def _complete(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
 
 def skyline(df: DataFrame, cols: Sequence[str], *,
-            merge_partitions: int | None = None,
             width_safe: bool | None = None) -> DataFrame:
     """Skyline of `df`, minimizing every column in `cols`.
 
     Zero wide dependencies on the raw data: local prune is narrow, only
-    survivors cross the single tiny exchange.  `merge_partitions` inserts
-    one intermediate hash-distributed merge level for huge survivor sets
-    (e.g. 4-D anti-correlated) before the final single-task merge.
+    survivors cross the single tiny exchange into the single-task merge.
     Rows with a NULL dimension are excluded (see :func:`_complete`).
 
     `width_safe` controls the wide-row rewrite (:func:`_narrow_rewrite`,
@@ -308,13 +305,9 @@ def skyline(df: DataFrame, cols: Sequence[str], *,
     """
     df = _complete(df, cols)
     if width_safe if width_safe is not None else _narrow_rewrite(df, cols):
-        vecs = skyline(df.select(*cols), cols,
-                       merge_partitions=merge_partitions, width_safe=False)
+        vecs = skyline(df.select(*cols), cols, width_safe=False)
         return _join_back(df, vecs, cols)
-    pruned = _local_prune(df, cols)
-    if merge_partitions and merge_partitions > 1:
-        pruned = _local_prune(pruned.repartition(merge_partitions), cols)
-    return _local_prune(pruned.repartition(1), cols)
+    return _local_prune(_local_prune(df, cols).repartition(1), cols)
 
 
 def skyline_2d_window(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -380,6 +373,14 @@ class _DriverRows(NamedTuple):
     values: np.ndarray   # their dims, (len(rows), d) float64
 
 
+def _inferred_domain_max(top) -> float:
+    """The `domain_max` of an input whose largest finite dim value is
+    `top` (None or -inf when it has none): `top`, or 1.0 when there is
+    none or it is 0."""
+    top = 0.0 if top is None else float(top)
+    return top if np.isfinite(top) and top != 0 else 1.0
+
+
 def _driver_rows(df: DataFrame, cols: Sequence[str], algo: str,
                  num_partitions: int, domain_max: float | None
                  ) -> _DriverRows:
@@ -387,12 +388,16 @@ def _driver_rows(df: DataFrame, cols: Sequence[str], algo: str,
     driver.  The driver drops the rows with a NULL or NaN dim (the rows
     :func:`_complete` drops) and tags the rest with
     :func:`~.partitioners.partition_ids`, the NumPy twin of
-    :func:`~.partitioners.partitioner_expr` over the dims as float64."""
+    :func:`~.partitioners.partitioner_expr` over the dims as float64.
+    A None `domain_max` is inferred from those rows' finite values."""
     tbl = df.toArrow()
     values = _arrow_values(tbl, cols)
     rows = np.flatnonzero(~np.isnan(values).any(axis=1))
     if len(rows) < len(values):
         values = values[rows]
+    if domain_max is None:
+        domain_max = _inferred_domain_max(
+            values.max(initial=-np.inf, where=np.isfinite(values)))
     return _DriverRows(tbl, rows,
                        partition_ids(algo, values, num_partitions, domain_max),
                        values)
@@ -432,9 +437,11 @@ def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
     near-frontier shell crosses into Python.  Lossless: a row is dropped
     only when a real row of a dominating cell dominates it.
 
-    `domain_max` is read by MR-Dim, MR-Grid, MR-Z and `prefilter`; when
-    one of them needs it and it is None, one extra Spark job infers it
-    as the largest dim value.  MR-Angle never reads it.
+    `domain_max` is read by MR-Dim, MR-Grid, MR-Z and `prefilter`; MR-Angle
+    never reads it.  When it is None it is inferred as the largest finite
+    dim value of the rows with complete dims (1.0 when there is none or
+    it is 0): in the driver from the rows already collected, or, with
+    `prefilter`, by one extra Spark job before the prune.
 
     EAGER: the scan, the transfer and both kernel phases run when this
     function is called, not when the returned frame is consumed, and
@@ -454,15 +461,16 @@ def skyline_two_phase(df: DataFrame, cols: Sequence[str], *,
         raise ValueError(
             "skyline_two_phase cannot return a user-defined-type column "
             "(createDataFrame does not rebuild one from Arrow); use skyline")
-    if domain_max is None and (prefilter or algo.lower().replace("_", "-")
-                               in ("mr-dim", "mr-grid", "mr-z")):
-        # The reference takes --domain from the CLI; infer from data when absent.
-        domain_max = float(
-            df.select(F.greatest(*[F.max(c) for c in cols])).first()[0] or 1.0
-        )
     if prefilter:
         from .variants import grid_prefilter
 
+        if domain_max is None:
+            # The reference takes --domain from the CLI; infer from data when absent.
+            inf = float("inf")
+            domain_max = _inferred_domain_max(_complete(df, cols).select(
+                F.greatest(*[F.max(F.when(~F.col(c).isin(inf, -inf),
+                                          F.col(c))) for c in cols])
+            ).first()[0])
         df = grid_prefilter(df, cols, domain_max)
     if envelope_cells:
         from .variants import grid_envelope_prefilter
@@ -704,7 +712,7 @@ def grouped_skyline(df: DataFrame, cols: Sequence[str],
 
 
 def skyline_delta(base_skyline: DataFrame, inserts: DataFrame,
-                  cols: Sequence[str], **skyline_kwargs) -> DataFrame:
+                  cols: Sequence[str]) -> DataFrame:
     """Incrementally maintain a materialized skyline under INSERTS:
     ``skyline(A ∪ B) = skyline(skyline(A) ∪ B)`` — a point dominated
     within A stays dominated in any superset, so the maintained answer
@@ -723,13 +731,12 @@ def skyline_delta(base_skyline: DataFrame, inserts: DataFrame,
     """
     merged = base_skyline.select(*base_skyline.columns).unionByName(
         inserts.select(*base_skyline.columns))
-    return skyline(merged, cols, **skyline_kwargs)
+    return skyline(merged, cols)
 
 
 def skyline_delta_delete(base: DataFrame, base_skyline: DataFrame,
                          deletes: DataFrame, cols: Sequence[str], *,
-                         keys: "Sequence[str] | None" = None,
-                         **skyline_kwargs) -> DataFrame:
+                         keys: "Sequence[str] | None" = None) -> DataFrame:
     """Incrementally maintain a materialized skyline under DELETES —
     the half :func:`skyline_delta` can't express.
 
@@ -773,7 +780,7 @@ def skyline_delta_delete(base: DataFrame, base_skyline: DataFrame,
         how="left_semi")
     merged = surv.select(*base.columns).unionByName(
         exposed.select(*base.columns))
-    return skyline(merged, cols, **skyline_kwargs)
+    return skyline(merged, cols)
 
 
 def skyline_layers(df: DataFrame, cols: Sequence[str], *,

@@ -1,52 +1,37 @@
-"""Continuous keyed-state local skylines via ``applyInPandasWithState``.
+"""Structured Streaming jobs of the text and sketch suite.
 
-The closest structural analogue to the reference's
-``SkylineLocalProcessor`` (`FlinkSkyline.java:214-316`): one state entry
-per space partition holding that partition's running local skyline,
-updated incrementally on every micro-batch, emitting the refreshed local
-skyline downstream (output mode ``update``).
+Nothing here computes a skyline: the streaming skyline is
+:class:`.engine.SkylinePipeline`.  What this module holds:
 
-Where :mod:`.engine` materializes state as a parquet table (best for the
-trigger/barrier workflow), this variant keeps it in Spark's managed
-GroupState — checkpointed, per-key, exactly the reference's
-``ListState<ServiceTuple>`` (FlinkSkyline.java:219-229).  The global
-merge runs downstream in ``foreachBatch`` (a second stateful stage is
-restricted in Structured Streaming): :func:`start_continuous_global`
-carries the latest local skyline per partition across batches and emits
-the per-batch GLOBAL skyline + the reference's result metrics record
-(FlinkSkyline.java:610-650) — the complete two-phase continuous analogue.
+* event-time window sketches — HLL distinct counts, count-min heavy
+  hitters and fixed-bin quantiles — as native watermarked aggregations,
+  with their DuckDB oracle twins (the ``*_sql`` builders);
+* :func:`streaming_interval_join` and :func:`streaming_exact_dedup`;
+* the ``run_streaming_*`` admission and ingest loops: ``foreachBatch``
+  handlers that admit each micro-batch's documents or vectors against
+  a committed parquet store (near-duplicate, substring, embedding and
+  span admission, the C4 quality gate and the composed ingest
+  pipeline).
 """
 
 from __future__ import annotations
 
 import os
-import time
-from typing import Iterator, Sequence, Tuple
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-import numpy as np
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
-                               StructField, StructType, TimestampType)
 
-from ..operators.kernels import merge_skylines, skyline_mask
-from ..operators.partitioners import partitioner_expr
-
-__all__ = ["continuous_local_skylines", "run_streaming_minhash_admission",
+__all__ = ["run_streaming_minhash_admission",
            "run_streaming_paragraph_admission",
            "run_streaming_ingest_pipeline", "run_streaming_c4_admission",
            "run_streaming_embedding_admission",
-           "start_continuous_global",
            "streaming_exact_dedup", "streaming_interval_join",
-           "streaming_session_skyline", "streaming_sliding_skyline",
            "streaming_windowed_count_min", "streaming_windowed_hll",
            "streaming_windowed_hll_grouped",
            "streaming_windowed_quantiles",
            "streaming_windowed_quantiles_grouped",
            "fixed_hist_quantiles_from_bins",
-           "streaming_windowed_skyline",
            "streaming_windowed_count_min_sql", "streaming_windowed_hll_sql",
            "streaming_windowed_quantiles_sql"]
 
@@ -768,410 +753,6 @@ def run_streaming_embedding_admission(stream_vecs: DataFrame,
          .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination()
-
-
-def _schemas(dims: int) -> tuple[StructType, StructType]:
-    fields = [StructField("pid", IntegerType()),
-              StructField("id", LongType())] + [
-        StructField(f"d{i}", DoubleType()) for i in range(dims)
-    ]
-    out = StructType(fields)
-    # GroupState holds ONE row per key → column-major arrays: the running
-    # local skyline as (ids[], values[][]) — the ListState<ServiceTuple>
-    # analogue (FlinkSkyline.java:219-229) in Arrow-friendly form.
-    state = StructType([
-        StructField("ids", ArrayType(LongType())),
-        StructField("vals", ArrayType(ArrayType(DoubleType()))),
-    ])
-    return out, state
-
-
-def _update_fn(dims: int):
-    cols = [f"d{i}" for i in range(dims)]
-
-    def fn(key: Tuple[int], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if state.exists:
-            ids, vals = state.get  # type: ignore[misc]
-            prev_ids = np.asarray(ids, dtype=np.int64)
-            prev_vals = np.asarray([list(v) for v in vals], dtype=float) \
-                .reshape(len(ids), dims)
-        else:
-            prev_ids = np.empty(0, dtype=np.int64)
-            prev_vals = np.empty((0, dims), dtype=float)
-        new_vals = batch[cols].to_numpy(float)
-        cand_mask = skyline_mask(new_vals)
-        cand_ids = batch["id"].to_numpy(np.int64)[cand_mask]
-        cand_vals = new_vals[cand_mask]
-        if len(prev_ids) == 0:
-            sky_ids, sky_vals = cand_ids, cand_vals
-        else:
-            old_keep, new_keep = merge_skylines(prev_vals, cand_vals)
-            sky_ids = np.concatenate([prev_ids[old_keep],
-                                      cand_ids[new_keep]])
-            sky_vals = np.concatenate([prev_vals[old_keep],
-                                       cand_vals[new_keep]])
-        # .tolist() everywhere: state rows go through the Python pickler,
-        # which rejects numpy scalar types.
-        state.update((sky_ids.tolist(), sky_vals.tolist()))
-        out = pd.DataFrame({"pid": np.full(len(sky_ids), key[0]),
-                            "id": sky_ids})
-        for i, c in enumerate(cols):
-            out[c] = sky_vals[:, i]
-        yield out
-
-    return fn
-
-
-def continuous_local_skylines(stream: DataFrame, dims: int, *,
-                              algo: str = "mr-dim", num_partitions: int = 8,
-                              domain_max: float = 10000.0) -> DataFrame:
-    """Streaming DataFrame of refreshed per-partition local skylines.
-
-    `stream` must already carry ``id, d0..d{dims-1}`` (e.g. the output of
-    :func:`wire.parse_service_tuples`).  Each update batch re-emits the
-    full local skyline of every partition touched by the batch.
-    """
-    cols = [F.col(f"d{i}") for i in range(dims)]
-    pid = partitioner_expr(algo, cols, num_partitions, domain_max)
-    out_schema, state_schema = _schemas(dims)
-    return (
-        stream.withColumn("pid", pid.cast("int"))
-        .groupBy("pid")
-        .applyInPandasWithState(
-            _update_fn(dims),
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def streaming_windowed_skyline(stream: DataFrame, dims: int, *,
-                               window_duration: str = "10 seconds",
-                               watermark_delay: str = "5 seconds",
-                               ts_col: str = "ts") -> DataFrame:
-    """Event-time tumbling-window skyline over an UNBOUNDED stream —
-    "the skyline of each window", finalized by watermark (SURVEY §7.7 /
-    VERDICT r3 #7: the streaming twin of the batch
-    ``windowed_skyline_events`` query).
-
-    `stream` carries ``id, {ts_col} timestamp, d0..d{dims-1}``.  The
-    plan is the idiomatic Structured-Streaming shape for a custom
-    windowed aggregate with late data:
-
-    * ``withWatermark(ts_col, watermark_delay)`` bounds lateness — rows
-      later than the watermark are dropped upstream by Spark;
-    * state is keyed on ``F.window(ts_col, window_duration)``, each key
-      holding its window's RUNNING skyline (same incremental merge as
-      :func:`continuous_local_skylines` — merging per batch keeps state
-      at skyline size, not window size);
-    * an event-time timeout at window-end fires once the watermark
-      passes the window, emitting the window's FINAL skyline exactly
-      once (append semantics) and dropping the state.
-
-    Output: (win_start, win_end, id, d0..) — the finished windows only.
-    Every emitted window's answer equals the batch skyline of exactly
-    the window's rows (watermark correctness: a window only closes once
-    no admissible row can still arrive).
-    """
-    cols = [f"d{i}" for i in range(dims)]
-    out_schema = StructType(
-        [StructField("win_start", TimestampType()),
-         StructField("win_end", TimestampType()),
-         StructField("id", LongType())]
-        + [StructField(c, DoubleType()) for c in cols])
-    state_schema = StructType([
-        StructField("ids", ArrayType(LongType())),
-        StructField("vals", ArrayType(ArrayType(DoubleType()))),
-    ])
-
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        # applyInPandasWithState resolves grouping keys by NAME — a raw
-        # window() expression doesn't resolve; materialize it first.
-        # The window struct inherits the event-time marker, and the
-        # stateful operator allows only ONE event-time column, so the
-        # raw ts is dropped once the window is derived.
-        .withColumn("__win", F.window(ts_col, window_duration))
-        .drop(ts_col)
-        .groupBy("__win")
-        .applyInPandasWithState(
-            _window_final_fn(dims, cols),
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def _window_final_fn(dims: int, cols: Sequence[str]):
-    """State fn shared by the tumbling and sliding window skylines:
-    per-window running skyline (state at skyline size), final answer
-    emitted exactly once when the event-time timeout fires."""
-
-    def fn(key, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        win = key[0]  # window struct: a dict under Arrow, a Row otherwise
-        start, end = (win["start"], win["end"]) if isinstance(win, dict) \
-            else (win[0], win[1])
-        if state.hasTimedOut:
-            ids, vals = state.get  # type: ignore[misc]
-            state.remove()
-            vals = np.asarray([list(v) for v in vals], dtype=float) \
-                .reshape(len(ids), dims)
-            out = pd.DataFrame({"win_start": start, "win_end": end,
-                                "id": np.asarray(ids, dtype=np.int64)})
-            for i, c in enumerate(cols):
-                out[c] = vals[:, i]
-            yield out
-            return
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if state.exists:
-            ids, vals = state.get  # type: ignore[misc]
-            prev_ids = np.asarray(ids, dtype=np.int64)
-            prev_vals = np.asarray([list(v) for v in vals], dtype=float) \
-                .reshape(len(ids), dims)
-        else:
-            prev_ids = np.empty(0, dtype=np.int64)
-            prev_vals = np.empty((0, dims), dtype=float)
-        new_vals = batch[cols].to_numpy(float)
-        cand_mask = skyline_mask(new_vals)
-        cand_ids = batch["id"].to_numpy(np.int64)[cand_mask]
-        cand_vals = new_vals[cand_mask]
-        if len(prev_ids) == 0:
-            sky_ids, sky_vals = cand_ids, cand_vals
-        else:
-            old_keep, new_keep = merge_skylines(prev_vals, cand_vals)
-            sky_ids = np.concatenate([prev_ids[old_keep],
-                                      cand_ids[new_keep]])
-            sky_vals = np.concatenate([prev_vals[old_keep],
-                                       cand_vals[new_keep]])
-        state.update((sky_ids.tolist(), sky_vals.tolist()))
-        # fire once the watermark passes window end (any batch reaching
-        # this state has end > watermark, so the timestamp is valid)
-        end_ms = int(end.timestamp() * 1000)
-        state.setTimeoutTimestamp(max(end_ms,
-                                      state.getCurrentWatermarkMs() + 1))
-        # no emission until the timeout finalizes the window (fn is a
-        # generator by virtue of the timed-out branch's yield)
-
-    return fn
-
-
-_UNIT_MS = {"millisecond": 1, "second": 1000, "minute": 60_000,
-            "hour": 3_600_000, "day": 86_400_000}
-
-
-def _dur_ms(spec: str) -> int:
-    n, unit = spec.strip().split()
-    return int(n) * _UNIT_MS[unit.rstrip("s")]
-
-
-def streaming_sliding_skyline(stream: DataFrame, dims: int, *,
-                              window_duration: str = "10 seconds",
-                              slide_duration: str = "5 seconds",
-                              watermark_delay: str = "5 seconds",
-                              ts_col: str = "ts") -> DataFrame:
-    """Event-time SLIDING-window skyline over an unbounded stream — the
-    streaming twin of the batch ``sliding_skyline_events`` query
-    (overlapping windows every `slide_duration`, each `window_duration`
-    long), finalized by watermark exactly like
-    :func:`streaming_windowed_skyline`.
-
-    Structured Streaming only expands ``F.window(..., slide)`` into
-    multiple rows inside a built-in aggregation, not for an arbitrary
-    stateful operator — so the expansion is explicit: each row derives
-    its ⌈D/S⌉ member windows as plain structs and explodes.  The manual
-    struct carries NO event-time marker, so the raw `ts` column stays
-    on the stream as the (single) watermark column; state is keyed on
-    the window struct and each key's final skyline is emitted once when
-    the watermark passes its end.
-    """
-    cols = [f"d{i}" for i in range(dims)]
-    out_schema = StructType(
-        [StructField("win_start", TimestampType()),
-         StructField("win_end", TimestampType()),
-         StructField("id", LongType())]
-        + [StructField(c, DoubleType()) for c in cols])
-    state_schema = StructType([
-        StructField("ids", ArrayType(LongType())),
-        StructField("vals", ArrayType(ArrayType(DoubleType()))),
-    ])
-    d_ms, s_ms = _dur_ms(window_duration), _dur_ms(slide_duration)
-    n_wins = -(-d_ms // s_ms)
-    # exact integer epoch-ms: double-arithmetic (cast double * 1000)
-    # truncates 1 ms low at non-dyadic boundaries, which would shift s0
-    # one slide early and silently drop a row's newest member window
-    ep = F.unix_millis(F.col(ts_col).cast("timestamp"))
-    s0 = (F.floor(ep / s_ms).cast("long") * s_ms)
-    wins = F.array(*[
-        F.struct(
-            F.timestamp_millis(s0 - j * s_ms).alias("start"),
-            F.timestamp_millis(s0 - j * s_ms + d_ms).alias("end"))
-        for j in range(n_wins)])
-    member = F.filter(
-        wins, lambda w: (w["start"] <= F.col(ts_col))
-        & (w["end"] > F.col(ts_col)))
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .withColumn("__win", F.explode(member))
-        .groupBy("__win")
-        .applyInPandasWithState(
-            _window_final_fn(dims, cols),
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def streaming_session_skyline(stream: DataFrame, dims: int, *,
-                              gap: str = "30 minutes",
-                              watermark_delay: str = "5 seconds",
-                              ts_col: str = "ts",
-                              key_col: str = "user_id") -> DataFrame:
-    """Per-key SESSION-window skyline over an unbounded stream — the
-    streaming twin of the batch ``session_skyline_events`` query
-    (activity sessions split by inactivity > `gap`), completing the
-    tumbling / sliding / session streaming-window family.
-
-    Built on Spark-NATIVE session windows rather than hand-rolled
-    state: ``groupBy(key, session_window(ts, gap))`` with a
-    ``collect_list`` aggregate gathers each session's rows (state per
-    open session — exactly what any native session aggregation holds;
-    Spark merges sessions that a bridging event joins), the watermark
-    closes sessions in append mode, and the skyline of each CLOSED
-    session is one pure higher-order Column expression
-    (``filter(rows, r → ¬∃q. q dominates r)``) — O(|session|²) per
-    session but sessions are small by definition, and the whole
-    dominance pass stays JVM-side with zero extra shuffle.
-
-    Output: (key, sess_start, sess_end, id, d0..) — closed sessions
-    only, each session's exact Pareto set over the d-columns.
-    """
-    cols = [f"d{i}" for i in range(dims)]
-
-    def _dom(a, b):
-        all_le = a[cols[0]] <= b[cols[0]]
-        any_lt = a[cols[0]] < b[cols[0]]
-        for c in cols[1:]:
-            all_le = all_le & (a[c] <= b[c])
-            any_lt = any_lt | (a[c] < b[c])
-        return all_le & any_lt
-
-    agg = (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col, F.session_window(F.col(ts_col), gap))
-        .agg(F.collect_list(F.struct("id", *cols)).alias("__rows"))
-    )
-    surv = F.filter(
-        F.col("__rows"),
-        lambda r: ~F.exists(F.col("__rows"), lambda q: _dom(q, r)),
-    )
-    return (
-        agg.select(
-            key_col,
-            F.col("session_window.start").alias("sess_start"),
-            F.col("session_window.end").alias("sess_end"),
-            F.explode(surv).alias("__r"),
-        )
-        .select(key_col, "sess_start", "sess_end",
-                F.col("__r.id").alias("id"),
-                *[F.col(f"__r.{c}").alias(c) for c in cols])
-    )
-
-
-def start_continuous_global(local_updates: DataFrame, dims: int, *,
-                            out_dir: str, num_partitions: int = 8,
-                            available_now: bool = True):
-    """Global merge downstream of :func:`continuous_local_skylines`.
-
-    Each update batch carries the REFRESHED local skyline of every
-    partition the batch touched; this handler carries the latest local
-    skyline of every partition across batches (epoch-versioned parquet,
-    retry-idempotent like :class:`engine.SkylinePipeline`), merges them,
-    and emits per batch:
-
-    * ``global/batch_*/`` — the full global skyline rows (id, d0..),
-      tagged with ``batch_id`` — the reference's emitted answer;
-    * ``metrics/batch_*/`` — one result record (batch_id, skyline_size,
-      optimality, global_ms) matching FlinkSkyline.java:610-650's
-      assembly (record_count lives with the barrier workflow; the
-      continuous stream only ever sees skyline survivors).
-
-    Returns the started StreamingQuery (caller awaits termination).
-    """
-    from ..operators.skyline import skyline
-    from .engine import _batch_subdir, _epochs, _gc
-
-    spark = local_updates.sparkSession
-    cols = [f"d{i}" for i in range(dims)]
-    latest_dir = os.path.join(out_dir, "latest_local")
-    global_dir = os.path.join(out_dir, "global")
-    metrics_dir = os.path.join(out_dir, "metrics")
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        t0 = time.perf_counter()
-        batch = batch.persist()
-        try:
-            if batch.isEmpty():
-                return
-            # Latest-per-pid carry: untouched partitions keep their last
-            # emitted skyline; touched ones are replaced wholesale (the
-            # stateful stage re-emits the FULL refreshed local skyline).
-            es = [e for e in _epochs(latest_dir) if e < batch_id]
-            if es:
-                prev = spark.read.parquet(
-                    os.path.join(latest_dir, f"epoch={es[-1]}"))
-                touched = [int(r["pid"]) for r in
-                           batch.select("pid").distinct().collect()]
-                latest = prev.filter(~F.col("pid").isin(touched)) \
-                    .unionByName(batch)
-            else:
-                latest = batch
-            latest.write.mode("overwrite").parquet(
-                os.path.join(latest_dir, f"epoch={batch_id}"))
-            _gc(latest_dir)
-            cur = spark.read.parquet(
-                os.path.join(latest_dir, f"epoch={batch_id}"))
-            glob = skyline(cur, cols).persist()
-            try:
-                sizes = {int(r["pid"]): int(r["n"]) for r in
-                         cur.groupBy("pid").agg(
-                             F.count(F.lit(1)).alias("n")).collect()}
-                surv = {int(r["pid"]): int(r["n"]) for r in
-                        glob.groupBy("pid").agg(
-                            F.count(F.lit(1)).alias("n")).collect()}
-                sky_size = sum(surv.values())
-                opt = sum(surv.get(p, 0) / sizes[p] for p in sizes) \
-                    / num_partitions
-                glob.drop("pid").withColumn(
-                    "batch_id", F.lit(batch_id).cast("long")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(global_dir, _batch_subdir(batch_id)))
-                global_ms = int((time.perf_counter() - t0) * 1000)
-                spark.createDataFrame(
-                    [(batch_id, sky_size, round(opt, 4), global_ms)],
-                    "batch_id long, skyline_size long, optimality double,"
-                    " global_ms long",
-                ).write.mode("overwrite").parquet(
-                    os.path.join(metrics_dir, _batch_subdir(batch_id)))
-            finally:
-                glob.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = (local_updates.writeStream.foreachBatch(handle)
-              .outputMode("update")
-              .option("checkpointLocation", os.path.join(out_dir, "ckpt")))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------

@@ -12,9 +12,8 @@ Two codecs with one grammar:
 
 * Column expressions (:func:`parse_service_tuples`,
   :func:`parse_triggers`): split + ``try_cast`` in the JVM, identical on
-  batch and streaming DataFrames.  The continuous variant
-  (`streaming.continuous`), the ``__spark_entry__`` oracle entries and
-  perfbench use them.
+  batch and streaming DataFrames.  The tests hold the driver codec to
+  them, and perfbench's ``wire.parse_ms`` probe times the data codec.
 * Driver-side (:func:`parse_service_lines`, :func:`parse_trigger_lines`):
   the same accepted grammar over a pyarrow array of lines, for the
   stream engine (`streaming.engine`), which brings each micro-batch to

@@ -5,11 +5,7 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from flink_skyline_qos_spark.operators.kernels import (
-    dominated_by_any,
-    merge_skylines,
-    skyline_mask,
-)
+from flink_skyline_qos_spark.operators.kernels import skyline_mask
 
 
 def brute_skyline_mask(v: np.ndarray) -> np.ndarray:
@@ -34,10 +30,11 @@ _COORDS = [
 ]
 
 
-def _arr(draw, d, coords=None):
+@st.composite
+def point_arrays(draw):
+    d = draw(st.integers(1, 4))
     n = draw(st.integers(0, 60))
-    if coords is None:
-        coords = draw(st.sampled_from(_COORDS))
+    coords = draw(st.sampled_from(_COORDS))
     vals = draw(
         st.lists(
             st.lists(coords, min_size=d, max_size=d),
@@ -45,18 +42,6 @@ def _arr(draw, d, coords=None):
         )
     )
     return np.array(vals, dtype=float).reshape(n, d)
-
-
-@st.composite
-def point_arrays(draw):
-    return _arr(draw, draw(st.integers(1, 4)))
-
-
-@st.composite
-def point_array_pairs(draw):
-    d = draw(st.integers(1, 4))
-    coords = draw(st.sampled_from(_COORDS))
-    return _arr(draw, d, coords), _arr(draw, d, coords)
 
 
 @settings(max_examples=200, deadline=None)
@@ -87,19 +72,6 @@ def test_partition_invariance(v, parts):
     assert sorted(map(tuple, full)) == sorted(map(tuple, merged))
 
 
-@settings(max_examples=100, deadline=None)
-@given(point_array_pairs())
-def test_merge_skylines(pair):
-    a, b = pair
-    sa = a[skyline_mask(a)]
-    sb = b[skyline_mask(b)]
-    ok, nk = merge_skylines(sa, sb)
-    merged = np.concatenate([sa[ok], sb[nk]])
-    u = np.concatenate([sa, sb])
-    expected = u[skyline_mask(u)]
-    assert sorted(map(tuple, merged)) == sorted(map(tuple, expected))
-
-
 def test_duplicates_all_survive():
     v = np.array([[1.0, 2.0]] * 5 + [[3.0, 1.0]] * 3)
     assert skyline_mask(v).sum() == 8
@@ -109,12 +81,6 @@ def test_single_dominator():
     v = np.vstack([np.zeros((1, 3)), np.random.RandomState(0).rand(100, 3) + 0.1])
     m = skyline_mask(v)
     assert m.sum() == 1 and m[0]
-
-
-def test_dominated_by_any_strictness():
-    a = np.array([[1.0, 1.0]])
-    b = np.array([[1.0, 1.0], [1.0, 2.0], [0.5, 0.5]])
-    assert dominated_by_any(a, b).tolist() == [False, True, False]
 
 
 def test_equal_fp_sum_across_block_boundary():
@@ -136,8 +102,6 @@ def test_equal_fp_sum_across_block_boundary():
 
 def test_empty():
     assert skyline_mask(np.zeros((0, 2))).shape == (0,)
-    ok, nk = merge_skylines(np.zeros((0, 2)), np.zeros((0, 2)))
-    assert len(ok) == 0 and len(nk) == 0
 
 
 @st.composite

@@ -162,27 +162,6 @@ def test_topk_dominating_broadcasts_reduced_candidates(spark):
     assert re.search(r"BroadcastNestedLoopJoin Inner BuildRight", plan), plan
 
 
-def test_streaming_windowed_skyline_single_state_operator(spark):
-    """The event-time windowed skyline plans ONE stateful python group
-    operator fed by a single hash exchange on the window key, with the
-    watermark node present (bounded lateness)."""
-    from flink_skyline_qos_spark.streaming.continuous import (
-        streaming_windowed_skyline,
-    )
-
-    src = (spark.readStream.format("rate").option("rowsPerSecond", 10)
-           .load()
-           .select(F.col("value").alias("id"),
-                   F.col("timestamp").alias("ts"),
-                   (F.col("value") % 100).cast("double").alias("d0"),
-                   (F.col("value") % 7).cast("double").alias("d1")))
-    out = streaming_windowed_skyline(src, 2)
-    plan = _plan(out)
-    assert "EventTimeWatermark" in plan, plan
-    assert len(re.findall(r"^\(\d+\) FlatMapGroupsInPandasWithState",
-                          plan, re.M)) == 1, plan
-
-
 def test_chunk_documents_zero_shuffle_all_jvm(spark):
     """Chunking is one narrow explode: no Exchange, no Python nodes."""
     from flink_skyline_qos_spark.functions.corpus import chunk_documents

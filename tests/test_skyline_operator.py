@@ -87,7 +87,10 @@ def test_skyline_two_phase_partition_col(lineitem, algo):
 def test_skyline_two_phase_infinite_coordinates(spark, algo):
     """+inf in any dim is a valid coordinate: the JVM tag clamps it into
     range (mr-dim's floor(inf / w) used to overflow the int cast) and
-    the answer equals skyline()'s, the +inf survivors included."""
+    the answer equals skyline()'s, the +inf survivors included.  An
+    inferred domain_max, in the driver or in the prefilter's job, skips
+    the +inf and NaN values (Spark's max of them is +inf or NaN, which
+    used to make mr-dim's pids negative)."""
     import numpy as np
 
     inf = float("inf")
@@ -95,24 +98,23 @@ def test_skyline_two_phase_infinite_coordinates(spark, algo):
     rows = [(i, *map(float, rng.integers(1, 100, 3))) for i in range(300)]
     rows += [(300, inf, 0.0, 0.0), (301, 0.0, inf, 0.0),
              (302, 0.0, 0.0, inf), (303, inf, inf, inf), (304, inf, 5.0, 5.0)]
-    df = spark.createDataFrame(rows, "id long, d0 double, d1 double,"
-                                     " d2 double")
     cols = ["d0", "d1", "d2"]
-    got = spark_rows(skyline_two_phase(df, cols, algo=algo, num_partitions=4,
-                                       domain_max=100.0), df.columns)
-    assert got == spark_rows(skyline(df, cols), df.columns)
-    assert {300, 301, 302} <= {r[0] for r in got}
+    for data in (rows, rows + [(305, float("nan"), 1.0, 1.0)]):
+        df = spark.createDataFrame(data, "id long, d0 double, d1 double,"
+                                         " d2 double")
+        want = spark_rows(skyline(df, cols), df.columns)
+        for kw in ({"domain_max": 100.0}, {"domain_max": None},
+                   {"domain_max": None, "prefilter": True}):
+            got = spark_rows(skyline_two_phase(
+                df, cols, algo=algo, num_partitions=4, **kw), df.columns)
+            assert got == want
+            assert {300, 301, 302} <= {r[0] for r in got}
 
 
 def test_skyline_3d(lineitem, sf_dir):
     oracle = as_sorted(duck_skyline(sf_dir, "lineitem", DIMS3))
     got = skyline(lineitem, DIMS3)
     assert spark_rows(got, all_cols(lineitem)) == oracle
-
-
-def test_skyline_tree_merge(lineitem, oracle_2d):
-    got = skyline(lineitem, DIMS2, merge_partitions=4)
-    assert spark_rows(got, all_cols(lineitem)) == oracle_2d
 
 
 def test_grouped_skyline(events, sf_dir):
@@ -257,14 +259,16 @@ def _count_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_two_phase_mr_angle_infers_no_domain_max(spark):
-    """MR-Angle never reads domain_max, so with domain_max=None the
-    toArrow() collect is the only Spark job: no max() job runs."""
+@pytest.mark.parametrize("algo", ["mr-dim", "mr-grid", "mr-angle", "mr-z"])
+def test_two_phase_infers_domain_max_in_driver(spark, algo):
+    """With domain_max=None the driver infers it from the rows it
+    already holds, so the toArrow() collect is the only Spark job: no
+    max() job runs."""
     df = spark.range(2000).select(
         "id", (F.col("id") * 7919 % 997).cast("double").alias("d0"),
         (F.col("id") * 6131 % 991).cast("double").alias("d1"))
     out, jobs = _count_jobs(spark, lambda: skyline_two_phase(
-        df, ["d0", "d1"], algo="mr-angle", num_partitions=8))
+        df, ["d0", "d1"], algo=algo, num_partitions=8))
     assert jobs == 1
     assert spark_rows(out, df.columns) == spark_rows(
         skyline(df, ["d0", "d1"]), df.columns)

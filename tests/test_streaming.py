@@ -1,6 +1,6 @@
 """Streaming suite: wire codecs (P1/P2), the incremental foreachBatch
-pipeline (ST1-ST7 via engine.SkylinePipeline), and the
-applyInPandasWithState continuous variant.
+pipeline (ST1-ST7 via engine.SkylinePipeline), and the non-skyline
+streams of ``streaming.continuous``.
 
 Reference semantics under test (SURVEY §2.5):
   * record-ID barrier — a trigger "qid,K" answers the skyline of the
@@ -330,51 +330,6 @@ def test_pipeline_nonfinite_lines(spark, tmp_path, algo):
         [("q", len(rows))]
 
 
-# ----------------------------------------------- applyInPandasWithState
-
-def test_continuous_local_skylines(spark, tmp_path, points_2d):
-    from flink_skyline_qos_spark.streaming.continuous import (
-        continuous_local_skylines,
-    )
-    from flink_skyline_qos_spark.streaming.sources import file_stream
-    from flink_skyline_qos_spark.streaming.wire import (
-        parse_service_tuples as parse,
-    )
-
-    data_dir = str(tmp_path / "data")
-    rows = points_2d.collect()
-    lines = [f"{r['id']},{r['d0']},{r['d1']}" for r in rows]
-    half = len(lines) // 2
-    _write_text(data_dir, "a.csv", lines[:half])
-    _write_text(data_dir, "b.csv", lines[half:])
-
-    stream = parse(file_stream(spark, data_dir, max_files_per_trigger=1), 2)
-    out = continuous_local_skylines(
-        stream, dims=2, algo="mr-dim", num_partitions=4,
-        domain_max=120000.0)
-    name = "cont_sky"
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    emitted = spark.table(name)
-    # last emission per pid = that partition's final local skyline;
-    # global skyline of the union must equal the batch skyline.
-    final_local = emitted.groupBy("pid", "id", "d0", "d1").agg(
-        F.count("*")).select("pid", "id", "d0", "d1")
-    # take each partition's final state: the LAST batch that touched a pid
-    # re-emits its full skyline, and earlier emissions are supersets'
-    # members — merging all emissions still yields the right skyline
-    # because skyline(union of partial skylines) == skyline(all).
-    got = {(r["d0"], r["d1"]) for r in
-           skyline(final_local.drop("pid"), ["d0", "d1"]).collect()}
-    expect = {(r["d0"], r["d1"]) for r in
-              skyline(points_2d, ["d0", "d1"]).collect()}
-    assert got == expect
-
-
 def test_pipeline_batch_retry_idempotent(spark, tmp_path, points_2d):
     """Replaying a foreachBatch batch id (Spark's retry contract) must not
     double-count records, duplicate state ties, or re-append results."""
@@ -413,51 +368,6 @@ def test_pipeline_batch_retry_idempotent(spark, tmp_path, points_2d):
     mrow = m.first()
     assert mrow["record_count"] == len(lines)
     assert mrow["local_cpu_ms"] >= 0 and mrow["global_cpu_ms"] >= 0
-
-
-def test_continuous_global_merge(spark, tmp_path, points_2d):
-    """ST4 + global: the foreachBatch merge downstream of the stateful
-    local stage emits, at the final batch, the exact batch skyline."""
-    from flink_skyline_qos_spark.streaming.continuous import (
-        continuous_local_skylines,
-        start_continuous_global,
-    )
-    from flink_skyline_qos_spark.streaming.sources import file_stream
-    from flink_skyline_qos_spark.streaming.wire import (
-        parse_service_tuples as parse,
-    )
-
-    data_dir = str(tmp_path / "data")
-    rows = points_2d.collect()
-    lines = [f"{r['id']},{r['d0']},{r['d1']}" for r in rows]
-    third = len(lines) // 3
-    _write_text(data_dir, "a.csv", lines[:third])
-    _write_text(data_dir, "b.csv", lines[third:2 * third])
-    _write_text(data_dir, "c.csv", lines[2 * third:])
-
-    stream = parse(file_stream(spark, data_dir, max_files_per_trigger=1), 2)
-    local = continuous_local_skylines(
-        stream, dims=2, algo="mr-grid", num_partitions=4,
-        domain_max=120000.0)
-    out_dir = str(tmp_path / "out")
-    q = start_continuous_global(local, dims=2, out_dir=out_dir,
-                                num_partitions=4)
-    q.awaitTermination()
-
-    emitted = spark.read.option("recursiveFileLookup", "true").parquet(
-        os.path.join(out_dir, "global"))
-    last = emitted.agg(F.max("batch_id")).first()[0]
-    got = {(r["d0"], r["d1"]) for r in
-           emitted.filter(F.col("batch_id") == last).collect()}
-    expect = {(r["d0"], r["d1"]) for r in
-              skyline(points_2d, ["d0", "d1"]).collect()}
-    assert got == expect
-
-    metrics = spark.read.option("recursiveFileLookup", "true").parquet(
-        os.path.join(out_dir, "metrics"))
-    mrow = metrics.orderBy(F.col("batch_id").desc()).first()
-    assert mrow["skyline_size"] == len(expect)
-    assert 0.0 <= mrow["optimality"] <= 1.0
 
 
 def test_query_metrics_cpu_accounting(lineitem):
@@ -702,62 +612,6 @@ def test_rate_stream_pipeline_restart_resumes(spark, tmp_path):
     assert meta2["record_count"] == replay.count()
 
 
-def test_streaming_windowed_skyline_matches_batch(spark):
-    """VERDICT r3 #7: event-time tumbling-window skyline EXECUTED over
-    an unbounded rate source with a watermark; every window the
-    watermark closed must equal the batch skyline of exactly that
-    window's rows (ids are contiguous per window, dims deterministic
-    from id, so the batch twin is exactly reconstructible)."""
-    import time as _t
-
-    from flink_skyline_qos_spark.operators.skyline import skyline
-    from flink_skyline_qos_spark.streaming.continuous import (
-        streaming_windowed_skyline,
-    )
-    from flink_skyline_qos_spark.streaming.sources import rate_tuple_dims
-
-    BASE = 1_600_000_000
-    src = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 500).load()
-        .select(F.col("value").alias("id"))
-        .select("id",
-                F.timestamp_seconds(F.lit(BASE) + F.col("id")).alias("ts"),
-                *rate_tuple_dims(2, 10000.0))
-    )
-    out = streaming_windowed_skyline(src, 2, window_duration="10 seconds",
-                                     watermark_delay="5 seconds")
-    q = (out.writeStream.format("memory").queryName("win_sky")
-         .outputMode("append").trigger(processingTime="1 second").start())
-    try:
-        deadline = _t.time() + 120
-        while _t.time() < deadline:
-            n = spark.sql(
-                "SELECT count(DISTINCT win_start) AS c FROM win_sky"
-            ).first()["c"]
-            if n >= 2:
-                break
-            _t.sleep(0.5)
-        else:
-            raise AssertionError("no windows closed before timeout")
-    finally:
-        q.stop()
-        q.awaitTermination()
-    rows = spark.sql("SELECT * FROM win_sky").collect()
-    by_win: dict = {}
-    for r in rows:
-        by_win.setdefault(int(r["win_start"].timestamp()), []).append(r)
-    assert len(by_win) >= 2
-    for ws in sorted(by_win)[:5]:
-        lo, hi = ws - BASE, ws + 10 - BASE
-        batch = spark.range(max(lo, 0), hi).select(
-            "id", *rate_tuple_dims(2, 10000.0))
-        expect = {(r["id"], r["d0"], r["d1"])
-                  for r in skyline(batch, ["d0", "d1"]).collect()}
-        got = {(r["id"], r["d0"], r["d1"]) for r in by_win[ws]}
-        assert got == expect, f"window {ws}"
-
-
 def test_streaming_exact_dedup_bounded_state(spark):
     """Ingest-time dedup EXECUTED from the unbounded rate source: keys
     recur every 40 rows, the watermark horizon covers the whole run, so
@@ -793,126 +647,6 @@ def test_streaming_exact_dedup_bounded_state(spark):
                      "GROUP BY key").collect()
     assert len(rows) == 40
     assert all(r["n"] == 1 for r in rows)  # no key emitted twice
-
-
-def test_streaming_sliding_skyline_matches_batch(spark):
-    """Sliding-window skyline EXECUTED over the unbounded rate source:
-    overlapping 10 s windows every 5 s; every window the watermark
-    closed must equal the batch skyline of exactly that window's rows."""
-    import time as _t
-
-    from flink_skyline_qos_spark.operators.skyline import skyline
-    from flink_skyline_qos_spark.streaming.continuous import (
-        streaming_sliding_skyline,
-    )
-    from flink_skyline_qos_spark.streaming.sources import rate_tuple_dims
-
-    BASE = 1_600_000_000
-    src = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 500).load()
-        .select(F.col("value").alias("id"))
-        .select("id",
-                F.timestamp_seconds(F.lit(BASE) + F.col("id")).alias("ts"),
-                *rate_tuple_dims(2, 10000.0))
-    )
-    out = streaming_sliding_skyline(
-        src, 2, window_duration="10 seconds", slide_duration="5 seconds",
-        watermark_delay="5 seconds")
-    q = (out.writeStream.format("memory").queryName("slide_sky")
-         .outputMode("append").trigger(processingTime="1 second").start())
-    try:
-        deadline = _t.time() + 120
-        while _t.time() < deadline:
-            n = spark.sql(
-                "SELECT count(DISTINCT win_start) AS c FROM slide_sky"
-            ).first()["c"]
-            if n >= 3:
-                break
-            _t.sleep(0.5)
-        else:
-            raise AssertionError("no windows closed before timeout")
-    finally:
-        q.stop()
-        q.awaitTermination()
-    rows = spark.sql("SELECT * FROM slide_sky").collect()
-    by_win: dict = {}
-    for r in rows:
-        by_win.setdefault(int(r["win_start"].timestamp()), []).append(r)
-    assert len(by_win) >= 3
-    # window starts arrive every 5 s (overlap proves the slide expansion)
-    starts = sorted(by_win)
-    assert any(b - a == 5 for a, b in zip(starts, starts[1:]))
-    for ws in starts[:6]:
-        lo, hi = ws - BASE, ws + 10 - BASE
-        batch = spark.range(max(lo, 0), hi).select(
-            "id", *rate_tuple_dims(2, 10000.0))
-        expect = {(r["id"], r["d0"], r["d1"])
-                  for r in skyline(batch, ["d0", "d1"]).collect()}
-        got = {(r["id"], r["d0"], r["d1"]) for r in by_win[ws]}
-        assert got == expect, f"window {ws}"
-
-
-def test_streaming_session_skyline_matches_batch(spark):
-    """Session-window skyline EXECUTED over the rate source: ts jumps
-    600 s every 50 ids (gap 120 s), so sessions are deterministic
-    50-id blocks; every closed session must equal the batch skyline of
-    exactly that (user, block)'s rows."""
-    import time as _t
-
-    from flink_skyline_qos_spark.operators.skyline import skyline
-    from flink_skyline_qos_spark.streaming.continuous import (
-        streaming_session_skyline,
-    )
-    from flink_skyline_qos_spark.streaming.sources import rate_tuple_dims
-
-    BASE = 1_600_000_000
-    src = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 500).load()
-        .select(F.col("value").alias("id"))
-        .select("id", (F.col("id") % 5).alias("user_id"),
-                F.timestamp_seconds(
-                    F.lit(BASE) + F.col("id")
-                    + (F.col("id") / 50).cast("long") * 600).alias("ts"),
-                *rate_tuple_dims(2, 10000.0))
-    )
-    out = streaming_session_skyline(
-        src, 2, gap="120 seconds", watermark_delay="5 seconds")
-    q = (out.writeStream.format("memory").queryName("sess_sky")
-         .outputMode("append").trigger(processingTime="1 second").start())
-    try:
-        deadline = _t.time() + 120
-        while _t.time() < deadline:
-            n = spark.sql(
-                "SELECT count(DISTINCT sess_start) AS c FROM sess_sky"
-            ).first()["c"]
-            if n >= 2:
-                break
-            _t.sleep(0.5)
-        else:
-            raise AssertionError("no sessions closed before timeout")
-    finally:
-        q.stop()
-        q.awaitTermination()
-    rows = spark.sql("SELECT * FROM sess_sky").collect()
-    by_sess: dict = {}
-    for r in rows:
-        by_sess.setdefault((r["user_id"],
-                            int(r["sess_start"].timestamp())), []).append(r)
-    assert len(by_sess) >= 2
-    for (u, ss), got_rows in sorted(by_sess.items())[:10]:
-        # block index from the session's first event time:
-        # ts = BASE + id + (id // 50) * 600 -> invert via the block grid
-        rel = ss - BASE
-        b = round((rel - u) / 650)  # first id in block b for user u >= 50b
-        ids = [v for v in range(50 * b, 50 * (b + 1)) if v % 5 == u]
-        batch = (spark.createDataFrame([(v,) for v in ids], "id long")
-                 .select("id", *rate_tuple_dims(2, 10000.0)))
-        expect = {(r["id"], r["d0"], r["d1"])
-                  for r in skyline(batch, ["d0", "d1"]).collect()}
-        got = {(r["id"], r["d0"], r["d1"]) for r in got_rows}
-        assert got == expect, f"user {u} session {ss} (block {b})"
 
 
 def test_streaming_interval_join_executes_and_matches(spark):
