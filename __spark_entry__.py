@@ -146,18 +146,6 @@ from flink_skyline_qos_spark.operators.variants import (  # noqa: E402
     top_k_dominating,
     top_k_dominating_sql,
 )
-from flink_skyline_qos_spark.operators.compaction import (  # noqa: E402
-    latest_by_key,
-    latest_by_key_sql,
-)
-from flink_skyline_qos_spark.operators.stats import (  # noqa: E402
-    corr_matrix,
-    corr_matrix_sql,
-    mad_outliers,
-    mad_outliers_sql,
-    quantile_bins,
-    quantile_bins_sql,
-)
 from flink_skyline_qos_spark.operators.sketches import (  # noqa: E402
     count_min,
     count_min_estimate,
@@ -191,7 +179,6 @@ from flink_skyline_qos_spark.operators.similarity import (  # noqa: E402
     cosine_topk_ivf,
     embedding_near_dup_lsh,
     embedding_near_dup_lsh_sql,
-    embedding_near_dup_lsh_cross_sql,
     embedding_near_dup_pairs,
     knn_graph,
     knn_graph_sql,
@@ -237,21 +224,9 @@ GEN_N = 20_000
 #: it matches the queries whose source actually touches the streaming
 #: APIs).
 STREAM_QUERIES = frozenset({
-    "streaming_c4_admission_documents",
-    "streaming_count_min_windows_events",
-    "streaming_embedding_admission_embeddings",
-    "streaming_hll_windows_events",
-    "streaming_ingest_pipeline_documents",
-    "streaming_interval_join_events",
     "streaming_late_data_events",
-    "streaming_paragraph_admission_documents",
     "streaming_pipeline_skyline",
-    "streaming_quantiles_windows_events",
-    "streaming_substring_admission_documents",
 })
-# the events table's closed vocabulary (TESTDATA.md) — the fixed
-# candidate set the windowed count-min sketch watches
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 # Prefix triggers on events (FIXTURES.md F2): mid-prefix, K=0 immediate,
 # K beyond max(id) (pending-barrier → whole input at end-of-batch).
@@ -291,32 +266,11 @@ inter AS (
 )"""
 
 
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def _small_shuffle(s: SparkSession, n: int = 8):
-    """Tiny-fixture shuffle parallelism (r10): the streaming gate
-    fixtures move a few hundred rows through ~a dozen shuffle stages
-    per micro-batch; at the session's default partition count that is
-    pure task-scheduling overhead (A/B on the embedding admission
-    query: 17.3 s at 64 partitions → 8.2 s at 8, identical output).
-    Scoped: restores the session value on exit, so only the fixture —
-    never the operator — is tuned."""
-    old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        s.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def _batch_fixture_files(df: DataFrame, conds, data_dir: str) -> None:
     """Write the mtime-staggered parquet batch files a streaming
-    fixture replays — in ONE Spark job (round 12 gate-budget trim:
-    the per-side ``coalesce(1).write`` pattern cost one full job +
-    tmp-move per batch, ~0.5 s each at gate scale across five
-    streaming queries).
+    fixture replays — in ONE Spark job (a per-batch
+    ``coalesce(1).write`` costs one full job + tmp-move per batch,
+    ~0.5 s each at gate scale).
 
     `conds` is one boolean Column per batch, in replay order; rows are
     routed to the FIRST matching batch (rows matching none are
@@ -632,23 +586,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return triangle_count(edges)
     q["triangles_suppliers"] = _triangles
 
-    # --- changelog compaction: each key's LATEST row under a TOTAL
-    # (ts, tiebreak) order — the CDC upsert collapse every consumer
-    # runs before joining a 100 TB append-only table.  max_by(struct)
-    # aggregate: map-side partial combine, no per-key sort (the window
-    # row_number form the oracle states would sort every version).
-    q["latest_events_per_user"] = lambda s, d: latest_by_key(
-        load_table(s, d, "events"), "user_id",
-        order_col="ts", tiebreak="event_id")
-
-    # --- deterministic correlation matrix: quantized inputs + exact
-    # decimal sums make Pearson correlation a pure function of the
-    # data (Statistics.corr's double sums are partial-order-dependent);
-    # one scan computes all pairs map-side combined.
-    q["corr_profile_lineitem"] = lambda s, d: corr_matrix(
-        load_table(s, d, "lineitem"),
-        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
-
     # JSON schema-on-read (P1's companion wire format): extract the
     # typed payload field from the props JSON column scan-side and
     # aggregate -- get_json_object stays inside codegen, no Python
@@ -662,22 +599,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      F.sum("__k").alias("sum_k"),
                      F.round(F.avg("__k"), 6).alias("mean_k")))
     q["json_props_events"] = _json_props
-
-    # robust anomaly flagging: |x - median| > 3.5 MAD per event type
-    # (heavy-tail-safe, unlike mean/stddev z-scores); two broadcast
-    # percentile aggregates + scan-side flags, never a corpus sort
-    q["mad_outliers_events"] = lambda s, d: mad_outliers(
-        load_table(s, d, "events")
-        .select("event_id", "event_type", "value"),
-        "value", group_cols=["event_type"]
-    ).select("event_id", "event_type", "value", "med", "mad",
-             "is_outlier")
-
-    # equi-depth discretization of a metric column: decile buckets
-    # with per-bucket profiles — the feature-binning / calibrated-
-    # threshold pass; cutpoints broadcast, corpus never sorted
-    q["quantile_bins_events"] = lambda s, d: quantile_bins(
-        load_table(s, d, "events"), "value", nbins=10)
 
     # --- mergeable sketches: the 100 TB replacements for exact
     # COUNT(DISTINCT) and exact percentiles.  Both deterministic
@@ -1296,314 +1217,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["streaming_pipeline_skyline"] = _streaming_pipeline
 
-    # --- span-level streaming admission: incremental twin of
-    # dedup_paragraphs.  Batches split by ascending doc_id make the
-    # cross-batch first-occurrence rule coincide with the batch
-    # operator's global (id, pos) winner, so dedup_paragraphs_sql is an
-    # exact oracle for the streamed result (up to the span store's
-    # 60-bit hash keying — collision odds ~n²/2⁶¹, see the operator
-    # docstring; zero at any shipped SF).
-    def _streaming_paragraph_admission(s: SparkSession,
-                                       d: str) -> DataFrame:
-        import tempfile
-
-        from flink_skyline_qos_spark.streaming.continuous import (
-            run_streaming_paragraph_admission,
-        )
-
-        docs = load_table(s, d, "documents").select("doc_id", "text")
-        med = docs.approxQuantile("doc_id", [0.5], 0.0)
-        cut = med[0] if med else 0  # empty table: one empty batch each
-        work = tempfile.mkdtemp(prefix="spanadm_")
-        data_dir = os.path.join(work, "data")
-        os.makedirs(data_dir)
-        # parquet batch files (NOT an id|text text file: embedded
-        # newlines in text would shear into truncated + null-id rows);
-        # mtime stagger fixes replay order = ascending doc_id
-        _batch_fixture_files(docs, [
-            F.col("doc_id") <= cut,
-            (F.col("doc_id") > cut) | F.col("doc_id").isNull(),
-        ], data_dir)
-        stream = (s.readStream.schema(docs.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        run_streaming_paragraph_admission(stream, work, unit_tokens=8)
-        return (s.read.parquet(os.path.join(work, "cleaned"))
-                .select(F.col("id").alias("doc_id"), "clean_text",
-                        "n_units", "n_dupes"))
-
-    q["streaming_paragraph_admission_documents"] = \
-        _streaming_paragraph_admission
-
-    # --- quality-gate streaming admission: the ingest-time twin of
-    # c4_rules.  The rules are stateless per document, so the union of
-    # the per-batch outputs IS the batch operator over the whole table
-    # and c4_rules_sql is an exact oracle (VERDICT r7 Next #6: a crawl
-    # pipeline filters on quality rules before any dedup state).
-    def _streaming_c4_admission(s: SparkSession, d: str) -> DataFrame:
-        import tempfile
-
-        from flink_skyline_qos_spark.streaming.continuous import (
-            run_streaming_c4_admission,
-        )
-
-        docs = load_table(s, d, "documents").select("doc_id", "text")
-        med = docs.approxQuantile("doc_id", [0.5], 0.0)
-        cut = med[0] if med else 0  # empty table: one empty batch each
-        work = tempfile.mkdtemp(prefix="c4adm_")
-        data_dir = os.path.join(work, "data")
-        os.makedirs(data_dir)
-        # parquet batch files, mtime-staggered — same replay recipe as
-        # the span-admission query (text columns can embed newlines)
-        _batch_fixture_files(docs, [
-            F.col("doc_id") <= cut,
-            (F.col("doc_id") > cut) | F.col("doc_id").isNull(),
-        ], data_dir)
-        stream = (s.readStream.schema(docs.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        run_streaming_c4_admission(stream, work)
-        return s.read.option("recursiveFileLookup", "true").parquet(
-            os.path.join(work, "scored")).select(
-            "doc_id", "n_tokens", "mean_tok_len", "top_tok_ratio",
-            "stop_ratio", "failed", "kept")
-
-    q["streaming_c4_admission_documents"] = _streaming_c4_admission
-
-    # --- the COMPOSED ingest capstone: quality gate → span dedup in
-    # one streaming loop — the ingest twin of llm_corpus_v3's front
-    # half.  Rejected docs never seed the span store (a spam page must
-    # not claim first-occurrence over clean text arriving later), and
-    # every input doc is emitted once with verdict + cleaned text.
-    def _streaming_ingest_pipeline(s: SparkSession, d: str) -> DataFrame:
-        import tempfile
-
-        from flink_skyline_qos_spark.streaming.continuous import (
-            run_streaming_ingest_pipeline,
-        )
-
-        docs = load_table(s, d, "documents").select("doc_id", "text")
-        med = docs.approxQuantile("doc_id", [0.5], 0.0)
-        cut = med[0] if med else 0
-        work = tempfile.mkdtemp(prefix="ingestpipe_")
-        data_dir = os.path.join(work, "data")
-        os.makedirs(data_dir)
-        _batch_fixture_files(docs, [
-            F.col("doc_id") <= cut,
-            (F.col("doc_id") > cut) | F.col("doc_id").isNull(),
-        ], data_dir)
-        stream = (s.readStream.schema(docs.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        with _small_shuffle(s):
-            run_streaming_ingest_pipeline(stream, work, unit_tokens=8)
-        return (s.read.option("recursiveFileLookup", "true")
-                .parquet(os.path.join(work, "cleaned"))
-                .select(F.col("id").alias("doc_id"), "kept", "failed",
-                        "clean_text", "n_units", "n_dupes"))
-
-    q["streaming_ingest_pipeline_documents"] = _streaming_ingest_pipeline
-
-    # --- embedding streaming admission: SemDeDup at ingest (VERDICT r8
-    # #3).  Two batches split by ascending vec_id; a vector is admitted
-    # iff it near-dups nothing admitted before it (within-batch
-    # keep-first self-check, then cross-check vs the standing
-    # hyperplane-LSH signature store).  The oracle composes the two
-    # batch twins per side: self pairs via embedding_near_dup_lsh_sql,
-    # cross pairs (survivors × batch-1 admits) via
-    # embedding_near_dup_lsh_cross_sql — exact to the cosine.
-    def _streaming_embedding_admission(s: SparkSession,
-                                       d: str) -> DataFrame:
-        import tempfile
-
-        from flink_skyline_qos_spark.streaming.continuous import (
-            run_streaming_embedding_admission,
-        )
-
-        emb = (load_table(s, d, "embeddings")
-               .select("vec_id", "embedding")
-               .filter(F.col("vec_id").isNotNull()))
-        # engine-portable cut (the oracle recomputes it as a scalar
-        # subquery): floor-half of the max id, NOT a quantile — Spark's
-        # exact-median element choice and DuckDB's interpolated median
-        # disagree on even counts
-        mx = emb.agg(F.max("vec_id")).first()[0]
-        cut = (mx // 2) if mx is not None else 0
-        work = tempfile.mkdtemp(prefix="embadm_")
-        data_dir = os.path.join(work, "data")
-        os.makedirs(data_dir)
-        _batch_fixture_files(emb, [
-            F.col("vec_id") <= cut,
-            F.col("vec_id") > cut,
-        ], data_dir)
-        stream = (s.readStream.schema(emb.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        # compact_every=4: no compaction fires in this 2-batch fixture
-        # (r10 trim — the snapshot+GC rewrite cost 1.5-3.5 s of the
-        # gate's slowest query; the compaction + replay path stays
-        # EXECUTED in tests/test_streaming.py's cross-batch pytest,
-        # and dim=64 skips the per-batch vector-length probe job)
-        with _small_shuffle(s):
-            run_streaming_embedding_admission(
-                stream, work, threshold=0.35, n_planes=32, bands=8,
-                compact_every=4, dim=64)
-        return (s.read.option("recursiveFileLookup", "true")
-                .parquet(os.path.join(work, "admitted"))
-                .select("vec_id"))
-
-    q["streaming_embedding_admission_embeddings"] = \
-        _streaming_embedding_admission
-
-    # --- ExactSubstr streaming admission (round 12): the long-
-    # verbatim-quote twin of the minhash/embedding admission loops —
-    # a doc is admitted iff it shares no >=12-token verbatim run with
-    # anything admitted before it (within-batch keep-first, then cross
-    # vs the standing positioned-shingle store).  Oracle: composed
-    # batch twins per side (self pairs + cross pairs), exact.
-    def _streaming_substring_admission(s: SparkSession,
-                                       d: str) -> DataFrame:
-        import tempfile
-
-        from flink_skyline_qos_spark.streaming.continuous import (
-            run_streaming_substring_admission,
-        )
-
-        docs = (load_table(s, d, "documents")
-                .select("doc_id", "text")
-                .filter(F.col("doc_id").isNotNull()))
-        # engine-portable cut (the oracle recomputes it as a scalar
-        # subquery): floor-half of the max id, like the embedding twin
-        mx = docs.agg(F.max("doc_id")).first()[0]
-        cut = (mx // 2) if mx is not None else 0
-        work = tempfile.mkdtemp(prefix="substradm_")
-        data_dir = os.path.join(work, "data")
-        os.makedirs(data_dir)
-        _batch_fixture_files(docs, [
-            F.col("doc_id") <= cut,
-            F.col("doc_id") > cut,
-        ], data_dir)
-        stream = (s.readStream.schema(docs.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        # compact_every=4: no compaction fires in this 2-batch fixture
-        # (the compaction + replay path is pytest-exercised)
-        with _small_shuffle(s):
-            run_streaming_substring_admission(
-                stream, work, k=8, min_span=12, max_df=50,
-                compact_every=4)
-        return (s.read.option("recursiveFileLookup", "true")
-                .parquet(os.path.join(work, "admitted"))
-                .select("doc_id"))
-
-    q["streaming_substring_admission_documents"] = \
-        _streaming_substring_admission
-
-    # --- windowed streaming sketches EXECUTED from a deterministic
-    # file-source replay of the events table (availableNow): append-mode
-    # emission = exactly the watermark-CLOSED daily windows, whose
-    # sketch state equals the batch aggregation over that window's rows
-    # — which is what the DuckDB twin states (VERDICT r4 #5).
-    def _streaming_sketch_replay(s: SparkSession, d: str, build):
-        import tempfile
-        import uuid
-
-        import time
-
-        work = tempfile.mkdtemp(prefix="swsketch_")
-        data_dir = os.path.join(work, "data")
-        os.makedirs(data_dir)
-        # NTZ → LTZ for the watermark clock (session tz is pinned UTC,
-        # so the epoch is unchanged and matches DuckDB's epoch())
-        ev = (load_table(s, d, "events")
-              .withColumn("ts", F.col("ts").cast("timestamp"))
-              .select("ts", "user_id", "event_type", "value"))
-        # CHRONOLOGICAL micro-batches (one file per ~week, mtime-ordered
-        # so the file source replays them in event-time order): the
-        # watermark advances monotonically across batches like a real
-        # ingest and never drops a row as late — a time-shuffled split
-        # would mark everything after batch 1 late and silently drain
-        # the windows.  The last windows emit in availableNow's final
-        # watermark-commit batch.
-        # two files: one real watermark advance across batches, plus
-        # availableNow's final commit — each extra micro-batch re-plans
-        # the wide streaming aggregation (plan compile dominates these
-        # tiny-data replays), so keep the batch count minimal
-        wm_cut = F.lit("2024-01-16").cast("timestamp")
-        _batch_fixture_files(ev, [
-            F.col("ts") < wm_cut,
-            F.col("ts") >= wm_cut,
-        ], data_dir)
-        stream = (s.readStream.schema(ev.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
-        out = build(stream)
-        name = f"swk_{uuid.uuid4().hex[:8]}"
-        # 4 state partitions, not the session's 32: the stateful-op
-        # partition count is fixed by shuffle.partitions at first run,
-        # and each batch pays per-partition state-store file ops — at
-        # ~30 windows of state, 32 partitions is pure commit overhead.
-        # Restored after the run; batch queries read the conf at their
-        # own action time.
-        prev_parts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            query = (out.writeStream.format("memory").queryName(name)
-                     .outputMode("append")
-                     .option("checkpointLocation",
-                             os.path.join(work, "ckpt"))
-                     .trigger(availableNow=True).start())
-            query.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # timestamps as epoch seconds: engine-portable values (a
-        # naive-vs-tz-aware datetime would never hash-compare equal)
-        out = s.table(name)
-        for fname, ftype in out.dtypes:
-            if ftype.startswith("timestamp"):
-                out = out.withColumn(fname, F.col(fname).cast("long"))
-        return out
-
-    def _streaming_hll_windows(s: SparkSession, d: str) -> DataFrame:
-        from flink_skyline_qos_spark.operators.sketches import (
-            hll_estimate_regs,
-        )
-        from flink_skyline_qos_spark.streaming.continuous import (
-            streaming_windowed_hll_grouped,
-        )
-        # register-keyed streaming agg (ONE max column — the wide
-        # 2^b-column form made plan compile scale with m) + the shared
-        # exact-integer batch finisher
-        regs = _streaming_sketch_replay(s, d, lambda st: (
-            streaming_windowed_hll_grouped(
-                st, "user_id", window_duration="1 day",
-                watermark_delay="1 hour", bucket_bits=6)))
-        return hll_estimate_regs(regs, ["win_start", "win_end"],
-                                 bucket_bits=6, rho_col="max_rho")
-    q["streaming_hll_windows_events"] = _streaming_hll_windows
-
-    def _streaming_count_min_windows(s: SparkSession, d: str) -> DataFrame:
-        from flink_skyline_qos_spark.streaming.continuous import (
-            streaming_windowed_count_min,
-        )
-        return _streaming_sketch_replay(s, d, lambda st: (
-            streaming_windowed_count_min(
-                st, "event_type", EVENT_TYPES, window_duration="1 day",
-                watermark_delay="1 hour", depth=4, width=64)))
-    q["streaming_count_min_windows_events"] = _streaming_count_min_windows
-
-    def _streaming_quantiles_windows(s: SparkSession, d: str) -> DataFrame:
-        from flink_skyline_qos_spark.streaming.continuous import (
-            fixed_hist_quantiles_from_bins,
-            streaming_windowed_quantiles_grouped,
-        )
-        # bin-keyed streaming agg (ONE count column; the wide form's
-        # O(nbins²)-node cascade re-planned per batch) + the shared
-        # batch interpolation finisher — nbins 32 at lower cost than
-        # the wide form managed at 16
-        bins = _streaming_sketch_replay(s, d, lambda st: (
-            streaming_windowed_quantiles_grouped(
-                st, "value", lo=0.0, hi=600.0, nbins=32,
-                window_duration="1 day", watermark_delay="1 hour")))
-        return fixed_hist_quantiles_from_bins(
-            bins, ["win_start", "win_end"], lo=0.0, hi=600.0, nbins=32,
-            quantiles=(0.5, 0.95))
-    q["streaming_quantiles_windows_events"] = _streaming_quantiles_windows
-
     # ST6 late data EXECUTED under the oracle gate: the second file
     # replays rows from Jan 1-5 for user_id%3==0 AFTER the watermark
     # has advanced past their (long-closed) daily windows — Spark drops
@@ -1659,35 +1272,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             s.conf.set("spark.sql.shuffle.partitions", prev_parts)
         return s.table(name)
     q["streaming_late_data_events"] = _streaming_late_data
-
-    # stream-stream interval join EXECUTED: view→purchase attribution
-    # (views of the same user within the day before a purchase).  With
-    # chronological replay nothing arrives late and no matchable row is
-    # ever state-evicted (right rows are dropped only once the left
-    # watermark passes right_ts + band), and INNER matches emit in the
-    # batch they are found — so the oracle is the plain batch interval
-    # join over all events.
-    def _streaming_interval_join(s: SparkSession, d: str) -> DataFrame:
-        from flink_skyline_qos_spark.streaming.continuous import (
-            streaming_interval_join,
-        )
-
-        def build(st):
-            left = (st.where(F.col("event_type") == "purchase")
-                    .select(F.col("user_id"),
-                            F.col("value").alias("purchase_value"),
-                            F.col("ts").alias("purchase_ts")))
-            right = (st.where(F.col("event_type") == "view")
-                     .select(F.col("user_id"),
-                             F.col("ts").alias("view_ts")))
-            return streaming_interval_join(
-                left, right, key="user_id", left_ts="purchase_ts",
-                right_ts="view_ts", band_seconds=86400,
-                watermark_delay="1 hour").select(
-                    "l.user_id", "purchase_value", "purchase_ts",
-                    "view_ts")
-        return _streaming_sketch_replay(s, d, build)
-    q["streaming_interval_join_events"] = _streaming_interval_join
 
     # --- similarity search over embeddings ---
     def _ann(s: SparkSession, d: str) -> DataFrame:
@@ -1918,14 +1502,6 @@ FROM events GROUP BY event_type
         "AND b.l_linenumber = a.l_linenumber + 1",
         iterations=2)
 
-    o["latest_events_per_user"] = latest_by_key_sql(
-        "events",
-        ["event_id", "ts", "user_id", "event_type", "value", "props"],
-        "user_id", order_col="ts", tiebreak="event_id")
-    o["corr_profile_lineitem"] = corr_matrix_sql(
-        "lineitem",
-        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
-
     o["hll_users_events"] = hll_distinct_sql(
         "events", "user_id", group_cols=["event_type"], bucket_bits=10)
     o["quantile_sketch_events"] = histogram_quantiles_sql(
@@ -2142,35 +1718,7 @@ FROM t GROUP BY lang, source
         delimiter=" ")
     o["paragraph_dedup_documents"] = dedup_paragraphs_sql(
         "documents", unit_tokens=8)
-    # streamed span admission == the batch operator when batch order
-    # follows ascending doc_id (first-occurrence rule coincides)
-    o["streaming_paragraph_admission_documents"] = dedup_paragraphs_sql(
-        "documents", unit_tokens=8)
     o["c4_filter_documents"] = c4_rules_sql("documents")
-    # stateless per-doc rules: the streamed union IS the batch operator
-    o["streaming_c4_admission_documents"] = c4_rules_sql("documents")
-    # composed ingest capstone: gate (stateless) then span dedup over
-    # the kept set — batches split by ascending doc_id make the
-    # streamed cross-batch winner rule coincide with the batch
-    # operator's global (id, pos) order, so the composition of the two
-    # batch twins is an exact oracle
-    o["streaming_ingest_pipeline_documents"] = f"""
-WITH c4 AS (
-{c4_rules_sql("documents")}
-),
-keptdocs AS (
-  SELECT d.doc_id, d.text FROM documents d
-  JOIN c4 ON c4.doc_id = d.doc_id AND c4.kept
-),
-dp AS (
-{dedup_paragraphs_sql("keptdocs")}
-)
-SELECT c4.doc_id, c4.kept, c4.failed,
-       coalesce(dp.clean_text, '') AS clean_text,
-       coalesce(dp.n_units, 0)::BIGINT AS n_units,
-       coalesce(dp.n_dupes, 0)::BIGINT AS n_dupes
-FROM c4 LEFT JOIN dp ON dp.doc_id = c4.doc_id
-""".strip()
     o["pack_sequences_documents"] = pack_sequences_sql(
         chunk_documents_sql("documents", size=32, stride=32), seq_len=64)
 
@@ -2375,25 +1923,6 @@ red AS (
         f"({generate_points_sql(4000, 2, dist='anti_correlated')})",
         ["d0", "d1"], select="'q1' AS query_id, t.id, t.d0, t.d1",
     )
-    from flink_skyline_qos_spark.streaming.continuous import (
-        streaming_windowed_count_min_sql,
-        streaming_windowed_hll_sql,
-        streaming_windowed_quantiles_sql,
-    )
-
-    o["streaming_hll_windows_events"] = streaming_windowed_hll_sql(
-        "events", "user_id", window_seconds=86400, delay_seconds=3600,
-        bucket_bits=6)
-    o["streaming_count_min_windows_events"] = \
-        streaming_windowed_count_min_sql(
-            "events", "event_type", EVENT_TYPES, window_seconds=86400,
-            delay_seconds=3600, depth=4, width=64)
-    o["streaming_quantiles_windows_events"] = \
-        streaming_windowed_quantiles_sql(
-            "events", "value", lo=0.0, hi=600.0, nbins=32,
-            quantiles=(0.5, 0.95), window_seconds=86400,
-            delay_seconds=3600)
-
     o["streaming_late_data_events"] = """
 SELECT CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS win_start,
        CAST(floor(epoch(ts) / 86400) * 86400 + 86400 AS BIGINT)
@@ -2404,17 +1933,6 @@ WHERE NOT (ts < TIMESTAMP '2024-01-06' AND user_id % 3 = 0)
   AND floor(epoch(ts) / 86400) * 86400 + 86400 <=
       (SELECT epoch(max(ts)) FROM events) - 3600
 GROUP BY 1, 2
-""".strip()
-
-    o["streaming_interval_join_events"] = """
-SELECT l.user_id, l.value AS purchase_value,
-       CAST(floor(epoch(l.ts)) AS BIGINT) AS purchase_ts,
-       CAST(floor(epoch(r.ts)) AS BIGINT) AS view_ts
-FROM events l JOIN events r
-  ON l.user_id = r.user_id
- AND r.ts >= l.ts - INTERVAL 86400 SECOND
- AND r.ts <= l.ts
-WHERE l.event_type = 'purchase' AND r.event_type = 'view'
 """.strip()
 
     for dist in ("uniform", "correlated", "anti_correlated"):
@@ -2431,81 +1949,6 @@ WHERE l.event_type = 'purchase' AND r.event_type = 'view'
 
     o["embedding_near_dup_lsh"] = embedding_near_dup_lsh_sql(
         "embeddings", 64, threshold=0.35, n_planes=32, bands=8)
-
-    # streamed embedding admission: composition of the two batch twins
-    # per side — batch-1 self-dedup, batch-2 self-dedup, then batch-2
-    # survivors cross-checked against batch-1 admits (exactly the
-    # loop's order: self first, store second).  The cut is the same
-    # floor-half-of-max scalar both engines compute.
-    _doc_cut = "(SELECT max(doc_id) // 2 FROM documents)"
-    o["streaming_substring_admission_documents"] = f"""
-WITH b1 AS (
-  SELECT doc_id, text FROM documents
-  WHERE doc_id IS NOT NULL AND doc_id <= {_doc_cut}
-),
-b2 AS (
-  SELECT doc_id, text FROM documents
-  WHERE doc_id IS NOT NULL AND doc_id > {_doc_cut}
-),
-p1 AS (
-{substring_dedup_pairs_sql("b1", k=8, min_span=12, max_df=50)}
-),
-adm1 AS (
-  SELECT doc_id FROM b1 WHERE doc_id NOT IN (SELECT id_b FROM p1)
-),
-p2 AS (
-{substring_dedup_pairs_sql("b2", k=8, min_span=12, max_df=50)}
-),
-surv2 AS (
-  SELECT doc_id FROM b2 WHERE doc_id NOT IN (SELECT id_b FROM p2)
-),
-px AS (
-{substring_dedup_pairs_cross_sql(
-    "(SELECT d.* FROM b2 d JOIN surv2 USING (doc_id))",
-    "(SELECT d.* FROM b1 d JOIN adm1 USING (doc_id))",
-    k=8, min_span=12, max_df=50)}
-)
-SELECT doc_id FROM adm1
-UNION ALL
-SELECT doc_id FROM surv2
-WHERE doc_id NOT IN (SELECT new_id FROM px)
-""".strip()
-
-    _emb_cut = "(SELECT max(vec_id) // 2 FROM embeddings)"
-    o["streaming_embedding_admission_embeddings"] = f"""
-WITH b1 AS (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id IS NOT NULL AND vec_id <= {_emb_cut}
-),
-b2 AS (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE vec_id IS NOT NULL AND vec_id > {_emb_cut}
-),
-p1 AS (
-{embedding_near_dup_lsh_sql("b1", 64, threshold=0.35,
-                            n_planes=32, bands=8)}
-),
-adm1 AS (
-  SELECT vec_id FROM b1 WHERE vec_id NOT IN (SELECT id_b FROM p1)
-),
-p2 AS (
-{embedding_near_dup_lsh_sql("b2", 64, threshold=0.35,
-                            n_planes=32, bands=8)}
-),
-surv2 AS (
-  SELECT vec_id FROM b2 WHERE vec_id NOT IN (SELECT id_b FROM p2)
-),
-px AS (
-{embedding_near_dup_lsh_cross_sql(
-    "(SELECT e.* FROM b2 e JOIN surv2 USING (vec_id))",
-    "(SELECT e.* FROM b1 e JOIN adm1 USING (vec_id))",
-    64, threshold=0.35, n_planes=32, bands=8)}
-)
-SELECT vec_id FROM adm1
-UNION ALL
-SELECT vec_id FROM surv2
-WHERE vec_id NOT IN (SELECT new_id FROM px)
-""".strip()
 
     # min-label reachability over the exact LSH pair SQL — full value
     # check of the embedding dedup pipeline (cf. dedup_corpus_documents)
@@ -2548,13 +1991,6 @@ WHERE list_dot_product(a.v, b.v)
         "AS mean_k FROM events "
         "WHERE json_extract_string(props, '$.k') IS NOT NULL "
         "GROUP BY event_type")
-
-    o["mad_outliers_events"] = mad_outliers_sql(
-        "SELECT event_id, event_type, value FROM events",
-        "value", group_cols=["event_type"])
-
-    o["quantile_bins_events"] = quantile_bins_sql(
-        "SELECT value FROM events", "value", nbins=10)
 
     o["quality_floor_documents"] = quality_floor_sql(
         f"SELECT doc_id, lang, {quality_score_sql('text')} AS score "

@@ -916,7 +916,7 @@ def bm25_topk(df: DataFrame, queries: DataFrame, *,
     contributions are rounded to 6 dp and summed as DECIMAL(38,6)
     (exact integer arithmetic, ORDER-INDEPENDENT — an IEEE double sum
     would make the score depend on Spark's vs DuckDB's reduction
-    order; the same move as `operators/stats.corr_matrix`).  Query
+    order).  Query
     terms are DISTINCT (the qtf component is omitted, the common BM25
     simplification; duplicate query words don't double-count).
 
@@ -1132,9 +1132,8 @@ GROUP BY seq_id
 
 def unit_spans(text: Column, unit_tokens: int) -> Column:
     """Array of consecutive non-overlapping `unit_tokens`-token spans —
-    the unit grid :func:`dedup_paragraphs` and the streaming paragraph
-    admission share (one expression so the two can never disagree on
-    span boundaries).  Empty/blank text yields an empty array."""
+    the unit grid of :func:`dedup_paragraphs`.  Empty/blank text yields
+    an empty array."""
     u = int(unit_tokens)
     toks = _clean_tokens(text)
     n_units = F.ceil(F.size(toks) / F.lit(float(u))).cast("int")
@@ -1188,14 +1187,10 @@ def dedup_paragraphs(df: DataFrame, *, id_col: str = "doc_id",
 
 def reassemble_spans(marked: DataFrame, ids: DataFrame, *,
                      id_col: str = "doc_id") -> DataFrame:
-    """Shared tail of :func:`dedup_paragraphs` and the streaming span
-    admission (`streaming/continuous.run_streaming_paragraph_admission`):
-    rebuild (id, clean_text, n_units, n_dupes) from marked span rows
-    (`id_col`, pos, unit, __keep) in original order, restoring
-    span-less ids from `ids` (single-column frame of every input id)
-    with ('', 0, 0).  One helper so the batch operator and its
-    streaming twin — which is ORACLED by the batch operator's SQL —
-    can never disagree on reassembly."""
+    """Tail of :func:`dedup_paragraphs`: rebuild (id, clean_text,
+    n_units, n_dupes) from marked span rows (`id_col`, pos, unit,
+    __keep) in original order, restoring span-less ids from `ids`
+    (single-column frame of every input id) with ('', 0, 0)."""
     arr = F.array_sort(F.collect_list(F.struct("pos", "unit", "__keep")))
     agg = marked.groupBy(id_col).agg(
         F.array_join(

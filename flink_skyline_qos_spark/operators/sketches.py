@@ -54,7 +54,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "hll_bucket_rho",
-    "hll_estimate_wide",
     "hll_distinct",
     "hll_distinct_sql",
     "hll_estimate_regs",
@@ -63,8 +62,6 @@ __all__ = [
     "count_min",
     "count_min_estimate",
     "count_min_sql",
-    "fixed_hist_bin",
-    "fixed_hist_quantile_wide",
 ]
 
 _HASH_BITS = 60  # 15 hex chars of md5 → always positive in a BIGINT
@@ -90,8 +87,7 @@ def _hash60(key: Column) -> Column:
 
 
 def hll_bucket_rho(key: Column, bucket_bits: int) -> "tuple[Column, Column]":
-    """(bucket, rho) register coordinates for one key — the shared core
-    of the batch and streaming HLL forms."""
+    """(bucket, rho) register coordinates for one key."""
     b = int(bucket_bits)
     tail_bits = _HASH_BITS - b
     tail_mask = (1 << tail_bits) - 1
@@ -102,35 +98,6 @@ def hll_bucket_rho(key: Column, bucket_bits: int) -> "tuple[Column, Column]":
     rho = (F.when(tail == 0, F.lit(rho_max))
            .otherwise(F.lit(rho_max) - F.length(F.bin(tail))))
     return bucket, rho
-
-
-def hll_estimate_wide(reg_cols: Sequence[Column],
-                      bucket_bits: int) -> "tuple[Column, Column]":
-    """(n_buckets_hit, estimate) from 2^bucket_bits per-register max
-    columns (NULL = bucket never hit) — the wide layout a single
-    streaming aggregation produces.  Same exact-integer harmonic sum
-    and linear-counting branch as :func:`hll_distinct`."""
-    m = 1 << int(bucket_bits)
-    if len(reg_cols) != m:
-        raise ValueError(f"need exactly {m} register columns")
-    const = _alpha(m) * m * m * float(_TWO63)
-    s_total = None
-    n_hit = None
-    for rc in reg_cols:
-        # 2^(63−M) — pow(2, k) is exact for integer k ≤ 63, and this
-        # helper only needs Spark↔Spark determinism (stream vs batch
-        # twin), so the double route is sound; NULL register = never
-        # hit = M 0 = 2^63.
-        t = F.pow(F.lit(2.0), F.lit(63) - F.coalesce(rc, F.lit(0))) \
-            .cast("decimal(38,0)")
-        s_total = t if s_total is None else s_total + t
-        h = rc.isNotNull().cast("long")
-        n_hit = h if n_hit is None else n_hit + h
-    raw = F.lit(const) / s_total.cast("double")
-    empty = (F.lit(m) - n_hit).cast("double")
-    lc = F.lit(float(m)) * F.log(F.lit(float(m)) / empty)
-    est = F.when((raw <= F.lit(2.5 * m)) & (empty > 0), lc).otherwise(raw)
-    return n_hit, F.round(est, 6)
 
 
 def hll_distinct(df: DataFrame, key_col: str, *,
@@ -165,13 +132,12 @@ def hll_distinct(df: DataFrame, key_col: str, *,
 
 
 def hll_estimate_regs(regs: DataFrame, group_cols: Sequence[str], *,
-                      bucket_bits: int, rho_col: str = "__m") -> DataFrame:
+                      bucket_bits: int) -> DataFrame:
     """(n_buckets_hit, hll_estimate) per group from a REGISTER frame —
     one row per (group, bucket) with the per-bucket max rho in
-    `rho_col`.  The shared finisher of :func:`hll_distinct` and the
-    grouped streaming form (whose append-mode sink emits exactly this
-    register layout); all-exact integer/DECIMAL arithmetic, so the
-    estimate is bit-identical to :func:`hll_distinct_sql`."""
+    ``__m``.  The finisher of :func:`hll_distinct`; all-exact
+    integer/DECIMAL arithmetic, so the estimate is bit-identical to
+    :func:`hll_distinct_sql`."""
     b = int(bucket_bits)
     m = 1 << b
     const = _alpha(m) * m * m * float(_TWO63)
@@ -179,7 +145,7 @@ def hll_estimate_regs(regs: DataFrame, group_cols: Sequence[str], *,
     # sum fits DECIMAL(38,0) (≤ m·2^63 = 2^{63+b} < 10^38 for b ≤ 16…
     # 2^79 ≈ 6e23 ✓).  Empty buckets contribute 2^63 each.
     pw = F.expr(
-        f"shiftleft(CAST(1 AS BIGINT), CAST(63 - {rho_col} AS INT))"
+        "shiftleft(CAST(1 AS BIGINT), CAST(63 - __m AS INT))"
     ).cast("decimal(38,0)")
     agg = (regs.groupBy(*group_cols)
            .agg(F.sum(pw).alias("__sp"),
@@ -443,41 +409,3 @@ LEFT JOIN __sk s ON s.row = r.row
    AND s.bucket = {h.format(it=f"c.{item_col}")}
 GROUP BY ALL
 """.strip()
-
-
-def fixed_hist_bin(value: Column, lo: float, hi: float,
-                   nbins: int) -> Column:
-    """Fixed-domain histogram bin: ``clamp(floor((x−lo)/w), 0, B−1)``
-    with w = (hi−lo)/B.  The domain is declared, not measured — the
-    one-pass form a streaming aggregation needs (the batch
-    :func:`histogram_quantiles` measures min/max in its first pass)."""
-    w = (float(hi) - float(lo)) / int(nbins)
-    raw = F.floor((value.cast("double") - F.lit(float(lo))) / F.lit(w))
-    return F.greatest(F.lit(0).cast("long"),
-                      F.least(F.lit(int(nbins) - 1).cast("long"), raw))
-
-
-def fixed_hist_quantile_wide(count_cols: Sequence[Column], lo: float,
-                             hi: float, q: float) -> Column:
-    """Quantile estimate from wide per-bin counts (one Column per bin)
-    — the row-wise expression form usable AFTER a streaming
-    aggregation, where window functions are not.  Same interpolation
-    as :func:`histogram_quantiles`: est = lo + w·(bin + (q·n −
-    cum_before)/cnt) at the first bin whose cumulative count reaches
-    q·n."""
-    nbins = len(count_cols)
-    w = (float(hi) - float(lo)) / nbins
-    n = None
-    for c in count_cols:
-        n = c if n is None else n + c
-    tgt = F.lit(float(q)) * n.cast("double")
-    expr = None
-    cum = None
-    for j, c in enumerate(count_cols):
-        cum_before = cum if cum is not None else F.lit(0).cast("long")
-        cum = cum_before + c
-        est = (F.lit(float(lo)) + F.lit(w) * (F.lit(float(j))
-               + (tgt - cum_before.cast("double")) / c.cast("double")))
-        cond = cum.cast("double") >= tgt
-        expr = F.when(cond, est) if expr is None else expr.when(cond, est)
-    return expr

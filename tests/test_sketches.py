@@ -194,46 +194,19 @@ def test_count_min_bad_args(spark):
         count_min(df, "item", width=1)
 
 
-def test_fixed_hist_quantiles_from_bins_matches_wide(spark):
-    """The bin-keyed finisher must reproduce the wide CASE-cascade
-    exactly — including with zero-count bins absent from the keyed
-    frame (the first bin reaching q·n always has cnt > 0)."""
+def test_histogram_nan_values_excluded_both_engines(spark):
+    import duckdb as _dd
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from flink_skyline_qos_spark.operators.sketches import (
-        fixed_hist_bin,
-        fixed_hist_quantile_wide,
-    )
-    from flink_skyline_qos_spark.streaming.continuous import (
-        fixed_hist_quantiles_from_bins,
-    )
-
-    rng = __import__("numpy").random.default_rng(5)
-    rows = [(int(i % 3), float(v))
-            for i, v in enumerate(rng.uniform(0, 100, 500))]
-    df = spark.createDataFrame(rows, "g int, v double")
-    NB, LO, HI = 8, 0.0, 100.0
-    binned = (df.select("g", fixed_hist_bin(F.col("v"), LO, HI, NB)
-                        .alias("bin"))
-              .groupBy("g", "bin").agg(F.count("*").alias("cnt")))
-    got = {r["g"]: (r["n"], r["q_50"], r["q_95"]) for r in
-           fixed_hist_quantiles_from_bins(
-               binned, ["g"], lo=LO, hi=HI, nbins=NB,
-               quantiles=(0.5, 0.95)).collect()}
-    wide = (df.select("g", fixed_hist_bin(F.col("v"), LO, HI, NB)
-                      .alias("bin"))
-            .groupBy("g")
-            .agg(*[F.sum((F.col("bin") == j).cast("long")).alias(f"b{j}")
-                   for j in range(NB)]))
-    cols = [F.col(f"b{j}") for j in range(NB)]
-    n = None
-    for c in cols:
-        n = c if n is None else n + c
-    want = {r["g"]: (r["n"], r["q50"], r["q95"]) for r in
-            wide.select("g", n.alias("n"),
-                        fixed_hist_quantile_wide(cols, LO, HI, 0.5)
-                        .alias("q50"),
-                        fixed_hist_quantile_wide(cols, LO, HI, 0.95)
-                        .alias("q95")).collect()}
+        histogram_quantiles, histogram_quantiles_sql)
+    rows = [(1.0,), (2.0,), (float("nan"),), (3.0,)]
+    df = spark.createDataFrame(rows, "v double")
+    got = [tuple(r) for r in histogram_quantiles(
+        df, "v", quantiles=(0.5,)).collect()]
+    con = _dd.connect()
+    con.register("t", pd.DataFrame(rows, columns=["v"]))
+    want = [tuple(r) for r in con.sql(histogram_quantiles_sql(
+        "t", "v", quantiles=(0.5,))).fetchall()]
     assert got == want
+    assert got[0][0] == 3 and got[0][1] == got[0][1]  # n=3, not NaN
