@@ -47,7 +47,6 @@ from flink_skyline_qos_spark.functions.text import (  # noqa: E402
     langid_confusion_sql,
     quality_score,
     quality_score_sql,
-    redact_expr_sql,
     redact_text,
     redact_text_sql,
     repetition_stats,
@@ -87,13 +86,6 @@ from flink_skyline_qos_spark.functions.corpus import (  # noqa: E402
     tfidf_top_terms,
     tfidf_top_terms_sql,
 )
-from flink_skyline_qos_spark.operators.clustering import (  # noqa: E402
-    dedup_clusters,
-    link_rank,
-    link_rank_sql,
-    triangle_count,
-    triangle_count_sql,
-)
 from flink_skyline_qos_spark.operators.dedup import (  # noqa: E402
     exact_dedup,
     minhash_lsh_pairs_cross,
@@ -118,9 +110,6 @@ from flink_skyline_qos_spark.operators.dedup import (  # noqa: E402
     winnow_contamination_sql,
     winnow_pairs,
     winnow_pairs_sql,
-)
-from flink_skyline_qos_spark.operators.partitioners import (  # noqa: E402
-    mr_dim_sql,
 )
 from flink_skyline_qos_spark.operators.variants import (  # noqa: E402
     grid_envelope_prefilter,
@@ -170,18 +159,6 @@ from flink_skyline_qos_spark.operators.sampling import (  # noqa: E402
     temperature_sample_sql,
     weighted_sample,
     weighted_sample_sql,
-)
-from flink_skyline_qos_spark.operators.similarity import (  # noqa: E402
-    cosine_topk,
-    rrf_fuse,
-    rrf_fuse_sql,
-    cosine_topk_gemm,
-    cosine_topk_ivf,
-    embedding_near_dup_lsh,
-    embedding_near_dup_lsh_sql,
-    embedding_near_dup_pairs,
-    knn_graph,
-    knn_graph_sql,
 )
 from flink_skyline_qos_spark.plans.metrics import (  # noqa: E402
     metrics_oracle_sql,
@@ -249,22 +226,6 @@ _EV_SQL = (
     "(SELECT event_id, user_id, event_type, value, "
     "cast(epoch_ms(ts) as double) AS unix_ms FROM events)"
 )
-
-# Shared DuckDB CTEs: word-3-gram shingle sets, per-doc set sizes, and
-# pairwise intersection counts over documents — the exact n-gram
-# Jaccard core, reused by the pair query and the clustering oracle.
-_NGRAM_CTES = """sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-     generate_series(1, greatest(len(w) - 2, 1)),
-     i -> array_to_string(w[i:i+2], ' ')))) AS g
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents)
-), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)"""
-
 
 def _batch_fixture_files(df: DataFrame, conds, data_dir: str) -> None:
     """Write the mtime-staggered parquet batch files a streaming
@@ -548,44 +509,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
              F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"))
     )
 
-    # --- link centrality (truncated PageRank, exact integer grid):
-    # the crawl-corpus quality signal, over the supplier "handoff"
-    # graph (consecutive line numbers within an order).  One edges-to-
-    # ranks equi-join + one map-side-combined sum per iteration; the
-    # integer recurrence makes the ranks value-oracle-able, which a
-    # double-summed PageRank never is.
-    def _link_rank(s: SparkSession, d: str) -> DataFrame:
-        li = load_table(s, d, "lineitem")
-        a, b = li.alias("a"), li.alias("b")
-        edges = a.join(
-            b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("b.l_linenumber") == F.col("a.l_linenumber") + 1)
-        ).select(F.col("a.l_suppkey").alias("src"),
-                 F.col("b.l_suppkey").alias("dst"))
-        # 2 truncated rounds (was 3): the op is iteration-count bound
-        # at sf0.01 (per-round job overhead, not compute, dominated the
-        # ~10 s row — VERDICT r7 #3); the oracle CTE chain matches.
-        return link_rank(edges, iterations=2)
-    q["link_rank_suppliers"] = _link_rank
-
-    # --- per-node triangle counts (local clustering-coefficient
-    # numerator — community-density / link-farm signal) over the
-    # supplier co-occurrence graph: suppliers sharing a sampled order
-    # (l_orderkey % 50 = 0 keeps the graph sparse and non-degenerate
-    # at every SF).  Degree-ordered orientation bounds the wedge join;
-    # every step is an equi-join, exact BIGINTs throughout.
-    def _triangles(s: SparkSession, d: str) -> DataFrame:
-        li = load_table(s, d, "lineitem") \
-            .filter(F.col("l_orderkey") % 50 == 0)
-        a, b = li.alias("a"), li.alias("b")
-        edges = a.join(
-            b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_linenumber") < F.col("b.l_linenumber"))
-        ).select(F.col("a.l_suppkey").alias("src"),
-                 F.col("b.l_suppkey").alias("dst"))
-        return triangle_count(edges)
-    q["triangles_suppliers"] = _triangles
-
     # JSON schema-on-read (P1's companion wire format): extract the
     # typed payload field from the props JSON column scan-side and
     # aggregate -- get_json_object stays inside codegen, no Python
@@ -777,47 +700,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "documents")
             .filter((F.col("doc_id") % 10) == 7))
 
-    # --- near-dup clustering: transitive closure of the EXACT n-gram
-    # pair set (large-star/small-star), every doc labeled. The oracle is
-    # a DuckDB recursive CTE over the same pair SQL — full value check
-    # of the connected-components operator.
-    def _dedup_clusters_docs(s: SparkSession, d: str) -> DataFrame:
-        out = dedup_clusters(
-            load_table(s, d, "documents"),
-            ngram_jaccard_pairs(load_table(s, d, "documents"), k=3,
-                                unit="word", threshold=0.05),
-        )
-        return release_checkpoints_on_gc(out, out)
-    q["dedup_clusters_documents"] = _dedup_clusters_docs
-
-    # --- the full dedup pipeline as ONE query: MinHash-LSH candidate
-    # pairs → connected components → keep-first canonical corpus.
-    # Oracle: recursive min-label CTE over the exact minhash pair SQL.
-    def _dedup_corpus(s: SparkSession, d: str) -> DataFrame:
-        docs = load_table(s, d, "documents")
-        pairs = minhash_lsh_pairs(docs, num_hashes=64, bands=16,
-                                  shingle_k=5, threshold=0.5)
-        labeled = dedup_clusters(docs, pairs)
-        out = (docs.join(labeled, "doc_id")
-               .filter(F.col("is_canonical"))
-               .select("doc_id", "cluster_id"))
-        return release_checkpoints_on_gc(out, labeled)
-    q["dedup_corpus_documents"] = _dedup_corpus
-
-    # --- the exact-substring twin of the pipeline above (round 11):
-    # ≥min_span verbatim-run pairs → connected components → keep-first
-    # canonical corpus — ExactSubstr dedup end-to-end, catching the
-    # long-quote duplicates global-similarity banding under-scores.
-    def _substring_dedup_corpus(s: SparkSession, d: str) -> DataFrame:
-        docs = load_table(s, d, "documents")
-        pairs = substring_dedup_pairs(docs, k=8, min_span=12, max_df=50)
-        labeled = dedup_clusters(docs, pairs)
-        out = (docs.join(labeled, "doc_id")
-               .filter(F.col("is_canonical"))
-               .select("doc_id", "cluster_id"))
-        return release_checkpoints_on_gc(out, labeled)
-    q["substring_dedup_corpus_documents"] = _substring_dedup_corpus
-
     # --- text analysis over documents ---
     q["text_stats_documents"] = lambda s, d: text_stats(
         load_table(s, d, "documents")
@@ -898,27 +780,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return bm25_topk(docs, qs, k=10)
     q["bm25_topk_documents"] = _bm25
 
-    # Hybrid retrieval: RRF fusion of the sparse BM25 list and the
-    # dense exact-cosine list over the SAME probe ids (vec_id <-> doc_id
-    # in the synthetic tables) — integer-exact fused scores
-    def _hybrid(s: SparkSession, d: str) -> DataFrame:
-        docs = load_table(s, d, "documents")
-        emb = load_table(s, d, "embeddings")
-        sparse = bm25_topk(
-            docs,
-            docs.filter("doc_id % 97 = 3").select(
-                F.col("doc_id").alias("query_id"),
-                F.col("text").alias("query")), k=10)
-        dense = cosine_topk(
-            emb,
-            emb.filter("vec_id % 97 = 3").select(
-                F.col("vec_id").alias("query_id"), "embedding"),
-            k=10).select(
-            "query_id", F.col("vec_id").alias("doc_id"), "rank")
-        return rrf_fuse(sparse.select("query_id", "doc_id", "rank"),
-                        dense, k0=60, k=10)
-    q["hybrid_retrieval_documents"] = _hybrid
-
     q["tfidf_documents"] = lambda s, d: tfidf_top_terms(
         load_table(s, d, "documents"), k=5, min_df=2)
     # per-doc mean token rarity (log-free perplexity surrogate;
@@ -977,83 +838,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         load_table(s, d, "documents").select(
             "doc_id", token_count(F.col("text")).alias("n_tokens")),
         budget=4096)
-
-    # --- the capstone: the COMPLETE LLM data-prep pipeline as one
-    # query — quality gate → MinHash near-dup dedup (canonical only) →
-    # PII redaction → deterministic split — every stage composed from
-    # the registered operators, oracled end-to-end.
-    def _llm_corpus(s: SparkSession, d: str) -> DataFrame:
-        docs = load_table(s, d, "documents")
-        qual = docs.filter(quality_score(F.col("text")) >= 0.5)
-        # word-3 shingles: the published standard for LLM-corpus
-        # MinHash dedup (word n-grams, not char shingles) and ~5× fewer
-        # md5 base hashes per document
-        pairs = minhash_lsh_pairs(qual, num_hashes=64, bands=16,
-                                  shingle_k=3, shingle_unit="word",
-                                  threshold=0.5)
-        labeled = dedup_clusters(qual, pairs)
-        canon = qual.join(
-            labeled.filter(F.col("is_canonical")).select("doc_id"),
-            "doc_id")
-        # redaction passes lang through the same narrow projection —
-        # the redact-then-rejoin form was a needless shuffle
-        out = redact_text(canon, keep=["lang"]) \
-            .select("doc_id", "lang", "redacted")
-        return release_checkpoints_on_gc(
-            hash_split(out, {"train": 0.9, "val": 0.05, "test": 0.05},
-                       ["doc_id"]), labeled)
-    q["llm_corpus_documents"] = _llm_corpus
-
-    # --- capstone v2: the NEXT stage of the same pipeline — after the
-    # quality gate + dedup, decontaminate against the eval subset,
-    # redact, chunk to context windows, and pack into fixed-length
-    # training sequences.  Output is the model-input index (one row per
-    # chunk with its global sequence assignment).
-    def _llm_corpus_v2(s: SparkSession, d: str) -> DataFrame:
-        docs = load_table(s, d, "documents")
-        qual = docs.filter(quality_score(F.col("text")) >= 0.5)
-        # word-3 shingles — see _llm_corpus
-        pairs = minhash_lsh_pairs(qual, num_hashes=64, bands=16,
-                                  shingle_k=3, shingle_unit="word",
-                                  threshold=0.5)
-        labeled = dedup_clusters(qual, pairs)
-        # canon feeds BOTH the contamination scan and the clean join;
-        # chunks feed pack_sequences' three passes (bounds agg, bucket
-        # totals, final join).  Unpinned, every pass lazily re-derives
-        # the whole quality→dedup→decontaminate→redact pipeline — the
-        # r6 sf0.01 cost outlier (VERDICT r6 #2).  Round 11: canon is
-        # an eager localCheckpoint, not a persist — a persist caches
-        # the BLOCKS but every downstream action still re-plans the
-        # tall quality→LSH→components DAG (AQE re-optimization +
-        # broadcast re-build measured ~0.7-3 s PER ACTION at sf0.01
-        # even fully cached), and v2 takes five actions after this
-        # point; truncating the lineage here flattens them (VERDICT
-        # r10 #4 — v2 was the 8.0 s slowest-gate-row).  Released on
-        # result GC with the other checkpoints.
-        canon = pinned_local_checkpoint(qual.join(
-            labeled.filter(F.col("is_canonical")).select("doc_id"),
-            "doc_id"))
-        bench = docs.filter((F.col("doc_id") % 10) == 7)
-        contam = contamination_check(canon, bench, n=3)
-        clean = canon.join(
-            contam.filter(F.col("contaminated_frac") < 0.8)
-            .select("doc_id"), "doc_id")
-        # eager checkpoint truncates the composed lineage before the
-        # chunk→pack tail: pack scans its input three times (bounds,
-        # bucket totals, final join) and each scan otherwise re-plans
-        # the entire upstream pipeline (measured ~4 s of the r6 cost
-        # outlier); blocks released with the checkpoints below
-        red = pinned_local_checkpoint(
-            redact_text(clean).select(
-                "doc_id", F.col("redacted").alias("text")))
-        chunks = chunk_documents(red, size=32, stride=32).persist()
-        return release_checkpoints_on_gc(
-            release_on_gc(
-                pack_sequences(chunks, seq_len=64).select(
-                    "doc_id", "chunk_idx", "chunk_text", "n_tokens",
-                    "start_offset", "seq_id", "seq_offset"),
-                chunks), labeled, red, canon)
-    q["llm_corpus_v2_documents"] = _llm_corpus_v2
 
     # --- capstone v3: the round-7 cleaning suite composed end-to-end —
     # C4/Gopher rule gate -> corpus-wide paragraph dedup (docs
@@ -1147,21 +931,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["split_documents"] = lambda s, d: hash_split(
         load_table(s, d, "documents").select("doc_id"),
         {"train": 0.9, "val": 0.05, "test": 0.05}, ["doc_id"])
-    # leakage-safe split: near-dup CLUSTERS (not documents) are the
-    # split unit, so two near-duplicates can never straddle train/test
-    # — the contamination mode a plain per-doc hash split cannot
-    # prevent.  Oracle: the dedup_clusters recursive CTE + the same
-    # md5-threshold CASE.
-    def _cluster_split(s: SparkSession, d: str) -> DataFrame:
-        docs = load_table(s, d, "documents")
-        labeled = dedup_clusters(
-            docs, ngram_jaccard_pairs(docs, k=3, unit="word",
-                                      threshold=0.05))
-        out = hash_split(labeled.select("doc_id", "cluster_id"),
-                         {"train": 0.8, "val": 0.1, "test": 0.1},
-                         ["cluster_id"])
-        return release_checkpoints_on_gc(out, labeled)
-    q["cluster_split_documents"] = _cluster_split
     # per-source frequency cap (C4/FineWeb-style "at most K docs per
     # domain"): exact salted two-level top-K by content hash — no
     # single-task sort of a hot source at scale
@@ -1273,48 +1042,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return s.table(name)
     q["streaming_late_data_events"] = _streaming_late_data
 
-    # --- similarity search over embeddings ---
-    def _ann(s: SparkSession, d: str) -> DataFrame:
-        emb = load_table(s, d, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = cosine_topk(emb, qs, k=10)
-        return out.select("query_id", "vec_id",
-                          F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    q["ann_topk_embeddings"] = _ann
-
-    # Same top-k, GEMM physics (partial top-k per Arrow batch — the
-    # 100 TB path); oracled against the same SQL as the declarative form.
-    def _ann_gemm(s: SparkSession, d: str) -> DataFrame:
-        emb = load_table(s, d, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = cosine_topk_gemm(emb, qs, k=10)
-        return out.select("query_id", "vec_id",
-                          F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    q["ann_topk_gemm_embeddings"] = _ann_gemm
-
-    # exact kNN GRAPH (every vector → its k nearest others): the edge
-    # set graph-based dedup/clustering starts from; GEMM physics,
-    # self-edges excluded by re-rank (a duplicate vector with smaller
-    # id legitimately outranks self, so self≠rank-1 is not assumed)
-    q["knn_graph_embeddings"] = lambda s, d: knn_graph(
-        load_table(s, d, "embeddings"), k=5
-    ).select("src", "dst", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-
-    def _ann_ivf(s: SparkSession, d: str) -> DataFrame:
-        emb = load_table(s, d, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = cosine_topk_ivf(emb, qs, k=10, n_cells=8, nprobe=8)
-        return out.select("query_id", "vec_id",
-                          F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    # nprobe == n_cells ⇒ exhaustive ⇒ exact: same oracle as brute force
-    q["ann_topk_ivf_embeddings"] = _ann_ivf
-
     # --- synthetic generators (S5), deterministic hash-seeded twins ---
     for dist in ("uniform", "correlated", "anti_correlated"):
         q[f"gen_{dist}_2d"] = (
@@ -1340,60 +1067,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ["d0", "d1", "d2", "d3"],
     )
 
-    # unlabeled scale path: random-hyperplane LSH blocking, exact verify.
-    q["embedding_near_dup_lsh"] = lambda s, d: embedding_near_dup_lsh(
-        load_table(s, d, "embeddings"), threshold=0.35,
-        n_planes=32, bands=8,
-    ).select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
-
-    q["embedding_near_dup"] = lambda s, d: embedding_near_dup_pairs(
-        load_table(s, d, "embeddings"), threshold=0.35, block_col="label",
-    ).select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
-
-    # --- SemDeDup-style capstone: the full EMBEDDING dedup pipeline as
-    # one query — hyperplane-LSH candidate pairs → exact cosine verify →
-    # connected components → keep-min-id canonical corpus.  Mirrors
-    # dedup_corpus_documents on the vector side; every stage is the
-    # registered scale-safe operator.
-    def _embedding_dedup(s: SparkSession, d: str) -> DataFrame:
-        emb = load_table(s, d, "embeddings")
-        pairs = embedding_near_dup_lsh(
-            emb, threshold=0.35, n_planes=32, bands=8)
-        labeled = dedup_clusters(
-            emb, pairs.select("id_a", "id_b"), id_col="vec_id")
-        return release_checkpoints_on_gc(
-            labeled.filter(F.col("is_canonical"))
-            .select("vec_id", "cluster_id"), labeled)
-    q["embedding_dedup_corpus"] = _embedding_dedup
-
     return q
 
 
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
-
-    def _cosine_topk_oracle(probe_pred: str, k: int, select: str) -> str:
-        """Exact-cosine top-k oracle over the embeddings table, shared by
-        the ann_topk_* oracles and the hybrid-retrieval dense leg."""
-        return f"""
-WITH c AS (SELECT vec_id, cast(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, cast(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE {probe_pred}),
-scored AS (
-  SELECT q.query_id, c.vec_id,
-         list_dot_product(c.v, q.qv)
-           / (sqrt(list_dot_product(c.v, c.v))
-              * sqrt(list_dot_product(q.qv, q.qv))) AS sim
-  FROM c CROSS JOIN q
-), ranked AS (
-  SELECT query_id, vec_id, sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY sim DESC, vec_id) AS rn
-  FROM scored
-)
-SELECT {select}
-FROM ranked WHERE rn <= {k}
-""".strip()
 
     li = f"(SELECT {', '.join(LI_COLS)} FROM lineitem)"
     sky2 = skyline_not_exists_sql(li, LI_DIMS2)
@@ -1495,13 +1173,6 @@ SELECT event_type, count(*) AS n,
 FROM events GROUP BY event_type
 """.strip()
 
-    o["link_rank_suppliers"] = link_rank_sql(
-        "SELECT a.l_suppkey AS src, b.l_suppkey AS dst "
-        "FROM lineitem a JOIN lineitem b "
-        "ON a.l_orderkey = b.l_orderkey "
-        "AND b.l_linenumber = a.l_linenumber + 1",
-        iterations=2)
-
     o["hll_users_events"] = hll_distinct_sql(
         "events", "user_id", group_cols=["event_type"], bucket_bits=10)
     o["quantile_sketch_events"] = histogram_quantiles_sql(
@@ -1554,42 +1225,26 @@ FROM events GROUP BY event_type
         f"({generate_docs_sql(800, dup='near')})", num_hashes=64,
         bands=16, shingle_k=3, shingle_unit="word", threshold=0.5)
 
-    o["ngram_jaccard_documents"] = f"""
-WITH {_NGRAM_CTES}
+    # word-3-gram shingle sets, per-doc set sizes and pairwise
+    # intersection counts: the exact n-gram Jaccard core
+    o["ngram_jaccard_documents"] = """
+WITH sh AS (
+  SELECT doc_id, unnest(list_distinct(list_transform(
+     generate_series(1, greatest(len(w) - 2, 1)),
+     i -> array_to_string(w[i:i+2], ' ')))) AS g
+  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents)
+), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
 SELECT id_a, id_b,
        round(n_inter * 1.0 / (na.n + nb.n - n_inter), 6) AS jaccard
 FROM inter
 JOIN sizes na ON na.doc_id = id_a
 JOIN sizes nb ON nb.doc_id = id_b
 WHERE n_inter * 1.0 / (na.n + nb.n - n_inter) >= 0.05
-""".strip()
-
-    # Connected components as min-label reachability: seed every doc
-    # with its own id, propagate labels along (symmetric) near-dup
-    # edges to a fixpoint, keep the min per node.  UNION (not ALL)
-    # dedups the working set so the recursion terminates.
-    o["dedup_clusters_documents"] = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-np AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes na ON na.doc_id = id_a
-  JOIN sizes nb ON nb.doc_id = id_b
-  WHERE n_inter * 1.0 / (na.n + nb.n - n_inter) >= 0.05
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM np
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM np
-),
-reach(node, comp) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
-)
-SELECT node AS doc_id, min(comp) AS cluster_id,
-       min(comp) = node AS is_canonical
-FROM reach GROUP BY node
 """.strip()
 
     o["minhash_dedup_documents"] = minhash_lsh_pairs_sql(
@@ -1626,47 +1281,9 @@ FROM reach GROUP BY node
         "(SELECT * FROM documents WHERE doc_id % 10 <> 7)",
         "(SELECT * FROM documents WHERE doc_id % 10 = 7)",
         k=8, min_span=12, max_df=50)
-    o["substring_dedup_corpus_documents"] = f"""
-WITH RECURSIVE sp AS (
-{substring_dedup_pairs_sql("documents", k=8, min_span=12, max_df=50)}
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM sp
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM sp
-),
-reach(node, comp) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
-)
-SELECT node AS doc_id, min(comp) AS cluster_id
-FROM reach GROUP BY node HAVING min(comp) = node
-""".strip()
     o["langid_confusion_documents"] = langid_confusion_sql("documents")
     o["passage_contamination_documents"] = winnow_contamination_sql(
         "documents", "(SELECT * FROM documents WHERE doc_id % 10 = 7)")
-
-    # Full dedup pipeline: recursive min-label closure over the exact
-    # minhash pair SQL, canonical members only.
-    o["dedup_corpus_documents"] = f"""
-WITH RECURSIVE mp AS (
-{minhash_lsh_pairs_sql("documents", num_hashes=64, bands=16,
-                       shingle_k=5, threshold=0.5)}
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM mp
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM mp
-),
-reach(node, comp) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
-)
-SELECT node AS doc_id, min(comp) AS cluster_id
-FROM reach GROUP BY node HAVING min(comp) = node
-""".strip()
 
     o["text_stats_documents"] = text_stats_sql("documents")
     o["repetition_stats_documents"] = repetition_stats_sql("documents")
@@ -1681,15 +1298,6 @@ FROM reach GROUP BY node HAVING min(comp) = node
         "documents",
         "SELECT doc_id AS query_id, text AS query FROM documents "
         "WHERE doc_id % 97 = 3", k=10)
-    _dense_probe_sql = _cosine_topk_oracle(
-        "vec_id % 97 = 3", 10,
-        "query_id, vec_id AS doc_id, rn::INTEGER AS rank")
-    o["hybrid_retrieval_documents"] = rrf_fuse_sql(
-        bm25_topk_sql(
-            "documents",
-            "SELECT doc_id AS query_id, text AS query FROM documents "
-            "WHERE doc_id % 97 = 3", k=10),
-        _dense_probe_sql, k0=60, k=10)
     o["tfidf_documents"] = tfidf_top_terms_sql(
         "documents", k=5, min_df=2)
     o["rarity_documents"] = rarity_score_sql("documents")
@@ -1722,41 +1330,6 @@ FROM t GROUP BY lang, source
     o["pack_sequences_documents"] = pack_sequences_sql(
         chunk_documents_sql("documents", size=32, stride=32), seq_len=64)
 
-    # Capstone pipeline oracle: every stage's SQL builder composed into
-    # one WITH-RECURSIVE chain (quality gate → minhash pairs → min-label
-    # closure → canonical join → redaction → hash split).
-    o["llm_corpus_documents"] = f"""
-WITH RECURSIVE qual AS (
-  SELECT * FROM documents WHERE {quality_score_sql('text')} >= 0.5
-),
-mp AS (
-{minhash_lsh_pairs_sql("qual", num_hashes=64, bands=16,
-                       shingle_k=3, shingle_unit="word", threshold=0.5)}
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM mp
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM mp
-),
-reach(node, comp) AS (
-  SELECT doc_id, doc_id FROM qual
-  UNION
-  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
-),
-canon AS (
-  SELECT node AS doc_id FROM reach GROUP BY node HAVING min(comp) = node
-),
-red AS (
-  SELECT q2.doc_id, q2.lang, {redact_expr_sql('q2.text')} AS redacted
-  FROM qual q2 JOIN canon USING (doc_id)
-)
-{hash_split_sql("red", {"train": 0.9, "val": 0.05, "test": 0.05},
-                ["doc_id"])}
-""".strip()
-
-    _contam_clean = contamination_check_sql(
-        "SELECT * FROM kept",
-        "SELECT * FROM documents WHERE doc_id % 10 = 7", n=3)
     _v3_deco = winnow_contamination_sql(
         "paran",
         "(SELECT doc_id, text AS clean_text FROM documents "
@@ -1844,53 +1417,11 @@ mixed AS (
 {shard_manifest_sql("SELECT doc_id, n_tokens FROM mixed", budget=2048)}
 """.strip()
 
-    o["llm_corpus_v2_documents"] = f"""
-WITH RECURSIVE qual AS (
-  SELECT * FROM documents WHERE {quality_score_sql('text')} >= 0.5
-),
-mp AS (
-{minhash_lsh_pairs_sql("qual", num_hashes=64, bands=16,
-                       shingle_k=3, shingle_unit="word", threshold=0.5)}
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM mp
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM mp
-),
-reach(node, comp) AS (
-  SELECT doc_id, doc_id FROM qual
-  UNION
-  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
-),
-canon AS (
-  SELECT node AS doc_id FROM reach GROUP BY node HAVING min(comp) = node
-),
-kept AS (
-  SELECT q2.* FROM qual q2 JOIN canon USING (doc_id)
-),
-clean AS (
-  SELECT k.* FROM kept k
-  JOIN ({_contam_clean}) c ON c.doc_id = k.doc_id
-  WHERE c.contaminated_frac < 0.8
-),
-red AS (
-  SELECT doc_id, {redact_expr_sql('text')} AS text FROM clean
-)
-{pack_sequences_sql(chunk_documents_sql("red", size=32, stride=32),
-                    seq_len=64)}
-""".strip()
-
     o["sample_documents"] = deterministic_sample_sql(
         "documents", 0.1, ["doc_id"])
     o["split_documents"] = hash_split_sql(
         "(SELECT doc_id FROM documents)",
         {"train": 0.9, "val": 0.05, "test": 0.05}, ["doc_id"])
-    # cluster-level split: recursive min-label closure (as in
-    # dedup_clusters) + the same md5-threshold CASE over cluster_id
-    o["cluster_split_documents"] = hash_split_sql(
-        f"(SELECT doc_id, cluster_id FROM "
-        f"({o['dedup_clusters_documents']}))",
-        {"train": 0.8, "val": 0.1, "test": 0.1}, ["cluster_id"])
     o["source_cap_documents"] = group_cap_sql(
         "SELECT doc_id, source FROM documents", ["source"], 10,
         ["doc_id"])
@@ -1910,14 +1441,6 @@ red AS (
     o["temperature_sample_documents"] = temperature_sample_sql(
         "(SELECT doc_id, lang FROM documents)", ["lang"], ["doc_id"],
         base_rate=0.5, temperature=2.0)
-
-    _ann_oracle = _cosine_topk_oracle(
-        "vec_id < 5", 10,
-        "query_id, vec_id, round(sim, 6) AS cos_sim, cast(rn AS int) AS rank")
-    o["ann_topk_embeddings"] = _ann_oracle
-    o["ann_topk_gemm_embeddings"] = _ann_oracle
-    o["ann_topk_ivf_embeddings"] = _ann_oracle
-    o["knn_graph_embeddings"] = knn_graph_sql("embeddings", k=5)
 
     o["streaming_pipeline_skyline"] = skyline_not_exists_sql(
         f"({generate_points_sql(4000, 2, dist='anti_correlated')})",
@@ -1947,42 +1470,6 @@ GROUP BY 1, 2
     )
     o["gen_anticorr_skyline_auto_4d"] = o["gen_anticorr_skyline_4d"]
 
-    o["embedding_near_dup_lsh"] = embedding_near_dup_lsh_sql(
-        "embeddings", 64, threshold=0.35, n_planes=32, bands=8)
-
-    # min-label reachability over the exact LSH pair SQL — full value
-    # check of the embedding dedup pipeline (cf. dedup_corpus_documents)
-    o["embedding_dedup_corpus"] = f"""
-WITH RECURSIVE ep AS (
-{embedding_near_dup_lsh_sql("embeddings", 64, threshold=0.35,
-                            n_planes=32, bands=8)}
-),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM ep
-  UNION ALL
-  SELECT id_b AS u, id_a AS v FROM ep
-),
-reach(node, comp) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.v, r.comp FROM reach r JOIN edges e ON e.u = r.node
-)
-SELECT node AS vec_id, min(comp) AS cluster_id
-FROM reach GROUP BY node HAVING min(comp) = node
-""".strip()
-
-    o["embedding_near_dup"] = """
-WITH d AS (SELECT vec_id, label, cast(embedding AS DOUBLE[]) AS v FROM embeddings)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-                * sqrt(list_dot_product(b.v, b.v))), 6) AS cos_sim
-FROM d a JOIN d b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v))
-         * sqrt(list_dot_product(b.v, b.v))) >= 0.35
-""".strip()
-
     o["json_props_events"] = (
         "SELECT event_type, count(*)::BIGINT AS n, "
         "sum(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT "
@@ -2002,12 +1489,5 @@ WHERE list_dot_product(a.v, b.v)
         "'\\s+'), x -> x <> '')) AS token FROM documents",
         f"SELECT token, term_freq, rank FROM ({vocab_sql('documents', top_v=20)})",
         item_col="token", depth=4, width=512)
-
-    o["triangles_suppliers"] = triangle_count_sql(
-        "SELECT a.l_suppkey AS src, b.l_suppkey AS dst "
-        "FROM lineitem a JOIN lineitem b "
-        "ON a.l_orderkey = b.l_orderkey "
-        "AND a.l_linenumber < b.l_linenumber "
-        "WHERE a.l_orderkey % 50 = 0")
 
     return o

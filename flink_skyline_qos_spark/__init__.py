@@ -2,7 +2,7 @@
 (Pareto-frontier) analytics engine with the query capabilities of the
 reference Flink engine (Asterinos1/Flink-Skyline-QoS), re-expressed
 Spark-first, plus the large-scale data-pipeline operators (dedup,
-similarity search, text analysis) such an engine needs at 100 TB.
+text analysis) such an engine needs at 100 TB.
 """
 
 from .functions.dominance import (

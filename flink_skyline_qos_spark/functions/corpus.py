@@ -901,11 +901,9 @@ def bm25_topk(df: DataFrame, queries: DataFrame, *,
               id_col: str = "doc_id", text_col: str = "text",
               query_id_col: str = "query_id", query_col: str = "query",
               k: int = 10, k1: float = 1.2, b: float = 0.75) -> DataFrame:
-    """Lexical retrieval: top-`k` documents per query by BM25 — the
-    sparse complement of the dense ANN stack (`cosine_topk*`); together
-    they are the standard hybrid-retrieval pair a training-data
-    pipeline uses for decontamination lookups and nearest-neighbour
-    audits.  Returns (query_id, doc_id, score, rank), rank 1..k under
+    """Lexical retrieval: top-`k` documents per query by BM25, the
+    lookup a training-data pipeline uses for decontamination and
+    nearest-neighbour audits.  Returns (query_id, doc_id, score, rank), rank 1..k under
     (score DESC, doc_id ASC) — a total order.
 
     Scoring: Okapi BM25 with the log-free Robertson–Spärck-Jones idf

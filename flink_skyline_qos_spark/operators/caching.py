@@ -53,26 +53,22 @@ def release_checkpoints_on_gc(result: DataFrame,
                               *sources: DataFrame) -> DataFrame:
     """Release localCheckpoint RDD blocks when `result` is collected.
 
-    :func:`~.clustering.connected_components` pins its final round's
-    localCheckpoint at the RDD level (``DataFrame.unpersist`` cannot
-    touch it) and exposes the ids as ``_checkpoint_rdd_ids`` on its
-    output — a pin that must outlive every derived plan.  Composed
-    queries (dedup corpus, capstone) know their OWN result is the last
-    derived plan, so they tie the RDD-id release to its lifetime here,
-    the checkpoint analogue of :func:`release_on_gc`.
+    :func:`pinned_local_checkpoint` pins its localCheckpoint at the RDD
+    level (``DataFrame.unpersist`` cannot touch it) and exposes the ids
+    as ``_checkpoint_rdd_ids`` on its output — a pin that must outlive
+    every derived plan.  Composed queries (the corpus capstones) know
+    their OWN result is the last derived plan, so they tie the RDD-id
+    release to its lifetime here, the checkpoint analogue of
+    :func:`release_on_gc`.
     """
-    # Keep the source frames (and anything THEY pin via _pin_parent —
-    # e.g. dedup_clusters' cc, whose own finalizer unpersists the
-    # canonical edge cache) alive for as long as this result is: the
-    # corpus builders return a frame DERIVED from `sources` and drop
-    # every other reference, so without this pin the next driver GC
-    # fires the upstream release_on_gc finalizers and every later
-    # action silently re-derives the full pair DAG (ADVICE r11
-    # clustering.py:368 — the r11 _pin_parent fix, propagated to
-    # derived results).  Accumulate rather than overwrite: composed
-    # helpers may each pin sources on the same frame (ADVICE r12).
-    # A pre-existing pin may be a bare frame (connected_components
-    # pins its cc slice that way) — normalize to a tuple first.
+    # Keep the source frames (and anything THEY pin via _pin_parent)
+    # alive for as long as this result is: the corpus builders return a
+    # frame DERIVED from `sources` and drop every other reference, so
+    # without this pin the next driver GC fires the upstream
+    # release_on_gc finalizers and every later action silently
+    # re-derives the upstream DAG.  Accumulate rather than overwrite:
+    # composed helpers may each pin sources on the same frame.  A
+    # pre-existing pin may be a bare frame — normalize to a tuple first.
     prev = getattr(result, "_pin_parent", ())
     if isinstance(prev, DataFrame):
         prev = (prev,)
@@ -102,8 +98,8 @@ def pinned_local_checkpoint(df: DataFrame) -> DataFrame:
     times (each scan otherwise re-plans/re-derives the whole upstream
     DAG).  localCheckpoint pins blocks at the RDD level, which
     ``DataFrame.unpersist`` cannot release; the ids pinned here are
-    snapshot-diffed (assumes no concurrent persist on the same context,
-    as in :mod:`.clustering`) and exposed as ``_checkpoint_rdd_ids`` so
+    snapshot-diffed (assumes no concurrent persist on the same context)
+    and exposed as ``_checkpoint_rdd_ids`` so
     callers can tie the release to their result's lifetime via
     :func:`release_checkpoints_on_gc`.
     """

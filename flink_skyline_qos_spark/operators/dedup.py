@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .caching import (pinned_local_checkpoint, release_checkpoints_on_gc,
                       release_on_gc)
+from .partitioners import scale_out as _scale_out
 
 __all__ = [
     "exact_dedup",
@@ -83,12 +84,6 @@ def _md5_long(col: Column) -> Column:
     in a signed int64 on both engines.
     """
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-# the scale-out helper grew a cross-module consumer (similarity)
-# and moved to a public home; alias kept for the many
-# internal call sites
-from .partitioners import scale_out as _scale_out  # noqa: E402
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", *,

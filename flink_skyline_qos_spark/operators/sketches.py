@@ -117,8 +117,6 @@ def hll_distinct(df: DataFrame, key_col: str, *,
     b = int(bucket_bits)
     if not 4 <= b <= 16:
         raise ValueError("bucket_bits must be in [4, 16]")
-    m = 1 << b
-    const = _alpha(m) * m * m * float(_TWO63)
 
     # exact leading-zero rank: length(bin(tail)) == floor(log2(tail))+1
     bucket, rho = hll_bucket_rho(F.col(key_col), b)

@@ -55,6 +55,23 @@ def _daemon_module(master: str) -> str | None:
     return _DAEMON if any(os.path.realpath(d) == root for d in dirs) else None
 
 
+def _checkpoint_file_manager(master: str) -> str | None:
+    """``spark.sql.streaming.checkpointFileManagerClass`` for a session on
+    `master`: ``FileSystemBasedCheckpointFileManager`` in local mode,
+    else None, which leaves Spark's default.  The default renames each
+    offsets, commits and source-log file with ``FileContext.rename``;
+    on the local file system without libhadoop, Hadoop then forks a
+    ``readlink`` process per file.  ``FileSystem.rename`` is one
+    ``rename(2)``, atomic on a local disk, and the manager checks that
+    the target does not exist before a rename that must not overwrite.
+    A cluster's checkpoint may sit on a store where only the default
+    renames atomically, so it keeps the default."""
+    if not master.startswith("local"):
+        return None
+    return ("org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager")
+
+
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
     half the host's ``MemTotal``, between 1g and 32g.  In local mode
@@ -106,4 +123,8 @@ def get_spark(app_name: str = "flink-skyline-qos-spark", *,
     daemon = _daemon_module(master)
     if daemon:
         builder = builder.config("spark.python.daemon.module", daemon)
+    manager = _checkpoint_file_manager(master)
+    if manager:
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass", manager)
     return builder.getOrCreate()

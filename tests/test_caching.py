@@ -121,31 +121,10 @@ def test_ngram_releases_index_caches(spark, docs):
     assert n > 0  # the corpus above genuinely contains near-dups
 
 
-def test_capstone_composition_releases_all_caches(spark):
-    """VERDICT r4 #8: the embedding capstone (LSH pairs → components →
-    canonical corpus) composes several pinning operators in one query —
-    after its action completes and the result is dropped, ZERO cached
-    RDDs may remain (the r3 cache-lifetime fix must hold under
-    composition, not just per-operator)."""
-    import __spark_entry__ as entrymod
-
-    base = _baseline(spark)
-    out = entrymod.queries()["embedding_dedup_corpus"](
-        spark, "/root/testdata/sf0.001")
-    n = out.count()
-    assert n > 0
-    del out
-    gc.collect()
-    # <=, not ==: a STALE pin from an earlier test draining
-    # during this test legitimately lands below the baseline
-    assert _settle(spark, base) <= base
-
-
 def test_release_checkpoints_accumulates_pins(spark):
     """Composed helpers each pin sources on the same frame — earlier
-    pins must survive (ADVICE r12), including the bare-DataFrame form
-    connected_components uses for its cc slice (round 13: the naive
-    tuple-concat fix crashed every dedup_clusters caller)."""
+    pins must survive, including a pre-existing bare-DataFrame pin
+    (a naive tuple concat crashes on it)."""
     from flink_skyline_qos_spark.operators.caching import (
         release_checkpoints_on_gc,
     )
@@ -153,7 +132,7 @@ def test_release_checkpoints_accumulates_pins(spark):
     a = spark.range(3)
     b = spark.range(4)
     out = spark.range(5)
-    out._pin_parent = a                     # bare frame (clustering.py)
+    out._pin_parent = a                     # bare frame
     out = release_checkpoints_on_gc(out, b)
     assert out._pin_parent == (a, b)
     c = spark.range(6)

@@ -189,9 +189,9 @@ def test_pack_sequences_duckdb_parity(documents, sf_dir):
 def test_pack_sequences_releases_cache(spark, documents):
     """Pin-hygiene gate (VERDICT r3 #5): after this query and a GC, no
     NEW operator-internal cache may remain pinned.  (Other tests in the
-    shared session may hold connected_components' documented final-
-    round checkpoint pins, and GC-released pins drain asynchronously —
-    so the assertion is no-growth, not global-zero.)"""
+    shared session may hold checkpoint pins of their own, and
+    GC-released pins drain asynchronously — so the assertion is
+    no-growth, not global-zero.)"""
     import gc
     import time
 

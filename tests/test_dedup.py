@@ -112,29 +112,6 @@ def test_minhash_bucket_cap_is_observable(spark):
     assert uncapped.lsh_dropped.first().dropped_buckets == 0
 
 
-def test_embedding_lsh_bucket_cap_is_observable(spark):
-    import numpy as np
-
-    from flink_skyline_qos_spark.operators.similarity import (
-        embedding_near_dup_lsh,
-    )
-
-    base = np.random.RandomState(9).randn(8).astype(np.float32)
-    dup = spark.createDataFrame(
-        [(i, base.tolist()) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    capped = embedding_near_dup_lsh(dup, threshold=0.9, n_planes=16,
-                                    bands=4, max_bucket=5)
-    assert capped.count() == 0
-    d = capped.lsh_dropped.first()
-    assert d.dropped_buckets == 4 and d.dropped_rows == 120
-    open_ = embedding_near_dup_lsh(dup, threshold=0.9, n_planes=16,
-                                   bands=4, max_bucket=100)
-    assert open_.count() == (30 * 29) // 2
-    assert open_.lsh_dropped.first().dropped_pairs == 0
-
-
 def test_cross_corpus_minhash_no_within_side_pairs(spark, documents,
                                                    sf_dir):
     import duckdb

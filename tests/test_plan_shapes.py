@@ -88,30 +88,6 @@ def test_grouped_skyline_2d_window_plan_all_jvm(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_cosine_topk_gemm_one_exchange(spark):
-    """GEMM top-k: corpus scanned once, partial top-k rows cross ONE
-    rank exchange (hash on query_id).  On few-split inputs — this
-    test's sf — a second RoundRobin exchange sits BELOW the GEMM node
-    (`_scale_out`, r8: the matmul otherwise serializes on one task);
-    it is a no-op at real split counts, so the scale claim stays one
-    post-scan exchange of O(batches × queries × k) rows."""
-    from flink_skyline_qos_spark.operators.similarity import (
-        cosine_topk_gemm,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    plan = _plan(cosine_topk_gemm(emb, qs, k=5))
-    assert _n_exchanges(plan) <= 2, plan
-    assert len(re.findall(r"hashpartitioning\(query_id", plan)) >= 1, plan
-    # the scale-out exchange (if present) must be below the Python node
-    tree = plan.split("\n\n", 1)[0]
-    if _n_exchanges(plan) == 2:
-        assert re.search(r"MapInPandas[\s\S]*Exchange[\s\S]*Scan parquet",
-                         tree), tree
-
-
 def test_exact_dedup_single_aggregate_shuffle(spark):
     """Exact dedup = partial agg, one hash exchange, final agg."""
     from flink_skyline_qos_spark.operators.dedup import exact_dedup

@@ -86,6 +86,18 @@ def test_daemon_module_only_where_local_workers_import_it(tmp_path,
     assert session._daemon_module("local[*]") == "skyline_daemon"
 
 
+def test_local_sessions_checkpoint_through_file_system_rename(spark):
+    """A local session's stream checkpoints rename with
+    ``FileSystem.rename``, which forks no ``readlink``.  The class must
+    load, so a Spark upgrade that moves it fails here, not in a query;
+    a cluster master keeps Spark's default manager."""
+    name = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert name == ("org.apache.spark.sql.execution.streaming."
+                    "checkpointing.FileSystemBasedCheckpointFileManager")
+    assert spark._jvm.java.lang.Class.forName(name).getName() == name
+    assert session._checkpoint_file_manager("spark://host:7077") is None
+
+
 def test_workers_import_the_installed_pyspark(spark):
     """Python workers load pyspark from the interpreter's installation,
     with no zip or jar archive on their import path and no archive

@@ -181,7 +181,7 @@ def main():
         if only and name not in only:
             continue
         # NOTE (r10): do NOT clearCache between queries — the corpus
-        # capstone chain (llm_corpus → v2 → v3 → v4) deliberately
+        # capstone chain (llm_corpus v3 → v4) deliberately
         # shares pinned localCheckpoint slices across queries, and
         # dropping them re-bills every stage to the later capstones
         # (measured: v4 18.2 s with a per-query clearCache vs ~6 s
