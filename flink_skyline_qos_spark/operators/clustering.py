@@ -1,422 +1,19 @@
-"""Connected-components clustering: near-dup pairs → dedup clusters.
+"""Integer-exact link rank over a directed edge list.
 
-The pair detectors (`operators/dedup.py`, `operators/similarity.py`)
-emit edges; an actually-deduplicated corpus needs the transitive
-closure — if A~B and B~C, all three are one cluster even when A~C is
-below threshold.  This module closes that gap:
-
-* :func:`connected_components` — alternating **large-star /
-  small-star** (Kiveris et al., *Connected Components in MapReduce and
-  Beyond*, SoCC'14).  Each round is two shuffles keyed on node id, and
-  the round count is O(log² n) **independent of graph diameter** — the
-  100 TB-safe choice over min-label propagation, whose round count is
-  the component diameter (pathological chains of borderline near-dups
-  do occur in crawl corpora).  No driver-side graph state: the driver
-  sees only per-round (count, checksum) scalars for the convergence
-  test.
-* :func:`dedup_clusters` — components over a corpus + pair set, every
-  document labeled (`cluster_id` = min doc id of its component,
-  singletons keep their own id) with an `is_canonical` keep flag: the
-  classic keep-first dedup policy, `filter(is_canonical)` yields the
-  deduplicated corpus.
-
-Reference parity: the reference has no clustering operator (it stops
-at skylines); this is part of the training-data suite the brief
-mandates beyond the reference surface.
+:func:`link_rank` is a truncated PageRank on an integer grid, so its
+answer is identical across engines, runs and partitionings, and
+:func:`link_rank_sql` is its DuckDB twin.  This is the last remainder
+of the graph operators; it is not part of the skyline engine.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 from .caching import release_on_gc
 
-__all__ = ["connected_components", "dedup_clusters",
-           "link_rank", "link_rank_sql",
-           "triangle_count", "triangle_count_sql"]
-
-
-def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Distinct (u, v) with u < v; self-loops and nulls dropped."""
-    a, b = F.col(src), F.col(dst)
-    return (
-        edges.filter(a.isNotNull() & b.isNotNull() & (a != b))
-        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .distinct()
-    )
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """(v, m) for every neighbor v > u, where m = min(Γ(u) ∪ {u})."""
-    sym = e.select("u", "v").union(e.select(F.col("v").alias("u"),
-                                            F.col("u").alias("v")))
-    m = sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("m"))
-    return (
-        sym.join(m, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("m").alias("u"), F.col("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient u > v; connect every smaller neighbor (and u) to the min."""
-    ori = e.select(F.greatest("u", "v").alias("u"),
-                   F.least("u", "v").alias("v"))
-    m = ori.groupBy("u").agg(F.min("v").alias("m"))
-    return (
-        ori.join(m, "u")
-        .select(F.col("m").alias("nu"), F.col("v"))
-        .filter(F.col("nu") != F.col("v"))
-        .union(m.select(F.col("m").alias("nu"), F.col("u").alias("v")))
-        .select(F.least("nu", "v").alias("u"),
-                F.greatest("nu", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _cc_driver_label(e: DataFrame, *, nodes: DataFrame | None,
-                     node_col: str | None) -> DataFrame:
-    """Small-graph fast path for :func:`connected_components`: collect
-    the (already canonicalized, persisted, ≤ threshold-row) edge set
-    `e` — bounded driver state — label components with a union-find,
-    and broadcast the labels back.
-
-    Realistic driver footprint at the 500k-edge threshold (ADVICE
-    r13): the Arrow ``toPandas`` transfer holds two 500k-element
-    arrays (8 MB for long ids; strings cost their bytes — the caller
-    guards that case by estimated size), and the union-find dict over
-    ≤1M distinct nodes peaks at roughly 100-200 MB of Python objects
-    for long ids — transient, freed when this function returns.  Both
-    are well inside the 56 GB bench driver and documented here rather
-    than hidden behind the raw 8 MB figure."""
-    pdf = e.toPandas()  # Arrow path — no per-row Row objects
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-        for n in (u, v):
-            if n not in parent:
-                parent[n] = n
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            # min-label union: the smaller id becomes the root, so the
-            # root IS the component label (same semantics as the
-            # distributed min-propagation)
-            if rv < ru:
-                ru, rv = rv, ru
-            parent[rv] = ru
-    del pdf
-    spark = e.sparkSession
-    utype = e.schema["u"].dataType
-    lab_schema = StructType([StructField("node", utype),
-                             StructField("component", utype)])
-    # Arrow path for the write-back (optimization r13): a pandas frame
-    # rides spark.sql.execution.arrow.pyspark.enabled, where the
-    # list-of-tuples form pickles row by row — the driver dispatch now
-    # covers graphs to 500k edges (≈1M labels) and the pickle path was
-    # becoming the arm's own bottleneck there.
-    nodes_l = list(parent)
-    lab_pdf = pd.DataFrame({"node": nodes_l,
-                            "component": [find(n) for n in nodes_l]})
-    lab = spark.createDataFrame(lab_pdf, lab_schema)
-    # The label table IS the full answer for edge-member nodes: parent
-    # holds exactly distinct(u) ∪ distinct(v), so the previous
-    # members-distinct + broadcast-left-join (two more scans of `e`, a
-    # distinct exchange, and a join per downstream consumer — all
-    # recomputed on every read of the returned frame) reproduced `lab`
-    # row for row (optimization r14, guide §2.4: a `distinct` on data
-    # that is already unique).  Only extra isolated vertices need any
-    # plan at all: the ones not in `lab` label themselves.
-    out = lab
-    if nodes is not None:
-        nc = node_col or nodes.columns[0]
-        extra = (nodes.select(F.col(nc).alias("node")).distinct()
-                 .join(F.broadcast(lab.select("node")), "node", "left_anti")
-                 .select("node", F.col("node").alias("component")))
-        out = lab.unionByName(extra)
-    out = release_on_gc(out, e)
-    out._checkpoint_rdd_ids = ()
-    return out
-
-
-def connected_components(edges: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", *, nodes: DataFrame | None = None,
-                         node_col: str | None = None,
-                         max_iter: int = 50,
-                         checkpoint_dir: str | None = None,
-                         driver_threshold: int = 500_000) -> DataFrame:
-    """(node, component) for every node, component = min node id reachable.
-
-    ``nodes`` (single-column unless ``node_col`` names one) adds
-    isolated vertices, which come back as their own component.
-
-    Hybrid dispatch: when the canonical edge set is at most
-    `driver_threshold` pairs, the components are computed with a
-    driver-side union-find over the collected pairs (bounded state:
-    500k pairs ≈ 8 MB collected) and the labels broadcast back —
-    replacing 3-5 star-contraction rounds (a job + checkpoint each)
-    with one collect.  The threshold
-    was 64k through round 12; measured at 99,999 edges (the 1M-doc
-    dedup pipeline), the distributed rounds cost 11.3 s where the
-    driver path is ~1 s (optimization r13) — the star-contraction
-    machinery only starts paying for itself well past the point where
-    per-round job overhead stops dominating.  Identical output (min-label semantics both ways).  The
-    probe's canonicalization (distinct exchange) is computed ONCE and
-    persisted: under the threshold it is what the union-find collects;
-    above the threshold — the 100 TB regime — the same persisted frame
-    seeds the distributed rounds' base checkpoint, so large graphs pay
-    no throwaway pass for the probe (ADVICE r5).  Pass
-    ``driver_threshold=0`` to skip the probe (and its persist)
-    entirely and force the distributed path.
-
-    Convergence is detected on (edge count, sum of per-edge xxhash64):
-    one tiny aggregate per round, no edge-set materialization on the
-    driver.  The sum runs in unbounded ``decimal(38,0)`` — xxhash64
-    values are uniform over the full int64 range, so a raw long sum
-    overflows almost surely and Spark 4's default ANSI mode raises
-    instead of wrapping.  A checksum collision between different edge
-    sets is ~2⁻⁶⁴ per round — the same class of risk the md5/xxhash
-    dedup operators already accept.  Each round's frame is
-    checkpointed to truncate lineage (iterative plans otherwise grow
-    exponentially); the previous round's blocks are unpersisted once
-    the new round is materialized so executor storage stays O(|E|)
-    rather than O(rounds · |E|).  Only the FINAL round's compact
-    checkpoint (the converged star edges) stays pinned — every derived
-    plan reads it and a dropped localCheckpoint cannot recompute; its
-    RDD ids are exposed as ``result._checkpoint_rdd_ids`` for callers
-    that want to release explicitly when done.
-
-    By default the checkpoint is ``localCheckpoint`` — fast, but
-    non-replicated: after lineage truncation, losing one executor fails
-    the job.  Fine on local mode and for restartable batch jobs; for
-    long fault-tolerant runs at the 100 TB scale pass
-    ``checkpoint_dir`` (a reliable store, e.g. HDFS/S3) to use
-    replicated ``checkpoint()`` instead.  Reliable-checkpoint FILES are
-    also bounded to O(|E|) (ADVICE r3): rounds alternate between two
-    subdirectories of ``checkpoint_dir`` and each round deletes the
-    other subdirectory once its own data is materialized; the final
-    round's files are removed when the returned frame is dropped.
-    NOTE: ``checkpoint_dir`` mutates the SparkContext-GLOBAL checkpoint
-    directory (``sc.setCheckpointDir``) — concurrent jobs relying on a
-    different checkpoint dir on the same context would race it.
-    """
-    sc = edges.sparkSession.sparkContext
-    e_pre: DataFrame | None = None
-    if driver_threshold and driver_threshold > 0:
-        # One canonicalization serves BOTH dispatch arms (ADVICE r5):
-        # the distinct shuffle the probe forces is exactly the
-        # distributed path's base edge set, so an over-threshold graph
-        # pays nothing extra — the persisted frame seeds the base
-        # checkpoint below instead of being thrown away and recomputed.
-        e_pre = _canon(edges, src, dst).persist()
-        # limit+count instead of full count: the reduce side
-        # short-circuits after threshold+1 rows (the map-side distinct
-        # exchange runs in full, but its output is reused either way)
-        probe = e_pre.limit(int(driver_threshold) + 1).count()
-        if probe <= driver_threshold:
-            # size-in-bytes guard (VERDICT r13 #9): the row-count
-            # threshold assumes narrow ids (500k long pairs = 8 MB
-            # transferred).  String node ids can make the same row
-            # count arbitrarily heavy, so estimate the collected bytes
-            # from the persisted frame before dispatching to the
-            # driver; past 64 MB take the distributed rounds instead.
-            # `probe` is the EXACT edge count here (the
-            # limit(threshold+1) short-circuit only engages above the
-            # threshold), so one tiny agg over a 10k-row sample prices
-            # the transfer.
-            from pyspark.sql.types import IntegralType
-
-            if isinstance(e_pre.schema["u"].dataType, IntegralType):
-                est_bytes = probe * 16
-            else:
-                row = (e_pre.limit(10_000)
-                       .agg(F.avg(F.length(F.col("u").cast("string"))
-                                  + F.length(F.col("v").cast("string")))
-                            .alias("b")).first())
-                est_bytes = int(probe * float(row["b"] or 16.0))
-            if est_bytes <= 64 * 1024 * 1024:
-                return _cc_driver_label(e_pre, nodes=nodes,
-                                        node_col=node_col)
-    cleanup_dirs: list[str] = []
-    if checkpoint_dir is not None:
-        jvm = sc._jvm
-        hconf = sc._jsc.hadoopConfiguration()
-
-        def _rm(d: str) -> None:
-            p = jvm.org.apache.hadoop.fs.Path(d)
-            try:
-                p.getFileSystem(hconf).delete(p, True)
-            except Exception:
-                pass
-
-        subdirs = [f"{checkpoint_dir.rstrip('/')}/cc-{i}" for i in (0, 1)]
-        rnd = 0
-
-        def ckpt_begin(df: DataFrame) -> DataFrame:
-            # LAZY checkpoint: the caller's next action (the round's
-            # convergence aggregate) materializes the frame.  Unlike
-            # the localCheckpoint branch this is NOT one pass:
-            # ReliableRDDCheckpointData recomputes the RDD in a
-            # separate write job at doCheckpoint time, so each round
-            # costs the aggregate job plus a checkpoint-write job —
-            # the price of replicated fault tolerance.  (The write job
-            # for the BASE round reads the dispatch probe's cached
-            # blocks; intermediate rounds recompute one star step.)
-            sc.setCheckpointDir(subdirs[rnd % 2])
-            return df.checkpoint(eager=False)
-
-        def ckpt_end(df: DataFrame) -> None:
-            nonlocal rnd
-            _rm(subdirs[(rnd + 1) % 2])      # other subdir is now dead
-            cleanup_dirs.clear()
-            cleanup_dirs.append(subdirs[rnd % 2])
-            rnd += 1
-    else:
-        # localCheckpoint pins blocks at the RDD level, which
-        # DataFrame.unpersist() does NOT release (it only touches the
-        # CacheManager) — without explicit release every call leaks all
-        # its round checkpoints for the session's lifetime.  Track the
-        # RDD ids each eager checkpoint pins (snapshot diff around the
-        # materializing call; assumes no concurrent persist on the same
-        # context, as everywhere in this module) and drop a round's
-        # blocks by id once the next round is materialized.
-        def _pinned_ids() -> "set[int]":
-            ids, it = set(), sc._jsc.getPersistentRDDs().keySet().iterator()
-            while it.hasNext():
-                ids.add(it.next())
-            return ids
-
-        round_ids: "dict[int, set[int]]" = {}
-        pending: "dict[int, set[int]]" = {}
-
-        def ckpt_begin(df: DataFrame) -> DataFrame:
-            # lazy: the ids this checkpoint pins only exist once the
-            # caller's next action materializes it — snapshot now,
-            # diff in ckpt_end
-            before = _pinned_ids()
-            out = df.localCheckpoint(eager=False)
-            pending[id(out)] = before
-            return out
-
-        def ckpt_end(df: DataFrame) -> None:
-            round_ids[id(df)] = _pinned_ids() - pending.pop(id(df))
-
-        def _drop_blocks(df: DataFrame) -> None:
-            for rid in round_ids.pop(id(df), ()):
-                sc._jsc.sc().unpersistRDD(rid, False)
-
-    _chk_agg = [F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h")]
-    # e_pre (set by the dispatch probe) is the same canonical edge set.
-    # The probe's limit(threshold+1).count() only computes — and hence
-    # only caches — the partitions the global limit scanned, so the
-    # base checkpoint reads cached blocks where they exist and replays
-    # the remaining partitions' reduce side from the distinct's already-
-    # written shuffle files (ADVICE r6): the map-side exchange never
-    # re-runs either way, which is the cost that matters at scale.
-    e = ckpt_begin(e_pre if e_pre is not None
-                   else _canon(edges, src, dst))
-    e.agg(*_chk_agg).first()  # materialize the base checkpoint
-    ckpt_end(e)
-    if e_pre is not None:
-        e_pre.unpersist(False)  # base checkpoint holds its own blocks now
-    prev = None
-    for _ in range(max_iter):
-        nxt = ckpt_begin(_small_star(_large_star(e)))
-        # ONE job: computes the round, writes its checkpoint, and
-        # returns the convergence checksum
-        chk = nxt.agg(*_chk_agg).first()
-        ckpt_end(nxt)
-        e.unpersist()
-        if checkpoint_dir is None:
-            _drop_blocks(e)
-        e = nxt
-        cur = (chk["n"], chk["h"])
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"connected_components: no convergence "
-                           f"in {max_iter} rounds")
-    # Fixpoint = union of stars rooted at each component's min: a
-    # node's label is its root (non-roots), or itself (roots/isolated).
-    lab = (
-        e.select(F.col("v").alias("node"), F.col("u").alias("component"))
-        .groupBy("node").agg(F.min("component").alias("component"))
-    )
-    members = e.select(F.col("u").alias("node")) \
-        .union(e.select(F.col("v").alias("node"))).distinct()
-    if nodes is not None:
-        nc = node_col or nodes.columns[0]
-        members = members.union(
-            nodes.select(F.col(nc).alias("node"))).distinct()
-    out = (
-        members.join(lab, "node", "left")
-        .select("node",
-                F.coalesce("component", "node").alias("component"))
-    )
-    if cleanup_dirs:
-        import weakref
-
-        weakref.finalize(
-            out, lambda dirs=tuple(cleanup_dirs), rm=_rm: [rm(d)
-                                                           for d in dirs])
-    else:
-        # The FINAL round's blocks must outlive every plan derived from
-        # `out` — a localCheckpoint cannot recompute once dropped, and
-        # derived frames (dedup_clusters, the corpus queries) may
-        # outlive the `out` object itself, so no GC hook can be safe.
-        # They stay pinned (ONE compact RDD per call, the converged
-        # star edges — the intermediate rounds, the unbounded part, are
-        # dropped eagerly above); callers that are truly done can
-        # release via the ids exposed here:
-        #   for rid in out._checkpoint_rdd_ids:
-        #       sc._jsc.sc().unpersistRDD(rid, False)
-        out._checkpoint_rdd_ids = tuple(round_ids.get(id(e), ()))
-    return out
-
-
-def dedup_clusters(df: DataFrame, pairs: DataFrame, *,
-                   id_col: str = "doc_id", src: str = "id_a",
-                   dst: str = "id_b") -> DataFrame:
-    """Label every document with its near-dup cluster.
-
-    Returns (id_col, cluster_id, is_canonical): ``cluster_id`` is the
-    min doc id of the connected component under ``pairs`` (own id for
-    singletons); ``is_canonical`` marks the member to keep —
-    ``filter(is_canonical)`` is the deduplicated corpus.
-    """
-    cc = connected_components(pairs, src, dst,
-                              nodes=df.select(id_col), node_col=id_col)
-    out = cc.select(
-        F.col("node").alias(id_col),
-        F.col("component").alias("cluster_id"),
-        (F.col("node") == F.col("component")).alias("is_canonical"),
-    )
-    out._checkpoint_rdd_ids = getattr(cc, "_checkpoint_rdd_ids", ())
-    # Keep the cc frame ALIVE for as long as this derived frame is: the
-    # driver-path cc carries a weakref.finalize that unpersists the
-    # canonicalized edge cache, and select() above creates a NEW Python
-    # object — without this strong ref the next driver GC drops cc,
-    # fires the finalizer, and every later action on the returned frame
-    # silently re-derives the FULL pair DAG (measured ~3 s per action
-    # on the sf0.01 minhash capstones; round 11).
-    out._pin_parent = cc
-    return out
+__all__ = ["link_rank", "link_rank_sql"]
 
 
 def link_rank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
@@ -459,7 +56,6 @@ def link_rank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
              .distinct().persist())
     n = nodes.count()
     if n == 0:
-        from .caching import release_on_gc
         empty = nodes.select(
             F.col("node"), F.lit(0).cast("long").alias("rank_int"),
             F.lit(0.0).alias("rank"))
@@ -500,7 +96,6 @@ def link_rank(edges: DataFrame, *, src: str = "src", dst: str = "dst",
                 last_pinned_ranks.unpersist(False)
             last_pinned_ranks = ranks
             pinned.append(ranks)
-    from .caching import release_on_gc
     out = ranks.select(
         F.col("node"), F.col("__r").alias("rank_int"),
         (F.col("__r").cast("double") / F.lit(float(scale))).alias("rank"))
@@ -545,93 +140,3 @@ def link_rank_sql(edges_sql: str, *, iterations: int = 3,
     return ("WITH " + ",\n".join(ctes)
             + f"\nSELECT node, CAST(r AS BIGINT) AS rank_int, "
               f"CAST(r AS DOUBLE) / {float(scale)!r} AS rank FROM {prev}")
-
-
-def triangle_count(edges: DataFrame, *, src: str = "src",
-                   dst: str = "dst") -> DataFrame:
-    """Per-node triangle participation over the undirected graph —
-    the local clustering-coefficient numerator (link-farm and
-    community-density signals for crawl-corpus curation; the
-    denominator is ``degree·(degree−1)/2``, derivable from the output).
-
-    Algorithm: degree-ordered edge orientation (Cohen's MapReduce
-    triangle counting / Latapy's compact-forward).  Every edge is
-    directed low→high under the total order ``(degree, node)``; each
-    triangle is then enumerated EXACTLY once as a wedge at its
-    lowest-order vertex closed by one oriented edge.  All three steps
-    are equi-joins: wedge fan-out is Σ outdeg², which degree
-    orientation bounds by O(|E|·arboricity) — on real graphs hubs get
-    in-edges, not out-edges, so no quadratic blow-up at the skewed
-    keys (and AQE's skew-join split covers the residue).  No driver
-    state; output is one row per node: ``node, degree, triangles``
-    (exact BIGINTs, hence value-oracle-able).
-
-    The id-oriented SQL twin (:func:`triangle_count_sql`) enumerates
-    the identical triangle set — any fixed total order on nodes yields
-    each triangle exactly once; degree order is the SCALE choice, not
-    a semantic one.
-    """
-    from .caching import release_on_gc
-
-    e = _canon(edges, src, dst).persist()
-    deg = (e.select(F.col("u").alias("node"))
-           .unionByName(e.select(F.col("v").alias("node")))
-           .groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-           .persist())
-    ed = (e.join(deg.select(F.col("node").alias("u"),
-                            F.col("degree").alias("__du")), on="u")
-          .join(deg.select(F.col("node").alias("v"),
-                           F.col("degree").alias("__dv")), on="v"))
-    key_u = F.struct(F.col("__du").alias("d"), F.col("u").alias("n"))
-    key_v = F.struct(F.col("__dv").alias("d"), F.col("v").alias("n"))
-    u_first = key_u < key_v
-    o = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        F.when(u_first, key_v).otherwise(key_u).alias("__kt"),
-    ).persist()
-    a = o.select("s", F.col("t").alias("y"), F.col("__kt").alias("__ky"))
-    b = o.select("s", F.col("t").alias("z"), F.col("__kt").alias("__kz"))
-    wedges = a.join(b, on="s").where(F.col("__ky") < F.col("__kz"))
-    closing = o.select(F.col("s").alias("y"), F.col("t").alias("z"))
-    tri = wedges.join(closing, on=["y", "z"]) \
-        .select(F.col("s").alias("x"), "y", "z")
-    per = (tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
-           .groupBy("node").agg(F.count(F.lit(1)).alias("triangles")))
-    out = (deg.join(per, on="node", how="left")
-           .select("node", "degree",
-                   F.coalesce(F.col("triangles"),
-                              F.lit(0).cast("long")).alias("triangles")))
-    return release_on_gc(out, e, deg, o)
-
-
-def triangle_count_sql(edges_sql: str) -> str:
-    """DuckDB twin of :func:`triangle_count` (id-oriented enumeration —
-    same triangle set, see the operator docstring)."""
-    return f"""
-WITH __e AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM ({edges_sql})
-  WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst
-),
-__t AS (
-  SELECT e1.u AS x, e1.v AS y, e2.v AS z
-  FROM __e e1
-  JOIN __e e2 ON e2.u = e1.v
-  JOIN __e e3 ON e3.u = e1.u AND e3.v = e2.v
-),
-__deg AS (
-  SELECT node, count(*) AS degree
-  FROM (SELECT u AS node FROM __e UNION ALL SELECT v FROM __e)
-  GROUP BY node
-),
-__tc AS (
-  SELECT node, count(*) AS triangles
-  FROM (SELECT x AS node FROM __t UNION ALL SELECT y FROM __t
-        UNION ALL SELECT z FROM __t)
-  GROUP BY node
-)
-SELECT d.node, d.degree,
-       CAST(COALESCE(t.triangles, 0) AS BIGINT) AS triangles
-FROM __deg d LEFT JOIN __tc t USING (node)
-""".strip()
